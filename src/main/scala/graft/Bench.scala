@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline-query benchmark (driver-run, one JSON line on stdout).
   *
   * Measures the §2.5 headline queries (SparkEntry.benchKeys) at the
@@ -37,27 +35,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // sentinel expectation: per-SF calibration table (round 15,
-    // graft.Sentinel / BASELINE.md "Sentinel calibration") so octave
-    // records at any ScaleData dir self-bracket; the env var overrides,
-    // and a malformed override degrades to the table, not a
-    // NumberFormatException before Spark starts.
-    val sentinelExpected = Sentinel.expectedFor(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Spark's default 10 MB: broadcasts the dims and ONLY the dims.
-      // Round 8's sf1 sweep showed a 64 MB threshold flipping the
-      // fact-side joins to driver-built broadcasts (a 6M-row lineitem
-      // HashedRelation) — 2.3x slower at sf1, no gain at sf0.1, and
-      // the wrong shape for a cluster (facts shuffle, dims broadcast).
-      .config("spark.sql.autoBroadcastJoinThreshold", (10 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -77,26 +55,18 @@ object Bench {
           Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
 
-    // The sentinel plan: scan every lineitem column to the noop sink.
-    // Deliberately NOT a SparkEntry entry — it must never change across
-    // rounds, or the degraded signal conflates binary and environment.
-    val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-    def sentinelOnce(): Double = {
-      val t0 = System.nanoTime()
-      sentinelDf.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    sentinelOnce(); sentinelOnce() // warm-up (codegen + file listing)
+    val sentinel = new Sentinel(spark, sfDir)
+    val sentinelExpected = sentinel.expected
 
-    val sentinelStart = sentinelOnce()
+    val sentinelStart = sentinel.once()
     val results = SparkEntry.benchKeys.map(name => name -> timeRuns(name))
-    val sentinelMid = sentinelOnce()
+    val sentinelMid = sentinel.once()
     // LLM-pipeline ops, timed the same way but reported separately —
     // the headline total stays comparable to BASELINE.md's definition.
     val opsResults = SparkEntry.opsBenchKeys.map(name => name -> timeRuns(name))
-    val sentinelEnd = sentinelOnce()
+    val sentinelEnd = sentinel.once()
     val sentinels = Seq(sentinelStart, sentinelMid, sentinelEnd)
-    val degraded = sentinelExpected > 0 && sentinels.exists(_ > 2 * sentinelExpected)
+    val degraded = sentinel.degraded(sentinels)
     // SECOND taint signal (round 20): the r19 record passed the 2×
     // sentinel gate with a 1.8× drift while individual entries ran
     // [0.31, 4.05, 4.99] — a 16× within-entry spread manufactured a

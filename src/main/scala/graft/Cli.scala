@@ -113,15 +113,7 @@ object Cli {
         "usage: graft.Cli [--tables DIR] [--explain | --compile] [--limit N] [-o FILE] [QUERY]  (or query on stdin)")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
 
     val catalog: String => org.apache.spark.sql.DataFrame = opts.tablesDir match {
       case Some(dir) => Tables.parquetDir(spark, dir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types._
   *
   * columns in NAME order, joined with \\u0001 — then md5, first 15 hex
   * digits (60 bits) as a number, summed exactly (decimal(38,0) here,
-  * HUGEINT in DuckDB). tools/r18_hashgate.py computes the same
+  * HUGEINT in DuckDB). tools/hashgate_duckdb.py computes the same
   * (count, hashsum) over the entry's DuckDB oracle SQL; equality is a
   * multiset-exact verdict with O(1) memory and zero dump bytes.
   *
@@ -51,16 +50,7 @@ object HashGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val entries = args.drop(1)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-hashgate")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
 
     entries.foreach { e =>
       val t0 = System.nanoTime()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling: dump `.explain("formatted")` for bench
   * queries to files, so plan-shape claims (Exchange count, join
   * strategy, PushedFilters/ReadSchema, codegen spans) are checkable
@@ -11,23 +9,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: graft.PlanDump <sfDir> <outDir> <suffix> [entryName ...]
   * Writes `<outDir>/<name>_<suffix>.txt` for each selected entry
-  * (default: every benchKeys + opsBenchKeys entry). Spark conf matches
-  * Bench exactly so the dumped plan is the benched plan.
+  * (default: every benchKeys + opsBenchKeys entry). Both build their
+  * session through [[Sessions]], so the dumped plan is the benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (10 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     Files.createDirectories(Paths.get(outDir))
     val keys = (SparkEntry.benchKeys ++ SparkEntry.opsBenchKeys)
       .filter(k => only.isEmpty || only.contains(k))

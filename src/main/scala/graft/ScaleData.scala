@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -11,7 +11,7 @@ import graft.sources.Tables
   * scan parallelism (the driver's single-file tables are one row group
   * each, so a headline scan is structurally single-threaded).
   *
-  * Scaling shapes (the realistic growth axes, same as MicroBench):
+  * Scaling shapes (the realistic growth axes):
   *   - dimensions (`region`, `nation`) are copied as-is;
   *   - fact tables shift their keys per replica, so FK joins stay
   *     consistent and cardinalities grow linearly (10× orders with the
@@ -35,14 +35,7 @@ object ScaleData {
     val factor = factorS.toInt
     val files = filesS.toInt
     require(factor >= 1 && files >= 1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val t = Tables.parquetDir(spark, src)
 
     def write(name: String)(replica: (DataFrame, Int) => DataFrame): Unit = {

@@ -760,7 +760,7 @@ object SparkEntry {
     // Model BAKED into the plan (round 12): a literal weight array
     // indexed per token — no broadcast join; same output as the
     // table-driven classifierScore (TextOpsSpec asserts equality, and
-    // MicroBench clsab carries the A/B numbers in BASELINE.md).
+    // the A/B numbers are in BASELINE.md).
     "text_classifier_score" -> Entry(
       (s, dir) => TextOps.classifierScoreBaked(
         docs(s, dir), TextOps.lcgWeights(1024), "text", "doc_id",
@@ -3323,7 +3323,7 @@ object SparkEntry {
       // round-13 additions (judge r12 "What's wrong #3"): the adaptive
       // geometry family plus every hot path landed in r11/r12 that the
       // driver bench was blind to — regressions in these were only
-      // visible in ad-hoc MicroBench tables before.
+      // visible in ad-hoc probe tables before.
       "ann_ivf_auto", "ann_lsh_auto", "dedup_embed_auto", "dedup_semantic_auto",
       "dedup_semantic_drop", "embed_quantize", "text_bpe", "text_classifier_score",
       "dedup_incremental", "sample_token_budget_hist", "sample_token_budget_auto",

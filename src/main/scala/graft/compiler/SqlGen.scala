@@ -776,7 +776,7 @@ private[graft] final class SqlGen(
     val u = newStage(
       s"SELECT ${leftCols.map(q).mkString(", ")}, CAST(NULL AS ${valsType.sql}) AS __vals, 1 AS __side FROM ${prev.cte}" +
         s"\n  UNION ALL SELECT ${rightSelect.mkString(", ")}, $namedStruct AS __vals, 0 AS __side" +
-        s" FROM ${right.cte} WHERE ${q(p.ts)} IS NOT NULL")
+        s" FROM ${right.cte} WHERE ${(p.ts +: p.keys).map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")}")
     val win = s"PARTITION BY ${p.keys.map(q).mkString(", ")} ORDER BY ${q(p.ts)} ASC, __side ASC" +
       " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     val f = newStage(

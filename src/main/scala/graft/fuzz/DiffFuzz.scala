@@ -3,14 +3,12 @@ package graft.fuzz
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** DuckDB leg of the differential fuzz (round 18): for every seeded
   * pipeline whose constructs have an exact DuckDB translation
   * ([[GenQuery.duckSql]]), run the CATALYST PLAN path and dump the
   * result to parquet, plus the generator's independently-authored
   * DuckDB SQL to `fuzz_duck_sql.json`. The driver-side comparator
-  * (tools/r18_difffuzz.py) then executes each DuckDB rendering over
+  * (tools/difffuzz_duckdb.py) then executes each DuckDB rendering over
   * the same parquet tables and compares multisets — the third backend
   * of the differential (DiffFuzzSpec covers plan ≡ SQL-text in sbt).
   *
@@ -31,16 +29,7 @@ object DiffFuzz {
     val nSeeds = if (posArgs.length > 2) posArgs(2).toInt else 1000
     val takeAllRows = if (posArgs.length > 3) posArgs(3).toInt else 2000000
 
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-difffuzz")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
 
     val catalog = graft.Pql.parquetDir(spark, sfDir)
     Files.createDirectories(Paths.get(outDir))

@@ -207,17 +207,7 @@ object StreamFuzz {
     val sfDir = args(0)
     val nSeeds = if (args.length > 1) args(1).toInt else 250
 
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-streamfuzz")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.streaming.schemaInference", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
 
     val workDir =
       java.nio.file.Files.createTempDirectory("graft_streamfuzz").toString

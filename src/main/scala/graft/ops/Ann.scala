@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  import NearDup.{dot, planeComponent, signSigs}
+  import NearDup.{dot, signSigs}
 
   /** Corpus rows as (id, v, nrm) with double vectors. */
   private def prep(df: DataFrame, vecCol: String, idCol: String): DataFrame =
@@ -104,11 +104,11 @@ object Ann {
       lcgCentroidMatrix(dim, cells), dim)
   }
 
-  /** Driver-side mirror of [[lcgCentroids]] — the same LCG stream
-    * evaluated as a flat row-major matrix (exact integer arithmetic,
-    * identical doubles; [[Project.planeValue]] is the shared scalar
-    * mirror, asserted against the Column form in ProjectSpec). Feeds
-    * the BAKED corpus-assignment path.
+  /** Data-independent centroids as a flat row-major `nCells × dim`
+    * matrix: the LCG stream offset past the LSH planes (exact integer
+    * arithmetic; [[Project.planeValue]] is the shared scalar mirror,
+    * asserted against the Column form in ProjectSpec). Feeds the BAKED
+    * corpus-assignment path.
     */
   private[ops] def lcgCentroidMatrix(dim: Int, nCells: Int): Array[Double] = {
     val mat = new Array[Double](nCells * dim)
@@ -117,17 +117,6 @@ object Ann {
     mat
   }
 
-  /** Data-independent centroid components `(c, j, w)`: LCG stream
-    * offset past the LSH planes.
-    */
-  private[ops] def lcgCentroids(
-      spark: org.apache.spark.sql.SparkSession, dim: Int, nCells: Int): DataFrame =
-    spark.range(nCells.toLong * dim).select(
-      (col("id") / dim).cast("int").as("c"),
-      (col("id") % dim).cast("int").as("j"),
-      planeComponent(lit(1000) * dim + col("id")).as("w")
-    )
-
   /** [[ivfTopK]] with DATA-DEPENDENT centroids: the `nCells` corpus
     * vectors with the smallest md5 id hash seed the Voronoi cells.
     *
@@ -135,8 +124,8 @@ object Ann {
     * zero-pass oracle-reproducible default, wrong as the only option at
     * 100 TB: on a CLUSTERED corpus most vectors fall into the few cells
     * whose random centroid happens to point near the data manifold, and
-    * one hot cell absorbs the scan (see MicroBench `ivfprobe` for the
-    * measured imbalance). A deterministic hash-sample follows the data
+    * one hot cell absorbs the scan (BASELINE.md records the measured
+    * imbalance). A deterministic hash-sample follows the data
     * distribution (a dense region contributes proportionally many seed
     * candidates) while staying engine-reproducible: the seed set is
     * `ORDER BY md5(id) LIMIT nCells` in any engine — no RNG state, no
@@ -364,9 +353,7 @@ object Ann {
 
   /** Per-row centroid ranks `(outId, c, d, r)`: dot product with every
     * (broadcast) centroid, ranked descending per row. `r = 1` is the
-    * assigned cell. Shared by the IVF paths and MicroBench's
-    * `ivfprobe` cell-balance probe — the probe must measure the exact
-    * assignment the operator computes.
+    * assigned cell. Shared by the IVF paths.
     */
   private[ops] def cellRanks(
       df: DataFrame, vecCol: String, idCol: String, outId: String,

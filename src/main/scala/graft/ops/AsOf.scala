@@ -50,7 +50,8 @@ object AsOf {
     * correct), so results never depend on partitioning.
     *
     * Output: every `left` column, plus `valueCols` from the matched
-    * right row.
+    * right row. Right rows with a NULL key or NULL timestamp match
+    * nothing (ASOF joins on key equality).
     *
     * PLAN-TIME BAKE (round 19): with `timeBuckets > 1`, constructing
     * the returned DataFrame EAGERLY runs one Spark job — a 1-row
@@ -164,7 +165,7 @@ object AsOf {
 
     // The right side is bucketed and hash-partitioned ONCE, and both
     // consumers — the union branch and the pass-2 carry summary —
-    // read this single exchange (round 20, `MicroBench asofab`).
+    // read this single exchange (round 20, OPTIMIZATION_r20.md).
     // Left lazy, the right subtree was computed TWICE from source:
     // InferFiltersFromConstraints pushes an isnotnull(key) into the
     // summary branch only (the carry join's right side), so the two

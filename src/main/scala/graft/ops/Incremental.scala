@@ -73,7 +73,7 @@ object Incremental {
     // sig join-back) and with no exchange of its own, each consumer
     // re-ran the md5 shingle hashing over the new batch. One narrow
     // (id, digest, sig) exchange pins the hashing to a single pass.
-    // Interleaved A/B (`MicroBench incab`): 0.92/0.62/0.57 →
+    // Interleaved A/B (OPTIMIZATION_r20.md): 0.92/0.62/0.57 →
     // 0.61/0.52/0.44 s at sf0.1; never worse at sf1 (1.81/1.94/3.53 →
     // 1.82/1.67/1.52). Oracle-exact (the exchange changes no values).
     val newSig = signatures(newDf, textCol, idCol, k).repartition(col(idCol))

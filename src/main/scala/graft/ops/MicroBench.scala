@@ -3,732 +3,143 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev utility: stage-by-stage timings of the near-dup pipelines, for
-  * finding which stage dominates before optimizing. Not part of the
-  * driver contract (Bench reports the end-to-end numbers).
+/** Dev utility: targeted measurements of SparkEntry gate entries, for
+  * finding which entry or stage dominates before optimizing. Bench
+  * reports the end-to-end numbers; an A/B is the same `entry` run at
+  * two commits.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ops.MicroBench"
+  * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ops.MicroBench <mode> ..."
+  * with the modes listed in [[usage]].
   */
 object MicroBench {
+
+  private val usage =
+    """usage: graft.ops.MicroBench <mode> [args]
+      |  entry <name>...           one timed run per entry (2 warm-ups), sentinel-bracketed
+      |  entryn <reps> <name>...   <reps> timed runs per entry, median + every run
+      |  jobs <name>...            Spark jobs one execution of each entry launches
+      |  finalplan [full] <name>...  node counts of the post-execution AQE plan
+      |  streambench [nFiles]      streaming dedup wall time over nFiles triggers (default 8)""".stripMargin
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", (!args.contains("noaqe")).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (10 * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = graft.sources.Tables.parquetDir(spark, sfDir)("documents")
-
-    def time(name: String)(df: => DataFrame): Unit = {
-      def run(): Unit = df.write.format("noop").mode("overwrite").save()
-      run(); run() // warm-up ×2 (codegen + C2)
-      val t0 = System.nanoTime()
-      run()
-      println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s")
+    val rest = args.drop(1).toSeq
+    val n = rest.headOption.flatMap(_.toIntOption).filter(_ >= 1) // <reps> or [nFiles]
+    val run: (SparkSession, String) => Unit = args.headOption match {
+      case Some("entry")                    => entryn(_, _, 1, rest)
+      case Some("entryn") if n.isDefined    => entryn(_, _, n.get, rest.tail)
+      case Some("jobs")                     => jobs(_, _, rest)
+      case Some("finalplan")                => finalplan(_, _, rest)
+      case Some("streambench")              => streambench(_, _, n.getOrElse(8))
+      case _ =>
+        System.err.println(usage)
+        sys.exit(2)
     }
+    val spark = graft.Sessions.local()
+    try run(spark, sfDir)
+    finally spark.stop()
+  }
 
-    if (args.contains("entry")) {
-      // time arbitrary SparkEntry gate entries: MicroBench entry <name>...
-      //
-      // Sentinel (same trust marker as Bench): the never-changing
-      // lineitem scan is timed before and after the entries, so a
-      // one-off A/B measurement carries its own evidence of whether the
-      // environment was degraded (this VM's memory-compaction stalls
-      // have faked 2-3× regressions). Expected constants come from the
-      // per-SF calibration table (graft.Sentinel, round 15);
-      // SPARK_GRAFT_SENTINEL_SEC overrides.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce() // warm-up
-      val s0 = sentinelOnce()
-      args.dropWhile(_ != "entry").drop(1).foreach { k =>
-        time(k)(graft.SparkEntry.queries(k)(spark, sfDir))
-      }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
+  /** Runs `body` between two [[graft.Sentinel]] samples (same trust
+    * marker as Bench), so a one-off measurement carries its own
+    * evidence of whether the environment was degraded.
+    */
+  private def sentinelBracketed(spark: SparkSession, sfDir: String)(body: => Unit): Unit = {
+    val sentinel = new graft.Sentinel(spark, sfDir)
+    val s0 = sentinel.once()
+    body
+    val s1 = sentinel.once()
+    println(f"sentinel $s0%.3f/$s1%.3f s (expected ${sentinel.expected}%.2f) " +
+      s"degraded=${sentinel.degraded(Seq(s0, s1))}")
+  }
 
-    if (args.contains("entryn")) {
-      // MicroBench entryn <reps> <name>... — like `entry` but with
-      // <reps> timed runs per entry (all times printed + the median),
-      // for measuring on days when single runs swing 2-4× under the
-      // VM's memory-compaction stalls. Sentinel-bracketed.
-      val rest = args.dropWhile(_ != "entryn").drop(1)
-      val reps = rest.head.toInt
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      rest.tail.foreach { k =>
+  /** `entryn <reps> <name>...` (and `entry`, reps = 1): two warm-ups,
+    * then `reps` timed noop-sink runs per entry; prints the median and
+    * every run, for days when single runs swing 2-4× under a shared
+    * VM's memory-compaction stalls.
+    */
+  private def entryn(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String]): Unit =
+    sentinelBracketed(spark, sfDir) {
+      names.foreach { k =>
         def run(): Double = {
           val t0 = System.nanoTime()
           graft.SparkEntry.queries(k)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
-        run(); run() // warm-up ×2
+        run(); run() // warm-up ×2 (codegen + C2)
         val ts = Seq.fill(reps)(run())
         val med = ts.sorted.apply(reps / 2)
         println(f"$k%-28s median $med%.3f s  runs ${ts.map(t => f"$t%.3f").mkString(" ")}")
       }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
     }
 
-    if (args.contains("jobs")) {
-      // MicroBench jobs <name>... — noise-immune PLAN-SHAPE metric:
-      // the number of Spark jobs one execution of each entry launches
-      // (eager plan-time jobs — counts, checkpoints, broadcasts-built-
-      // by-collect — plus the final noop write). Wall time on this VM
-      // swings 2-4× under memory-compaction stalls; the job count is a
-      // deterministic property of the binary, so an optimization that
-      // deletes driver jobs is verifiable in ONE run on any day.
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            counter.incrementAndGet(); ()
-          }
-        })
-      args.dropWhile(_ != "jobs").drop(1).foreach { k =>
-        def run(): Unit = graft.SparkEntry.queries(k)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        run() // warm-up (file-listing jobs happen here, not in the count)
-        Thread.sleep(200) // let straggler listener events drain
-        counter.set(0)
-        run()
-        Thread.sleep(200)
-        println(f"$k%-28s jobs ${counter.get()}")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("mhsig")) {
-      // MinHash signature-shape A/B (round 19), interleaved in ONE JVM
-      // so the VM's weather hits all arms equally: full minhashPairs
-      // cost with (a) the aggregate sigs (explode → 32-min groupBy),
-      // (b) rowwise codegen sigs (MinhashSig, no exchange),
-      // (c) rowwise + an explicit repartition(id) reuse point.
-      import graft.functions.{MinhashSig, TextHash}
-      val k = 32
-      def aggSigs = NearDup.minhashSigsFromHashed(
-        NearDup.hashedShingles(docs, "text", "doc_id"), "doc_id", k)
-      def rowSigs = docs
-        .select(col("doc_id"),
-          MinhashSig(TextHash.shingleHashes(NearDup.tokens(col("text"))), k).as("sig"))
-        .filter(col("sig").isNotNull)
-      def pairsOf(sigs: DataFrame): DataFrame = {
-        val cand = NearDup.bandCandidatesJoinBack(sigs, "doc_id", k, 2)
-        val est = NearDup.minhashEstSim(col("sig_a"), col("sig_b"), k)
-        cand.select(col("id_a"), col("id_b"), est.as("est_sim"))
-          .filter(col("est_sim") >= 0.25)
-      }
-      for (round <- 1 to 3) {
-        time(s"r$round agg")(pairsOf(aggSigs))
-        time(s"r$round rowwise")(pairsOf(rowSigs))
-        time(s"r$round row+repart")(pairsOf(rowSigs.repartition(col("doc_id"))))
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("ngsets")) {
-      // ngram `sets` reuse-point A/B (round 19), interleaved: the
-      // (id, hs) sketch frame feeds the rowwise sigs AND two
-      // join-backs — does an explicit repartition(id) reuse point on
-      // it beat recomputing the shingle hashing per consumer?
-      var ngramAgg = false
-      def ngramOf(repart: Boolean): DataFrame = {
-        val sets0 = docs.select(
-          col("doc_id"),
-          slice(
-            array_sort(array_distinct(
-              graft.functions.TextHash.shingleHashes(NearDup.tokens(col("text"))))),
-            1, 4096
-          ).as("hs"))
-        val sets = if (repart) sets0.repartition(col("doc_id")) else sets0
-        val sigs =
-          if (ngramAgg)
-            NearDup.minhashSigsFromHashed(
-              sets.select(col("doc_id"), explode(col("hs")).as("h")), "doc_id", 8)
-          else NearDup.minhashSigsRowwise(sets, col("hs"), "doc_id", 8)
-        val cand = NearDup.bandCandidates(sigs, "doc_id", 8, 1).select(col("id_a"), col("id_b"))
-        cand.as("c")
-          .join(sets.as("h1"), col("c.id_a") === col("h1.doc_id"))
-          .join(sets.as("h2"), col("c.id_b") === col("h2.doc_id"))
-          .select(
-            col("c.id_a"), col("c.id_b"),
-            graft.functions.ArrayMath.sortedIntersectSize(col("h1.hs"), col("h2.hs"))
-              .cast("double").as("inter"),
-            (size(col("h1.hs")) + size(col("h2.hs"))).cast("double").as("tot"))
-          .select(col("id_a"), col("id_b"), (col("inter") / (col("tot") - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= 0.2)
-      }
-      for (round <- 1 to 3) {
-        ngramAgg = true
-        time(s"r$round agg/plain ")(ngramOf(repart = false))
-        time(s"r$round agg/repart")(ngramOf(repart = true))
-        ngramAgg = false
-        time(s"r$round row/plain ")(ngramOf(repart = false))
-        time(s"r$round row/repart")(ngramOf(repart = true))
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("incab")) {
-      // Incremental-dedup signature reuse-point A/B (round 19),
-      // interleaved: newSig feeds three consumers (digest semi-join,
-      // band rows, sig join-back) — is an explicit repartition(id)
-      // reuse point on the rowwise signature frame worth its exchange?
-      val snapPath = "/tmp/microbench_incsnap"
-      Incremental.signatures(docs.filter(col("doc_id") % 3 =!= 0), "text", "doc_id")
-        .write.mode("overwrite").parquet(snapPath)
-      val snapshot = spark.read.parquet(snapPath)
-      val newDf = docs.filter(col("doc_id") % 3 === 0)
-      def arm(repart: Boolean): DataFrame = {
-        val sig0 = Incremental.signatures(newDf, "text", "doc_id")
-        val newSig = if (repart) sig0.repartition(col("doc_id")) else sig0
-        newDf.join(Incremental.dropIds(newSig, snapshot, "doc_id", 32, 2, 0.25),
-          Seq("doc_id"), "left_anti")
-      }
-      for (round <- 1 to 3) {
-        time(s"r$round plain ")(arm(repart = false))
-        time(s"r$round repart")(arm(repart = true))
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("budget1")) {
-      // Exact-window vs histogram-threshold token budget on ONE GIANT
-      // STRATUM (the shape the histogram form exists for): with a
-      // single stratum the exact form's window is one sequential task
-      // over the whole corpus, while the histogram form's only
-      // data-sized stages are a map-side-combined aggregate and a
-      // narrow filter. On the gate's many-small-strata shape the exact
-      // form wins instead (windows parallelize across strata) — both
-      // measurements belong in BASELINE.md.
-      val one = docs.withColumn("stratum", lit("all"))
-      val budget = 200000L
-      time("budget_exact_1stratum")(
-        Sampling.tokenBudget(one, "text", "doc_id", "stratum", budget))
-      time("budget_hist_1stratum")(
-        Sampling.tokenBudgetHistogram(one, "text", "doc_id", "stratum", budget))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("mhab")) {
-      // Carried-sig vs join-back A/B for the minhash candidate path
-      // (round-9 verdict adjudication): bandCandidates carries the
-      // k=32-long signature on every band row to delete the candidate
-      // distinct() and all signature join-backs;
-      // bandCandidatesJoinBack ships narrow band rows but pays the
-      // distinct + two join-backs. Signatures are MATERIALIZED to
-      // parquet first so the timed stage is exactly the candidate
-      // generation + scoring, and the full pipelines are timed too.
-      // Sentinel-bracketed like `entry` mode.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      val k = 32; val bandRows = 2; val minEstSim = 0.25
-      NearDup.minhashSigsFromHashed(NearDup.hashedShingles(docs, "text", "doc_id"), "doc_id", k)
-        .write.mode("overwrite").parquet("/tmp/graft_mhab_sigs")
-      val sigs = spark.read.parquet("/tmp/graft_mhab_sigs")
-      def score(cand: DataFrame): DataFrame = {
-        val est = (0 until k)
-          .map(i => when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1), 1).otherwise(0))
-          .reduce(_ + _)
-          .cast("double") / k
-        cand.select(col("id_a"), col("id_b"), est.as("est_sim"))
-          .filter(col("est_sim") >= minEstSim)
-      }
-      println(s"docs: ${docs.count()}  pairs: ${score(NearDup.bandCandidates(sigs, "doc_id", k, bandRows)).count()}")
-      time("cand carried-sig")(score(NearDup.bandCandidates(sigs, "doc_id", k, bandRows)))
-      time("cand join-back")(score(NearDup.bandCandidatesJoinBack(sigs, "doc_id", k, bandRows)))
-      time("full carried-sig")(NearDup.minhashPairs(docs, "text", "doc_id"))
-      time("full join-back") {
-        val s = NearDup.minhashSigsFromHashed(
-          NearDup.hashedShingles(docs, "text", "doc_id"), "doc_id", k)
-        score(NearDup.bandCandidatesJoinBack(s, "doc_id", k, bandRows))
-      }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("clsab")) {
-      // Classifier inference A/B: broadcast-model join vs plan-time
-      // baked literal array (round-12 verdict item 3). Sentinel-
-      // bracketed like `entry` mode.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      time("classifier join")(TextOps.classifierScore(
-        docs, TextOps.lcgWeightTable(spark, 1024), "text", "doc_id", biasScaled = -53687091L))
-      time("classifier baked")(TextOps.classifierScoreBaked(
-        docs, TextOps.lcgWeights(1024), "text", "doc_id", biasScaled = -53687091L))
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("kmvshare")) {
-      // Round-20: which SHARED-subtree kmv formulation is cheaper?
-      // (a) occurrence-hash: project (h, tok) per token occurrence →
-      //     groupBy(h).countDistinct(tok) — md5 per OCCURRENCE, the
-      //     (h, tok) pair rides the corpus exchange;
-      // (b) vocab-first: distinct(tok) → project h → groupBy(h).count
-      //     — md5 per DISTINCT token, bare tok rides the exchange.
-      // Same outputs by construction; row diff asserted. Interleaved.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      val k = 256
-      def finish(perHash: DataFrame): DataFrame = {
-        val kth = perHash.orderBy(col("h")).limit(k)
-          .agg(max(when(col("__ntok") >= 1, col("h"))).as("kth_hash"),
-            count(lit(1)).as("__n_in_k"))
-        val exact = perHash.agg(coalesce(sum(col("__ntok")), lit(0L)).as("exact_distinct"))
-        kth.crossJoin(exact).select(
-          lit(k).as("k"), col("kth_hash"),
-          when(col("__n_in_k") === k && col("kth_hash") > 0,
-            lit((k - 1).toDouble) * lit(4294967296.0) / col("kth_hash").cast("double"))
-            .as("est_distinct"),
-          col("exact_distinct"))
-      }
-      def occHash(): DataFrame = finish(
-        docs.select(explode(NearDup.tokens(col("text"))).as("tok"))
-          .filter(length(col("tok")) > 0)
-          .select(NearDup.hash32(col("tok")).as("h"), col("tok"))
-          .groupBy(col("h")).agg(countDistinct(col("tok")).as("__ntok")))
-      def vocabFirst(): DataFrame = finish(
-        docs.select(explode(NearDup.tokens(col("text"))).as("tok"))
-          .filter(length(col("tok")) > 0)
-          .distinct()
-          .select(NearDup.hash32(col("tok")).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("__ntok")))
-      val a = occHash(); val b = vocabFirst()
-      println(s"row diff: ${a.exceptAll(b).count() + b.exceptAll(a).count()}")
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
+  /** `jobs <name>...` — noise-immune PLAN-SHAPE metric: the number of
+    * Spark jobs one execution of each entry launches (eager plan-time
+    * jobs — counts, checkpoints, broadcasts-built-by-collect — plus the
+    * final noop write). Wall time on a shared VM swings 2-4× under
+    * memory-compaction stalls; the job count is a deterministic
+    * property of the binary, so an optimization that deletes driver
+    * jobs is verifiable in ONE run on any day. The listener bus is
+    * drained around the counted run, so the count is exact.
+    */
+  private def jobs(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          counter.incrementAndGet(); ()
         }
-        println(f"$name%-16s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      for (round <- 1 to 3) {
-        rep(s"r$round occ-hash  ")(occHash())
-        rep(s"r$round vocab-first")(vocabFirst())
-      }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
+      })
+    names.foreach { k =>
+      def run(): Unit = graft.SparkEntry.queries(k)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      run() // warm-up (file-listing jobs happen here, not in the count)
+      org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
+      counter.set(0)
+      run()
+      org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
+      println(f"$k%-28s jobs ${counter.get()}")
     }
+  }
 
-    if (args.contains("embrep")) {
-      // Round-20: does a repartition(band_idx, band_key) reuse point on
-      // embedCosinePairs' band rows (sig computed once, one heavy
-      // exchange) beat the current shape (sig computed once per join
-      // side, AQE free to broadcast one side)? The simhash twin showed
-      // a scale-INVERTING trade; embed's per-row signature is ~30×
-      // heavier (32×64 dot loop) and its band rows ~20× wider (the
-      // 64-double vector rides them). Row diff asserted 0.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      val vecs = graft.sources.Tables.parquetDir(spark, sfDir)("embeddings")
-      val dim = 64; val planes = 32; val bandBits = 8; val minCos = 0.4
-      val nBands = planes / bandBits
-      def variant(repart: Boolean): DataFrame = {
-        val sigs = NearDup.signSigs(vecs, "embedding", "vec_id", dim, planes)
-        val bands = NearDup.signBandKeys(col("sig"), nBands, bandBits)
-        val bandRows0 = sigs.select(
-          col("vec_id"), col("v"), col("nrm"), col("sig"),
-          posexplode(bands).as(Seq("band_idx", "band_key")))
-        val bandRows =
-          if (repart) bandRows0.repartition(col("band_idx"), col("band_key")) else bandRows0
-        def firstCollision(x: org.apache.spark.sql.Column) =
-          (0 until nBands).foldRight(lit(nBands)) { (i, rest) =>
-            when(shiftrightunsigned(x, i * bandBits) % (1L << bandBits) === 0L, lit(i)).otherwise(rest)
-          }
-        val cos = NearDup.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
-        bandRows.as("a")
-          .join(bandRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.vec_id") < col("b.vec_id") &&
-              firstCollision(col("a.sig").bitwiseXOR(col("b.sig"))) === col("a.band_idx") &&
-              cos >= minCos)
-          .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), cos.as("cos_sim"))
-      }
-      val a = variant(false); val c = variant(true)
-      println(s"pairs: ${a.count()}  row diff: ${a.exceptAll(c).count() + c.exceptAll(a).count()}")
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-16s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      for (round <- 1 to 3) {
-        rep(s"r$round A current")(variant(false))
-        rep(s"r$round C rep-band")(variant(true))
-      }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
+  /** `finalplan [full] <name>...` — the POST-execution final AQE plan's
+    * node counts (ReusedQueryStage / ReusedExchange / Exchange / scans /
+    * joins). `.explain` before execution shows isFinalPlan=false and
+    * hides runtime stage reuse, so plan-reuse claims (is a
+    * twice-referenced subtree computed once?) need this view, not
+    * PlanDump's. `full` also prints the plan.
+    */
+  private def finalplan(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
+    val full = args.contains("full")
+    args.filterNot(_ == "full").foreach { k =>
+      val df = graft.SparkEntry.queries(k)(spark, sfDir)
+      // collect(), NOT a noop write: df.write builds a NEW
+      // QueryExecution for the write command, leaving df's own plan
+      // unexecuted (isFinalPlan=false, runtime reuse invisible)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      def n(pat: String) = pat.r.findAllIn(p).length
+      println(f"$k%-24s ReusedQueryStage=${n("ReusedQueryStage")} ReusedExchange=${n("ReusedExchange")} " +
+        s"Exchange=${n("Exchange")} scans=${n("Scan parquet")} smj=${n("SortMergeJoin")} " +
+        s"shj=${n("ShuffledHashJoin")} bhj=${n("BroadcastHashJoin")} sortAgg=${n("SortAggregate")}")
+      if (full) println(p)
     }
+  }
 
-    if (args.contains("simhab")) {
-      // Round-20: simhashPairs' band self-join consumes the signature
-      // frame on BOTH sides with no exchange below it — the per-token
-      // md5 SimhashSig loop (the op's dominant cost) runs twice per
-      // execution. Three arms, interleaved, row diff asserted:
-      //   A current (no reuse point),
-      //   B sims.repartition(id) — narrow 16 B rows, md5 once, band
-      //     sides still exchange/broadcast above the reused exchange,
-      //   C bandRows.repartition(band_idx, band_key) — one band-row
-      //     exchange, join runs in place on both sides.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      val SimBandBits = 15
-      def variant(arm: Char): DataFrame = {
-        val sims0 = NearDup.simhashSigs(docs, "text", "doc_id")
-        val sims = if (arm == 'B') sims0.repartition(col("doc_id")) else sims0
-        val bands = array((0 until 4).map { j =>
-          shiftrightunsigned(col("sim"), j * SimBandBits) % (1 << SimBandBits)
-        }: _*)
-        val bandRows0 = sims.select(col("doc_id"), col("sim"), posexplode(bands).as(Seq("band_idx", "band_key")))
-        val bandRows = if (arm == 'C') bandRows0.repartition(col("band_idx"), col("band_key")) else bandRows0
-        val a = bandRows.select(col("doc_id").as("id_a"), col("sim").as("sim_a"), col("band_idx"), col("band_key"))
-        val b = bandRows.select(col("doc_id").as("id_b"), col("sim").as("sim_b"), col("band_idx"), col("band_key"))
-        val firstMatch = (0 until 4).foldRight(lit(4)) { (i, rest) =>
-          when(shiftrightunsigned(col("sim_a").bitwiseXOR(col("sim_b")), i * SimBandBits)
-            % (1 << SimBandBits) === 0L, lit(i)).otherwise(rest)
-        }
-        a.as("a").join(b.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("id_a") < col("id_b") &&
-              firstMatch === col("a.band_idx"))
-          .select(col("id_a"), col("id_b"),
-            bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("int").as("hamming"))
-          .filter(col("hamming") <= 3)
-      }
-      val ref = variant('A'); val vb = variant('B'); val vc = variant('C')
-      println(s"pairs: ${ref.count()}  diff A/B: ${ref.exceptAll(vb).count() + vb.exceptAll(ref).count()}" +
-        s"  A/C: ${ref.exceptAll(vc).count() + vc.exceptAll(ref).count()}")
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-16s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      for (round <- 1 to 3) {
-        rep(s"r$round A current")(variant('A'))
-        rep(s"r$round B rep-id ")(variant('B'))
-        rep(s"r$round C rep-band")(variant('C'))
-      }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("kmvab")) {
-      // KMV estimator A/B: full-distinct shuffle + TakeOrdered vs the
-      // per-partition bottom-k cut (round-12 verdict item 4). Both
-      // estimate-only (the exact countDistinct the sketch replaces is
-      // excluded from both sides). Sentinel-bracketed.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-      def estPlain(k: Int): DataFrame = {
-        val toks = docs.select(explode(NearDup.tokens(col("text"))).as("tok"))
-          .filter(length(col("tok")) > 0)
-        toks.select(graft.ops.NearDup.hash32(col("tok")).as("h"))
-          .distinct().orderBy(col("h")).limit(k)
-          .agg(max(col("h")).as("kth_hash"), count(lit(1)).as("n"))
-      }
-      for (k <- Seq(16, 256)) {
-        time(s"kmv plain k=$k")(estPlain(k))
-        time(s"kmv cut   k=$k")(Sketch.distinctTokensKmvCut(docs, "text", k))
-      }
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("bloomab")) {
-      // Decontam pre-filter A/B (round-12 verdict item 5): plain
-      // broadcast join vs a driver-built Bloom filter over the eval
-      // shingle hashes probed ahead of the join
-      // (BloomFilterMightContain over a literal — codegen, foldable).
-      // Hypothesis under test: the bloom cuts rows entering the join;
-      // counter-hypothesis: a broadcast-hash-join probe already
-      // rejects misses at the same per-row cost, so the bloom is pure
-      // added work. Sentinel-bracketed.
-      import org.apache.spark.sql.graftglue.Bridge
-      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-      import org.apache.spark.sql.types.BinaryType
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      // same split as the decontam_overlap gate entry: every 20th doc
-      // is eval, the rest corpus
-      val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-      val eval = docs.filter(col("doc_id") % 20 === 0)
-      time("decontam plain")(Decontam.overlap(corpus, eval, "text", "doc_id"))
-
-      val evalShingles = NearDup.hashedShingles(eval, "text", "doc_id")
-        .select(col("h"), col("doc_id").as("eval_id")).distinct()
-      val nEval = evalShingles.count()
-      val bf = evalShingles.stat.bloomFilter("h", math.max(nEval, 1L), 0.01)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      println(s"eval distinct (h,id) pairs: $nEval, bloom bytes: ${bos.size()}")
-      def overlapBloom(): DataFrame = {
-        val might = Bridge.column(BloomFilterMightContain(
-          Literal(bos.toByteArray, BinaryType),
-          Bridge.resolvedExpression(col("h"))))
-        val hits = NearDup.hashedShingles(corpus, "text", "doc_id")
-          .filter(might)
-          .join(broadcast(evalShingles), "h")
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("h")).as("n_hits"),
-            countDistinct(col("eval_id")).as("n_eval_docs"))
-        corpus.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            coalesce(col("n_eval_docs"), lit(0L)).as("n_eval_docs"),
-            (coalesce(col("n_hits"), lit(0L)) >= 2).as("contaminated"))
-      }
-      time("decontam bloom-prefiltered")(overlapBloom())
-      // output equivalence on this very data (bloom has no false
-      // negatives; false positives die in the exact join)
-      val a = Decontam.overlap(corpus, eval, "text", "doc_id")
-      val diff = a.exceptAll(overlapBloom()).count() + overlapBloom().exceptAll(a).count()
-      println(s"row diff plain vs bloom: $diff")
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("embback")) {
-      // Round-20 adjudication (VERDICT item 5): embedCosinePairs' band
-      // rows carry (id, v, nrm, sig) — the dim-double vector rides the
-      // banded exchange dim·8 bytes × nBands times per corpus row so
-      // the cosine can be a join conjunct. The alternative ships only
-      // (id, sig) band rows [16 B], emits first-collision survivors,
-      // and joins v/nrm back for the rescore — two extra joins, but the
-      // heavy payload crosses the band exchange zero times. Same
-      // geometry, same first-collision dedup, row-diff asserted 0.
-      // Interleaved 3 rounds × 3 reps so VM weather hits both arms.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      val vecs = graft.sources.Tables.parquetDir(spark, sfDir)("embeddings")
-      val dim = 64; val planes = 32; val bandBits = 8; val minCos = 0.4
-      val nBands = planes / bandBits
-      def carried(): DataFrame = NearDup.embedCosinePairs(
-        vecs, "embedding", "vec_id", dim, planes, bandBits, minCos)
-      def joinBack(): DataFrame = {
-        val sigs = NearDup.signSigs(vecs, "embedding", "vec_id", dim, planes)
-        val bands = NearDup.signBandKeys(col("sig"), nBands, bandBits)
-        val bandRows = sigs.select(col("vec_id"), col("sig"),
-          posexplode(bands).as(Seq("band_idx", "band_key")))
-        def firstCollision(x: org.apache.spark.sql.Column) =
-          (0 until nBands).foldRight(lit(nBands)) { (i, rest) =>
-            when(shiftrightunsigned(x, i * bandBits) % (1L << bandBits) === 0L, lit(i))
-              .otherwise(rest)
-          }
-        val cand = bandRows.as("a")
-          .join(
-            bandRows.as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.band_key") === col("b.band_key") &&
-              col("a.vec_id") < col("b.vec_id") &&
-              firstCollision(col("a.sig").bitwiseXOR(col("b.sig"))) === col("a.band_idx"))
-          .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-        val cos = NearDup.dot(col("va"), col("vb")) / (col("na") * col("nb"))
-        cand
-          .join(sigs.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na")), Seq("id_a"))
-          .join(sigs.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"), cos.as("cos_sim"))
-          .filter(col("cos_sim") >= minCos)
-      }
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-20s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      val a = carried(); val b = joinBack()
-      println(s"pairs: ${a.count()}  row diff: ${a.exceptAll(b).count() + b.exceptAll(a).count()}")
-      for (round <- 1 to 3) {
-        rep(s"r$round carried ")(carried())
-        rep(s"r$round joinback")(joinBack())
-      }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("finalplan")) {
-      // MicroBench finalplan <name>... — the POST-execution final AQE
-      // plan's node counts (ReusedQueryStage / ReusedExchange /
-      // Exchange / scans / joins). `.explain` before execution shows
-      // isFinalPlan=false and hides runtime stage reuse, so plan-reuse
-      // claims (is a twice-referenced subtree computed once?) need
-      // this view, not PlanDump's.
-      val full = args.contains("full")
-      args.dropWhile(_ != "finalplan").drop(1).filterNot(_ == "full").foreach { k =>
-        val df = graft.SparkEntry.queries(k)(spark, sfDir)
-        // collect(), NOT a noop write: df.write builds a NEW
-        // QueryExecution for the write command, leaving df's own plan
-        // unexecuted (isFinalPlan=false, runtime reuse invisible)
-        df.collect()
-        val p = df.queryExecution.executedPlan.toString
-        def n(pat: String) = pat.r.findAllIn(p).length
-        println(f"$k%-24s ReusedQueryStage=${n("ReusedQueryStage")} ReusedExchange=${n("ReusedExchange")} " +
-          s"Exchange=${n("Exchange")} scans=${n("Scan parquet")} smj=${n("SortMergeJoin")} " +
-          s"shj=${n("ShuffledHashJoin")} bhj=${n("BroadcastHashJoin")} sortAgg=${n("SortAggregate")}")
-        if (full) println(p)
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("streambench")) {
-      // Round-20 (VERDICT item 8): timing visibility for the streaming
-      // dedup paths — three rounds of streaming optimization (r13-r19)
-      // landed with zero before/after numbers because the gate only
-      // checks output sets. Splits the current SF's documents /
-      // embeddings into N parquet files, streams them through the REAL
-      // stateful pipelines (watermark + dropDuplicatesWithinWatermark)
-      // with maxFilesPerTrigger=1 — N micro-batches through the memory
-      // sink, state accumulating across batches exactly like
-      // production — and reports each run's wall time from query start
-      // to processAllAvailable (a fresh query + sink per run: state
-      // never carries over between runs). 1 warm-up + 3 timed runs.
-      // Usage: MicroBench streambench [nFiles]   (default 8)
-      val rest = args.dropWhile(_ != "streambench").drop(1)
-      val nFiles = rest.headOption.flatMap(_.toIntOption).getOrElse(8)
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
+  /** `streambench [nFiles]` — timing for the streaming dedup paths.
+    * Splits the current SF's documents / embeddings into `nFiles`
+    * parquet files, streams them through the REAL stateful pipelines
+    * (watermark + dropDuplicatesWithinWatermark) with
+    * maxFilesPerTrigger=1 — N micro-batches through the memory sink,
+    * state accumulating across batches exactly like production — and
+    * reports each run's wall time from query start to
+    * processAllAvailable (a fresh query + sink per run: state never
+    * carries over between runs). 1 warm-up + 3 timed runs.
+    */
+  private def streambench(spark: SparkSession, sfDir: String, nFiles: Int): Unit =
+    sentinelBracketed(spark, sfDir) {
       val base = "/tmp/graft_streambench"
       spark.read.parquet(s"$sfDir/documents.parquet")
         .repartition(nFiles).write.mode("overwrite").parquet(s"$base/docs")
@@ -779,750 +190,5 @@ object MicroBench {
           "embedding", "ts", "1 hour", dim = 64
         ).select(col("band_idx"), col("band_key"))
       }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
     }
-
-    if (args.contains("asofab")) {
-      // Round-20 adjudication: joinAsOf's bucketed path computes the
-      // right side TWICE from source (union branch + carry summary;
-      // finalplan shows 0 ReusedQueryStage — InferFiltersFromConstraints
-      // pushes an isnotnull(key) into the summary branch only, so the
-      // two subtrees never canonicalize equal). Arm B buckets and
-      // REPARTITIONS the right side by (key, bucket) once: the summary
-      // aggregates in place on that partitioning (no exchange of its
-      // own) and the union branch consumes the same reused exchange —
-      // cost: the right side rides one extra shuffle into the union's
-      // (key, bucket) exchange; saved: a full recompute of the right
-      // subtree (scan + filter + caller aggregate + its exchange).
-      // Row diff asserted 0. Sentinel-bracketed, interleaved.
-      import org.apache.spark.sql.Column
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      val events = graft.sources.Tables.parquetDir(spark, sfDir)("events")
-      def purchases = events.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("last_purchase"))
-      def armA(): DataFrame =
-        AsOf.joinAsOf(events, purchases, Seq("user_id"), "ts", Seq("last_purchase"))
-
-      def armB(): DataFrame = {
-        val left = events; val right = purchases
-        val keyCols = Seq("user_id"); val tsCol = "ts"
-        val valueCols = Seq("last_purchase"); val timeBuckets = 32
-        val leftCols = left.columns.toSeq
-        val rWithVals = right
-          .filter(col(tsCol).isNotNull)
-          .withColumn("__vals", struct(valueCols.map(col): _*))
-        val valsType = rWithVals.schema("__vals").dataType
-        val boundsRow = rWithVals.agg(
-          min(col(tsCol).cast("double")).as("__tmin"),
-          max(col(tsCol).cast("double")).as("__tmax")).collect()(0)
-        val tminLit =
-          if (boundsRow.isNullAt(0)) lit(null).cast("double") else lit(boundsRow.getDouble(0))
-        val tmaxLit =
-          if (boundsRow.isNullAt(1)) lit(null).cast("double") else lit(boundsRow.getDouble(1))
-        val span = tmaxLit - tminLit
-        val tnum = col(tsCol).cast("double")
-        val bucketExpr = when(tminLit.isNull || tnum.isNull || span <= 0, lit(0L))
-          .otherwise(least(lit(timeBuckets - 1L),
-            greatest(lit(0L), floor((tnum - tminLit) / (span / timeBuckets)))))
-        // the ONE materialization of the right side: bucketed and
-        // hash-partitioned on the window/join keys
-        val rBucketed = rWithVals
-          .withColumn("__bucket", bucketExpr)
-          .repartition((keyCols.map(col) :+ col("__bucket")): _*)
-        val l = left
-          .withColumn("__side", lit(1))
-          .withColumn("__vals", lit(null).cast(valsType))
-          .withColumn("__bucket", bucketExpr)
-        val r = leftCols.filterNot(keyCols.contains).filterNot(_ == tsCol)
-          .foldLeft(rBucketed.withColumn("__side", lit(0)))((df, c) =>
-            df.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-        val shared = leftCols :+ "__vals" :+ "__side" :+ "__bucket"
-        val bucketed = l.select(shared.map(col): _*).unionByName(r.select(shared.map(col): _*))
-        val win1 = org.apache.spark.sql.expressions.Window
-          .partitionBy((keyCols :+ "__bucket").map(col): _*)
-          .orderBy(col(tsCol).asc, col("__side").asc)
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val filled1 = bucketed.withColumn("__vals", last(col("__vals"), ignoreNulls = true).over(win1))
-        val keyCs: Seq[Column] = keyCols.map(col)
-        val summary = rBucketed
-          .groupBy((keyCols :+ "__bucket").map(col): _*)
-          .agg(max_by(col("__vals"), col(tsCol)).as("__carry"))
-        val nextB = lead(col("__bucket"), 1)
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCs: _*).orderBy(col("__bucket")))
-        val carries = summary
-          .withColumn("__upto", coalesce(nextB, lit(timeBuckets - 1L)))
-          .filter(col("__bucket") + 1 <= col("__upto"))
-          .select((keyCs :+
-            explode(sequence(col("__bucket") + 1, col("__upto"))).as("__bucket") :+
-            col("__carry")): _*)
-        val filled = filled1
-          .join(carries.hint("shuffle_hash"), keyCols :+ "__bucket", "left")
-          .withColumn("__vals", coalesce(col("__vals"), col("__carry")))
-          .filter(col("__side") === 1)
-          .drop("__bucket", "__carry")
-        valueCols.foldLeft(filled)((df, c) =>
-          df.withColumn(c, col("__vals").getField(c))).drop("__vals", "__side")
-      }
-
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-16s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      val a = armA(); val b = armB()
-      println(s"rows: ${a.count()}  row diff: ${a.exceptAll(b).count() + b.exceptAll(a).count()}")
-      for (round <- 1 to 3) {
-        rep(s"r$round A current")(armA())
-        rep(s"r$round B shared ")(armB())
-      }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("clusab")) {
-      // Round-20 checkpoint-placement A/B for NearDup.clusters: the
-      // shipped form checkpoints HOPPED and leaves the jump join lazy —
-      // so the jump join executes once for the convergence isEmpty and
-      // again (twice — `labels` is referenced by both hop arms) inside
-      // the next round's checkpoint. Arm B checkpoints JUMPED instead
-      // (the hop aggregate then runs twice inside that one job, its
-      // exchange deduped by ReuseExchange); arm C checkpoints both.
-      // Pairs come from parquet so the timed region is the clustering
-      // machinery, not minhashPairs. Row diff asserted 0.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      NearDup.minhashPairs(docs, "text", "doc_id")
-        .write.mode("overwrite").parquet("/tmp/graft_clusab_pairs")
-      val pairs = spark.read.parquet("/tmp/graft_clusab_pairs")
-
-      def variant(ckptJumped: Boolean, ckptHopped: Boolean): DataFrame = {
-        val ckpt: DataFrame => DataFrame = d => d.localCheckpoint(eager = true)
-        val edges = ckpt(
-          pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-            .union(pairs.select(col("id_b").as("u"), col("id_a").as("v"))))
-        var labels = edges.select(col("u")).distinct()
-          .join(docs.select(col("doc_id").as("u")), Seq("u"), "left_semi")
-          .withColumn("root", col("u"))
-        var round = 0
-        var converged = false
-        val iterations = 6
-        while (round < iterations && !converged) {
-          round += 1
-          val nbrRows = edges
-            .join(labels.select(col("u").as("v"), col("root").as("nroot")), "v")
-            .select(col("u"), col("nroot").as("cand"), lit(0).as("__self"))
-          val hopped0 = labels
-            .select(col("u"), col("root").as("cand"), lit(1).as("__self"))
-            .unionByName(nbrRows)
-            .groupBy("u")
-            .agg(min(col("cand")).as("root"),
-              max(when(col("__self") === 1, col("cand"))).as("__prev"),
-              max(col("__self")).as("__s"))
-            .filter(col("__s") === 1)
-            .select(col("u"), col("root"), col("__prev"))
-          val hopped = if (ckptHopped) ckpt(hopped0) else hopped0
-          val jumped0 = hopped
-            .join(hopped.select(col("u").as("__r"), col("root").as("__rr")), col("root") === col("__r"), "left")
-            .select(col("u"),
-              least(col("root"), coalesce(col("__rr"), col("root"))).as("root"),
-              col("__prev"))
-          val jumped = if (ckptJumped) ckpt(jumped0) else jumped0
-          if (round < iterations)
-            converged = jumped.filter(col("root") =!= col("__prev")).isEmpty
-          labels = jumped.select(col("u"), col("root"))
-        }
-        val lab = labels.select(col("u").as("__cc_u"), col("root").as("__cc_root"))
-        docs.select(col("doc_id"))
-          .join(lab, col("doc_id") === col("__cc_u"), "left")
-          .select(col("doc_id"), coalesce(col("__cc_root"), col("doc_id")).as("cluster_id"))
-      }
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-24s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      val ref = NearDup.clusters(docs, pairs, "doc_id")
-      val b = variant(ckptJumped = true, ckptHopped = false)
-      val c = variant(ckptJumped = true, ckptHopped = true)
-      println(s"row diff A/B: ${ref.exceptAll(b).count() + b.exceptAll(ref).count()}" +
-        s"  A/C: ${ref.exceptAll(c).count() + c.exceptAll(ref).count()}")
-      for (round <- 1 to 3) {
-        rep(s"r$round A ckpt-hopped")(NearDup.clusters(docs, pairs, "doc_id"))
-        rep(s"r$round B ckpt-jumped")(variant(ckptJumped = true, ckptHopped = false))
-        rep(s"r$round C ckpt-both  ")(variant(ckptJumped = true, ckptHopped = true))
-      }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("decontamab")) {
-      // Round-20 adjudication: the baked row-local overlap (one
-      // codegen projection against a plan-time EvalShingleModel) vs
-      // the pre-round-20 explode → broadcast join → two-countDistinct
-      // aggregate → left-join-back formulation (reproduced inline
-      // below, exactly as Decontam.overlap read through round 19).
-      // The model-freeze job runs at construction, INSIDE each timed
-      // rep — nothing is amortized across runs. Sentinel-bracketed.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-      val eval = docs.filter(col("doc_id") % 20 === 0)
-
-      def overlapJoin(): DataFrame = {
-        val evalShingles = NearDup.hashedShingles(eval, "text", "doc_id")
-          .select(col("h"), col("doc_id").as("eval_id")).distinct()
-        val hits = NearDup.hashedShingles(corpus, "text", "doc_id")
-          .join(broadcast(evalShingles), "h")
-          .groupBy(col("doc_id"))
-          .agg(countDistinct(col("h")).as("n_hits"),
-            countDistinct(col("eval_id")).as("n_eval_docs"))
-        corpus.select(col("doc_id")).join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            coalesce(col("n_eval_docs"), lit(0L)).as("n_eval_docs"),
-            (coalesce(col("n_hits"), lit(0L)) >= 2).as("contaminated"))
-      }
-
-      val reps = 5
-      def rep(name: String)(df: => DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-24s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      }
-      rep("overlap join (r19 form)")(overlapJoin())
-      rep("overlap baked (r20)")(
-        Decontam.overlap(corpus, eval, "text", "doc_id"))
-      val a = Decontam.overlap(corpus, eval, "text", "doc_id")
-      val b = overlapJoin()
-      val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-      println(s"row diff baked vs join: $diff")
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("sqltextab")) {
-      // Round-17 ask #4: what does the SQL-TEXT backend cost vs the
-      // plan path? The emitted text leans on interpreted higher-order
-      // functions (transform / array_sort(collect_list(...))
-      // reassembly) where the plan path uses codegen expressions —
-      // parity is proven (SqlCompileSpec + 12 gate entries), the
-      // RATIO is what an embedder choosing the text route needs.
-      // Three heaviest emissions, same query string both arms,
-      // sentinel-bracketed, 3 timed reps after 2 warm-ups.
-      val sentinelExpected = graft.Sentinel.expectedFor(sfDir)
-      val sentinelDf = graft.sources.Tables.parquetDir(spark, sfDir)("lineitem")
-      def sentinelOnce(): Double = {
-        val t0 = System.nanoTime()
-        sentinelDf.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      sentinelOnce(); sentinelOnce()
-      val s0 = sentinelOnce()
-
-      graft.functions.GraftExtensions.register(spark)
-      val cat = graft.sources.Tables.parquetDir(spark, sfDir)
-      cat("documents").createOrReplaceTempView("documents")
-      cat("embeddings").createOrReplaceTempView("embeddings")
-      val queries = Seq(
-        "minhash" -> "documents | dedup kind=minhash text by doc_id",
-        "substrings" -> "documents | dedup kind=substrings text by doc_id",
-        "semantic" -> ("embeddings | dedup kind=semantic cos=0.4 cells=32 embedding by vec_id" +
-          " | project vec_id, label")
-      )
-      val reps = 3
-      def rep(name: String)(df: => DataFrame): Double = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); run()
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        println(f"$name%-22s min=${ts.min}%.3f med=${ts.sorted.apply(reps / 2)}%.3f max=${ts.max}%.3f")
-        ts.sorted.apply(reps / 2)
-      }
-      queries.foreach { case (k, q) =>
-        val plan = rep(s"$k plan-path")(graft.Pql.query(spark, q, cat))
-        val text = rep(s"$k sql-text")(spark.sql(graft.Pql.compileToSql(q, cat)))
-        println(f"$k%-22s text/plan ratio = ${text / plan}%.2fx")
-      }
-
-      val s1 = sentinelOnce()
-      val degraded = sentinelExpected > 0 && Seq(s0, s1).exists(_ > 2 * sentinelExpected)
-      println(f"sentinel $s0%.3f/$s1%.3f s (expected $sentinelExpected%.2f) degraded=$degraded")
-      spark.stop()
-      return
-    }
-
-    if (args.contains("explainjoins")) {
-      // Round-17 ask #3 (audit half): the two multi-join headline
-      // queries at the CURRENT SF — are the dims broadcast, is the
-      // fact scan filtered/pruned? Prints the formatted physical plan
-      // plus a one-line verdict per query. Plan-time only, no job.
-      for (k <- Seq("q3_shipping", "q5_local")) {
-        val df = graft.SparkEntry.queries(k)(spark, sfDir)
-        val plan = df.queryExecution.executedPlan.toString()
-        val nBroadcast = "BroadcastHashJoin".r.findAllIn(plan).length
-        val nSortMerge = "SortMergeJoin".r.findAllIn(plan).length
-        val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan).toSeq
-        println(s"==== $k: broadcastJoins=$nBroadcast sortMergeJoins=$nSortMerge")
-        pushed.foreach(p => println(s"  $p"))
-        println(plan)
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("embedgeo")) {
-      // LSH geometry vs corpus size (round-12 sf10 finding): with the
-      // default 32-plane/8-bit geometry the sign-LSH bucket occupancy
-      // grows linearly with n, so candidate PAIRS grow ~n² (measured:
-      // 102k → 982k → 11.1M pairs at sf1/sf3/sf10). The documented
-      // prescription is bandBits ~ log2(n/targetOccupancy); this mode
-      // measures it: same corpus, default vs scaled geometry.
-      val vecs = graft.sources.Tables.parquetDir(spark, sfDir)("embeddings")
-      // planes cap at 62 (one-long packed signature)
-      for ((planes, bits) <- Seq((32, 8), (48, 12), (60, 15))) {
-        val pairs = NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 64,
-          planes = planes, bandBits = bits)
-        val t0 = System.nanoTime()
-        val n = pairs.count()
-        println(f"embed geometry $planes/$bits: $n%12d pairs  ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("ngprobe")) {
-      // dedup_ngram stage bisection: capped sketch arrays, signatures,
-      // band candidates, full pipeline.
-      val max = 4096
-      val sets = docs.select(
-        col("doc_id"),
-        slice(array_sort(array_distinct(graft.functions.TextHash.shingleHashes(NearDup.tokens(col("text"))))), 1, max).as("hs"))
-      time("ng-sets (arrays)")(sets)
-      val hashed = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-      time("ng-hashed (explode)")(hashed)
-      val sigs = NearDup.minhashSigsFromHashed(hashed, "doc_id", 8)
-      time("ng-sigs (k=8)")(sigs)
-      val cand = NearDup.bandCandidates(sigs, "doc_id", 8, 1).select("id_a", "id_b")
-      println(s"candidates: ${cand.count()}")
-      time("ng-candidates")(cand)
-      time("ng-candidates-joinback")(
-        NearDup.bandCandidatesJoinBack(sigs, "doc_id", 8, 1).select("id_a", "id_b"))
-      time("ng-full")(NearDup.ngramJaccardPairs(docs, "text", "doc_id"))
-      val j1 = cand.as("c")
-        .join(sets.as("h1"), col("c.id_a") === col("h1.doc_id"))
-        .join(sets.as("h2"), col("c.id_b") === col("h2.doc_id"))
-      time("ng-join-size-only")(j1.select(col("c.id_a"), col("c.id_b"),
-        (size(col("h1.hs")) + size(col("h2.hs"))).as("sz")))
-      val jac = size(array_intersect(col("h1.hs"), col("h2.hs"))).cast("double") /
-        size(array_union(col("h1.hs"), col("h2.hs")))
-      time("ng-join-jaccard")(j1.select(col("c.id_a"), col("c.id_b"), jac.as("jaccard")))
-      time("ng-join-jaccard-filter")(
-        j1.select(col("c.id_a"), col("c.id_b"), jac.as("jaccard")).filter(col("jaccard") >= 0.2))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("tqprobe")) {
-      val t = col("text")
-      time("tq-scan-only")(docs.select(col("doc_id")))
-      time("tq-length")(docs.select(col("doc_id"), length(t).as("x")))
-      time("tq-split-size")(docs.select(col("doc_id"), size(TextOps.tokens(t)).as("x")))
-      time("tq-punct-regex")(docs.select(col("doc_id"),
-        regexp_count(t, lit("[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]")).as("x")))
-      time("tq-stop-hits")(docs.select(col("doc_id"),
-        graft.functions.TokenSetHits.tokenSetHits(TextOps.tokens(lower(t)), TextOps.Stopwords("en")).as("x")))
-      time("tq-full")(TextOps.qualityScore(docs, "text", "doc_id"))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("headline")) {
-      Seq("q1_agg", "q3_shipping", "q5_local", "events_windowed").foreach { k =>
-        time(k)(graft.SparkEntry.queries(k)(spark, sfDir))
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("ivfprobe")) {
-      // IVF cell-balance probe: max/mean occupied-cell size under the
-      // LCG (data-independent) vs hash-sampled (data-dependent)
-      // centroids, on (a) the raw embeddings and (b) a CLUSTERED
-      // synthetic (every vector pulled 4:1 toward one of 4 anchor
-      // vectors — the shape real embedding corpora have). The claim
-      // under test: LCG centroids let one hot Voronoi cell absorb a
-      // clustered corpus; sampled seeds track the data distribution.
-      val emb = graft.sources.Tables.parquetDir(spark, sfDir)("embeddings")
-      val dim = 64
-      val nCells = 32
-      val anchors = emb.filter(col("vec_id") < 4)
-        .select((col("vec_id") % 4).as("aid"), col("embedding").as("aemb"))
-      val clustered = emb.join(broadcast(anchors), col("vec_id") % 4 === col("aid"))
-        .select(col("vec_id"),
-          zip_with(col("embedding"), col("aemb"), (x, y) => lit(0.25) * x + y).as("embedding"))
-      def balance(name: String, df: DataFrame, centroids: DataFrame): Unit = {
-        val cells = Ann.cellRanks(df, "embedding", "vec_id", "vec_id", centroids)
-          .filter(col("r") === 1)
-          .groupBy("c").agg(count(lit(1)).as("n"))
-          .select("n").collect().map(_.getLong(0))
-        val total = cells.sum.toDouble
-        println(f"$name%-24s occupied=${cells.length}%3d/$nCells max=${cells.max}%6d " +
-          f"mean=${total / cells.length}%9.1f max/mean=${cells.max / (total / cells.length)}%6.2f " +
-          f"hottest-cell-share=${cells.max / total}%5.3f")
-      }
-      balance("raw lcg", emb, Ann.lcgCentroids(spark, dim, nCells))
-      balance("raw seeded", emb, Ann.seededCentroids(emb, "embedding", "vec_id", nCells))
-      balance("clustered lcg", clustered, Ann.lcgCentroids(spark, dim, nCells))
-      balance("clustered seeded", clustered, Ann.seededCentroids(clustered, "embedding", "vec_id", nCells))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("embed")) {
-      // dedup_embed stage split at the current SF: signature pass,
-      // candidate generation (the quadratic-in-bucket-size part), and
-      // the full rescore. Prints candidate counts so bucket growth is
-      // visible next to the times.
-      val vecs = graft.sources.Tables.parquetDir(spark, sfDir)("embeddings")
-      val dim = 64
-      // the fixed 32/8 sentry geometry (the library default went
-      // adaptive in round 13; this probe pins the historical shape)
-      time("embed-sigs") {
-        NearDup.signSigs(vecs, "embedding", "vec_id", dim, 32)
-      }
-      val sigs = NearDup.signSigs(vecs, "embedding", "vec_id", dim, 32)
-      // the SHARED band-key helper, not a re-derived copy: the probe
-      // must count the exact candidate set embedCosinePairs generates
-      val bands = NearDup.signBandKeys(col("sig"), nBands = 4, bandBits = 8)
-      val bandRows = sigs.select(col("vec_id"), posexplode(bands).as(Seq("band_idx", "band_key")))
-      println(s"vectors: ${vecs.count()}")
-      println(s"candidate pairs: ${
-        bandRows.as("a").join(
-          bandRows.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_key") === col("b.band_key") &&
-            col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id"), col("b.vec_id")).distinct().count()
-      }")
-      time("embed-pairs (full)") {
-        NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim, planes = 32, bandBits = 8)
-      }
-      val full = NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim, planes = 32, bandBits = 8)
-      full.write.format("noop").mode("overwrite").save()
-      println(full.queryExecution.executedPlan.toString.linesIterator
-        .filter(l => l.contains("Join") || l.contains("Exchange"))
-        .mkString("\n"))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("chunk")) {
-      // old higher-order-function chunk formulation (replaced in
-      // TextOps.chunk by the linear \G-regex scan): transform(sequence)
-      // re-evaluates the inlined token split per CHUNK (interpreted,
-      // O(chunks × tokens) per doc) — kept here for the BASELINE
-      // before/after comparison only
-      val n = 64
-      time("chunk-hof (old)") {
-        val w = TextOps.tokens(col("text"))
-        val nChunks = greatest(ceil(size(w).cast("double") / n).cast("int"), lit(1))
-        val chunks = transform(
-          sequence(lit(0), nChunks - 1),
-          c => array_join(slice(w, c * n + 1, lit(n)), " ")
-        )
-        docs.select(col("doc_id"), posexplode(chunks).as(Seq("chunk_idx", "chunk_text")))
-          .withColumn(
-            "n_tokens",
-            when(length(col("chunk_text")) === 0, lit(0L))
-              .otherwise(size(split(col("chunk_text"), " ")).cast("long"))
-          )
-      }
-      time("chunk-regex (new)") {
-        TextOps.chunk(docs, "text", "doc_id", chunkTokens = n)
-      }
-      spark.stop()
-      return
-    }
-
-    val t = col("text")
-    time("dedup-exact") {
-      Dedup.exact(docs, "text", "doc_id")
-    }
-    time("tokens-explode") {
-      docs.select(col("doc_id"), explode(NearDup.tokens(t)).as("w"))
-    }
-    time("shingles-explode") {
-      docs.select(col("doc_id"), explode(NearDup.shingles(t)).as("s"))
-    }
-    time("shingles-hashed (legacy)") {
-      docs.select(col("doc_id"), explode(NearDup.shingles(t)).as("s"))
-        .select(col("doc_id"), expr("conv(substring(md5(cast(s as binary)), 1, 8), 16, 10)").cast("long").as("h"))
-    }
-    time("hashedShingles (window)") {
-      NearDup.hashedShingles(docs, "text", "doc_id")
-    }
-    time("minhash-pairs (full)") {
-      NearDup.minhashPairs(docs, "text", "doc_id")
-    }
-    time("ngram-pairs (full)") {
-      NearDup.ngramJaccardPairs(docs, "text", "doc_id")
-    }
-    time("simhash-sigs") {
-      NearDup.simhashSigs(docs, "text", "doc_id")
-    }
-    time("simhash-pairs (full)") {
-      NearDup.simhashPairs(docs, "text", "doc_id")
-    }
-
-    if (args.contains("iu10")) {
-      // innerunique cost probe at 10×: the semantic all-column
-      // dropDuplicates (reference: SELECT DISTINCT * — pql.go:202-214)
-      // vs the NOT-equivalent key-projection variant (dedup only the
-      // columns the query keeps; collapses rows that differ in dropped
-      // columns, changing output multiplicity). Quantifies what the
-      // narrower shuffle would buy if a user opts into key-distinct
-      // semantics via `summarize by` before the join.
-      val events = graft.sources.Tables.parquetDir(spark, sfDir)("events")
-      val ev10raw = (0 until 10).map(i => events.select(
-        (col("event_id") + lit(i * 100000000L)).as("event_id"),
-        col("ts"), col("user_id"), col("event_type"), col("value"), col("props")
-      )).reduce(_.union(_))
-      ev10raw.write.mode("overwrite").parquet("/tmp/graft_iu10/events")
-      val ev10 = spark.read.parquet("/tmp/graft_iu10/events")
-      val dim = events.groupBy(col("event_type").as("et")).agg(count(lit(1)).as("type_total"))
-      time("iu full-row dedup 10x") {
-        ev10.dropDuplicates().join(dim, col("event_type") === col("et"))
-          .select("event_id", "user_id", "type_total")
-      }
-      time("iu key-projected 10x") {
-        ev10.select("event_id", "user_id", "event_type").dropDuplicates()
-          .join(dim, col("event_type") === col("et"))
-          .select("event_id", "user_id", "type_total")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("iuwide")) {
-      // Wide-row innerunique probe (round 15): BASELINE's sf0.1
-      // adjudication of `join` default-flavor cost — "full-row
-      // dropDuplicates costs nothing at this row width" — was measured
-      // on NARROW events rows. This re-measures on the text-heavy
-      // documents table at the given SF: the full-row form shuffles
-      // the text payload in the distinct exchange, the key-projected
-      // variant (NOT semantically equivalent — collapses rows that
-      // differ only in dropped columns) bounds what a narrower
-      // shuffle would buy.
-      val dim = docs.groupBy(col("source").as("src")).agg(count(lit(1)).as("src_total"))
-      time("iu wide full-row") {
-        docs.dropDuplicates().join(dim, col("source") === col("src"))
-          .select("doc_id", "src_total")
-      }
-      time("iu wide key-projected") {
-        docs.select("doc_id", "source").dropDuplicates()
-          .join(dim, col("source") === col("src"))
-          .select("doc_id", "src_total")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.contains("scale10ops")) {
-      // 10× scaling slopes for the round-3 ops. Inputs are materialized
-      // to parquet FIRST so the timed run measures the operator, not
-      // the replication expressions. Replication shapes:
-      //  - events: ids and user_ids shifted per replica — 10× users at
-      //    the same per-user density, the realistic growth axis for
-      //    keyed joins and packing.
-      //  - documents: every token suffixed with the replica index, so
-      //    replicas share NO shingles (distinct-corpus growth; the
-      //    clique-saturated shape is covered by the scale10 rows).
-      val base = "/tmp/graft_scale10"
-      val events = graft.sources.Tables.parquetDir(spark, sfDir)("events")
-
-      def materialize(path: String, df: DataFrame): DataFrame = {
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      }
-      def eventsX(n: Int): DataFrame = materialize(
-        s"$base/events$n",
-        (0 until n).map(i => events.select(
-          (col("event_id") + lit(i * 100000000L)).as("event_id"),
-          col("ts"),
-          (col("user_id") + lit(i * 10000000L)).as("user_id"),
-          col("event_type"), col("value"), col("props")
-        )).reduce(_.union(_))
-      )
-      def docsX(n: Int): DataFrame = materialize(
-        s"$base/docs$n",
-        (0 until n).map(i => docs.select(
-          (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), "([A-Za-z0-9]+)", s"$$1x$i").as("text")
-        )).reduce(_.union(_))
-      )
-
-      def asof(ev: DataFrame): DataFrame = {
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy("user_id", "ts").agg(max("value").as("last_purchase"))
-        AsOf.joinAsOf(ev, purchases, Seq("user_id"), "ts", Seq("last_purchase"))
-      }
-      def range(ev: DataFrame): DataFrame = {
-        val iv = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("s"),
-            (col("ts") + expr("INTERVAL 30 MINUTES")).as("e"), col("event_id").as("iid"))
-        RangeJoin.pointInInterval(ev, iv, Seq("user_id"), "ts", "s", "e",
-          bucketMicros = 30L * 60 * 1000 * 1000)
-      }
-      def pack(d: DataFrame): DataFrame =
-        Packing.packSequences(
-          TextOps.chunk(d, "text", "doc_id", chunkTokens = 64),
-          "doc_id", "chunk_idx", "n_tokens", budgetTokens = 256, nShards = 8)
-
-      val e1 = eventsX(1); val e10 = eventsX(10)
-      val d1 = docsX(1); val d10 = docsX(10)
-      time("asof_join 1x")(asof(e1))
-      time("asof_join 10x")(asof(e10))
-      time("range_join 1x")(range(e1))
-      time("range_join 10x")(range(e10))
-      time("pack_sequences 1x")(pack(d1))
-      time("pack_sequences 10x")(pack(d10))
-      time("dedup_ngram 1x")(NearDup.ngramJaccardPairs(d1, "text", "doc_id"))
-      time("dedup_ngram 10x")(NearDup.ngramJaccardPairs(d10, "text", "doc_id"))
-      time("dedup_clusters 1x")(NearDup.clusters(d1, NearDup.minhashPairs(d1, "text", "doc_id"), "doc_id"))
-      time("dedup_clusters 10x")(NearDup.clusters(d10, NearDup.minhashPairs(d10, "text", "doc_id"), "doc_id"))
-      spark.stop()
-      return
-    }
-
-    if (args.contains("hotkey")) {
-      // Skew stress: ONE user carries ~90% of events. Measures
-      //  - as-of join: single per-key window (timeBuckets=1, the
-      //    one-task-sort shape) vs the bucketed two-pass fill — at 1x
-      //    and 10x, the bucketed form should stay near-flat while the
-      //    single window degrades with the hot key's row count;
-      //  - plain shuffle join vs Skew.saltedJoin on the same hot key
-      //    (broadcast disabled so the join actually shuffles — with a
-      //    broadcastable dim there is no skew problem to solve).
-      val base = "/tmp/graft_hotkey"
-      val events = graft.sources.Tables.parquetDir(spark, sfDir)("events")
-      def materialize(path: String, df: DataFrame): DataFrame = {
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-      }
-      def eventsX(n: Int): DataFrame = materialize(
-        s"$base/events$n",
-        (0 until n).map(i => events.select(
-          (col("event_id") + lit(i * 100000000L)).as("event_id"),
-          col("ts"),
-          // 99% of rows collapse onto user 0 — the hot key
-          when(pmod(col("event_id") + lit(i), lit(100)) =!= 0, lit(0L))
-            .otherwise(col("user_id") + lit(i * 10000000L)).as("user_id"),
-          col("event_type"), col("value"), col("props")
-        )).reduce(_.union(_))
-      )
-      def asof(ev: DataFrame, buckets: Int): DataFrame = {
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy("user_id", "ts").agg(max("value").as("last_purchase"))
-        AsOf.joinAsOf(ev, purchases, Seq("user_id"), "ts", Seq("last_purchase"),
-          timeBuckets = buckets)
-      }
-      val nBig = if (args.contains("x30")) 30 else 10
-      val e1 = eventsX(1); val e10 = eventsX(nBig)
-      time("asof hot 1x  buckets=1")(asof(e1, 1))
-      time("asof hot 1x  buckets=32")(asof(e1, 32))
-      time(s"asof hot ${nBig}x buckets=1")(asof(e10, 1))
-      time(s"asof hot ${nBig}x buckets=32")(asof(e10, 32))
-
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val dim = materialize(
-        s"$base/dim",
-        e10.select(col("user_id").as("uid")).distinct()
-          .withColumn("tier", pmod(col("uid"), lit(5)))
-      )
-      def agg(df: DataFrame): DataFrame =
-        df.groupBy("tier").agg(count(lit(1)).as("n"), sum("value").as("v"))
-      time(s"join hot ${nBig}x plain-shuffle")(
-        agg(e10.join(dim, e10("user_id") === dim("uid"))))
-      time(s"join hot ${nBig}x salted-32")(
-        agg(Skew.saltedJoin(e10, dim, "user_id", "uid", nSalts = 32)))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 * 1024 * 1024).toString)
-      spark.stop()
-      return
-    }
-
-    if (args.contains("scale10")) {
-      // 10× replication with shifted ids: every doc becomes a 10-clone
-      // clique — the adversarial shape for any PAIRS operator (output
-      // quadratic in clique size). The supported composition is
-      // deduplicateCorpus: exact dedup first collapses cliques.
-      val docs10 = (0 until 10)
-        .map(i => docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"), col("text")))
-        .reduce(_.union(_))
-      time("minhash-pairs 10x (cliques)") {
-        NearDup.minhashPairs(docs10, "text", "doc_id")
-      }
-      time("dedup-pipeline 10x") {
-        NearDup.deduplicateCorpus(docs10, "text", "doc_id")
-      }
-      time("simhash-sigs 10x") {
-        NearDup.simhashSigs(docs10, "text", "doc_id")
-      }
-    }
-    spark.stop()
-  }
 }

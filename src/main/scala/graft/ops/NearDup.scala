@@ -270,7 +270,7 @@ object NearDup {
     * signature table. Carrying wins when the signature is narrow
     * (embed: one long, 2.7× — round 8; ngram: k=8 with a ~1M-row
     * candidate multiset at sf1) and LOSES when it is wide (minhash
-    * k=32: 5× at sf1 — round-10 `MicroBench mhab`), so
+    * k=32: 5× at sf1 — round 10, BASELINE.md), so
     * [[minhashPairs]] uses [[bandCandidatesJoinBack]] instead.
     */
   private[ops] def bandCandidates(sigs: DataFrame, idCol: String, k: Int, bandRows: Int): DataFrame = {
@@ -301,8 +301,8 @@ object NearDup {
     * the price of a candidate-set exchange plus two signature
     * join-backs. Used by [[minhashPairs]] (wide k=32 sigs, small
     * candidate set — wins 5× at sf1 over carrying); see the A/B note
-    * there and `MicroBench mhab`. [[ngramJaccardPairs]] keeps the
-    * carried form (narrow k=8 sigs, ~1M-row candidate multiset).
+    * there. [[ngramJaccardPairs]] keeps the carried form (narrow k=8
+    * sigs, ~1M-row candidate multiset).
     */
   private[ops] def bandCandidatesJoinBack(
       sigs: DataFrame, idCol: String, k: Int, bandRows: Int): DataFrame = {
@@ -343,13 +343,13 @@ object NearDup {
     // would re-run the md5 shingle hashing. One narrow (id, sig)
     // exchange (same bytes the old aggregate shuffled, map-side
     // combined) pins the hashing to a single pass. Interleaved 3-arm
-    // A/B (`MicroBench mhsig`): rowwise+repartition 0.72–0.81 s vs
+    // A/B (round 19): rowwise+repartition 0.72–0.81 s vs
     // aggregate 0.81–1.05 s vs plain rowwise 0.94–1.09 s at sf0.1.
     val sigs = minhashSigsRowwise(
       df, graft.functions.TextHash.shingleHashes(tokens(col(textCol))), idCol, k)
       .repartition(col(idCol))
-    // JOIN-BACK candidates, not carried-sig (round-10 A/B, `MicroBench
-    // mhab`, sentinel-clean both scales): with k=32 the carried
+    // JOIN-BACK candidates, not carried-sig (round-10 A/B,
+    // sentinel-clean both scales): with k=32 the carried
     // signature widens every band row by 256 B and the first-collision
     // conjunct re-evaluates a 32-element equality chain inside the
     // generated join loop — sf0.1 0.455 vs 0.864 s, sf1 1.33 vs 9.49 s
@@ -405,7 +405,7 @@ object NearDup {
     // ReuseExchange to anchor on — each consumer would re-run the md5
     // shingle hashing. One narrow (id, hs) exchange pins the hashing
     // to a single pass; the join-backs then join ON the partition key.
-    // Interleaved 4-arm A/B (`MicroBench ngsets`): rowwise+repartition
+    // Interleaved 4-arm A/B (round 19): rowwise+repartition
     // beat the old aggregate shape in every round (0.68–0.98 s vs
     // 0.86–1.21 s at sf0.1).
     val sets = df.select(
@@ -699,7 +699,7 @@ object NearDup {
       // or a label's label), so chasing it stays in-component and only
       // ever decreases toward the component minimum.
       //
-      // Checkpointed TOO (round 20, `MicroBench clusab`): left lazy,
+      // Checkpointed TOO (round 20, OPTIMIZATION_r20.md): left lazy,
       // this join re-executed once for the convergence test and twice
       // more inside the next round's hop materialization (`labels` is
       // referenced by both hop arms) — 3 executions of an O(pairs)
@@ -862,9 +862,9 @@ object NearDup {
     * `shiftrightunsigned` is exact at any width and mirrors DuckDB's
     * BIGINT `//`; it is also the form [[embedCosinePairs]]'s
     * first-collision predicate uses, so the two can never disagree.
-    * Shared by embedCosinePairs, Ann.lshTopK, and MicroBench's embed
-    * probe — the probe must measure the EXACT candidate set the
-    * operator generates (a re-derived copy drifted once in round 8).
+    * Shared by embedCosinePairs and Ann.lshTopK, so the two generate
+    * the EXACT same candidate set (a re-derived copy drifted once in
+    * round 8).
     */
   private[ops] def signBandKeys(sig: Column, nBands: Int, bandBits: Int): Column = {
     // Long modulus, bounded width: `1 << bandBits` as Int wraps to 1 at
@@ -935,10 +935,10 @@ object NearDup {
     * FIXED geometry, bucket occupancy grows linearly in the corpus and
     * candidate pairs quadratically — measured at sf1/sf3/sf10: 102k →
     * 982k → 11.14M pairs under the default 32/8, vs ~94% of the pair
-    * mass at 4.5× less cost under 60/15 at sf10 (BASELINE.md round 12,
-    * `MicroBench embedgeo`). Size `bandBits` from the corpus estimate
-    * at plan time; recover recall by adding BANDS (more planes), never
-    * by widening buckets.
+    * mass at 4.5× less cost under 60/15 at sf10 (BASELINE.md round
+    * 12). Size `bandBits` from the corpus estimate at plan time;
+    * recover recall by adding BANDS (more planes), never by widening
+    * buckets.
     *
     * @param n expected corpus row count (an estimate is fine — one
     *          bit of error doubles/halves occupancy, nothing breaks)

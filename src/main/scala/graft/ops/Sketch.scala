@@ -76,15 +76,16 @@ object Sketch {
       // the corpus has fewer than k distinct hashes and max(h) is NOT
       // the k-th minimum — the estimate would be biased low.
       // max(when(__ntok >= 1, h)) == max(h): every h group holds at
-      // least one token, so countDistinct(tok) ≥ 1 — but the guard
+      // least one vocabulary token, so __ntok ≥ 1 — but the guard
       // keeps __ntok ALIVE on this side in a form the optimizer cannot
       // constant-fold away (a bare count(__ntok) normalizes to
       // count(1) on the non-null column and is then pruned). Without
-      // it, column pruning drops __ntok below the limit, the
-      // countDistinct collapses back to a plain hash-distinct, the two
-      // sides stop sharing a subtree, and the corpus is tokenized
-      // twice — exactly the round-19 failure mode. Pinned by the
-      // ReusedExchange assertion in OpsSpec.
+      // it, column pruning drops __ntok below the limit, groupBy(h)
+      // keeps only its key and becomes a plain hash-distinct, which
+      // makes the token distinct() beneath it redundant — it is
+      // removed, the two sides stop sharing the vocabulary exchange,
+      // and the corpus is tokenized twice (the round-19 failure mode
+      // above). Pinned by the ReusedExchange assertion in OpsSpec.
       .agg(max(when(col("__ntok") >= 1, col("h"))).as("kth_hash"),
         count(lit(1)).as("__n_in_k"))
     // coalesce keeps the column non-nullable like the old count(1)
@@ -115,7 +116,7 @@ object Sketch {
     * bottom-ks) = bottom-k of the global distinct set, and the one
     * output row is partition-count-independent even though the
     * intermediate union is not. A/B vs the plain form: BASELINE.md
-    * round 12 (`MicroBench kmvab`).
+    * round 12.
     */
   def distinctTokensKmvCut(df: DataFrame, textCol: String, k: Int = 256): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")

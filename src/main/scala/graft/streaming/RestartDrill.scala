@@ -38,17 +38,7 @@ object RestartDrill {
     * (crash+restart) must batch and shuffle identically for the
     * output compare to be exact.
     */
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(): SparkSession = graft.Sessions.local(cpus = 4)
 
   /** Time-ordered multi-file replay inputs (same shape as Soak: range
     * slices by event time, mtimes stamped in range order so

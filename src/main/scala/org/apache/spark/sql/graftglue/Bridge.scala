@@ -32,6 +32,13 @@ object Bridge {
   def defaultSizeInBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.sessionState.conf.defaultSizeInBytes
 
+  /** Block until every event already posted to the listener bus has
+    * been delivered (`listenerBus` is `private[spark]`), so a listener
+    * count read afterwards is exact.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a temp SQL function on a LIVE session (the
     * `spark.sql.extensions` config path only applies at session build).
     */

@@ -458,11 +458,12 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("KMV sketch tokenizes the corpus ONCE: exact and sketch sides reuse one exchange (round 20)") {
-    // both outputs hang off the same groupBy(h).agg(countDistinct(tok))
-    // frame; the guarded max keeps the optimizer from specializing the
-    // sketch side (see Sketch.scala). At runtime AQE must reuse the
-    // corpus-scale shuffle — the executed plan carries a reused stage
-    // and only ONE Generate (tokenize) executes.
+    // both outputs hang off the same vocabulary-first subtree — the
+    // token distinct(), hashed and counted per hash; the guarded max
+    // keeps the optimizer from specializing the sketch side (see
+    // Sketch.scala). At runtime AQE must reuse the distinct() exchange
+    // — the executed plan carries a reused stage and only ONE Generate
+    // (tokenize) executes.
     val dir = java.nio.file.Files.createTempDirectory("graft_kmv_plan").toString
     (0L until 20000L).map(i => (i, s"tok${i % 5000}")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(dir)

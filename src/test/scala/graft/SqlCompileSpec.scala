@@ -137,10 +137,13 @@ class SqlCompileSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val session = spark
     import session.implicits._
-    val trades = Seq((1, "A", 10L), (2, "A", 20L), (3, "B", 30L), (4, "B", 5L))
+    // a null-sym trade and an earlier null-sym quote: ASOF joins on key
+    // equality, so the trade must match nothing on both backends
+    val trades = Seq((1, Some("A"), 10L), (2, Some("A"), 20L), (3, Some("B"), 30L), (4, Some("B"), 5L),
+      (5, None, 40L))
       .toDF("trade_id", "sym", "tn")
       .withColumn("t", expr("timestamp_micros(tn * 1000000 + 1700000000000000)")).drop("tn")
-    val quotes = Seq(("A", 8L, 1.5), ("A", 20L, 2.5), ("B", 25L, 3.5))
+    val quotes = Seq((Some("A"), 8L, 1.5), (Some("A"), 20L, 2.5), (Some("B"), 25L, 3.5), (None, 35L, 9.5))
       .toDF("sym", "tn", "px")
       .withColumn("t", expr("timestamp_micros(tn * 1000000 + 1700000000000000)")).drop("tn")
     val iv = quotes.select(col("sym"), col("t").as("s"),

@@ -14,7 +14,7 @@ the same parquet tables and compares multisets:
   - timestamps normalized to naive UTC microseconds;
   - everything else exact.
 
-Usage: python3 tools/r18_difffuzz.py <dumpDir> <sfDir>
+Usage: python3 tools/difffuzz_duckdb.py <dumpDir> <sfDir>
 """
 import json
 import math

@@ -16,7 +16,7 @@ Canonical form (must mirror graft.HashGate.canon exactly):
   HUGEINT sum.
 
 Usage:
-  python3 tools/r18_hashgate.py <oracle_sql.json> <sfDir> <sparkLine.json> [entry...]
+  python3 tools/hashgate_duckdb.py <oracle_sql.json> <sfDir> <sparkLine.json> [entry...]
 where sparkLine.json holds graft.HashGate's output lines.
 """
 import json
