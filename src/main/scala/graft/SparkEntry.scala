@@ -2664,7 +2664,11 @@ object SparkEntry {
     // propagation + pointer jumping with a FIXED round count (6 rounds
     // cover diameter 2^6-1 = 63), so the DuckDB oracle (same hop+jump
     // rounds, unrolled CTEs) reproduces it exactly even on a
-    // pathological chain.
+    // pathological chain. While the pair graph fits under the
+    // broadcast-threshold cap (it does from sf0.01 to sf1) the rounds
+    // run on the driver and the plan carries the label map as a local
+    // relation; above the cap the same rounds run as distributed joins
+    // (NearDup.clusters).
     "dedup_clusters" -> Entry(
       (s, dir) => {
         val d = docs(s, dir)

@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bridge
+import org.apache.spark.sql.types._
 
 /** Near-duplicate detection: MinHash+LSH, SimHash, n-gram Jaccard, and
   * embedding-cosine variants.
@@ -586,14 +590,12 @@ object NearDup {
   /** Duplicate-cluster assignment: connected components over the
     * near-dup pair graph by min-label propagation WITH POINTER JUMPING
     * — each doc ends up labeled with the smallest id reachable through
-    * pairs (the cluster representative), expressed as plain DataFrame
-    * joins so AQE and broadcast apply.
+    * pairs (the cluster representative).
     *
     * Each round does two steps:
-    *   1. hop  — adopt the smallest label among direct neighbours
-    *      (one equi-join + groupBy-min against the tiny edge set);
+    *   1. hop  — adopt the smallest label among direct neighbours;
     *   2. jump — adopt the label OF the current label (`root ←
-    *      root(root)`), a self-join of the label frame on `root = u`.
+    *      root(root)`).
     * The jump step doubles the propagation radius per round, so `k`
     * rounds cover any cluster of diameter ≤ `2^k − 1` (k=6 → 63 hops)
     * instead of the `k` hops plain propagation reaches — the
@@ -603,25 +605,48 @@ object NearDup {
     * reproducible by an unrolled SQL oracle even on a pathological
     * chain), but rounds STOP EARLY at the first round that changes no
     * label (round 20): per-vertex labels only ever decrease and a
-    * round is a deterministic function of the label frame, so a no-op
-    * round is a fixed point — every remaining round is also a no-op
-    * and the early-terminated output is bit-identical to the full
-    * `iterations` unroll. Real near-dup graphs are overwhelmingly
-    * cliques/stars that settle in 1–2 rounds; the cap only bites on
-    * diameter->2^k chains, where the unrolled-oracle contract needs
-    * it. The change test is one tiny job per round (`isEmpty` over the
-    * checkpointed O(pairs) frame — the hop aggregate already carries
-    * each vertex's previous root, so no extra join). The label frame
-    * is checkpointed once per round, which both truncates the
-    * otherwise-exponential self-join lineage and bounds per-round work
-    * to one pass over the (id, label) frame.
+    * round is a deterministic function of the labels, so a no-op round
+    * is a fixed point — every remaining round is also a no-op and the
+    * early-terminated output is bit-identical to the full `iterations`
+    * unroll. Real near-dup graphs are overwhelmingly cliques/stars
+    * that settle in 1–2 rounds; the cap only bites on diameter->2^k
+    * chains, where the unrolled-oracle contract needs it.
+    *
+    * The edge set is materialized once (checkpointed). Where the
+    * rounds then run is decided from that materialized edge count —
+    * the runtime-statistics choice of Shark's partial DAG execution:
+    *
+    *   - DRIVER FINISH. One query collects the edges whose two endpoints
+    *     are both ids of `df` (two `left_semi` joins), with a
+    *     `limit(cap + 1)`. If at most `cap` come back, the same hop and
+    *     jump rounds (same cap, same early stop) run on the driver over
+    *     flat `Int` arrays, and the `(u, root)` label map returns as a
+    *     local relation. `cap` is the session's
+    *     `spark.sql.autoBroadcastJoinThreshold` divided by twice the id
+    *     type's default size — the edge list the session would already
+    *     agree to broadcast; a threshold ≤ 0 disables the driver finish.
+    *     Labels must order exactly as Spark's `least`/`min` do, so the
+    *     vertex ids are sorted once with Catalyst's interpreted ordering
+    *     for the id type (UTF-8 byte order for strings, NOT Java's
+    *     UTF-16 `String.compareTo`) and all label work is on their
+    *     ranks. Only integral ids and plain (UTF8_BINARY) strings take
+    *     this path: for those the ordering and value equality agree
+    *     with Spark's joins.
+    *   - DISTRIBUTED ROUNDS. Any other id type, and any edge set over
+    *     the cap, runs the O(pairs) DataFrame loop
+    *     ([[distributedLabels]]) — the form that scales to 100 TB.
+    *
+    * Either way only edge endpoints present in `df` carry labels, and
+    * every other row (no pair edge) keeps its own id: `df` is
+    * left-joined to the label map with `coalesce(root, id)`.
     *
     * Fault tolerance: the default `localCheckpoint` stores blocks on
     * executors — fast, but a lost executor on a real cluster kills the
     * job instead of recomputing (lineage is gone). Pass `checkpointDir`
-    * (HDFS/S3/cluster FS) to use RELIABLE `checkpoint` instead: each
-    * round's tiny (id, label) frame is persisted to the shared FS and
-    * survives executor loss. Locally the default is unchanged.
+    * (HDFS/S3/cluster FS) to use RELIABLE `checkpoint` instead: the
+    * edge set and each distributed round's tiny (id, label) frame are
+    * persisted to the shared FS and survive executor loss. Locally the
+    * default is unchanged.
     * Output: `idCol, cluster_id`.
     */
   def clusters(df: DataFrame, pairs: DataFrame, idCol: String, iterations: Int = 6,
@@ -634,13 +659,112 @@ object NearDup {
       case None => d => d.localCheckpoint(eager = true)
     }
     // materialize the edge set ONCE and truncate its lineage: the edge
-    // frame is referenced in every round, and an expensive pairs
-    // pipeline (LSH banding) would otherwise re-execute per iteration
-    // (measured 33 s -> 2.9 s at sf0.1). The checkpoint stores only
-    // the tiny pair list, not the corpus.
+    // frame is read by every distributed round (and by the driver
+    // finish's collect), and an expensive pairs pipeline (LSH banding)
+    // would otherwise re-execute per read (measured 33 s -> 2.9 s at
+    // sf0.1). The checkpoint stores only the tiny pair list, not the
+    // corpus.
     val edges = ckpt(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .union(pairs.select(col("id_b").as("u"), col("id_a").as("v"))))
+    val labels = driverLabels(df, edges, idCol, iterations)
+      .getOrElse(distributedLabels(df, edges, idCol, iterations, ckpt))
+    // internal names must not collide with an arbitrary idCol
+    val lab = labels.select(col("u").as("__cc_u"), col("root").as("__cc_root"))
+    df.select(col(idCol))
+      .join(lab, col(idCol) === col("__cc_u"), "left")
+      .select(col(idCol), coalesce(col("__cc_root"), col(idCol)).as("cluster_id"))
+  }
+
+  /** The driver finish of [[clusters]]: `Some((u, root))` as a local
+    * relation when the id type qualifies and at most `cap` edges have
+    * both endpoints in `df`, else `None`.
+    *
+    * Restricting the edges to in-`df` endpoints changes nothing: in the
+    * distributed rounds an endpoint outside `df` has no label, so it
+    * neither receives one (its hop row is filtered out) nor passes one
+    * on (the neighbour join finds no label for it). Null endpoints
+    * match no id and drop out the same way.
+    */
+  private def driverLabels(df: DataFrame, edges: DataFrame, idCol: String,
+      iterations: Int): Option[DataFrame] = {
+    val spark = df.sparkSession
+    val dt = edges.schema("u").dataType
+    // collated strings compare and join by their collation's rules,
+    // so only the binary-collated StringType qualifies
+    val eligible = dt match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+    val threshold = Bridge.autoBroadcastJoinThreshold(spark)
+    if (!eligible || threshold <= 0) return None
+    val cap = math.min(threshold / (2L * dt.defaultSize), Int.MaxValue - 1L).toInt
+    val ids = df.select(col(idCol))
+    val rows = edges
+      .join(ids.toDF("u"), Seq("u"), "left_semi")
+      .join(ids.toDF("v"), Seq("v"), "left_semi")
+      .select("u", "v") // a USING semi join puts its key first
+      .limit(cap + 1)
+      .collect()
+    if (rows.length > cap) return None
+
+    // rank the endpoint values in Catalyst's order for `dt`; slot 2e is
+    // edge e's u, slot 2e + 1 its v
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val keys = Array.tabulate(2 * rows.length)(s => toCatalyst(rows(s / 2).get(s % 2)))
+    val bySlot = Array.range(0, keys.length).sortBy(keys(_))(ord)
+    val vertex = new Array[Int](keys.length) // slot → rank of its id
+    val rankedIds = Array.newBuilder[Any] // the ids as collected, in rank order
+    var n = 0
+    for (k <- bySlot.indices) {
+      val s = bySlot(k)
+      if (k == 0 || !ord.equiv(keys(bySlot(k - 1)), keys(s))) {
+        rankedIds += rows(s / 2).get(s % 2)
+        n += 1
+      }
+      vertex(s) = n - 1
+    }
+    val idAt = rankedIds.result()
+
+    // the distributed rounds on ranks: hop reads the previous round's
+    // labels only, jump chases a label's label, early stop at a no-op
+    // round (the edge list already holds both directions)
+    var root = Array.range(0, n)
+    var round = 0
+    var changed = true
+    while (round < iterations && changed) {
+      round += 1
+      val hop = root.clone()
+      var e = 0
+      while (e < rows.length) {
+        val u = vertex(2 * e)
+        val r = root(vertex(2 * e + 1))
+        if (r < hop(u)) hop(u) = r
+        e += 1
+      }
+      val jump = Array.tabulate(n)(u => math.min(hop(u), hop(hop(u))))
+      changed = !java.util.Arrays.equals(jump, root)
+      root = jump
+    }
+    val schema = StructType(Seq(StructField("u", dt), StructField("root", dt)))
+    val labelRows = Array.tabulate(n)(u => Row(idAt(u), idAt(root(u))))
+    Some(spark.createDataFrame(java.util.Arrays.asList(labelRows: _*), schema))
+  }
+
+  /** The distributed rounds of [[clusters]], as plain DataFrame joins so
+    * AQE and broadcast apply. Each round's hop is one equi-join +
+    * aggregate against the edge set and its jump a self-join of the
+    * label frame on `root = u`. The change test is one tiny job per
+    * round (`isEmpty` over the checkpointed O(pairs) frame — the hop
+    * aggregate already carries each vertex's previous root, so no extra
+    * join). The label frame is checkpointed once per round, which both
+    * truncates the otherwise-exponential self-join lineage and bounds
+    * per-round work to one pass over the (id, label) frame.
+    * Output: `u, root` for the edge endpoints present in `df`.
+    */
+  private def distributedLabels(df: DataFrame, edges: DataFrame, idCol: String,
+      iterations: Int, ckpt: DataFrame => DataFrame): DataFrame = {
     // Iterate over the pair graph's VERTEX SET, not the corpus (round
     // 19): a row with no pair edge can never change its label (nbrMin
     // has no row for it; its root is its own id, so the jump self-join
@@ -722,11 +846,7 @@ object NearDup {
         converged = jumped.filter(col("root") =!= col("__prev")).isEmpty
       labels = jumped.select(col("u"), col("root"))
     }
-    // internal names must not collide with an arbitrary idCol
-    val lab = labels.select(col("u").as("__cc_u"), col("root").as("__cc_root"))
-    df.select(col(idCol))
-      .join(lab, col(idCol) === col("__cc_u"), "left")
-      .select(col(idCol), coalesce(col("__cc_root"), col(idCol)).as("cluster_id"))
+    labels
   }
 
   /** Per-ROW MinHash band rows, the streaming-safe form: the same

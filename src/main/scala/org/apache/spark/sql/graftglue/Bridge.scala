@@ -32,6 +32,12 @@ object Bridge {
   def defaultSizeInBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.sessionState.conf.defaultSizeInBytes
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
+    * (≤ 0 when broadcasting is disabled), parsed as Spark parses it.
+    */
+  def autoBroadcastJoinThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
   /** Block until every event already posted to the listener bus has
     * been delivered (`listenerBus` is `private[spark]`), so a listener
     * count read afterwards is exact.

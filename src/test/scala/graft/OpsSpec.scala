@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Ann, Decontam, Dedup, NearDup, Sampling, SemDedup, Shard, Sketch, TextOps}
@@ -29,6 +30,33 @@ class OpsSpec extends SparkTestBase {
     df.collect() // materialize so AQE finalizes the physical plan
     df.queryExecution.executedPlan.toString
   }
+
+  /** Spark jobs `body` submits, counted by job group. */
+  private def jobsFor(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set to
+    * `bytes`, then restores the session's previous setting.
+    */
+  private def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Whether a clusters output carries the driver finish's `(u, root)`
+    * label map as a local relation.
+    */
+  private def hasLabelMap(clusters: DataFrame): Boolean =
+    clusters.queryExecution.analyzed.exists {
+      case r: LocalRelation => r.output.map(_.name) == Seq("u", "root")
+      case _ => false
+    }
 
   private lazy val vecs: DataFrame = {
     // 8-dim unit-ish vectors: ids 0..9; id i and i+5 are near-parallel.
@@ -202,31 +230,96 @@ class OpsSpec extends SparkTestBase {
     // a triangle + singleton settles in round 1 (round 2 detects the
     // no-op and skips rounds 3-6); the 40-node chain keeps changing
     // labels through the cap. Same session, same code path — the
-    // clique run must submit strictly fewer Spark jobs.
-    val sc = spark.sparkContext
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
+    // clique run must submit strictly fewer Spark jobs. The round jobs
+    // belong to the distributed rounds, so broadcasting (and with it
+    // the driver finish, which runs no per-round job) is disabled.
     val cliqueIds = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
     val cliquePairs = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("id_a", "id_b")
     var clique: Map[Long, Long] = null
-    val cliqueJobs = jobsFor("cc-clique") {
+    val cliqueJobs = withBroadcastThreshold(-1)(jobsFor("cc-clique") {
       clique = NearDup.clusters(cliqueIds, cliquePairs, "doc_id", iterations = 6)
         .as[(Long, Long)].collect().toMap
-    }
+    })
     assert(clique == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
     val chainIds = (1L to 40L).toDF("doc_id")
     val chainPairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     var chain: Map[Long, Long] = null
-    val chainJobs = jobsFor("cc-chain") {
+    val chainJobs = withBroadcastThreshold(-1)(jobsFor("cc-chain") {
       chain = NearDup.clusters(chainIds, chainPairs, "doc_id", iterations = 6)
         .as[(Long, Long)].collect().toMap
-    }
+    })
     assert(chain.values.forall(_ == 1L))
     assert(cliqueJobs < chainJobs,
       s"early termination did not cut rounds: clique=$cliqueJobs chain=$chainJobs jobs")
+  }
+
+  test("clusters driver finish runs the 40-chain in a few jobs, not one per round") {
+    // the distributed rounds spend two checkpoint jobs and a change
+    // test per round (52 jobs on this chain with broadcasting off); the
+    // driver finish spends the edge checkpoint, one collect and the
+    // final query (7 jobs)
+    val chainIds = (1L to 40L).toDF("doc_id")
+    val chainPairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    var chain: Map[Long, Long] = null
+    val jobs = jobsFor("cc-chain-driver") {
+      chain = NearDup.clusters(chainIds, chainPairs, "doc_id", iterations = 6)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(chain.size == 40 && chain.values.forall(_ == 1L))
+    assert(jobs <= 8, s"driver finish ran $jobs jobs")
+  }
+
+  test("clusters driver finish matches the distributed rounds (table-driven parity)") {
+    val chain40 = ((1L to 40L).toDF("doc_id"), (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val chain100 = ((1L to 100L).toDF("doc_id"), (1L until 100L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val chain200 = ((1L to 200L).toDF("doc_id"), (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val clique = ((1L to 8L).toDF("doc_id"),
+      (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)).toDF("id_a", "id_b"))
+    val ints = ((1 to 9).toDF("doc_id"), Seq((9, 4), (4, 7), (7, 2), (5, 6)).toDF("id_a", "id_b"))
+    // UTF-8 byte order (Spark's): "z" < "ﬁ" (EF AC 81) < "😀" (F0 9F 98 80);
+    // Java's UTF-16 compareTo puts "😀" (D83D …) before "ﬁ" (FB01)
+    val strings = (Seq("ﬁ", "😀", "z", "y", "\uFFFF").toDF("doc_id"),
+      Seq(("😀", "ﬁ"), ("😀", "\uFFFF"), ("y", "z")).toDF("id_a", "id_b"))
+    val nulls = (Seq(Some(1L), Some(2L), Some(3L), Some(4L), None).toDF("doc_id"),
+      Seq((Some(1L), None), (None, Some(2L)), (Some(3L), Some(4L)), (None, None))
+        .toDF("id_a", "id_b"))
+    val absent = ((1L to 5L).toDF("doc_id"),
+      Seq((1L, 2L), (2L, 99L), (99L, 3L), (3L, 4L), (98L, 97L)).toDF("id_a", "id_b"))
+    val empty = ((1L to 3L).toDF("doc_id"), Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    val cases = Seq("40-chain" -> chain40, "100-chain" -> chain100,
+      "200-chain" -> chain200, "clique + singletons" -> clique,
+      "Int ids" -> ints, "UTF-8 vs UTF-16 string order" -> strings, "null id_a/id_b" -> nulls,
+      "endpoints absent from df" -> absent, "empty pairs" -> empty)
+    def run(ids: DataFrame, pairs: DataFrame): (Map[Any, Any], Boolean) = {
+      val out = NearDup.clusters(ids, pairs, "doc_id", iterations = 6)
+      (out.collect().map(r => r.get(0) -> r.get(1)).toMap, hasLabelMap(out))
+    }
+    for ((name, (ids, pairs)) <- cases) {
+      val (driver, local) = run(ids, pairs)
+      val (distributed, distLocal) = withBroadcastThreshold(-1)(run(ids, pairs))
+      assert(local && !distLocal, s"$name: driver path ran = $local, with broadcast off = $distLocal")
+      assert(driver == distributed, s"$name: driver $driver vs distributed $distributed")
+      assert(driver.size == ids.count(), s"$name: ${driver.size} rows")
+    }
+    val fromDriver = run(strings._1, strings._2)._1
+    assert(fromDriver("😀") == "ﬁ" && fromDriver("\uFFFF") == "ﬁ" && fromDriver("y") == "y")
+    // six hop + jump rounds reach 126 hops: the 100-chain converges,
+    // while the 200-chain (diameter 199) is cut off by the round cap
+    assert(run(chain100._1, chain100._2)._1.values.toSet == Set(1L))
+    assert(run(chain200._1, chain200._2)._1.values.toSet.size == 74)
+    val absentOut = run(absent._1, absent._2)._1
+    assert(absentOut == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L))
+  }
+
+  test("clusters takes the driver finish exactly when the edges fit the broadcast cap") {
+    // 4 pairs → 8 directed edges; Long ids cost 2 × 8 bytes per edge
+    val ids = (1L to 6L).toDF("doc_id")
+    val pairs = (1L until 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val atCap = withBroadcastThreshold(8 * 16)(NearDup.clusters(ids, pairs, "doc_id"))
+    val overCap = withBroadcastThreshold(8 * 16 - 1)(NearDup.clusters(ids, pairs, "doc_id"))
+    assert(hasLabelMap(atCap), "8 edges under an 8-edge cap did not finish on the driver")
+    assert(!hasLabelMap(overCap), "8 edges over a 7-edge cap finished on the driver")
+    assert(atCap.as[(Long, Long)].collect().toMap == overCap.as[(Long, Long)].collect().toMap)
   }
 
   test("clusters keeps string ids intact (labels propagate in the id's own type)") {

@@ -9,7 +9,11 @@ For each query dumped by graft.Verify it runs the corresponding oracle
 SQL in DuckDB over the same parquet tables and compares: row count,
 column names (sorted), and values (rows sorted by all columns; floats
 compared exactly, then with 1e-9 relative tolerance as a fallback
-diagnostic).
+diagnostic). Each oracle's top-level CTEs are evaluated one by one into
+DuckDB tables before its final select (perfbench/check.py's
+`materialize`): DuckDB may inline a CTE at every reference, which makes
+the unrolled connected-components oracle of dedup_clusters exponential
+in its round count.
 """
 import json
 import math
@@ -18,6 +22,9 @@ from pathlib import Path
 
 import duckdb
 import pandas as pd
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+from check import materialize  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -84,12 +91,13 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
 
     n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
+    for n, (name, sql) in enumerate(sorted(oracle.items())):
         res_dir = out_dir / f"{name}.parquet"
         status, detail = "PASS", ""
         try:
             got = pd.read_parquet(res_dir)
-            want = con.execute(sql).fetchdf()
+            materialize(con, sql, "__oracle", n)
+            want = con.execute("SELECT * FROM __oracle").fetchdf()
             if sorted(got.columns) != sorted(want.columns):
                 status, detail = "FAIL", f"columns {sorted(got.columns)} vs {sorted(want.columns)}"
             elif len(got) != len(want):
@@ -116,6 +124,9 @@ def main():
                                 break
         except Exception as e:  # noqa: BLE001
             status, detail = "ERROR", f"{type(e).__name__}: {e}"
+        finally:
+            con.execute("DROP TABLE IF EXISTS __oracle")
+            con.execute(f"DROP SCHEMA IF EXISTS s{n} CASCADE")
         mark = "ok" if status == "PASS" else "!!"
         print(f"[{mark}] {name}: {status} {detail[:300]}")
         if status == "PASS":

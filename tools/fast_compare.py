@@ -25,6 +25,9 @@ from pathlib import Path
 
 import duckdb
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+from check import materialize  # noqa: E402
+
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -57,7 +60,7 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{p}')")
 
     npass = nfail = 0
-    for name in sorted(oracles):
+    for n, name in enumerate(sorted(oracles)):
         if only and name not in only:
             continue
         dump = out_dir / f"{name}.parquet"
@@ -70,10 +73,12 @@ def main():
         sql = oracles[name]
         try:
             con.execute(f"CREATE OR REPLACE VIEW __dump AS SELECT * FROM parquet_scan('{dump}/*.parquet')")
-            # run the oracle ONCE — describe/count/except all read the
-            # temp table (an expensive oracle re-evaluated per subquery
-            # OOM'd DuckDB on the 6-round connected-components SQL)
-            con.execute(f"CREATE OR REPLACE TEMP TABLE __oracle AS {sql}")
+            # run the oracle ONCE, CTE by CTE — describe/count/except all
+            # read the temp table (an expensive oracle re-evaluated per
+            # subquery or per CTE reference OOM'd DuckDB on the 6-round
+            # connected-components SQL)
+            con.execute("DROP TABLE IF EXISTS __oracle")
+            materialize(con, sql, "__oracle", n)
             dcols = con.execute("DESCRIBE __dump").fetchall()  # (name, type, ...)
             ocols = con.execute("DESCRIBE __oracle").fetchall()
             dnames = sorted(c[0] for c in dcols)
@@ -114,6 +119,8 @@ def main():
         except Exception as e:
             print(f"[!!] {name}: ERROR {type(e).__name__}: {e}")
             nfail += 1
+        finally:
+            con.execute(f"DROP SCHEMA IF EXISTS s{n} CASCADE")
 
     print(f"\n{npass} pass / {nfail} fail")
     sys.exit(1 if nfail else 0)
