@@ -2327,7 +2327,7 @@ object SparkEntry {
 
   /** Adaptive-geometry ANN-LSH oracle — the probe-side twin of
     * [[sqlEmbedAutoOracle]]: same exact-integer bandBits computation,
-    * but up to SEVEN bands (mirrors `Ann.lshTopKAuto`'s
+    * but up to SEVEN bands (mirrors the `Ann.lshTopK` default's
     * maxBands = 7 recall stance).
     */
   private def sqlAnnLshAutoOracle(occupancy: Int = 64): String = {
@@ -2628,11 +2628,11 @@ object SparkEntry {
         planes = 32, bandBits = 8),
       Some(sqlEmbedOracle)
     ),
-    // The adaptive-geometry form: bandBits sized from the actual
+    // The adaptive-geometry default: bandBits sized from the actual
     // corpus count at plan time (NearDup.autoGeometry), oracle
     // computing the same geometry in SQL — one text, every scale.
     "dedup_embed_auto" -> Entry(
-      (s, dir) => NearDup.embedCosinePairsAuto(
+      (s, dir) => NearDup.embedCosinePairs(
         Tables.parquetDir(s, dir)("embeddings"), "embedding", "vec_id", dim = 64),
       Some(sqlEmbedAutoOracle())
     ),
@@ -2706,11 +2706,11 @@ object SparkEntry {
       },
       Some(sqlAnnLshOracle)
     ),
-    // probe-side adaptive geometry (Ann.lshTopKAuto, 7-band cap)
+    // probe-side adaptive geometry (the lshTopK default, 7-band cap)
     "ann_lsh_auto" -> Entry(
       (s, dir) => {
         val emb = Tables.parquetDir(s, dir)("embeddings")
-        Ann.lshTopKAuto(emb, emb.filter(expr(annQueryPred)), "embedding", "vec_id", dim = 64, k = 5)
+        Ann.lshTopK(emb, emb.filter(expr(annQueryPred)), "embedding", "vec_id", dim = 64, k = 5)
       },
       Some(sqlAnnLshAutoOracle())
     ),
@@ -2738,7 +2738,7 @@ object SparkEntry {
     "ann_ivf_auto" -> Entry(
       (s, dir) => {
         val emb = Tables.parquetDir(s, dir)("embeddings")
-        Ann.ivfTopKSeededAuto(emb, emb.filter(expr(annQueryPred)), "embedding", "vec_id", dim = 64, k = 5)
+        Ann.ivfTopKSeeded(emb, emb.filter(expr(annQueryPred)), "embedding", "vec_id", dim = 64, k = 5)
       },
       Some(sqlAnnIvfAutoOracle)
     ),
@@ -2765,7 +2765,7 @@ object SparkEntry {
     // (SemDedup.autoCellCount: within-cell work is quadratic in cell
     // size, so cells scale with n; oracle recomputes it in SQL)
     "dedup_semantic_auto" -> Entry(
-      (s, dir) => SemDedup.pairsAuto(
+      (s, dir) => SemDedup.pairs(
         Tables.parquetDir(s, dir)("embeddings"), "embedding", "vec_id", minCos = 0.4),
       Some(sqlSemDedupAutoPairs(64, 0.4))
     ),

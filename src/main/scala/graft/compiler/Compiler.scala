@@ -221,123 +221,74 @@ private[graft] final class Compiler(
       // metadata until the original is projected away)
       val df1 = singleEventTime(df, None)
       kind match {
-        case "exact" =>
-          new OpOptions(opts, span, Set.empty, "streaming dedup kind=exact").finish()
-          graft.streaming.Streaming.dedupExactOn(df1, text.name)
-        case "minhash" =>
-          new OpOptions(opts, span, Set.empty, "streaming dedup kind=minhash").finish()
-          graft.streaming.Streaming.dedupMinhashBandsOn(df1, text.name)
+        case "exact" | "minhash" =>
+          ExtOptions.noOptions(opts, span, s"streaming dedup kind=$kind", fail)
+          if (kind == "exact") graft.streaming.Streaming.dedupExactOn(df1, text.name)
+          else graft.streaming.Streaming.dedupMinhashBandsOn(df1, text.name)
         case "embed" =>
           // fixed geometry only: the adaptive default sizes bands from
           // a plan-time corpus count, which an unbounded stream cannot
-          // provide (occupancy= and the cos= rescore are batch-only)
-          val o = new OpOptions(opts, span, Set("dim", "planes", "bits"),
-            "streaming dedup kind=embed")
-          val dim = o.requiredInt("dim", min = 1)
-          val out = graft.streaming.Streaming.dedupEmbedBandsOn(
-            df1, text.name, dim,
-            planes = o.int("planes", 32, min = 1),
-            bandBits = o.int("bits", 8, min = 1))
-          o.finish()
-          out
+          // provide
+          val e = ExtOptions.streamEmbed(opts, span, fail)
+          graft.streaming.Streaming.dedupEmbedBandsOn(
+            df1, text.name, e.dim, planes = e.geometry.planes, bandBits = e.geometry.bits)
         case other =>
           fail(s"dedup kind=$other is not available on a streaming input " +
             "(streaming kinds: embed, exact, minhash)", span)
       }
 
     case DedupOp(kind, opts, text, id, span) =>
-      val o = new OpOptions(opts, span, allowedFor(kind), s"dedup kind=$kind")
-      val out = kind match {
-        case "exact"      => graft.ops.Dedup.exact(df, text.name, id.name)
-        case "lines"      => graft.ops.Dedup.dedupLines(df, text.name, id.name)
-        case "substrings" => graft.ops.Dedup.dedupSubstrings(df, text.name, id.name)
-        case "minhash"    => graft.ops.NearDup.deduplicateCorpus(df, text.name, id.name)
-        case "simhash" =>
-          graft.ops.NearDup.dropNearDuplicates(
-            df, graft.ops.NearDup.simhashPairs(df, text.name, id.name), id.name)
-        case "embed" =>
-          // the embedding dimension is a plan parameter (hyperplane
-          // count per signature bit), not derivable from the array
-          // column's type — required in the query text
-          val dim = o.requiredInt("dim", min = 1)
-          val cos = o.double("cos", 0.4, min = -1.0, max = 1.0)
+      import ExtOptions.{Cells, Dedup, Geometry}
+      ExtOptions.dedup(kind, opts, span, fail) match {
+        case Dedup.Unsized => kind match {
+          case "exact"      => graft.ops.Dedup.exact(df, text.name, id.name)
+          case "lines"      => graft.ops.Dedup.dedupLines(df, text.name, id.name)
+          case "substrings" => graft.ops.Dedup.dedupSubstrings(df, text.name, id.name)
+          case "minhash"    => graft.ops.NearDup.deduplicateCorpus(df, text.name, id.name)
+          case "simhash" =>
+            graft.ops.NearDup.dropNearDuplicates(
+              df, graft.ops.NearDup.simhashPairs(df, text.name, id.name), id.name)
+        }
+        case Dedup.Embed(dim, cos, geometry) =>
           // The DEFAULT band geometry is ADAPTIVE (round 13): the
           // corpus is counted once at compile time and bandBits sized
           // so expected bucket occupancy stays at or below occupancy=
-          // (64 unset) — NearDup.autoGeometry, the 100-TB form, where
-          // a fixed geometry makes candidate pairs quadratic in corpus
-          // size. planes=/bits= pin a FIXED geometry (the regression
-          // sentry / reproduce-an-old-run path; both together,
-          // exclusive with occupancy=).
-          val pairs =
-            (o.intOpt("planes", min = 1), o.intOpt("bits", min = 1),
-              o.intOpt("occupancy", min = 1)) match {
-              // occupancy with full OR partial fixed geometry: same
-              // conflict, same message (the ann kind=lsh rule)
-              case (Some(_), Some(_), Some(_)) | (Some(_), None, Some(_)) |
-                  (None, Some(_), Some(_)) =>
-                fail("dedup kind=embed takes planes=/bits= or occupancy=, not both", span)
-              case (Some(p), Some(b), None) =>
-                // spanned range errors, not raw requires from the op
-                // (the r16 ann kind=lsh advice fix, mirrored here);
-                // p < b would silently make zero bands — name it
-                if (b > 62) fail(s"option bits must be in [1, 62], got $b", span)
-                if (p > 62) fail(s"option planes must be in [1, 62], got $p", span)
-                if (p < b) fail(s"planes ($p) must be at least bits ($b) — one band minimum", span)
-                graft.ops.NearDup.embedCosinePairs(
-                  df, text.name, id.name, dim, planes = p, bandBits = b, minCos = cos)
-              case (None, None, t) =>
-                graft.ops.NearDup.embedCosinePairsAuto(
-                  df, text.name, id.name, dim, targetOccupancy = t.getOrElse(64), minCos = cos)
-              case _ =>
-                fail("dedup kind=embed needs planes= and bits= together", span)
-            }
-          graft.ops.NearDup.dropNearDuplicates(df, pairs, id.name)
-        case "semantic" =>
-          val cos = o.double("cos", 0.9, min = -1.0, max = 1.0)
-          // occupancy=<n> = target CELL SIZE, resolving nCells from
-          // the corpus count at compile time (SemDedup.autoCellCount —
-          // within-cell work is quadratic in cell size, so cells must
-          // scale linearly with the corpus); exclusive with cells=.
-          // The DEFAULT (neither option) is ADAPTIVE at target 64
-          // (round 13 — sf10 measured fixed 32 cells at 22.0 s vs
-          // 4.94 s sized); cells= pins a fixed index (sentry path).
-          (o.intOpt("occupancy", min = 1), o.intOpt("cells", min = 1)) match {
-            case (Some(_), Some(_)) =>
-              fail("dedup kind=semantic takes cells= or occupancy=, not both", span)
-            case (occ, None) =>
-              graft.ops.NearDup.dropNearDuplicates(
-                df, graft.ops.SemDedup.pairsAuto(df, text.name, id.name, occ.getOrElse(64), cos),
-                id.name)
-            case (None, Some(c)) =>
-              graft.ops.SemDedup.deduplicate(
-                df, text.name, id.name, nCells = c, minCos = cos)
+          // (NearDup.autoGeometry, the 100-TB form, where a fixed
+          // geometry makes candidate pairs quadratic in corpus size).
+          val pairs = geometry match {
+            case Geometry.Fixed(p, b) =>
+              graft.ops.NearDup.embedCosinePairs(
+                df, text.name, id.name, dim, planes = p, bandBits = b, minCos = cos)
+            case Geometry.Adaptive(t) =>
+              graft.ops.NearDup.embedCosinePairs(
+                df, text.name, id.name, dim, minCos = cos, targetOccupancy = t)
           }
+          graft.ops.NearDup.dropNearDuplicates(df, pairs, id.name)
+        case Dedup.Semantic(cos, cells) =>
+          // the DEFAULT is ADAPTIVE (round 13 — sf10 measured fixed
+          // 32 cells at 22.0 s vs 4.94 s sized): SemDedup.autoCellCount
+          // resolves the cell count from the corpus count
+          val pairs = cells match {
+            case Cells.Fixed(c) =>
+              graft.ops.SemDedup.pairs(df, text.name, id.name, nCells = c, minCos = cos)
+            case Cells.Adaptive(t) =>
+              graft.ops.SemDedup.pairs(df, text.name, id.name, minCos = cos, targetCellSize = t)
+          }
+          graft.ops.NearDup.dropNearDuplicates(df, pairs, id.name)
       }
-      o.finish()
-      out
 
     case DecontamOp(eval, opts, text, id, span) =>
-      val o = new OpOptions(opts, span, Set("hits", "ngram"), "decontam")
-      val evalDf = compileTabular(eval)
-      val out = graft.ops.Decontam.decontaminate(
-        df, evalDf, text.name, id.name,
-        minHits = o.int("hits", 2, min = 1),
-        shingleN = o.int("ngram", 3, min = 1))
-      o.finish()
-      out
+      val o = ExtOptions.decontam(opts, span, fail)
+      graft.ops.Decontam.decontaminate(
+        df, compileTabular(eval), text.name, id.name, minHits = o.hits, shingleN = o.ngram)
 
     case ChunkOp(n, text, id, _) =>
       graft.ops.TextOps.chunk(df, text.name, id.name, chunkTokens = rowCount(n))
 
     case PackOp(budget, opts, tokens, id, idx, span) =>
-      val o = new OpOptions(opts, span, Set("shards"), "pack")
-      val out = graft.ops.Packing.packSequences(
-        df, id.name, idx.name, tokens.name,
-        budgetTokens = rowCount(budget),
-        nShards = o.int("shards", 64, min = 1))
-      o.finish()
-      out
+      val o = ExtOptions.pack(opts, span, fail)
+      graft.ops.Packing.packSequences(
+        df, id.name, idx.name, tokens.name, budgetTokens = rowCount(budget), nShards = o.shards)
 
     case SampleBudgetOp(opts, text, id, strata, span) =>
       // `| sample budget=N [bits=b] text by id, strata` → the
@@ -350,14 +301,9 @@ private[graft] final class Compiler(
       // streams up front with a span instead of a raw AnalysisException.
       if (df.isStreaming)
         fail("sample budget= sizes its plan from a stratum count and is not available on a streaming input", span)
-      val o = new OpOptions(opts, span, Set("budget", "bits"), "sample budget=")
-      val budget = o.requiredLong("budget", min = 0L)
-      val bits = o.int("bits", 12, min = 1)
-      if (bits > 31) fail(s"option bits must be in [1, 31], got $bits", span)
-      val out = graft.ops.Sampling.tokenBudgetAuto(
-        df, text.name, id.name, strata.name, budgetTokens = budget, bucketBits = bits)
-      o.finish()
-      out
+      val o = ExtOptions.sampleBudget(opts, span, fail)
+      graft.ops.Sampling.tokenBudgetAuto(
+        df, text.name, id.name, strata.name, budgetTokens = o.budget, bucketBits = o.bits)
 
     case SampleOp(rate, rateSpan, id, _) =>
       val r =
@@ -425,85 +371,22 @@ private[graft] final class Compiler(
       val safeId = "__graft_ann_id"
       val corpusSafe = df.select(col(vec.name).as(safeVec), col(id.name).as(safeId))
       val qSafe = qDf.select(col(vec.name).as(safeVec), col(id.name).as(safeId))
-      def restoreId(out: DataFrame): DataFrame =
-        out.withColumnRenamed(safeId, id.name)
-      kind match {
-        case "brute" =>
-          val o = new OpOptions(opts, span, Set("k"), "ann kind=brute")
-          val out = graft.ops.Ann.bruteTopK(corpusSafe, qSafe, safeVec, safeId,
-            k = o.int("k", 5, min = 1))
-          o.finish()
-          restoreId(out)
-        case "lsh" =>
-          val o = new OpOptions(opts, span,
-            Set("k", "dim", "planes", "bits", "occupancy"), "ann kind=lsh")
-          val k = o.int("k", 5, min = 1)
-          val dim = o.requiredInt("dim", min = 1)
-          val out =
-            (o.intOpt("planes", min = 1), o.intOpt("bits", min = 1),
-              o.intOpt("occupancy", min = 1)) match {
-              // any mix of occupancy with fixed geometry (full OR
-              // partial) is the same conflict — naming it beats the
-              // catch-all "needs planes= and bits= together" (which is
-              // true but hides the real problem when occupancy= is
-              // present; advice, round 14)
-              case (Some(_), Some(_), Some(_)) | (Some(_), None, Some(_)) |
-                  (None, Some(_), Some(_)) =>
-                fail("ann kind=lsh takes planes=/bits= or occupancy=, not both", span)
-              case (Some(p), Some(b), None) =>
-                if (b > 62) fail(s"option bits must be in [1, 62], got $b", span)
-                // the 62-bit signature cap (PackedSignSig) as a spanned
-                // compile error, not a raw require from the op (advice,
-                // round 15: planes=63 escaped unspanned)
-                if (p > 62) fail(s"option planes must be in [1, 62], got $p", span)
-                if (p < b) fail(s"planes ($p) must be at least bits ($b) — one band minimum", span)
-                graft.ops.Ann.lshTopK(corpusSafe, qSafe, safeVec, safeId, dim, k,
-                  planes = p, bandBits = b)
-              case (None, None, t) =>
-                graft.ops.Ann.lshTopKAuto(corpusSafe, qSafe, safeVec, safeId, dim, k,
-                  targetOccupancy = t.getOrElse(64))
-              case _ =>
-                fail("ann kind=lsh needs planes= and bits= together", span)
-            }
-          o.finish()
-          restoreId(out)
-        case "ivf" =>
+      val out = ExtOptions.ann(kind, opts, span, fail) match {
+        case ExtOptions.Ann.Brute(k) =>
+          graft.ops.Ann.bruteTopK(corpusSafe, qSafe, safeVec, safeId, k = k)
+        case ExtOptions.Ann.Lsh(k, dim, ExtOptions.Geometry.Fixed(p, b)) =>
+          graft.ops.Ann.lshTopK(corpusSafe, qSafe, safeVec, safeId, dim, k, planes = p, bandBits = b)
+        case ExtOptions.Ann.Lsh(k, dim, ExtOptions.Geometry.Adaptive(t)) =>
+          graft.ops.Ann.lshTopK(corpusSafe, qSafe, safeVec, safeId, dim, k, targetOccupancy = t)
+        case ExtOptions.Ann.Ivf(k, dim, cells, probes) =>
           // the SEEDED centroid family (hash-sampled from the corpus —
           // the data-dependent policy ivfTopKSeeded's doc argues for at
-          // scale); cells=0 (unset) resolves √n cells at plan time
-          val o = new OpOptions(opts, span, Set("k", "dim", "cells", "probes"), "ann kind=ivf")
-          val out = graft.ops.Ann.ivfTopKSeeded(corpusSafe, qSafe, safeVec, safeId,
-            dim = o.requiredInt("dim", min = 1),
-            k = o.int("k", 5, min = 1),
-            nCells = o.intOpt("cells", min = 1).getOrElse(0),
-            nProbe = o.int("probes", 2, min = 1))
-          o.finish()
-          restoreId(out)
-        case other =>
-          fail(s"unknown ann kind $other", span)
+          // scale); nCells=0 resolves √n cells at plan time
+          graft.ops.Ann.ivfTopKSeeded(corpusSafe, qSafe, safeVec, safeId,
+            dim = dim, k = k, nCells = cells.getOrElse(0), nProbe = probes)
       }
+      out.withColumnRenamed(safeId, id.name)
   }
-
-  /** Option names valid for each dedup kind: an option the op would
-    * silently ignore is a compile error, not noise.
-    */
-  private def allowedFor(kind: String): Set[String] = kind match {
-    case "embed"    => Set("dim", "cos", "occupancy", "planes", "bits")
-    case "semantic" => Set("cells", "cos", "occupancy")
-    case _          => Set.empty
-  }
-
-  /** Validated accessor over an extension operator's literal
-    * `name=<number>` options: rejects unknown/duplicate names at
-    * construction, parses per accessor.
-    */
-  /** [[OpOptionsBase]] bound to this compiler's spanned `fail`. */
-  private final class OpOptions(
-      opts: List[OpOption],
-      opSpan: Span,
-      allowed: Set[String],
-      opName: String
-  ) extends OpOptionsBase(opts, opSpan, allowed, opName, fail)
 
   /** Render property values are presentation instructions: literals
     * stringify to their text, identifiers to their name.

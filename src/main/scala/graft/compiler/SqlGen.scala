@@ -33,14 +33,13 @@ import graft.parser._
   *
   * The graft EXTENSION operators emit as CTE chains wherever a single
   * SQL string can carry their semantics: sample, chunk, pack, decontam,
-  * the asof/range joins, dedup kinds exact/minhash/lines and the
-  * fixed-geometry embed/semantic, and ann kinds brute/lsh/ivf with
-  * fixed indexes (native expressions ride the registered `graft_*`
-  * function library). Forms whose PLAN depends on data read at compile
-  * time (adaptive geometry/cells from a corpus count, `sample
-  * budget=`'s crossover) or on genuinely multi-stage machinery
-  * (simhash/substrings dedup) are rejected with a spanned pointer to
-  * `Pql.query`.
+  * the asof/range joins, every dedup kind (embed/semantic with a fixed
+  * geometry / cell count), and ann kinds brute/lsh/ivf with fixed
+  * indexes (native expressions ride the registered `graft_*` function
+  * library). Option checks are the plan path's own ([[ExtOptions]]).
+  * Forms whose PLAN depends on data read at compile time (adaptive
+  * geometry/cells from a corpus count, `sample budget=`'s crossover)
+  * are rejected with a spanned pointer to `Pql.query`.
   */
 private[graft] final class SqlGen(
     sourceText0: String,
@@ -240,9 +239,7 @@ private[graft] final class SqlGen(
 
     case op: AsofJoinOp  => applyAsofJoin(prev, op)
     case op: RangeJoinOp => applyRangeJoin(prev, op)
-    case op: AnnOp if op.kind == "brute" => applyAnnBrute(prev, op)
-    case op: AnnOp if op.kind == "lsh"   => applyAnnLsh(prev, op)
-    case op: AnnOp if op.kind == "ivf"   => applyAnnIvf(prev, op)
+    case op: AnnOp       => applyAnn(prev, op)
 
     // `| sample 0.25 by id` (round 15): the deterministic Bernoulli
     // keep is ONE codegen filter (md5-derived [0,1) hash of the id),
@@ -258,38 +255,44 @@ private[graft] final class SqlGen(
           s"WHERE ${sqlOf(graft.ops.Sampling.keepPredicate(col(id.name), r))}"),
         graft.ops.Sampling.bernoulli(prev.df, id.name, r))
 
-    // `| dedup kind=exact text by id` (round 15): corpus-wide
-    // keep-first-id per normalized-text digest — one window, so it IS
-    // a single SQL query (the digest expression is rendered from the
-    // library's own Column). The other batch kinds stay rejected:
-    // multi-stage banded plans / plan-time corpus counts.
-    case DedupOp("exact", opts, text, id, span) =>
-      new OpOptionsBase(opts, span, Set.empty, "dedup kind=exact", fail).finish()
-      exactDedupStage(prev, text.name, id.name, span)
+    // every dedup kind emits as CTE text; options resolve exactly as
+    // on the plan path (ExtOptions), and only the ADAPTIVE embed /
+    // semantic sizing is rejected (a plan-time corpus count)
+    case op: DedupOp =>
+      val (text, id) = (op.textCol.name, op.idCol.name)
+      val resolved = ExtOptions.dedup(op.kind, op.opts, op.span, fail)
+      val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
+      if (missing.nonEmpty)
+        fail(s"dedup column ${missing.head} not found", op.span)
+      resolved match {
+        case ExtOptions.Dedup.Unsized => op.kind match {
+          // corpus-wide keep-first-id per normalized-text digest — one
+          // window, so it IS a single SQL query
+          case "exact"      => exactDedupStage(prev, text, id)
+          case "minhash"    => applyDedupMinhash(prev, text, id)
+          case "lines"      => applyDedupLines(prev, text, id)
+          case "simhash"    => applyDedupSimhash(prev, text, id)
+          case "substrings" => applyDedupSubstrings(prev, text, id)
+        }
+        case ExtOptions.Dedup.Embed(dim, cos, ExtOptions.Geometry.Fixed(planes, bits)) =>
+          applyDedupEmbed(prev, text, id, dim, cos, planes, bits)
+        case ExtOptions.Dedup.Semantic(cos, ExtOptions.Cells.Fixed(cells)) =>
+          applyDedupSemantic(prev, text, id, cos, cells)
+        case _: ExtOptions.Dedup.Embed =>
+          adaptiveRejected(s"dedup kind=${op.kind}", fixedGeometry, op.span)
+        case _: ExtOptions.Dedup.Semantic =>
+          adaptiveRejected(s"dedup kind=${op.kind}", fixedIndex, op.span)
+      }
 
-    // `| dedup kind=minhash text by id` (round 16): the production
-    // pipeline (exact dedup → MinHash-LSH near-dup drop,
-    // NearDup.deduplicateCorpus) as CTE text — see [[applyDedupMinhash]]
-    case DedupOp("minhash", opts, text, id, span) =>
-      new OpOptionsBase(opts, span, Set.empty, "dedup kind=minhash", fail).finish()
-      applyDedupMinhash(prev, text.name, id.name, span)
+    case op: PackOp     => applyPack(prev, op)
+    case op: DecontamOp => applyDecontam(prev, op)
 
-    case DedupOp("lines", opts, text, id, span) =>
-      new OpOptionsBase(opts, span, Set.empty, "dedup kind=lines", fail).finish()
-      applyDedupLines(prev, text.name, id.name, span)
-
-    case DedupOp("simhash", opts, text, id, span) =>
-      new OpOptionsBase(opts, span, Set.empty, "dedup kind=simhash", fail).finish()
-      applyDedupSimhash(prev, text.name, id.name, span)
-
-    case DedupOp("substrings", opts, text, id, span) =>
-      new OpOptionsBase(opts, span, Set.empty, "dedup kind=substrings", fail).finish()
-      applyDedupSubstrings(prev, text.name, id.name, span)
-
-    case op @ DedupOp("embed", _, _, _, _)    => applyDedupEmbed(prev, op)
-    case op @ DedupOp("semantic", _, _, _, _) => applyDedupSemantic(prev, op)
-    case op: PackOp                           => applyPack(prev, op)
-    case op: DecontamOp                       => applyDecontam(prev, op)
+    // options validated as on the plan path, then rejected: the
+    // exact/histogram crossover is decided from a plan-time stratum count
+    case SampleBudgetOp(opts, _, _, _, span) =>
+      ExtOptions.sampleBudget(opts, span, fail)
+      fail("operator 'sample budget=' sizes its plan from a plan-time stratum count, " +
+        "not expressible as a single SQL query; use Pql.query for this operator", span)
 
     // `| chunk 64 text by id` (round 15): one projection + posexplode
     // — a single LATERAL VIEW query (the split expression is rendered
@@ -305,19 +308,18 @@ private[graft] final class SqlGen(
         s"SELECT ${q(id.name)}, chunk_idx, chunk_text, $nTok AS n_tokens FROM ${prev.cte} " +
           s"LATERAL VIEW posexplode($arr) __c AS chunk_idx, chunk_text")
       Stage(out, graft.ops.TextOps.chunk(prev.df, text.name, id.name, chunkTokens))
-
-    case other =>
-      val name = other match {
-        case d: DedupOp     => s"dedup kind=${d.kind}" // simhash / substrings
-        case _: SampleBudgetOp => "sample budget="
-        case a: AnnOp       => s"ann kind=${a.kind}" // unreachable: all kinds emit
-        case _              => "this"
-      }
-      fail(
-        s"operator '$name' compiles to a multi-stage library plan, not a single SQL query; " +
-          "use Pql.query for pipelines with graft extension operators",
-        other.span)
   }
+
+  /** The SQL-text backend's one rejection of ADAPTIVE sizing: its
+    * geometry / cell count comes from a plan-time corpus count that a
+    * single SQL query cannot carry.
+    */
+  private def adaptiveRejected(opName: String, fixedForm: String, span: Span): Nothing =
+    fail(s"$opName compiles to SQL text only with $fixedForm; the adaptive default sizes " +
+      "its plan from a plan-time corpus count a single SQL query cannot carry " +
+      "(use Pql.query for the adaptive form)", span)
+  private val fixedGeometry = "a fixed geometry — pass planes= and bits= together"
+  private val fixedIndex = "a fixed index — pass cells="
 
   /** The `dedup kind=exact` emission (round 15): corpus-wide
     * keep-first-id per normalized-text digest — one window, the digest
@@ -326,10 +328,7 @@ private[graft] final class SqlGen(
     * pipeline composes the same way: `NearDup.deduplicateCorpus` =
     * `Dedup.exact` → near-dup drop).
     */
-  private def exactDedupStage(prev: Stage, text: String, id: String, span: Span): Stage = {
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", span)
+  private def exactDedupStage(prev: Stage, text: String, id: String): Stage = {
     val digest = sqlOf(md5(graft.ops.TextOps.normalize(col(text)).cast("binary")))
     val cols = prev.df.columns.toSeq.map(q).mkString(", ")
     val out = newStage(
@@ -355,8 +354,8 @@ private[graft] final class SqlGen(
     * are `__graft_mh_*`-namespaced so user schemas with single-letter
     * or colliding names compile (the ann rule).
     */
-  private def applyDedupMinhash(prev: Stage, text: String, id: String, span: Span): Stage = {
-    val e = exactDedupStage(prev, text, id, span)
+  private def applyDedupMinhash(prev: Stage, text: String, id: String): Stage = {
+    val e = exactDedupStage(prev, text, id)
     val (k, bandRows, minEstSim) = (32, 2, 0.25) // deduplicateCorpus → minhashPairs defaults
     val shingleArr = s"graft_shingle_hashes(${sqlOf(graft.ops.NearDup.tokens(col(text)))}, 3)"
     val hs = newStage(
@@ -414,10 +413,7 @@ private[graft] final class SqlGen(
     * builtin SQL, so unlike the other near-dup emissions this one
     * needs no registered graft functions.
     */
-  private def applyDedupSimhash(prev: Stage, text: String, id: String, span: Span): Stage = {
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", span)
+  private def applyDedupSimhash(prev: Stage, text: String, id: String): Stage = {
     val simBits = graft.ops.NearDup.SimBits
     val bandBits = graft.ops.NearDup.SimBandBits
     val tokensSql = sqlOf(graft.ops.NearDup.tokens(col(text)))
@@ -459,10 +455,7 @@ private[graft] final class SqlGen(
     * position-ordered reassembly (the lines emission's struct-sort).
     * Output: `(id, text_clean, n_removed)`, row-preserving.
     */
-  private def applyDedupSubstrings(prev: Stage, text: String, id: String, span: Span): Stage = {
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", span)
+  private def applyDedupSubstrings(prev: Stage, text: String, id: String): Stage = {
     val k = 8 // the grammar route's width (Dedup.dedupSubstrings default)
     val tokensSql = sqlOf(graft.ops.NearDup.tokens(col(text)))
     val b0 = newStage(
@@ -514,10 +507,7 @@ private[graft] final class SqlGen(
     * Output: `(id, text)`, row-preserving (empty string for a fully
     * deduplicated document), exactly the plan path's.
     */
-  private def applyDedupLines(prev: Stage, text: String, id: String, span: Span): Stage = {
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", span)
+  private def applyDedupLines(prev: Stage, text: String, id: String): Stage = {
     val fragArr = sqlOf(split(graft.ops.TextOps.normalize(col(text)), "\\. "))
     val frags = newStage(
       s"SELECT __graft_ln_id, __graft_ln_pos, __graft_ln_frag FROM (" +
@@ -553,35 +543,8 @@ private[graft] final class SqlGen(
     * puts it — so the emitted text is bit-identical on every input,
     * degenerate vectors included (signature 0, NULL norm → no pairs).
     */
-  private def applyDedupEmbed(prev: Stage, op: DedupOp): Stage = {
-    val (text, id) = (op.textCol.name, op.idCol.name)
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", op.span)
-    val o = new OpOptionsBase(op.opts, op.span,
-      Set("dim", "cos", "occupancy", "planes", "bits"), "dedup kind=embed", fail)
-    val dim = o.requiredInt("dim", min = 1)
-    val minCos = o.double("cos", 0.4, min = -1.0, max = 1.0)
-    val (planes, bits) =
-      (o.intOpt("planes", min = 1), o.intOpt("bits", min = 1),
-        o.intOpt("occupancy", min = 1)) match {
-        case (Some(_), Some(_), Some(_)) | (Some(_), None, Some(_)) |
-            (None, Some(_), Some(_)) =>
-          fail("dedup kind=embed takes planes=/bits= or occupancy=, not both", op.span)
-        case (Some(p), Some(b), None) =>
-          if (b > 62) fail(s"option bits must be in [1, 62], got $b", op.span)
-          if (p > 62) fail(s"option planes must be in [1, 62], got $p", op.span)
-          if (p < b) fail(s"planes ($p) must be at least bits ($b) — one band minimum", op.span)
-          (p, b)
-        case (None, None, _) =>
-          fail("dedup kind=embed compiles to SQL text only with a fixed geometry — " +
-            "pass planes= and bits= together; the adaptive default sizes its bands " +
-            "from a plan-time corpus count a single SQL query cannot carry " +
-            "(use Pql.query for the adaptive form)", op.span)
-        case _ =>
-          fail("dedup kind=embed needs planes= and bits= together", op.span)
-      }
-    o.finish()
+  private def applyDedupEmbed(
+      prev: Stage, text: String, id: String, dim: Int, minCos: Double, planes: Int, bits: Int): Stage = {
     val nBands = planes / bits
     val sg = newStage(
       s"SELECT ${q(id)} AS __graft_eb_id, CAST(${q(text)} AS ARRAY<DOUBLE>) AS __v FROM ${prev.cte}")
@@ -625,25 +588,8 @@ private[graft] final class SqlGen(
     * within-cell exact-cosine self-join with the threshold beside the
     * cell equality, and the greater pair member dropped.
     */
-  private def applyDedupSemantic(prev: Stage, op: DedupOp): Stage = {
-    val (text, id) = (op.textCol.name, op.idCol.name)
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"dedup column ${missing.head} not found", op.span)
-    val o = new OpOptionsBase(op.opts, op.span,
-      Set("cells", "cos", "occupancy"), "dedup kind=semantic", fail)
-    val minCos = o.double("cos", 0.9, min = -1.0, max = 1.0)
-    val nCells = (o.intOpt("occupancy", min = 1), o.intOpt("cells", min = 1)) match {
-      case (Some(_), Some(_)) =>
-        fail("dedup kind=semantic takes cells= or occupancy=, not both", op.span)
-      case (None, Some(c)) => c
-      case _ =>
-        fail("dedup kind=semantic compiles to SQL text only with a fixed index — " +
-          "pass cells=; the adaptive default (and occupancy=) sizes its cell count " +
-          "from a plan-time corpus count a single SQL query cannot carry " +
-          "(use Pql.query for the adaptive form)", op.span)
-    }
-    o.finish()
+  private def applyDedupSemantic(
+      prev: Stage, text: String, id: String, minCos: Double, nCells: Int): Stage = {
     val c0 = newStage(
       s"SELECT ${q(id)} AS __graft_sd_id, transform(${q(text)}, x -> CAST(x AS DOUBLE)) AS __v " +
         s"FROM ${prev.cte}")
@@ -678,9 +624,7 @@ private[graft] final class SqlGen(
     * two spellings).
     */
   private def applyPack(prev: Stage, op: PackOp): Stage = {
-    val o = new OpOptionsBase(op.opts, op.span, Set("shards"), "pack", fail)
-    val nShards = o.int("shards", 64, min = 1)
-    o.finish()
+    val nShards = ExtOptions.pack(op.opts, op.span, fail).shards
     val budget = rowCount(op.budget)
     if (budget <= 0) fail(s"pack budget must be positive, got $budget", op.budget.span)
     val (tk, id, idx) = (op.tokensCol.name, op.idCol.name, op.idxCol.name)
@@ -712,10 +656,7 @@ private[graft] final class SqlGen(
     * emission's skew-bucket split.
     */
   private def applyDecontam(prev: Stage, op: DecontamOp): Stage = {
-    val o = new OpOptionsBase(op.opts, op.span, Set("hits", "ngram"), "decontam", fail)
-    val minHits = o.int("hits", 2, min = 1)
-    val n = o.int("ngram", 3, min = 1)
-    o.finish()
+    val ExtOptions.Decontam(minHits, n) = ExtOptions.decontam(op.opts, op.span, fail)
     val (text, id) = (op.textCol.name, op.idCol.name)
     val evalStage = foldOps(sourceStage(op.eval.source), op.eval.operators)
     val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
@@ -804,6 +745,37 @@ private[graft] final class SqlGen(
     Stage(out, mirror)
   }
 
+  /** `| ann`: the query sub-pipeline folds into its own CTE chain, the
+    * column checks ([[ExtJoins.annCheck]]) and option resolution
+    * ([[ExtOptions.ann]]) are the plan path's, then each kind emits;
+    * the adaptive lsh/ivf sizing is rejected.
+    */
+  private def applyAnn(prev: Stage, op: AnnOp): Stage = {
+    import ExtOptions.{Ann, Geometry}
+    val right = foldOps(sourceStage(op.queries.source), op.queries.operators)
+    ExtJoins.annCheck(prev.df.columns.toSeq, right.df.columns.toSeq, op.vecCol, op.idCol, fail)
+    ExtOptions.ann(op.kind, op.opts, op.span, fail) match {
+      case Ann.Brute(k)                          => applyAnnBrute(prev, op, right, k)
+      case Ann.Lsh(k, dim, Geometry.Fixed(p, b)) => applyAnnLsh(prev, op, right, k, dim, p, b)
+      case Ann.Ivf(k, dim, Some(cells), probes)  => applyAnnIvf(prev, op, right, k, dim, cells, probes)
+      case _: Ann.Lsh => adaptiveRejected(s"ann kind=${op.kind}", fixedGeometry, op.span)
+      case _: Ann.Ivf => adaptiveRejected(s"ann kind=${op.kind}", fixedIndex, op.span)
+    }
+  }
+
+  private val AnnVec = "__graft_ann_vec"
+  private val AnnId = "__graft_ann_id"
+
+  /** Schema mirror of an ann emission: exactly the DataFrame
+    * compiler's construction (both sides aliased to the `__graft_ann_*`
+    * names, the id restored on the output).
+    */
+  private def annMirror(prev: Stage, op: AnnOp, right: Stage)(
+      lib: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def safe(df: DataFrame) = df.select(col(op.vecCol.name).as(AnnVec), col(op.idCol.name).as(AnnId))
+    lib(safe(prev.df), safe(right.df)).withColumnRenamed(AnnId, op.idCol.name)
+  }
+
   /** `| ann kind=brute` as SQL text (round 15): exact cosine top-k —
     * normalize both sides, broadcast-join the (small by construction)
     * query set against the corpus, `row_number() <= k`. The dot
@@ -812,17 +784,9 @@ private[graft] final class SqlGen(
     * SESSION must therefore carry graft's functions
     * (`spark.sql.extensions=graft.functions.GraftExtensions`, or
     * `GraftExtensions.register(spark)`), the same way the reference's
-    * emitted SQL assumes its engine's function library. The indexed
-    * kinds (lsh/ivf) stay plan-path-only: their adaptive geometry is
-    * resolved from a plan-time corpus count that a SQL string cannot
-    * carry.
+    * emitted SQL assumes its engine's function library.
     */
-  private def applyAnnBrute(prev: Stage, op: AnnOp): Stage = {
-    val right = foldOps(sourceStage(op.queries.source), op.queries.operators)
-    ExtJoins.annCheck(prev.df.columns.toSeq, right.df.columns.toSeq, op.vecCol, op.idCol, fail)
-    val o = new OpOptionsBase(op.opts, op.span, Set("k"), "ann kind=brute", fail)
-    val k = o.int("k", 5, min = 1)
-    o.finish()
+  private def applyAnnBrute(prev: Stage, op: AnnOp, right: Stage, k: Int): Stage = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val c = newStage(
       s"SELECT $idQ AS __graft_ann_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __v FROM ${prev.cte}")
@@ -841,15 +805,8 @@ private[graft] final class SqlGen(
         s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
         s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
         s") WHERE rank <= $k")
-    // schema mirror: exactly the DataFrame compiler's construction
-    val safeVec = "__graft_ann_vec"
-    val safeId = "__graft_ann_id"
-    val mirror = graft.ops.Ann.bruteTopK(
-      prev.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      right.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      safeVec, safeId, k = k
-    ).withColumnRenamed(safeId, op.idCol.name)
-    Stage(ranked, mirror)
+    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
+      graft.ops.Ann.bruteTopK(corpus, queries, AnnVec, AnnId, k = k)))
   }
 
   /** `| ann kind=lsh` as SQL text (round 15): the banded sign-LSH
@@ -867,36 +824,8 @@ private[graft] final class SqlGen(
     * spelling. Like the brute emission, the host session must carry
     * graft's function registry (GraftExtensions).
     */
-  private def applyAnnLsh(prev: Stage, op: AnnOp): Stage = {
-    val right = foldOps(sourceStage(op.queries.source), op.queries.operators)
-    ExtJoins.annCheck(prev.df.columns.toSeq, right.df.columns.toSeq, op.vecCol, op.idCol, fail)
-    val o = new OpOptionsBase(op.opts, op.span,
-      Set("k", "dim", "planes", "bits", "occupancy"), "ann kind=lsh", fail)
-    val k = o.int("k", 5, min = 1)
-    val dim = o.requiredInt("dim", min = 1)
-    val (planes, bits) =
-      (o.intOpt("planes", min = 1), o.intOpt("bits", min = 1),
-        o.intOpt("occupancy", min = 1)) match {
-        case (Some(_), Some(_), Some(_)) | (Some(_), None, Some(_)) |
-            (None, Some(_), Some(_)) =>
-          fail("ann kind=lsh takes planes=/bits= or occupancy=, not both", op.span)
-        case (Some(p), Some(b), None) =>
-          if (b > 62) fail(s"option bits must be in [1, 62], got $b", op.span)
-          // 62-bit signature cap as a spanned error (advice, round 15:
-          // planes=63 escaped to a raw require in NearDup.signSigs) —
-          // same check as the plan path's ann kind=lsh case
-          if (p > 62) fail(s"option planes must be in [1, 62], got $p", op.span)
-          if (p < b) fail(s"planes ($p) must be at least bits ($b) — one band minimum", op.span)
-          (p, b)
-        case (None, None, _) =>
-          fail("ann kind=lsh compiles to SQL text only with a fixed geometry — " +
-            "pass planes= and bits= together; the adaptive default sizes its bands " +
-            "from a plan-time corpus count a single SQL query cannot carry " +
-            "(use Pql.query for the adaptive form)", op.span)
-        case _ =>
-          fail("ann kind=lsh needs planes= and bits= together", op.span)
-      }
-    o.finish()
+  private def applyAnnLsh(
+      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, planes: Int, bits: Int): Stage = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val nBands = planes / bits
     // same cast as NearDup.signSigs (array-level cast, not transform)
@@ -938,15 +867,8 @@ private[graft] final class SqlGen(
         s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
         s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
         s") WHERE rank <= $k")
-    // schema mirror: exactly the DataFrame compiler's construction
-    val safeVec = "__graft_ann_vec"
-    val safeId = "__graft_ann_id"
-    val mirror = graft.ops.Ann.lshTopK(
-      prev.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      right.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      safeVec, safeId, dim, k, planes = planes, bandBits = bits
-    ).withColumnRenamed(safeId, op.idCol.name)
-    Stage(ranked, mirror)
+    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
+      graft.ops.Ann.lshTopK(corpus, queries, AnnVec, AnnId, dim, k, planes = planes, bandBits = bits)))
   }
 
   /** `| ann kind=ivf` as SQL text (round 16): the hash-seeded IVF
@@ -976,19 +898,8 @@ private[graft] final class SqlGen(
     * compileToSql on an ivf pipeline therefore runs one small Spark
     * job, exactly as Pql.query on the same text does.
     */
-  private def applyAnnIvf(prev: Stage, op: AnnOp): Stage = {
-    val right = foldOps(sourceStage(op.queries.source), op.queries.operators)
-    ExtJoins.annCheck(prev.df.columns.toSeq, right.df.columns.toSeq, op.vecCol, op.idCol, fail)
-    val o = new OpOptionsBase(op.opts, op.span,
-      Set("k", "dim", "cells", "probes"), "ann kind=ivf", fail)
-    val k = o.int("k", 5, min = 1)
-    val dim = o.requiredInt("dim", min = 1)
-    val nProbe = o.int("probes", 2, min = 1)
-    val nCells = o.intOpt("cells", min = 1).getOrElse(
-      fail("ann kind=ivf compiles to SQL text only with a fixed index — pass cells=; " +
-        "the adaptive default sizes its cell count from a plan-time corpus count " +
-        "a single SQL query cannot carry (use Pql.query for the adaptive form)", op.span))
-    o.finish()
+  private def applyAnnIvf(
+      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, nCells: Int, nProbe: Int): Stage = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     // prep mirror: transform-cast vectors + fold norms (Ann.prep)
     val c = newStage(
@@ -1038,15 +949,8 @@ private[graft] final class SqlGen(
         s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
         s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
         s") WHERE rank <= $k")
-    // schema mirror: exactly the DataFrame compiler's construction
-    val safeVec = "__graft_ann_vec"
-    val safeId = "__graft_ann_id"
-    val mirror = graft.ops.Ann.ivfTopKSeeded(
-      prev.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      right.df.select(col(op.vecCol.name).as(safeVec), col(op.idCol.name).as(safeId)),
-      safeVec, safeId, dim, k, nCells = nCells, nProbe = nProbe
-    ).withColumnRenamed(safeId, op.idCol.name)
-    Stage(ranked, mirror)
+    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
+      graft.ops.Ann.ivfTopKSeeded(corpus, queries, AnnVec, AnnId, dim, k, nCells = nCells, nProbe = nProbe)))
   }
 
   /** `| join kind=range` as SQL text (round 15): the BUCKETED

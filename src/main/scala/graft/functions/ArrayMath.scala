@@ -91,7 +91,7 @@ case class DotProduct(left: Expression, right: Expression)
   * output array per evaluation, measured as ~70% of dedup_ngram's
   * wall-time at sf1 (4.3 s of 6.3 s over 824k candidate pairs).
   * PRECONDITION: both arrays ascending-sorted with distinct elements —
-  * exactly what [[graft.ops.NearDup.cappedHashedShingles]] produces
+  * exactly what [[graft.ops.NearDup.cappedShingleSketch]] produces
   * (`array_distinct` → `array_sort`). Unsorted input silently
   * undercounts; keep this expression on sketch arrays only.
   */

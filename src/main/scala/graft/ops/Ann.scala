@@ -93,13 +93,9 @@ object Ann {
       // count at plan time ([[autoCells]]); pass an explicit count
       // for a fixed index (regression sentry path).
       nCells: Int = 0,
-      nProbe: Int = 2,
-      knownCount: Option[Long] = None
+      nProbe: Int = 2
   ): DataFrame = {
-    require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
-    val cells =
-      if (nCells != 0) nCells
-      else autoCells(knownCount.getOrElse(corpus.select(col(idCol)).count()))
+    val cells = resolveCells(corpus, idCol, nCells)
     ivfWithCentroids(corpus, queries, vecCol, idCol, k, nProbe,
       lcgCentroidMatrix(dim, cells), dim)
   }
@@ -134,7 +130,8 @@ object Ann {
     * driver side of the exchange).
     * Output: `query_id, <idCol>, cos_sim, rank` (≤ k rows per query).
     *
-    * PLAN-TIME BAKE CONTRACT (every ivf/lsh `*Auto`/seeded form):
+    * PLAN-TIME BAKE CONTRACT (every seeded form, and every adaptive
+    * ivf/lsh default):
     * construction eagerly runs the sizing count and/or the seed
     * collect, and the centroid matrix / band geometry ride the plan as
     * constants — a snapshot of the corpus at construction. Rebuild the
@@ -151,41 +148,18 @@ object Ann {
       // the corpus count at plan time ([[autoCells]]); pass an
       // explicit count for a fixed index (regression sentry path).
       nCells: Int = 0,
-      nProbe: Int = 2,
-      knownCount: Option[Long] = None
-  ): DataFrame =
-    {
-      require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
-      val cells =
-        if (nCells != 0) nCells
-        else autoCells(knownCount.getOrElse(corpus.select(col(idCol)).count()))
-      val (mat, mDim) = seededCentroidMatrix(corpus, vecCol, idCol, cells)
-      ivfWithCentroids(corpus, queries, vecCol, idCol, k, nProbe, mat, mDim)
-    }
-
-  /** [[lshTopK]] with the band geometry sized from the ACTUAL corpus
-    * count at plan time — the probe-side twin of
-    * `NearDup.embedCosinePairsAuto` (ann_lsh showed the same
-    * geometry-saturation slope at sf10 as the pair op: bucket
-    * occupancy `n / 2^bandBits` grows linearly under fixed bands, and
-    * every query probes every over-full bucket it lands in). Seven
-    * bands while they fit the 62-bit signature — the top-k op keeps
-    * lshTopK's recall-over-bands stance (56/8 default = 7 bands)
-    * rather than the pair op's 4.
-    */
-  def lshTopKAuto(
-      corpus: DataFrame,
-      queries: DataFrame,
-      vecCol: String,
-      idCol: String,
-      dim: Int,
-      k: Int = 5,
-      targetOccupancy: Int = 64,
-      knownCount: Option[Long] = None
+      nProbe: Int = 2
   ): DataFrame = {
-    val n = knownCount.getOrElse(corpus.select(col(idCol)).count())
-    val (planes, bandBits) = NearDup.autoGeometry(n, targetOccupancy, maxBands = 7)
-    lshTopK(corpus, queries, vecCol, idCol, dim, k, planes, bandBits)
+    val (mat, mDim) = seededCentroidMatrix(corpus, vecCol, idCol, resolveCells(corpus, idCol, nCells))
+    ivfWithCentroids(corpus, queries, vecCol, idCol, k, nProbe, mat, mDim)
+  }
+
+  /** `nCells`, or for 0 (the adaptive default) √n cells from one
+    * narrow plan-time count of the corpus ([[autoCells]]).
+    */
+  private def resolveCells(corpus: DataFrame, idCol: String, nCells: Int): Int = {
+    require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
+    if (nCells != 0) nCells else autoCells(corpus.select(col(idCol)).count())
   }
 
   /** The IVF index-sizing rule as code: `nCells ~ √n`, the shape that
@@ -200,25 +174,6 @@ object Ann {
     // clamp in Long BEFORE narrowing: round(sqrt(Long.MaxValue)) ≈ 3·10⁹
     // overflows Int, and a negative wrap would clamp to the floor
     math.max(4L, math.min(65536L, math.round(math.sqrt(math.max(0L, n).toDouble)))).toInt
-
-  /** [[ivfTopKSeeded]] with the cell count chosen from the ACTUAL
-    * corpus size at plan time (one narrow count, the AQE trade — same
-    * adaptive-planning pattern as NearDup.embedCosinePairsAuto). Pass
-    * `knownCount` when a catalog estimate is already at hand.
-    */
-  def ivfTopKSeededAuto(
-      corpus: DataFrame,
-      queries: DataFrame,
-      vecCol: String,
-      idCol: String,
-      dim: Int,
-      k: Int = 5,
-      nProbe: Int = 2,
-      knownCount: Option[Long] = None
-  ): DataFrame = {
-    val n = knownCount.getOrElse(corpus.select(col(idCol)).count())
-    ivfTopKSeeded(corpus, queries, vecCol, idCol, dim, k, nCells = autoCells(n), nProbe = nProbe)
-  }
 
   /** Hash-sampled centroid components `(c, j, w)` (see
     * [[ivfTopKSeeded]]).
@@ -391,10 +346,12 @@ object Ann {
     *
     * DEFAULT GEOMETRY IS ADAPTIVE (round 13): leaving `planes` and
     * `bandBits` unset sizes the bands from the actual corpus count at
-    * plan time ([[lshTopKAuto]], 7-band cap — sf10 measured fixed 56/8
+    * plan time (`NearDup.autoGeometry` at `targetOccupancy`, 7-band
+    * cap — the top-k op keeps the recall-over-bands stance of the
+    * 56/8 sentry rather than the pair op's 4; sf10 measured fixed 56/8
     * at 6.52 s vs sized 3.22 s). Pass BOTH for a fixed geometry
     * (regression sentry path); exactly one is an error.
-    * `targetOccupancy`/`knownCount` apply only on the adaptive path.
+    * `targetOccupancy` applies only on the adaptive path.
     * Output: `query_id, <idCol>, cos_sim, rank` (≤ k rows per query).
     */
   def lshTopK(
@@ -406,14 +363,15 @@ object Ann {
       k: Int = 5,
       planes: Int = 0,
       bandBits: Int = 0,
-      targetOccupancy: Int = 64,
-      knownCount: Option[Long] = None
+      targetOccupancy: Int = 64
   ): DataFrame = {
     require((planes == 0) == (bandBits == 0),
       s"pass BOTH planes and bandBits for a fixed geometry or NEITHER for the " +
         s"adaptive default, got planes=$planes, bandBits=$bandBits")
-    if (planes == 0)
-      return lshTopKAuto(corpus, queries, vecCol, idCol, dim, k, targetOccupancy, knownCount)
+    if (planes == 0) {
+      val (p, b) = NearDup.autoGeometry(corpus.select(col(idCol)).count(), targetOccupancy, maxBands = 7)
+      return lshTopK(corpus, queries, vecCol, idCol, dim, k, p, b)
+    }
     // leftover signature bits that don't fill a whole band are dropped
     // (nBands floors), never folded into a degenerate always-equal key;
     // width bounds (≤ 62 bits, Long band arithmetic) are enforced in

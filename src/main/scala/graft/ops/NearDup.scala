@@ -81,7 +81,8 @@ object NearDup {
       explode(graft.functions.TextHash.shingleHashes(tokens(col(textCol)), n)).as("h")
     )
 
-  /** [[hashedShingles]], distinct, capped to each document's
+  /** The hashed 3-gram shingle array of `text` (as in
+    * [[hashedShingles]]), distinct, sorted, capped to the document's
     * `maxShingles` SMALLEST hashes — a bottom-k sketch. Without a cap
     * the per-doc shingle set is unbounded (a 1M-token document is a
     * 1M-element array row at collect time); the bottom-k prefix is
@@ -99,26 +100,13 @@ object NearDup {
     *
     * The dedup + sort + cap all happen IN THE ARRAY DOMAIN
     * (`array_distinct` → `array_sort` → `slice`, all codegen
-    * collection expressions) before the explode — zero shuffle, and
+    * collection expressions) on one array per row — zero shuffle, and
     * the cap bounds the row width before anything is materialized.
     * (The pre-round-8 form shuffled the exploded stream through
     * distinct() + a row_number window.)
     */
-  private[ops] def cappedHashedShingles(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxShingles: Int
-  ): DataFrame =
-    df.select(
-      col(idCol),
-      explode(
-        slice(
-          array_sort(array_distinct(graft.functions.TextHash.shingleHashes(tokens(col(textCol))))),
-          1, maxShingles
-        )
-      ).as("h")
-    )
+  private[ops] def cappedShingleSketch(text: Column, maxShingles: Int): Column =
+    slice(array_sort(array_distinct(graft.functions.TextHash.shingleHashes(tokens(text)))), 1, maxShingles)
 
   // ---- MinHash + LSH ---------------------------------------------------
 
@@ -380,7 +368,7 @@ object NearDup {
     *
     * Docs with more than `maxShingles` (default 4096) distinct
     * shingles are represented by their bottom-k sketch (see
-    * [[cappedHashedShingles]]): for such docs the reported `jaccard`
+    * [[cappedShingleSketch]]): for such docs the reported `jaccard`
     * is the deterministic sketch estimate, not the exact set Jaccard,
     * and `minJaccard` thresholds against that estimate.
     * Output: `id_a, id_b, jaccard`.
@@ -395,7 +383,7 @@ object NearDup {
   ): DataFrame = {
     require(maxShinglesPerDoc > 0, "maxShinglesPerDoc must be positive")
     // The capped sketch is born as an ARRAY (one codegen projection,
-    // see cappedHashedShingles) — so the per-doc sets need no
+    // see cappedShingleSketch) — so the per-doc sets need no
     // explode + collect_list round trip: `sets` IS that projection,
     // and only the signature path explodes (its min-aggregates are
     // map-side combined before the one small shuffle). The two
@@ -412,13 +400,8 @@ object NearDup {
     // Interleaved 4-arm A/B (round 19): rowwise+repartition
     // beat the old aggregate shape in every round (0.68–0.98 s vs
     // 0.86–1.21 s at sf0.1).
-    val sets = df.select(
-      col(idCol),
-      slice(
-        array_sort(array_distinct(graft.functions.TextHash.shingleHashes(tokens(col(textCol))))),
-        1, maxShinglesPerDoc
-      ).as("hs")
-    ).repartition(col(idCol))
+    val sets = df.select(col(idCol), cappedShingleSketch(col(textCol), maxShinglesPerDoc).as("hs"))
+      .repartition(col(idCol))
     val sigs = minhashSigsRowwise(sets, col("hs"), idCol, k)
     // first-collision band join: each candidate pair arrives exactly
     // once (no distinct() shuffle); the carried signatures are dropped
@@ -1087,36 +1070,6 @@ object NearDup {
     (nBands * bits, bits)
   }
 
-  /** [[embedCosinePairs]] with the band geometry chosen at plan time
-    * from the ACTUAL corpus size — since round 13 this IS
-    * [[embedCosinePairs]]' default path (call that with explicit
-    * `planes`/`bandBits` for a fixed geometry). The adaptive form of
-    * the sizing rule the sf10 sweep measured (fixed geometry ⇒ quadratic
-    * candidate growth; sized geometry keeps ~94% of the pair mass at
-    * 4.5× less cost at sf10). The one extra cost is a narrow
-    * single-column `count()` before plan construction — the same
-    * runtime-statistics trade AQE makes, and noise next to the LSH
-    * join it sizes. Pass `knownCount` when the caller already has the
-    * figure (a catalog estimate is fine: one bit of error
-    * halves/doubles occupancy, nothing breaks). The count runs
-    * EAGERLY at construction and the geometry rides the plan as a
-    * constant — a snapshot; rebuild the frame to re-size after the
-    * corpus changes.
-    */
-  def embedCosinePairsAuto(
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      dim: Int,
-      targetOccupancy: Int = 64,
-      minCos: Double = 0.4,
-      knownCount: Option[Long] = None
-  ): DataFrame = {
-    val n = knownCount.getOrElse(df.select(col(idCol)).count())
-    val (planes, bandBits) = autoGeometry(n, targetOccupancy)
-    embedCosinePairs(df, vecCol, idCol, dim, planes, bandBits, minCos)
-  }
-
   /** Embedding near-duplicate pairs via sign-LSH candidates + exact
     * cosine rescoring. `planes` random hyperplanes give a `planes`-bit
     * signature, split into bands of `bandBits`; candidates share a
@@ -1127,11 +1080,17 @@ object NearDup {
     * corpus count at plan time ([[autoGeometry]]) — the sf10 sweep
     * showed a fixed geometry makes candidate pairs quadratic in the
     * corpus (102k → 982k → 11.14M under 32/8 at sf1/sf3/sf10), so the
-    * saturating defaults are no longer the silent path. Passing BOTH
-    * `planes` and `bandBits` pins a fixed geometry (the regression
-    * sentry / reproduce-an-old-run path); passing exactly one is an
-    * error. `targetOccupancy`/`knownCount` only apply on the adaptive
-    * path ([[embedCosinePairsAuto]] documents them).
+    * saturating defaults are no longer the silent path. Sized
+    * geometry keeps ~94% of the pair mass at 4.5× less cost at sf10.
+    * The one extra cost is a narrow single-column `count()` before plan
+    * construction — the same runtime-statistics trade AQE makes, and
+    * noise next to the LSH join it sizes. The count runs EAGERLY at
+    * construction and the geometry rides the plan as a constant — a
+    * snapshot; rebuild the frame to re-size after the corpus changes.
+    * Passing BOTH `planes` and `bandBits` pins a fixed geometry (the
+    * regression sentry / reproduce-an-old-run path); passing exactly
+    * one is an error. `targetOccupancy` only applies on the adaptive
+    * path.
     */
   def embedCosinePairs(
       df: DataFrame,
@@ -1141,14 +1100,15 @@ object NearDup {
       planes: Int = 0,
       bandBits: Int = 0,
       minCos: Double = 0.4,
-      targetOccupancy: Int = 64,
-      knownCount: Option[Long] = None
+      targetOccupancy: Int = 64
   ): DataFrame = {
     require((planes == 0) == (bandBits == 0),
       s"pass BOTH planes and bandBits for a fixed geometry or NEITHER for the " +
         s"adaptive default, got planes=$planes, bandBits=$bandBits")
-    if (planes == 0)
-      return embedCosinePairsAuto(df, vecCol, idCol, dim, targetOccupancy, minCos, knownCount)
+    if (planes == 0) {
+      val (p, b) = autoGeometry(df.select(col(idCol)).count(), targetOccupancy)
+      return embedCosinePairs(df, vecCol, idCol, dim, p, b, minCos)
+    }
     // leftover signature bits that don't fill a whole band are dropped
     // (nBands floors), never folded into a degenerate always-equal key;
     // width bounds are enforced in signBandKeys

@@ -149,30 +149,6 @@ object Sampling {
       .select(col(idCol), col(strataCol), col("n_tok"), col("cum_tok"))
   }
 
-  /** [[tokenBudget]]'s threshold-selection form — the scale path for a
-    * SINGLE GIANT STRATUM, where the exact form's per-stratum running
-    * total is a sequential scan by definition. Instead of ordering the
-    * stratum, the 2^32 hash space is split into `2^bucketBits` buckets
-    * and only the tiny per-(stratum, bucket) token histogram is
-    * ordered: the selection keeps every document whose hash bucket
-    * falls at or below the largest bucket whose cumulative mass fits
-    * `budgetTokens` (whole buckets only — strict `<= budget`, so the
-    * realized total undershoots by at most one bucket's mass,
-    * ≈ stratum_tokens / 2^bucketBits in expectation).
-    *
-    * Plan shape: one codegen projection (hash, bucket, token count) →
-    * ONE map-side-combined aggregate of at most
-    * `strata × 2^bucketBits` rows → a window over that tiny frame → a
-    * BROADCAST join back + narrow filter. No full-data window, no
-    * per-stratum sequential pass; parallelism is independent of
-    * stratum size. Deterministic on any engine/partitioning (integer
-    * masses, integer thresholds).
-    *
-    * Output: `(idCol, strataCol, n_tok)` — no `cum_tok`: a per-row
-    * running total is exactly the sequential artifact this form
-    * avoids. A stratum whose very first bucket overflows the budget
-    * selects nothing (matching the exact form's strict semantics).
-    */
   /** Stratum-row floor above which [[tokenBudgetAuto]] switches from
     * the exact running-total form to [[tokenBudgetHistogram]]. The
     * exact form's per-stratum window is ONE sequential task per
@@ -201,8 +177,7 @@ object Sampling {
     * `cum_tok` audit column (a per-row running total is exactly what
     * the scale branch cannot produce). Callers that want `cum_tok`
     * or exact-boundary semantics unconditionally should call
-    * [[tokenBudget]] directly; callers with a catalog-known row count
-    * pass `knownMaxStratumRows` and skip the plan-time job.
+    * [[tokenBudget]] directly.
     */
   def tokenBudgetAuto(
       df: DataFrame,
@@ -211,24 +186,44 @@ object Sampling {
       strataCol: String,
       budgetTokens: Long,
       salt: String = "budget",
-      maxExactStratumRows: Long = ExactMaxStratumRows,
-      knownMaxStratumRows: Option[Long] = None,
       bucketBits: Int = 12
   ): DataFrame = {
     // plan-time decision: a groupBy-count over the strata column only
     // (narrow scan, map-side combined; the text column — the expensive
     // read — is untouched by this job)
-    val maxRows = knownMaxStratumRows.getOrElse {
-      val r = df.groupBy(col(strataCol)).count().agg(max(col("count"))).collect()(0)
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    if (maxRows <= maxExactStratumRows)
+    val r = df.groupBy(col(strataCol)).count().agg(max(col("count"))).collect()(0)
+    val maxRows = if (r.isNullAt(0)) 0L else r.getLong(0)
+    if (maxRows <= ExactMaxStratumRows)
       tokenBudget(df, textCol, idCol, strataCol, budgetTokens, salt)
         .select(col(idCol), col(strataCol), col("n_tok"))
     else
       tokenBudgetHistogram(df, textCol, idCol, strataCol, budgetTokens, salt, bucketBits)
   }
 
+  /** [[tokenBudget]]'s threshold-selection form — the scale path for a
+    * SINGLE GIANT STRATUM, where the exact form's per-stratum running
+    * total is a sequential scan by definition. Instead of ordering the
+    * stratum, the 2^32 hash space is split into `2^bucketBits` buckets
+    * and only the tiny per-(stratum, bucket) token histogram is
+    * ordered: the selection keeps every document whose hash bucket
+    * falls at or below the largest bucket whose cumulative mass fits
+    * `budgetTokens` (whole buckets only — strict `<= budget`, so the
+    * realized total undershoots by at most one bucket's mass,
+    * ≈ stratum_tokens / 2^bucketBits in expectation).
+    *
+    * Plan shape: one codegen projection (hash, bucket, token count) →
+    * ONE map-side-combined aggregate of at most
+    * `strata × 2^bucketBits` rows → a window over that tiny frame → a
+    * BROADCAST join back + narrow filter. No full-data window, no
+    * per-stratum sequential pass; parallelism is independent of
+    * stratum size. Deterministic on any engine/partitioning (integer
+    * masses, integer thresholds).
+    *
+    * Output: `(idCol, strataCol, n_tok)` — no `cum_tok`: a per-row
+    * running total is exactly the sequential artifact this form
+    * avoids. A stratum whose very first bucket overflows the budget
+    * selects nothing (matching the exact form's strict semantics).
+    */
   def tokenBudgetHistogram(
       df: DataFrame,
       textCol: String,

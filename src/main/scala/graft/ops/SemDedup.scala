@@ -49,11 +49,12 @@ object SemDedup {
     * assigned to the same Voronoi `cell` of the hash-seeded centroids.
     *
     * DEFAULT CELL COUNT IS ADAPTIVE (round 13): `nCells = 0` resolves
-    * `ceil(n / 64)` cells from the actual corpus count at plan time
-    * ([[autoCellCount]] — within-cell work is quadratic in cell size,
-    * and sf10 measured the old fixed-32 default at 22.0 s vs 4.94 s
-    * sized). Pass an explicit count for a fixed index (regression
-    * sentry path); `knownCount` skips the plan-time count.
+    * `ceil(n / targetCellSize)` cells from one narrow plan-time count
+    * of the corpus ([[autoCellCount]] — within-cell work is quadratic
+    * in cell size, and sf10 measured the old fixed-32 default at
+    * 22.0 s vs 4.94 s sized). Pass an explicit count for a fixed index
+    * (regression sentry path); `targetCellSize` only applies on the
+    * adaptive path.
     *
     * PLAN-TIME BAKE CONTRACT: construction eagerly runs the sizing
     * count (adaptive path) plus the seed-collect job, and bakes the
@@ -67,11 +68,11 @@ object SemDedup {
       idCol: String,
       nCells: Int = 0,
       minCos: Double = 0.9,
-      knownCount: Option[Long] = None
+      targetCellSize: Int = 64
   ): DataFrame = {
     require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
     if (nCells == 0)
-      return pairsAuto(df, vecCol, idCol, minCos = minCos, knownCount = knownCount)
+      return pairs(df, vecCol, idCol, autoCellCount(df.select(col(idCol)).count(), targetCellSize), minCos)
     // BAKED assignment (round 12): the seed matrix is collected at
     // plan time (one TakeOrderedAndProject, ≤65536·dim doubles) and
     // argmax evaluated as one codegen loop per row — the join shape
@@ -123,22 +124,6 @@ object SemDedup {
     // non-overflowing ceildiv: m + (t-1) wraps negative at Long.MaxValue
     val cells = m / targetCellSize + (if (m % targetCellSize == 0) 0 else 1)
     math.max(1L, math.min(65536L, cells)).toInt
-  }
-
-  /** [[pairs]] with the cell count resolved from the ACTUAL corpus
-    * size at plan time (one narrow count — the adaptive-planning
-    * pattern of `NearDup.embedCosinePairsAuto` / `Ann.autoCells`).
-    */
-  def pairsAuto(
-      df: DataFrame,
-      vecCol: String,
-      idCol: String,
-      targetCellSize: Int = 64,
-      minCos: Double = 0.9,
-      knownCount: Option[Long] = None
-  ): DataFrame = {
-    val n = knownCount.getOrElse(df.select(col(idCol)).count())
-    pairs(df, vecCol, idCol, nCells = autoCellCount(n, targetCellSize), minCos = minCos)
   }
 
   /** Corpus with semantic near-duplicates removed: for every

@@ -336,7 +336,7 @@ class CompilerSpec extends SparkTestBase {
     assert(rows(viaBrute) == rows(graft.ops.Ann.bruteTopK(annCorpus, qs, "emb", "vid", k = 3)))
     assert(viaBrute.columns.toSeq == Seq("query_id", "vid", "cos_sim", "rank"))
     val viaLsh = Pql.query(spark, "C | ann kind=lsh dim=2 k=3 (C | where vid % 4 == 0) on emb by vid", acat)
-    assert(rows(viaLsh) == rows(graft.ops.Ann.lshTopKAuto(annCorpus, qs, "emb", "vid", dim = 2, k = 3)))
+    assert(rows(viaLsh) == rows(graft.ops.Ann.lshTopK(annCorpus, qs, "emb", "vid", dim = 2, k = 3)))
     val viaIvf = Pql.query(spark, "C | ann kind=ivf dim=2 k=3 probes=2 (C | where vid % 4 == 0) on emb by vid", acat)
     assert(rows(viaIvf) == rows(graft.ops.Ann.ivfTopKSeeded(annCorpus, qs, "emb", "vid", dim = 2, k = 3)))
   }
@@ -476,7 +476,7 @@ class CompilerSpec extends SparkTestBase {
     // the BARE operator is the adaptive path (round-13 default)
     val bare = kept("E | dedup kind=embed dim=4 emb by vec_id")
     val libAuto = graft.ops.NearDup.dropNearDuplicates(
-      e, graft.ops.NearDup.embedCosinePairsAuto(e, "emb", "vec_id", dim = 4), "vec_id")
+      e, graft.ops.NearDup.embedCosinePairs(e, "emb", "vec_id", dim = 4), "vec_id")
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(bare == libAuto)
     // planes=/bits= pin the fixed geometry the library sentry uses
@@ -489,7 +489,7 @@ class CompilerSpec extends SparkTestBase {
     // bare semantic = adaptive cell count
     val bareSem = kept("E | dedup kind=semantic cos=0.95 emb by vec_id")
     val libSem = graft.ops.NearDup.dropNearDuplicates(
-      e, graft.ops.SemDedup.pairsAuto(e, "emb", "vec_id", minCos = 0.95), "vec_id")
+      e, graft.ops.SemDedup.pairs(e, "emb", "vec_id", minCos = 0.95), "vec_id")
       .select("vec_id").as[Long].collect().sorted.toSeq
     assert(bareSem == libSem)
     // half-set or conflicting geometry options are compile errors

@@ -822,15 +822,21 @@ class OpsSpec extends SparkTestBase {
     val exact = Sampling.tokenBudget(df, "text", "doc_id", "source", budget)
       .select("doc_id", "source", "n_tok").as[(Long, String, Long)].collect().toSet
     assert(auto == exact)
-    // above the floor it IS the histogram form — force the crossover
-    // with a knownMaxStratumRows override (also proving the override
-    // skips the plan-time count job: same decision, no extra scan)
-    val forced = Sampling.tokenBudgetAuto(df, "text", "doc_id", "source", budget,
-      knownMaxStratumRows = Some(200000L))
+    // above the floor it IS the histogram form: one real stratum of
+    // ExactMaxStratumRows + 1 rows beside a small one
+    val big = spark.range(0L, Sampling.ExactMaxStratumRows + 1 + 300)
+      .select(col("id").as("doc_id"),
+        expr("repeat('w ', 1 + CAST(id % 7 AS INT))").as("text"),
+        when(col("id") < Sampling.ExactMaxStratumRows + 1, lit("big")).otherwise(lit("small")).as("source"))
+    val bigBudget = 5000L
+    val crossed = Sampling.tokenBudgetAuto(big, "text", "doc_id", "source", bigBudget)
       .as[(Long, String, Long)].collect().toSet
-    val hist = Sampling.tokenBudgetHistogram(df, "text", "doc_id", "source", budget)
+    val hist = Sampling.tokenBudgetHistogram(big, "text", "doc_id", "source", bigBudget)
       .as[(Long, String, Long)].collect().toSet
-    assert(forced == hist)
+    val bigExact = Sampling.tokenBudget(big, "text", "doc_id", "source", bigBudget)
+      .select("doc_id", "source", "n_tok").as[(Long, String, Long)].collect().toSet
+    assert(crossed == hist && hist.nonEmpty)
+    assert(hist != bigExact) // the two forms are distinguishable here
     // both branches expose the SAME schema — the crossover is invisible
     // to downstream plans
     assert(Sampling.tokenBudgetAuto(df, "text", "doc_id", "source", budget).columns.toSeq ==
@@ -979,22 +985,6 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
-  test("embedCosinePairsAuto == embedCosinePairs at the resolved geometry; knownCount overrides the scan") {
-    val n = vecs.count()
-    val (planes, bits) = NearDup.autoGeometry(n)
-    val auto = NearDup.embedCosinePairsAuto(vecs, "embedding", "vec_id", dim = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val explicit = NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8, planes, bits)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == explicit)
-    // a knownCount estimate is honored without counting (different
-    // geometry -> generally different candidate set than `auto`)
-    val big = NearDup.embedCosinePairsAuto(
-      vecs, "embedding", "vec_id", dim = 8, knownCount = Some(4096L * 64))
-    val plan = executedPlan(big)
-    assert(!plan.contains("CartesianProduct"))
-  }
-
   test("autoCells: round(sqrt(n)) clamped to [4, 65536]") {
     assert(Ann.autoCells(0) == 4)
     assert(Ann.autoCells(500) == 22)          // gate corpus: round(22.36)
@@ -1011,60 +1001,82 @@ class OpsSpec extends SparkTestBase {
     assert(SemDedup.autoCellCount(Long.MaxValue, 64) == 65536)
   }
 
-  test("pairsAuto == pairs at the resolved cell count; lshTopKAuto == lshTopK at the resolved geometry") {
-    val n = vecs.count()
-    val sem = SemDedup.pairsAuto(vecs, "embedding", "vec_id", minCos = 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val semX = SemDedup.pairs(vecs, "embedding", "vec_id",
-      nCells = SemDedup.autoCellCount(n), minCos = 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(sem == semX)
+  // The sf10 ladder measured fixed sizing saturating at 100× (semantic
+  // 22.0 s fixed-32 vs 4.94 s sized; embed pairs quadratic under 32/8),
+  // so each sized op's DEFAULT resolves its geometry or cell count from
+  // a plan-time corpus count (autoGeometry/autoCells/autoCellCount).
+  // One table row per op and target: the default call vs an explicit
+  // call at the resolved size, so a future default change shows up as a
+  // test diff, not a silent scale regression. The tests below keep their
+  // earlier names, from when the adaptive form was a separate `*Auto`
+  // twin with a `knownCount` override; both folded into the base op's
+  // default, which is what every row checks.
+  private def sizedCase(name: String): (Seq[Int], DataFrame, DataFrame) = {
+    lazy val n = vecs.count()
     val queries = vecs.filter($"vec_id" === 0L)
-    val (planes, bits) = NearDup.autoGeometry(n, 64, maxBands = 7)
-    val lsh = Ann.lshTopKAuto(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val lshX = Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3, planes, bits)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(lsh == lshX)
+    val (pair, top) = (Seq(0, 1), Seq(0, 1, 3))
+    def geo(t: Int, maxBands: Int) = NearDup.autoGeometry(n, t, maxBands)
+    name match {
+      case "embedCosinePairs" => (pair,
+        NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8),
+        NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8,
+          planes = geo(64, 4)._1, bandBits = geo(64, 4)._2))
+      case "embedCosinePairs targetOccupancy=2" => (pair,
+        NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8, targetOccupancy = 2),
+        NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8,
+          planes = geo(2, 4)._1, bandBits = geo(2, 4)._2))
+      case "lshTopK" => (top,
+        Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3),
+        Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3,
+          planes = geo(64, 7)._1, bandBits = geo(64, 7)._2))
+      case "lshTopK targetOccupancy=2" => (top,
+        Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3, targetOccupancy = 2),
+        Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3,
+          planes = geo(2, 7)._1, bandBits = geo(2, 7)._2))
+      case "ivfTopK" => (top,
+        Ann.ivfTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3),
+        Ann.ivfTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3, nCells = Ann.autoCells(n)))
+      case "ivfTopKSeeded" => (top,
+        Ann.ivfTopKSeeded(vecs, queries, "embedding", "vec_id", dim = 8, k = 3),
+        Ann.ivfTopKSeeded(vecs, queries, "embedding", "vec_id", dim = 8, k = 3,
+          nCells = Ann.autoCells(n)))
+      case "SemDedup.pairs" => (pair,
+        SemDedup.pairs(vecs, "embedding", "vec_id", minCos = 0.2),
+        SemDedup.pairs(vecs, "embedding", "vec_id", nCells = SemDedup.autoCellCount(n), minCos = 0.2))
+      case "SemDedup.pairs targetCellSize=4" => (pair,
+        SemDedup.pairs(vecs, "embedding", "vec_id", minCos = 0.2, targetCellSize = 4),
+        SemDedup.pairs(vecs, "embedding", "vec_id", nCells = SemDedup.autoCellCount(n, 4), minCos = 0.2))
+    }
+  }
+
+  private def assertSizedDefaults(names: String*): Unit =
+    for (name <- names) {
+      val (cols, default, explicit) = sizedCase(name)
+      def rows(df: DataFrame) = df.collect().map(r => cols.map(r.get)).toSet
+      val got = rows(default)
+      assert(got == rows(explicit), name)
+      assert(got.nonEmpty, name)
+    }
+
+  test("embedCosinePairsAuto == embedCosinePairs at the resolved geometry; knownCount overrides the scan") {
+    assertSizedDefaults("embedCosinePairs", "embedCosinePairs targetOccupancy=2")
+    // a corpus-scale geometry still plans a banded equi-join
+    val (bigPlanes, bigBits) = NearDup.autoGeometry(4096L * 64)
+    assert(!executedPlan(NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8,
+      planes = bigPlanes, bandBits = bigBits)).contains("CartesianProduct"))
+  }
+
+  test("pairsAuto == pairs at the resolved cell count; lshTopKAuto == lshTopK at the resolved geometry") {
+    assertSizedDefaults("SemDedup.pairs", "SemDedup.pairs targetCellSize=4",
+      "lshTopK", "lshTopK targetOccupancy=2")
   }
 
   test("ivfTopKSeededAuto == ivfTopKSeeded at the resolved cell count") {
-    val queries = vecs.filter($"vec_id" === 0L)
-    val auto = Ann.ivfTopKSeededAuto(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val explicit = Ann.ivfTopKSeeded(vecs, queries, "embedding", "vec_id", dim = 8, k = 3,
-      nCells = Ann.autoCells(vecs.count()))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(auto == explicit && auto.nonEmpty)
+    assertSizedDefaults("ivfTopKSeeded")
   }
 
   test("adaptive sizing IS the default (round 13): bare calls equal their _auto twins") {
-    // The sf10 ladder measured fixed geometry saturating at 100×
-    // (semantic 22.0 s fixed-32 vs 4.94 s sized; embed pairs quadratic
-    // under 32/8), so the bare operator now routes through
-    // autoGeometry/autoCells/autoCellCount. These four pins mean a
-    // future default change shows up as a test diff, not a silent
-    // scale regression.
-    val queries = vecs.filter($"vec_id" === 0L)
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def topSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(pairSet(NearDup.embedCosinePairs(vecs, "embedding", "vec_id", dim = 8)) ==
-      pairSet(NearDup.embedCosinePairsAuto(vecs, "embedding", "vec_id", dim = 8)))
-    assert(topSet(Ann.lshTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)) ==
-      topSet(Ann.lshTopKAuto(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)))
-    assert(topSet(Ann.ivfTopKSeeded(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)) ==
-      topSet(Ann.ivfTopKSeededAuto(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)))
-    assert(topSet(Ann.ivfTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3)) ==
-      topSet(Ann.ivfTopK(vecs, queries, "embedding", "vec_id", dim = 8, k = 3,
-        nCells = Ann.autoCells(vecs.count()))))
-    assert(pairSet(SemDedup.pairs(vecs, "embedding", "vec_id", minCos = 0.2)) ==
-      pairSet(SemDedup.pairsAuto(vecs, "embedding", "vec_id", minCos = 0.2)))
-    // knownCount skips the plan-time count on the default path too
-    val known = NearDup.embedCosinePairs(
-      vecs, "embedding", "vec_id", dim = 8, knownCount = Some(vecs.count()))
-    assert(pairSet(known) == pairSet(NearDup.embedCosinePairsAuto(vecs, "embedding", "vec_id", dim = 8)))
+    assertSizedDefaults("ivfTopK")
   }
 
   test("half-set fixed geometry is rejected, not silently defaulted") {

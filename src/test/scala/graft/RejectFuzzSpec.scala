@@ -87,8 +87,10 @@ class RejectFuzzSpec extends SparkTestBase {
   }
 
   /** Fixed-prefix near-miss extension forms: the option/geometry
-    * validation surface both backends implement INDEPENDENTLY, with
-    * seeded values so ranges are swept rather than spot-checked.
+    * validation surface both backends share through ONE resolver
+    * (`compiler.ExtOptions`) — this sweep pins that each backend calls
+    * it at the same point, with seeded values so ranges are swept
+    * rather than spot-checked.
     */
   private def fixedInvalid(r: scala.util.Random): String = {
     val bits = r.nextInt(30) + 63  // > 62

@@ -115,22 +115,46 @@ class SqlCompileSpec extends SparkTestBase {
     info(s"$checked goldens compiled to SQL and matched")
   }
 
+  /** In-test `StormEvents` schema for the tests that need only a table
+    * (not the reference goldens): a DamageProperty tie inside the top
+    * three, stored against the EventId order, so only the EventId
+    * tiebreak puts it in order; and a null that sorts last.
+    */
+  private lazy val storm: DataFrame = {
+    val session = spark
+    import session.implicits._
+    Seq(
+      (1, Some(100), "TX", "hail"), (2, Some(9000), "OK", "tornado"),
+      (3, Some(5000), "KS", "wind"), (4, Some(0), "TX", "flood"),
+      (5, Some(1000), "NE", "hail"), (6, None, "IA", "snow"),
+      (7, Some(5000), "KS", "tornado"), (8, Some(250), "OK", "wind")
+    ).toDF("EventId", "DamageProperty", "State", "EventNarrative")
+  }
+  private def stormCatalog(name: String): DataFrame = name match {
+    case "StormEvents" | "Storm Events" => storm
+    case other                          => sys.error(s"no fixture table $other")
+  }
+
   test("quoted table names are quoted in the emitted SQL") {
-    val sql = Pql.compileToSql("`Storm Events` | count", catalog)
+    val sql = Pql.compileToSql("`Storm Events` | count", stormCatalog)
     assert(sql.contains("`Storm Events`"), sql)
   }
 
   test("trailing sort/top ordering reaches the final SELECT") {
-    registerViews()
+    storm.createOrReplaceTempView("StormEvents")
     val q1 = "StormEvents | sort by DamageProperty, EventId | take 3"
-    val sql1 = Pql.compileToSql(q1, catalog)
+    val sql1 = Pql.compileToSql(q1, stormCatalog)
     assert(sql1.contains("ORDER BY"), sql1)
     val a = spark.sql(sql1).collect().map(_.toString).toSeq
-    val b = Pql.query(spark, q1, catalog).collect().map(_.toString).toSeq
+    val b = Pql.query(spark, q1, stormCatalog).collect().map(_.toString).toSeq
     assert(a == b) // ORDER itself must match, not just the set
+    // `top` orders by DamageProperty alone, so its row order is only
+    // defined without the tie: drop one tied row for this query
+    val untied = storm.filter("EventId != 7")
+    untied.createOrReplaceTempView("StormEvents")
     val q2 = "StormEvents | top 3 by DamageProperty"
-    assert(spark.sql(Pql.compileToSql(q2, catalog)).collect().map(_.toString).toSeq ==
-      Pql.query(spark, q2, catalog).collect().map(_.toString).toSeq)
+    assert(spark.sql(Pql.compileToSql(q2, _ => untied)).collect().map(_.toString).toSeq ==
+      Pql.query(spark, q2, _ => untied).collect().map(_.toString).toSeq)
   }
 
   test("asof/range joins emit CTE SQL matching the plan path (round 15)") {
@@ -186,7 +210,7 @@ class SqlCompileSpec extends SparkTestBase {
     // rejections are the plan-time-data forms (adaptive sizing, the
     // sample budget= crossover), asserted here and in the per-kind tests
     val e2 = intercept[graft.compiler.PqlCompileException](
-      Pql.compileToSql("StormEvents | sample budget=100 EventNarrative by EventId, State", catalog))
+      Pql.compileToSql("StormEvents | sample budget=100 EventNarrative by EventId, State", stormCatalog))
     assert(e2.getMessage.contains("Pql.query"), e2.getMessage)
   }
 

@@ -275,6 +275,16 @@ class StreamingSpec extends SparkTestBase {
     val e2 = intercept[PqlCompileException](
       Pql.query(spark, "D | dedup kind=embed dim=8 occupancy=64 text by doc_id", cat))
     assert(e2.getMessage.contains("occupancy"), e2.getMessage)
+    // the fixed geometry (32/8 unless given) passes the batch form's
+    // range checks: spanned compile errors, not a raw require from the op
+    for ((opts, msg) <- Seq(
+        "planes=63" -> "option planes must be in [1, 62]",
+        "bits=70" -> "option bits must be in [1, 62]",
+        "planes=4 bits=8" -> "one band minimum")) {
+      val q = s"D | dedup kind=embed dim=8 $opts text by doc_id"
+      val e = intercept[PqlCompileException](Pql.query(spark, q, cat))
+      assert(e.getMessage.contains(msg) && e.span.isValid, e.getMessage)
+    }
     // sample budget= needs a plan-time count: rejected on a stream
     val e3 = intercept[PqlCompileException](
       Pql.query(spark, "D | sample budget=100 text by doc_id, doc_id", cat))

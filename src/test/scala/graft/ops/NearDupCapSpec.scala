@@ -27,7 +27,8 @@ class NearDupCapSpec extends SparkTestBase {
 
   test("capped shingle sets are bounded and the Jaccard matches the bottom-k sketch") {
     val cap = 64
-    val capped = NearDup.cappedHashedShingles(longDocs, "text", "doc_id", cap)
+    val capped = longDocs.select(
+      col("doc_id"), explode(NearDup.cappedShingleSketch(col("text"), cap)).as("h"))
     val sizes = capped.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
     assert(sizes.values.forall(_ <= cap), sizes.toString)
     assert(sizes.values.forall(_ == cap), s"6000-token docs should fill the cap: $sizes")
