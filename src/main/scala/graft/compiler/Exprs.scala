@@ -387,12 +387,14 @@ private[graft] final class Exprs(source: String) {
 
   /** AST-level constant folding for `take`/`top` row counts: literals,
     * sign, arithmetic, and `let`-bound constants (via `letAsts`).
+    * Evaluated exactly (no 64-bit wrap-around), so the caller's range
+    * check sees the true value; division by zero is a compile error.
     */
-  def evalRowCount(e: Expr, letAsts: collection.Map[String, Expr]): Long = {
-    def eval(e: Expr): Long = e match {
+  def evalRowCount(e: Expr, letAsts: collection.Map[String, Expr]): BigInt = {
+    def eval(e: Expr): BigInt = e match {
       case ParenExpr(x, _) => eval(x)
       case l @ BasicLit(TokenKind.Number, v, span) =>
-        if (l.isInteger) v.toLong
+        if (l.isInteger) BigInt(v)
         else fail(s"expected integer row count, got $v", span)
       case UnaryExpr(TokenKind.Plus, x, _)  => eval(x)
       case UnaryExpr(TokenKind.Minus, x, _) => -eval(x)
@@ -401,8 +403,10 @@ private[graft] final class Exprs(source: String) {
           case TokenKind.Plus  => eval(x) + eval(y)
           case TokenKind.Minus => eval(x) - eval(y)
           case TokenKind.Star  => eval(x) * eval(y)
-          case TokenKind.Slash => eval(x) / eval(y)
-          case TokenKind.Mod   => eval(x) % eval(y)
+          case TokenKind.Slash | TokenKind.Mod =>
+            val d = eval(y)
+            if (d == 0) fail("division by zero in row count", opSpan)
+            if (op == TokenKind.Slash) eval(x) / d else eval(x) % d
           case other           => fail(s"row count must be a constant (${other.display})", opSpan)
         }
       case QualifiedIdent(List(p)) if !p.quoted =>

@@ -13,8 +13,11 @@ object Parser {
   /** Parse a full source text into statements (`let` bindings and at
     * most one tabular query per statement, `;`-separated).
     */
-  def parse(source: String): List[Statement] =
-    new Parser(source, Lexer.scan(source)).parseProgram()
+  def parse(source: String): List[Statement] = {
+    val stmts = new Parser(source, Lexer.scan(source)).parseProgram()
+    checkDepth(stmts, source)
+    stmts
+  }
 
   private[parser] val joinFlavors = Set("inner", "innerunique", "leftouter")
   /** graft extension join flavors (not in the reference grammar). */
@@ -27,12 +30,61 @@ object Parser {
   private[parser] val sampleBudgetOptions = Set("budget", "bits")
   private[parser] val annKinds = Set("brute", "lsh", "ivf")
   private[parser] val annOptions = Set("k", "dim", "cells", "probes", "planes", "bits", "occupancy")
+
+  /** Deepest nesting the parser accepts, in levels: the i-th stage of
+    * a pipeline sits i levels below its table; every expression node,
+    * and every pipeline an operator holds, one level below its parent.
+    * That is the depth of the Spark plan and Column trees both
+    * compilers build. Every walker over them (the compilers, [[Walk]],
+    * Catalyst) recurses once per level, so an unbounded input (`((((…`
+    * or `a + 1 + 1 + …` ten thousand deep, a pipeline of ten thousand
+    * stages) would overflow the JVM stack instead of raising a
+    * PqlParseException. The bound is lower than the stack needs:
+    * Spark's analyzer casts an arithmetic chain with mixed operand
+    * types one level per iteration of its 100-iteration resolution
+    * batch, so such a chain about 97 deep fails analysis with a plain
+    * RuntimeException. `and`/`or` chains are built balanced (see
+    * `binaryTrail`), so a long disjunction costs only log2 of its
+    * length.
+    */
+  val MaxNesting = 64
+
+  /** Fails on the first node nested deeper than [[MaxNesting]] levels.
+    * The parser only recurses into brackets and sub-pipelines (bounded
+    * by `nested`); pipeline stages and operator chains it builds in
+    * loops, so their depth is checked here, iteratively.
+    */
+  private def checkDepth(stmts: List[Statement], source: String): Unit = {
+    val todo = scala.collection.mutable.Stack[(Node, Int)]()
+    stmts.foreach(s => todo.push(s -> 0))
+    while (todo.nonEmpty) {
+      val (node, level) = todo.pop()
+      if (level > MaxNesting) {
+        val span = node match {
+          case b: BinaryExpr => b.opSpan // BinaryExpr.span recurses down the chain
+          case n             => n.span
+        }
+        throw new PqlParseException(s"nesting deeper than $MaxNesting levels", span, source)
+      }
+      node match {
+        case t: TabularExpr =>
+          t.operators.iterator.zipWithIndex.foreach { case (op, i) => todo.push(op -> (level + i + 1)) }
+        case n =>
+          Walk.children(n).foreach {
+            case c @ (_: Expr | _: TabularExpr) => todo.push(c -> (level + 1))
+            case c                              => todo.push(c -> level)
+          }
+      }
+    }
+  }
 }
 
 private final class Parser(source: String, tokens: Vector[Token]) {
   import TokenKind._
 
   private var pos = 0
+  /** Expressions and sub-pipelines currently open (see MaxNesting). */
+  private var depth = 0
 
   // ---- token helpers -------------------------------------------------
 
@@ -79,6 +131,14 @@ private final class Parser(source: String, tokens: Vector[Token]) {
     case Some(t) => t.kind == Pipe || t.kind == RParen || t.kind == Semi
   }
 
+  private def nested[A](body: => A): A = {
+    if (depth >= Parser.MaxNesting)
+      fail(s"nesting deeper than ${Parser.MaxNesting} levels", peek.map(_.span).getOrElse(eofSpan))
+    depth += 1
+    try body
+    finally depth -= 1
+  }
+
   private def requireClauseEnd(): Unit =
     if (!atClauseEnd) {
       val t = tokens(pos)
@@ -118,7 +178,7 @@ private final class Parser(source: String, tokens: Vector[Token]) {
 
   // ---- tabular expressions -------------------------------------------
 
-  private def parseTabularExpr(): TabularExpr = {
+  private def parseTabularExpr(): TabularExpr = nested {
     val table = parseIdent("table name")
     val ops = List.newBuilder[TabularOperator]
     while (at(Pipe)) {
@@ -520,7 +580,7 @@ private final class Parser(source: String, tokens: Vector[Token]) {
     out.result()
   }
 
-  def parseExpr(): Expr = binaryTrail(parseUnary(), 0)
+  def parseExpr(): Expr = nested(binaryTrail(parseUnary(), 0))
 
   private def precedence(kind: TokenKind): Int = kind match {
     case Star | Slash | Mod                          => 4
@@ -531,8 +591,31 @@ private final class Parser(source: String, tokens: Vector[Token]) {
     case _                                           => -1
   }
 
+  /** Precedence climbing. Operators of one precedence associate to the
+    * left, except that a run of `and`s or of `or`s is built as a
+    * balanced tree: both are associative, and a balanced tree keeps a
+    * long disjunction within [[Parser.MaxNesting]] (Spark's own SQL
+    * parser does the same). Runs of up to three terms keep the
+    * left-deep shape.
+    */
   private def binaryTrail(x0: Expr, minPrecedence: Int): Expr = {
     var x = x0
+    // the open and/or run: its operator, operands (x first) and operator spans
+    var runOp: TokenKind = null
+    val runXs = collection.mutable.ArrayBuffer.empty[Expr]
+    val runSpans = collection.mutable.ArrayBuffer.empty[Span]
+    def balanced(lo: Int, hi: Int): Expr =
+      if (hi - lo == 1) runXs(lo)
+      else {
+        val mid = (lo + hi + 1) / 2
+        BinaryExpr(balanced(lo, mid), runOp, runSpans(mid - 1), balanced(mid, hi))
+      }
+    def closeRun(): Unit = if (runOp != null) {
+      x = balanced(0, runXs.length)
+      runOp = null
+      runXs.clear()
+      runSpans.clear()
+    }
     var continue = true
     while (continue && hasNext) {
       val opTok = tokens(pos)
@@ -541,6 +624,7 @@ private final class Parser(source: String, tokens: Vector[Token]) {
       else {
         next()
         if (opTok.kind == In) {
+          closeRun()
           expect(LParen, "'('")
           val vals = parseExprList()
           val rp = expect(RParen, "')'")
@@ -554,10 +638,18 @@ private final class Parser(source: String, tokens: Vector[Token]) {
             if (prec2 < 0 || prec2 <= prec1) inner = false
             else y = binaryTrail(y, prec1 + 1)
           }
-          x = BinaryExpr(x, opTok.kind, opTok.span, y)
+          if (opTok.kind == And || opTok.kind == Or) {
+            if (runOp != opTok.kind) { closeRun(); runOp = opTok.kind; runXs += x }
+            runXs += y
+            runSpans += opTok.span
+          } else {
+            closeRun()
+            x = BinaryExpr(x, opTok.kind, opTok.span, y)
+          }
         }
       }
     }
+    closeRun()
     x
   }
 

@@ -137,6 +137,30 @@ class CompilerSpec extends SparkTestBase {
     assert(run("let n = 1 + 1; T | take n").count() == 2L)
   }
 
+  test("row counts past Int range or dividing by zero are spanned compile errors on both backends") {
+    // folded exactly: 2^32 * 2^32 must not wrap to `take 0`, and a hex
+    // literal past Long.MaxValue or `1 / 0` must not escape as a raw
+    // JVM exception
+    for (q <- Seq("T | take 4294967296 * 4294967296", "T | take 0xFFFFFFFFFFFFFFFF",
+        "let n = 99999999999999999999; T | top n by id", "T | take 1 / 0", "T | take 5 % 0")) {
+      for (e <- Seq(intercept[graft.compiler.PqlCompileException](run(q)),
+          intercept[graft.compiler.PqlCompileException](Pql.compileToSql(q, _ => t))))
+        assert(e.span.isValid && (e.getMessage.contains("out of range") ||
+          e.getMessage.contains("division by zero")), s"$q: ${e.getMessage}")
+    }
+    assert(run("T | take 0x7FFFFFFF / 0x7FFFFFFF").count() == 1L)
+  }
+
+  test("a 3000-term disjunction runs on both backends") {
+    // built balanced by the parser: the left-deep chain overflowed the
+    // JVM stack at about 300 terms
+    val q = "T | where " + (1 to 3000).map(i => s"id == ${i * 2}").mkString(" or ")
+    assert(ids(q).sorted(Ordering.by[Any, Int](_.asInstanceOf[Int])) == Seq(2, 4, 4))
+    t.createOrReplaceTempView("T")
+    try assert(spark.sql(Pql.compileToSql(q, cat)).count() == 3L)
+    finally spark.catalog.dropTempView("T")
+  }
+
   // ---- durations ------------------------------------------------------
 
   test("bin with sub-second duration buckets at millisecond resolution") {

@@ -1,20 +1,25 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.parser.PqlParseException
 
-/** Replays the reference's Go fuzz corpus
-  * (reference: parser/testdata/fuzz/FuzzParse, FuzzScan) through
-  * graft's parser: every input must either parse or raise
-  * PqlParseException — never crash with anything else.
+/** Replays the in-repo fuzz seed corpus
+  * (src/test/resources/pql/fuzz/FuzzParse, FuzzScan — see [[PqlCorpus]])
+  * through graft's parser and SQL backend: every input must either
+  * parse or raise PqlParseException — never crash with anything else.
+  * The seeds are written in the reference's Go fuzz-corpus format
+  * (`go test fuzz v1` then `string("…")` with Go escapes) and cover the
+  * malformed and edge forms of the lexer/parser grammar: unterminated
+  * strings and backticks, escapes and NULs, hex/exponent limits,
+  * unbalanced brackets, dangling pipes, operators without operands,
+  * incomplete `let`s, comments at EOF and non-ASCII identifiers.
   */
 class FuzzSpec extends AnyFunSuite {
-
-  private val fuzzRoot = Paths.get("/root/reference/parser/testdata/fuzz")
 
   /** Decode the Go fuzz-corpus literal `string("...")` (Go escape
     * syntax: \xNN, \uNNNN, \n, \t, ...).
@@ -43,26 +48,31 @@ class FuzzSpec extends AnyFunSuite {
     sb.toString
   }
 
-  private def corpusInputs: Seq[(String, String)] =
-    if (!Files.isDirectory(fuzzRoot)) Seq.empty
-    else
-      Files.walk(fuzzRoot).iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .map { p: Path =>
-          val lines = new String(Files.readAllBytes(p), "UTF-8").linesIterator.toList
-          val lit = lines.collectFirst {
-            case l if l.startsWith("string(\"") && l.endsWith("\")") =>
-              goUnquote(l.stripPrefix("string(\"").stripSuffix("\")"))
-          }
-          p.getFileName.toString -> lit
+  /** Every seed file of the corpus's `fuzz` directory as (relative
+    * name, decoded input). Fails, naming the path, when the corpus is
+    * absent, empty, or holds a file with no `string("…")` line.
+    */
+  private def corpusInputs: Seq[(String, String)] = {
+    val fuzzRoot = PqlCorpus.dir("fuzz").fold(msg => fail(msg), _.toPath)
+    val inputs = Files.walk(fuzzRoot).iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map { p: Path =>
+        val lines = new String(Files.readAllBytes(p), "UTF-8").linesIterator.toList
+        val lit = lines.collectFirst {
+          case l if l.startsWith("string(\"") && l.endsWith("\")") =>
+            goUnquote(l.stripPrefix("string(\"").stripSuffix("\")"))
         }
-        .collect { case (n, Some(src)) => n -> src }
-        .toSeq
+        assert(lit.isDefined, s"fuzz seed $p holds no string(\"…\") line")
+        fuzzRoot.relativize(p).toString -> lit.get
+      }
+      .toSeq
+      .sortBy(_._1)
+    assert(inputs.nonEmpty, s"no fuzz inputs found under ${PqlCorpus.describe(fuzzRoot.toFile)}")
+    inputs
+  }
 
   test("reference fuzz corpus: parse or PqlParseException, never crash") {
-    val inputs = corpusInputs
-    assert(inputs.nonEmpty, s"no fuzz inputs found under $fuzzRoot")
-    for ((name, src) <- inputs) {
+    for ((name, src) <- corpusInputs) {
       try Pql.parse(src)
       catch {
         case _: PqlParseException => // expected for malformed input
@@ -71,11 +81,22 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
+  /** The engine's error condition of an AnalysisException. */
+  private def condition(e: Throwable): Option[String] = e match {
+    case a: AnalysisException => Option(a.getCondition)
+    case _                    => None
+  }
+
   test("reference fuzz corpus through compileToSql: SQL text or typed error, never crash") {
     // the SQL backend must be exactly as robust as the parser: every
     // corpus input either compiles to a string or raises a typed
     // parse/compile error (unknown tables resolve to a dummy schema so
-    // compilation proceeds past the catalog)
+    // compilation proceeds past the catalog). Unknown columns and
+    // operand types are the engine's to reject (RejectFuzzSpec's
+    // deferred class; graft has no type checker of its own): the text
+    // backend raises the engine's AnalysisException at compile time,
+    // and the plan path must then reject the same input with the same
+    // error condition (e.g. UNRESOLVED_COLUMN.WITH_SUGGESTION).
     val spark = SparkTestBase.spark
     import spark.implicits._
     val dummy = Seq((1L, "x")).toDF("a", "b")
@@ -84,6 +105,10 @@ class FuzzSpec extends AnyFunSuite {
       catch {
         case _: PqlParseException                   => ()
         case _: graft.compiler.PqlCompileException  => ()
+        case e: AnalysisException if condition(e).isDefined =>
+          val plan = scala.util.Try(Pql.query(spark, src, _ => dummy)).failed.toOption
+          assert(plan.flatMap(condition) == condition(e),
+            s"fuzz input $name: compileToSql raised ${e.getMessage}, but the plan path gave $plan")
         case e: Throwable =>
           fail(s"fuzz input $name crashed compileToSql with ${e.getClass.getName}: ${e.getMessage}")
       }

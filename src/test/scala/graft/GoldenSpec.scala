@@ -3,57 +3,20 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.lit
-
-/** Runs the reference implementation's own golden test corpus
-  * (/root/reference/testdata/Goldens: input.pql + expected output.csv
-  * over the CSV/JSON fixture tables) through graft on Spark.
+/** Runs the in-repo golden corpus (src/test/resources/pql/Goldens, see
+  * [[PqlCorpus]]) through graft on Spark: each golden's `input.pql`
+  * over the fixture tables must return its `output.csv`, which DuckDB
+  * produced from the golden's hand-written `oracle.sql`.
   *
   * This is the "a user of the reference could switch engines" gate:
-  * same queries, same tables, same rows out.
+  * same queries, same tables, same rows out. A missing corpus is one
+  * failing test that names the path it looked for.
   */
 class GoldenSpec extends SparkTestBase {
 
-  private val goldensDir = new File("/root/reference/testdata/Goldens")
-  private val tablesDir = new File("/root/reference/testdata/Tables")
-
-  // ---- fixture tables ------------------------------------------------
-
-  private lazy val tables: Map[String, DataFrame] = {
-    val out = mutable.Map[String, DataFrame]()
-    for (f <- tablesDir.listFiles().toList if f.getName.endsWith(".csv")) {
-      val name = f.getName.stripSuffix(".csv")
-      // ClickHouse CSV columns are never NULL: empty field = empty
-      // string. Use an unmatchable nullValue so Spark agrees.
-      out(name) = spark.read
-        .option("header", "true")
-        .option("inferSchema", "true")
-        .option("nullValue", "")
-        .csv(f.getPath)
-    }
-    for (f <- tablesDir.listFiles().toList if f.getName.endsWith(".json"))
-      out(f.getName.stripSuffix(".json")) = loadClickHouseJson(f)
-    out.toMap
-  }
-
-  /** Loads a ClickHouse-JSON-format fixture ({"meta": [...], "data":
-    * [...]}) with Map-typed columns (only MapTable uses this shape).
-    */
-  private def loadClickHouseJson(f: File): DataFrame = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmt: Formats = DefaultFormats
-    val j = JsonMethods.parse(Files.readString(f.toPath))
-    val rows = (j \ "data").extract[List[JObject]].map { o =>
-      ((o \ "id").extract[Int], (o \ "a").extract[Map[String, Long]])
-    }
-    val session = spark
-    import session.implicits._
-    rows.toDF("id", "a")
-  }
+  private lazy val tables: Map[String, DataFrame] = PqlCorpus.tables(spark)
 
   private def catalog(name: String): DataFrame =
     tables.getOrElse(name, sys.error(s"no fixture table $name"))
@@ -91,54 +54,46 @@ class GoldenSpec extends SparkTestBase {
     rows.result()
   }
 
-  /** Render a Spark value the way ClickHouse CSV does. */
+  /** Render a Spark value the way ClickHouse CSV does: NULL as an empty
+    * field, booleans as 1/0, a whole double below 1e15 as integer text.
+    * Any other double renders as its exact binary value rounded
+    * half-even to 15 significant digits, plain, without trailing
+    * zeros: an explicit rule, since JDK 17's Double.toString is not
+    * always the shortest round-trip form. tools/make_goldens.py renders
+    * DuckDB values by the same rule.
+    */
   private def show(v: Any): String = v match {
-    case null          => ""
-    case true          => "1"
-    case false         => "0"
-    case d: Double     => if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
-    case f: Float      => show(f.toDouble)
-    case b: BigDecimal => if (b.isWhole) b.toBigInt.toString else b.toString
-    case other         => other.toString
-  }
-
-  private def loadParams(dir: File): Map[String, Column] = {
-    val f = new File(dir, "options.jwcc")
-    if (!f.exists()) return Map.empty
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmt: Formats = DefaultFormats
-    // The reference uses HuJSON (trailing commas allowed) — strip them.
-    val text = Files.readString(f.toPath).replaceAll(",\\s*([}\\]])", "$1")
-    val j = JsonMethods.parse(text)
-    (j \ "parameters") match {
-      case JObject(fields) =>
-        fields.map { case (name, spec) =>
-          val value = (spec \ "value").extract[String]
-          val column =
-            if (value.matches("-?[0-9]+")) lit(value.toLong)
-            else if (value.matches("-?[0-9]*\\.[0-9]+")) lit(value.toDouble)
-            else lit(value)
-          name -> column
-        }.toMap
-      case _ => Map.empty
-    }
+    case null                    => ""
+    case true                    => "1"
+    case false                   => "0"
+    case d: Double if d.isWhole && math.abs(d) < 1e15 => d.toLong.toString
+    case d: Double =>
+      new java.math.BigDecimal(d).round(new java.math.MathContext(15, java.math.RoundingMode.HALF_EVEN))
+        .stripTrailingZeros.toPlainString
+    case f: Float                => show(f.toDouble)
+    case b: java.math.BigDecimal => if (BigDecimal(b).isWhole) b.toBigInteger.toString else b.toString
+    case other                   => other.toString
   }
 
   // ---- the tests -----------------------------------------------------
 
-  for (dir <- goldensDir.listFiles().toList.filter(_.isDirectory).sortBy(_.getName)) {
+  private val goldenDirs = PqlCorpus.goldenDirs
+
+  if (goldenDirs.isEmpty)
+    test("golden corpus") { fail(PqlCorpus.noGoldens) }
+
+  for (dir <- goldenDirs) {
     val name = dir.getName
     test(s"golden: $name") {
-      assume(!new File(dir, "skip").exists(), "'skip' marker present")
       val input = Files.readString(Paths.get(dir.getPath, "input.pql"))
-      val params = loadParams(dir)
+      val params = PqlCorpus.params(dir)
       val result = Pql.query(spark, input, catalog, params)
 
       val expectedFile = new File(dir, "output.csv")
       if (!expectedFile.exists()) {
-        // No expected rows recorded (e.g. nondeterministic now()):
-        // assert the query executes.
+        // Only a time-dependent query (now()) may omit its expected
+        // rows: assert the query executes.
+        assert(PqlCorpus.timeDependent(input), s"$name has no output.csv and does not call now()")
         result.collect()
       } else {
         val expected = parseCsv(Files.readString(expectedFile.toPath))
@@ -151,7 +106,7 @@ class GoldenSpec extends SparkTestBase {
         val unordered = new File(dir, "unordered").exists()
         if (unordered)
           assert(
-            gotRows.sortBy(_.mkString("")) == expRows.sortBy(_.mkString("")),
+            gotRows.sortBy(_.mkString("\u0001")) == expRows.sortBy(_.mkString("\u0001")),
             s"row multiset mismatch in $name"
           )
         else assert(gotRows == expRows, s"row mismatch in $name")

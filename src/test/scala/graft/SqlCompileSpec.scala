@@ -7,73 +7,25 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 
-/** `Pql.compileToSql` parity: for the reference's whole golden corpus,
+/** `Pql.compileToSql` parity: for the whole in-repo golden corpus
+  * (src/test/resources/pql, see [[PqlCorpus]]),
   * `spark.sql(compileToSql(q))` must return the same multiset of rows
   * as the DataFrame path `Pql.query(q)` — the embedder who ships SQL
   * text and the embedder who executes plans see identical results.
+  * Parity needs no expected output: the goldens' `output.csv` files are
+  * GoldenSpec's business.
   */
 class SqlCompileSpec extends SparkTestBase {
 
-  private val goldensDir = new File("/root/reference/testdata/Goldens")
-  private val tablesDir = new File("/root/reference/testdata/Tables")
-
-  private lazy val tables: Map[String, DataFrame] = {
-    val out = mutable.Map[String, DataFrame]()
-    for (f <- tablesDir.listFiles().toList if f.getName.endsWith(".csv"))
-      out(f.getName.stripSuffix(".csv")) = spark.read
-        .option("header", "true")
-        .option("inferSchema", "true")
-        .option("nullValue", "")
-        .csv(f.getPath)
-    // MapTable (ClickHouse JSON fixture) — map-typed column
-    for (f <- tablesDir.listFiles().toList if f.getName.endsWith(".json")) {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      implicit val fmt: Formats = DefaultFormats
-      val j = JsonMethods.parse(Files.readString(f.toPath))
-      val rows = (j \ "data").extract[List[JObject]].map { o =>
-        ((o \ "id").extract[Int], (o \ "a").extract[Map[String, Long]])
-      }
-      val session = spark
-      import session.implicits._
-      out(f.getName.stripSuffix(".json")) = rows.toDF("id", "a")
-    }
-    out.toMap
-  }
+  private lazy val tables: Map[String, DataFrame] = PqlCorpus.tables(spark)
 
   private def catalog(name: String): DataFrame =
     tables.getOrElse(name, sys.error(s"no fixture table $name"))
 
-  /** Same external-parameter loading as GoldenSpec (options.jwcc). */
-  private def loadParams(dir: File): Map[String, org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.lit
-    val f = new File(dir, "options.jwcc")
-    if (!f.exists()) return Map.empty
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmt: Formats = DefaultFormats
-    val text = Files.readString(f.toPath).replaceAll(",\\s*([}\\]])", "$1")
-    (JsonMethods.parse(text) \ "parameters") match {
-      case JObject(fields) =>
-        fields.map { case (name, spec) =>
-          val value = (spec \ "value").extract[String]
-          val column =
-            if (value.matches("-?[0-9]+")) lit(value.toLong)
-            else if (value.matches("-?[0-9]*\\.[0-9]+")) lit(value.toDouble)
-            else lit(value)
-          name -> column
-        }.toMap
-      case _ => Map.empty
-    }
-  }
-
   private def multiset(df: DataFrame): Map[String, Int] =
     df.collect()
-      .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))).mkString(""))
+      .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))).mkString("\u0001"))
       .groupBy(identity).view.mapValues(_.length).toMap
-
-  private lazy val goldenDirs: List[File] =
-    goldensDir.listFiles().toList.filter(d => new File(d, "input.pql").exists()).sortBy(_.getName)
 
   /** Fixture names registrable as Spark temp views. `Storm Events`
     * (space in the name — the QuotedTableName golden) cannot be a temp
@@ -86,15 +38,16 @@ class SqlCompileSpec extends SparkTestBase {
     }
 
   test("every reference golden compiles to SQL that matches the DataFrame path") {
-    assert(goldenDirs.nonEmpty)
+    val goldenDirs = PqlCorpus.goldenDirs
+    assert(goldenDirs.nonEmpty, PqlCorpus.noGoldens)
     var checked = 0
     for (dir <- goldenDirs) {
       val src = Files.readString(new File(dir, "input.pql").toPath)
       // ProjectNow calls now(): the two paths evaluate at different
       // wall-clock instants by definition — assert it compiles and
       // runs, not value equality.
-      val timeDependent = src.contains("now()")
-      val params = loadParams(dir)
+      val timeDependent = PqlCorpus.timeDependent(src)
+      val params = PqlCorpus.params(dir)
       val sql = Pql.compileToSql(src, catalog, params)
       if (sql.contains("`Storm Events`")) { checked += 1 }
       else {
@@ -116,7 +69,7 @@ class SqlCompileSpec extends SparkTestBase {
   }
 
   /** In-test `StormEvents` schema for the tests that need only a table
-    * (not the reference goldens): a DamageProperty tie inside the top
+    * (not the golden corpus): a DamageProperty tie inside the top
     * three, stored against the EventId order, so only the EventId
     * tiebreak puts it in order; and a null that sorts last.
     */

@@ -265,4 +265,42 @@ class ParserSpec extends AnyFunSuite {
     // bogus rate position, same error as any other identifier
     assertThrows[PqlParseException](Parser.parse("D | sample budget by doc_id"))
   }
+
+  test("nesting past MaxNesting is a spanned parse error, not a stack overflow") {
+    val limit = Parser.MaxNesting
+    // the pipeline and the where expression are two levels; parens add one each
+    def parens(n: Int) = "T | where " + "(" * n + "a" + ")" * n
+    assert(tabular(parens(limit - 2)).operators.length == 1)
+    val e = intercept[PqlParseException](Parser.parse(parens(limit - 1)))
+    assert(e.getMessage.contains(s"nesting deeper than $limit levels") && e.span.isValid, e.getMessage)
+    intercept[PqlParseException](Parser.parse(parens(10000)))
+    intercept[PqlParseException](Parser.parse("T" + " | join (T" * 1000 + ") on a" * 1000))
+    // chains and pipelines are built in loops; their depth counts all the
+    // same: each `+` one level, the i-th stage i levels, its operand one more
+    def plus(n: Int) = "T | where a" + " + 1" * n
+    assert(tabular(plus(limit - 2)).operators.length == 1)
+    intercept[PqlParseException](Parser.parse(plus(limit - 1)))
+    intercept[PqlParseException](Parser.parse(plus(10000)))
+    def takes(n: Int) = "T" + " | take 1" * n
+    assert(tabular(takes(limit - 1)).operators.length == limit - 1)
+    intercept[PqlParseException](Parser.parse(takes(limit)))
+    intercept[PqlParseException](Parser.parse(takes(10000)))
+  }
+
+  test("and/or runs are balanced, so long disjunctions stay shallow") {
+    def depth(e: Expr): Int = e match {
+      case BinaryExpr(x, _, _, y) => 1 + math.max(depth(x), depth(y))
+      case _                      => 0
+    }
+    def pred(src: String): Expr = tabular(src).operators.head.asInstanceOf[WhereOp].predicate
+    val terms = (1 to 10000).map(i => s"a == $i")
+    // 10000 equalities under a balanced or: 14 or-levels, then the ==
+    assert(depth(pred("T | where " + terms.mkString(" or "))) == 15)
+    // three terms keep the left-deep shape; the operands stay in source order
+    val BinaryExpr(BinaryExpr(a, TokenKind.And, _, b), TokenKind.And, _, c) =
+      pred("T | where x and y and z"): @unchecked
+    assert(Seq(a, b, c).map(_.asInstanceOf[QualifiedIdent].parts.head.name) == Seq("x", "y", "z"))
+    val BinaryExpr(BinaryExpr(_, TokenKind.Or, _, _), TokenKind.Or, _, BinaryExpr(_, TokenKind.Or, _, _)) =
+      pred("T | where w or x or y or z"): @unchecked
+  }
 }
