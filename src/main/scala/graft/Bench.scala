@@ -80,14 +80,6 @@ object Bench {
       case (k, Right(v)) if v.min > 0 && v.max / v.min > 3.0 => k
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-
     def median(rs: Seq[Double]): Double = rs.sorted.apply(rs.size / 2)
     def jarr(rs: Seq[Double]): String = rs.mkString("[", ",", "]")
 
@@ -97,10 +89,10 @@ object Bench {
     // 4-decimal medians: 0.1 ms precision, and the compact record stays
     // well inside the driver's stdout tail window at 30+ queries.
     def jnum(d: Double): String = f"$d%.4f"
-    val qs = ok.map { case (k, v) => s"${jstr(k)}:${jnum(median(v))}" }.mkString("{", ",", "}")
-    val os = opsOk.map { case (k, v) => s"${jstr(k)}:${jnum(median(v))}" }.mkString("{", ",", "}")
-    val runs = (ok ++ opsOk).map { case (k, v) => s"${jstr(k)}:${jarr(v)}" }.mkString("{", ",", "}")
-    val es = errs.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }.mkString("{", ",", "}")
+    val qs = ok.map { case (k, v) => s"${Json.str(k)}:${jnum(median(v))}" }.mkString("{", ",", "}")
+    val os = opsOk.map { case (k, v) => s"${Json.str(k)}:${jnum(median(v))}" }.mkString("{", ",", "}")
+    val runs = (ok ++ opsOk).map { case (k, v) => s"${Json.str(k)}:${jarr(v)}" }.mkString("{", ",", "}")
+    val es = errs.map { case (k, m) => s"${Json.str(k)}:${Json.str(m)}" }.mkString("{", ",", "}")
     val total = ok.map { case (_, v) => median(v) }.sum
     if (errs.nonEmpty) System.err.println(s"[bench] ${errs.size} queries FAILED: ${errs.map(_._1).mkString(", ")}")
     if (degraded) System.err.println(
@@ -119,11 +111,11 @@ object Bench {
     // STDERR under a distinct metric name — stdout carries exactly ONE
     // "metric":"total" record, so a consumer that takes the first match
     // and one that takes the last agree.
-    val spreadJson = spreadSuspect.map(jstr).mkString("[", ",", "]")
+    val spreadJson = spreadSuspect.map(Json.str).mkString("[", ",", "]")
     System.err.println(
       s"""{"metric":"total_verbose","value":$total,"unit":"sec","queries":$qs,"ops":$os,"runs":$runs,""" +
         s""""sentinel":${jarr(sentinels)},"sentinel_expected":$sentinelExpected,"degraded":$degraded,""" +
-        s""""spread_suspect":$spreadJson,"errors":$es,"sf":${jstr(sfDir)}}"""
+        s""""spread_suspect":$spreadJson,"errors":$es,"sf":${Json.str(sfDir)}}"""
     )
     // … then a COMPACT medians-only record as the FINAL stdout line.
     // The driver keeps only a bounded tail of stdout; through round 10
@@ -136,7 +128,7 @@ object Bench {
       s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"ops":$os,""" +
         s""""sentinel":${sentinels.map(jnum).mkString("[", ",", "]")},""" +
         s""""sentinel_expected":$sentinelExpected,"degraded":$degraded,""" +
-        s""""spread_suspect":$spreadJson,"errors":$es,"sf":${jstr(sfDir)}}"""
+        s""""spread_suspect":$spreadJson,"errors":$es,"sf":${Json.str(sfDir)}}"""
     )
     System.out.flush()
   }

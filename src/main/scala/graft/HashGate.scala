@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   *
   * columns in NAME order, joined with \\u0001 — then md5, first 15 hex
   * digits (60 bits) as a number, summed exactly (decimal(38,0) here,
-  * HUGEINT in DuckDB). tools/hashgate_duckdb.py computes the same
+  * HUGEINT in DuckDB). `tools/oracle.py hashgate` computes the same
   * (count, hashsum) over the entry's DuckDB oracle SQL; equality is a
   * multiset-exact verdict with O(1) memory and zero dump bytes.
   *
@@ -61,7 +61,7 @@ object HashGate {
       val row = df.select(count(lit(1)).as("n"), sum(h).as("s")).collect()(0)
       val secs = (System.nanoTime() - t0) / 1e9
       println(
-        s"""{"entry":"$e","count":${row.getLong(0)},"hashsum":"${row.get(1)}","sec":${f"$secs%.1f"}}""")
+        s"""{"entry":${Json.str(e)},"count":${row.getLong(0)},"hashsum":"${row.get(1)}","sec":${f"$secs%.1f"}}""")
     }
     spark.stop()
   }

@@ -35,25 +35,13 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Key each oracle BOTH ways: the driver's round-2 CORRECTNESS report
     // keyed every result by its parquet file name ("<name>.parquet") and
     // recorded `no_oracle` for all 50 bare-name keys — so the lookup key
     // is the file name, suffix included. Bare names are kept as a hedge
-    // (harmless duplicates; tools/check_correctness.py normalizes).
+    // (harmless duplicates; tools/oracle.py normalizes).
     val json = SparkEntry.oracleSql
-      .flatMap { case (k, v) => Seq(s"${q(k)}: ${q(v)}", s"${q(k + ".parquet")}: ${q(v)}") }
+      .flatMap { case (k, v) => Seq(k, k + ".parquet").map(key => s"${Json.str(key)}: ${Json.str(v)}") }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

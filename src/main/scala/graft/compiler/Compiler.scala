@@ -239,7 +239,9 @@ private[graft] final class Compiler(
 
     case DedupOp(kind, opts, text, id, span) =>
       import ExtOptions.{Cells, Dedup, Geometry}
-      ExtOptions.dedup(kind, opts, span, fail) match {
+      val resolved = ExtOptions.dedup(kind, opts, span, fail)
+      ExtOptions.columns("dedup", df, Seq(text.name, id.name), span, fail)
+      resolved match {
         case Dedup.Unsized => kind match {
           case "exact"      => graft.ops.Dedup.exact(df, text.name, id.name)
           case "lines"      => graft.ops.Dedup.dedupLines(df, text.name, id.name)
@@ -279,16 +281,22 @@ private[graft] final class Compiler(
 
     case DecontamOp(eval, opts, text, id, span) =>
       val o = ExtOptions.decontam(opts, span, fail)
+      val evalDf = compileTabular(eval)
+      ExtOptions.columns("decontam", df, Seq(text.name, id.name), span, fail)
+      ExtOptions.columns("decontam", evalDf, Seq(text.name, id.name), span, fail, " on the eval side")
       graft.ops.Decontam.decontaminate(
-        df, compileTabular(eval), text.name, id.name, minHits = o.hits, shingleN = o.ngram)
+        df, evalDf, text.name, id.name, minHits = o.hits, shingleN = o.ngram)
 
-    case ChunkOp(n, text, id, _) =>
-      graft.ops.TextOps.chunk(df, text.name, id.name, chunkTokens = rowCount(n))
+    case ChunkOp(n, text, id, span) =>
+      ExtOptions.columns("chunk", df, Seq(text.name, id.name), span, fail)
+      val tokens = ExtOptions.chunk(rowCount(n), n.span, fail)
+      graft.ops.TextOps.chunk(df, text.name, id.name, chunkTokens = tokens)
 
     case PackOp(budget, opts, tokens, id, idx, span) =>
-      val o = ExtOptions.pack(opts, span, fail)
+      val o = ExtOptions.pack(opts, rowCount(budget), budget.span, span, fail)
+      ExtOptions.columns("pack", df, Seq(tokens.name, id.name, idx.name), span, fail)
       graft.ops.Packing.packSequences(
-        df, id.name, idx.name, tokens.name, budgetTokens = rowCount(budget), nShards = o.shards)
+        df, id.name, idx.name, tokens.name, budgetTokens = o.budget, nShards = o.shards)
 
     case SampleBudgetOp(opts, text, id, strata, span) =>
       // `| sample budget=N [bits=b] text by id, strata` → the
@@ -306,11 +314,7 @@ private[graft] final class Compiler(
         df, text.name, id.name, strata.name, budgetTokens = o.budget, bucketBits = o.bits)
 
     case SampleOp(rate, rateSpan, id, _) =>
-      val r =
-        try rate.toDouble
-        catch { case _: NumberFormatException => fail(s"invalid sample rate $rate", rateSpan) }
-      if (r < 0.0 || r > 1.0) fail(s"sample rate must be in [0, 1], got $rate", rateSpan)
-      graft.ops.Sampling.bernoulli(df, id.name, r)
+      graft.ops.Sampling.bernoulli(df, id.name, ExtOptions.sampleRate(rate, rateSpan, fail))
 
     case AsofJoinOp(right, onCols, tol, span) =>
       // last `on` column = shared event time; the rest = equi-key.
@@ -397,11 +401,7 @@ private[graft] final class Compiler(
     case other                 => sourceText(other.span)
   }
 
-  private def rowCount(e: Expr): Int = {
-    val n = exprs.evalRowCount(e, letAsts)
-    if (n < 0 || n > Int.MaxValue) fail(s"row count $n out of range", e.span)
-    n.toInt
-  }
+  private def rowCount(e: Expr): Int = exprs.rowCount(e, letAsts)
 
   private def computed(c: ComputedColumn): Column = {
     val name = c.name.map(_.name).getOrElse(sourceText(c.x.span))

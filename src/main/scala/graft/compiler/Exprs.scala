@@ -385,12 +385,13 @@ private[graft] final class Exprs(source: String) {
 
   // ---- constant evaluation -------------------------------------------
 
-  /** AST-level constant folding for `take`/`top` row counts: literals,
-    * sign, arithmetic, and `let`-bound constants (via `letAsts`).
-    * Evaluated exactly (no 64-bit wrap-around), so the caller's range
-    * check sees the true value; division by zero is a compile error.
+  /** AST-level constant folding for row counts (`take`/`top`, and the
+    * `chunk` size and `pack` budget): literals, sign, arithmetic, and
+    * `let`-bound constants (via `letAsts`). Evaluated exactly (no
+    * 64-bit wrap-around), so the range check sees the true value;
+    * division by zero is a compile error.
     */
-  def evalRowCount(e: Expr, letAsts: collection.Map[String, Expr]): BigInt = {
+  def rowCount(e: Expr, letAsts: collection.Map[String, Expr]): Int = {
     def eval(e: Expr): BigInt = e match {
       case ParenExpr(x, _) => eval(x)
       case l @ BasicLit(TokenKind.Number, v, span) =>
@@ -416,6 +417,8 @@ private[graft] final class Exprs(source: String) {
         }
       case other => fail("row count must be a constant expression", other.span)
     }
-    eval(e)
+    val n = eval(e)
+    if (n < 0 || n > Int.MaxValue) fail(s"row count $n out of range", e.span)
+    n.toInt
   }
 }

@@ -1,14 +1,17 @@
 package graft.compiler
 
+import org.apache.spark.sql.DataFrame
+
 import graft.parser.{OpOption, Span}
 
 /** Compile-time resolution of the extension operators' literal
-  * `name=<number>` options — ONE home for every option name, default,
-  * range check and conflict message, used by BOTH the DataFrame
-  * compiler and the SQL-text backend (the [[ExtJoins]] pattern), so
-  * the two paths reject exactly the same inputs with exactly the same
-  * spans. Each entry point returns a small resolved case class the
-  * backends pattern-match on; neither backend reads an option itself.
+  * `name=<number>` options, sizes, rates and input columns — ONE home
+  * for every option name, default, range check, conflict message and
+  * "column not found", used by BOTH the DataFrame compiler and the
+  * SQL-text backend (the [[ExtJoins]] pattern), so the two paths
+  * reject exactly the same inputs with exactly the same spans. Each
+  * entry point returns a small resolved case class (or the checked
+  * value) the backends use; neither backend checks an option itself.
   *
   * Sizing is explicit in the result: a `Fixed` geometry / cell count,
   * or `Adaptive` — sized at plan time from a corpus count, which only
@@ -54,7 +57,7 @@ private[compiler] object ExtOptions {
   }
 
   final case class Decontam(hits: Int, ngram: Int)
-  final case class Pack(shards: Int)
+  final case class Pack(budget: Int, shards: Int)
   final case class SampleBudget(budget: Long, bits: Int)
 
   def dedup(kind: String, opts: List[OpOption], span: Span, fail: Fail): Dedup = {
@@ -129,8 +132,43 @@ private[compiler] object ExtOptions {
     Decontam(o.int("hits", 2, min = 1), o.int("ngram", 3, min = 1))
   }
 
-  def pack(opts: List[OpOption], span: Span, fail: Fail): Pack =
-    Pack(new OpOptions(opts, span, Set("shards"), "pack", fail).int("shards", 64, min = 1))
+  /** `| pack <budget> …`: `budget` is the evaluated row count at `budgetSpan`. */
+  def pack(opts: List[OpOption], budget: Int, budgetSpan: Span, span: Span, fail: Fail): Pack = {
+    val shards = new OpOptions(opts, span, Set("shards"), "pack", fail).int("shards", 64, min = 1)
+    Pack(positive("pack budget", budget, budgetSpan, fail), shards)
+  }
+
+  /** `| chunk <n> …`: tokens per chunk, the evaluated row count at `span`. */
+  def chunk(tokens: Int, span: Span, fail: Fail): Int = positive("chunk size", tokens, span, fail)
+
+  /** `| sample <rate> by id`: a keep probability in [0, 1]. */
+  def sampleRate(rate: String, span: Span, fail: Fail): Double = {
+    val r =
+      try rate.toDouble
+      catch { case _: NumberFormatException => fail(s"invalid sample rate $rate", span) }
+    if (r < 0.0 || r > 1.0) fail(s"sample rate must be in [0, 1], got $rate", span)
+    r
+  }
+
+  /** The operator's input columns must exist in `df`; `side` names a
+    * second input (" on the eval side").
+    */
+  def columns(opName: String, df: DataFrame, names: Seq[String], span: Span, fail: Fail, side: String = ""): Unit =
+    names.find(n => !hasColumn(df, n)).foreach(n => fail(s"$opName column $n not found$side", span))
+
+  /** Column existence the way the ANALYZER resolves it — respecting
+    * `spark.sql.caseSensitive` (default false), so a check accepts
+    * exactly the names the plan resolves (a case-sensitive contains()
+    * once rejected `dedup Text by doc_id`, which the plan runs).
+    */
+  private def hasColumn(df: DataFrame, name: String): Boolean =
+    if (df.sparkSession.sessionState.conf.caseSensitiveAnalysis) df.columns.contains(name)
+    else df.columns.exists(_.equalsIgnoreCase(name))
+
+  private def positive(what: String, n: Int, span: Span, fail: Fail): Int = {
+    if (n <= 0) fail(s"$what must be positive, got $n", span)
+    n
+  }
 
   def sampleBudget(opts: List[OpOption], span: Span, fail: Fail): SampleBudget = {
     val o = new OpOptions(opts, span, Set("budget", "bits"), "sample budget=", fail)

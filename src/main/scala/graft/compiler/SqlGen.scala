@@ -62,18 +62,6 @@ private[graft] final class SqlGen(
 
   private def q(name: String): String = "`" + name.replace("`", "``") + "`"
 
-  /** Column existence the way the ANALYZER resolves it — respecting
-    * `spark.sql.caseSensitive` (default false), so the text backend
-    * accepts exactly the pipelines the plan path accepts (advice,
-    * round 15: a case-sensitive contains() here rejected `dedup Text
-    * by doc_id` that Pql.query ran fine).
-    */
-  private def hasColumn(df: DataFrame, name: String): Boolean = {
-    val caseSensitive = df.sparkSession.sessionState.conf.caseSensitiveAnalysis
-    if (caseSensitive) df.columns.contains(name)
-    else df.columns.exists(_.equalsIgnoreCase(name))
-  }
-
   private def sqlOf(c: Column): String =
     org.apache.spark.sql.graftglue.Bridge.resolvedExpression(c).sql
 
@@ -246,10 +234,7 @@ private[graft] final class SqlGen(
     // so it IS a single SQL predicate — rendered from the library's
     // own Column (Sampling.keepPredicate), not a lookalike
     case SampleOp(rate, rateSpan, id, _) =>
-      val r =
-        try rate.toDouble
-        catch { case _: NumberFormatException => fail(s"invalid sample rate $rate", rateSpan) }
-      if (r < 0.0 || r > 1.0) fail(s"sample rate must be in [0, 1], got $rate", rateSpan)
+      val r = ExtOptions.sampleRate(rate, rateSpan, fail)
       Stage(
         newStage(s"SELECT * FROM ${prev.cte} " +
           s"WHERE ${sqlOf(graft.ops.Sampling.keepPredicate(col(id.name), r))}"),
@@ -261,9 +246,7 @@ private[graft] final class SqlGen(
     case op: DedupOp =>
       val (text, id) = (op.textCol.name, op.idCol.name)
       val resolved = ExtOptions.dedup(op.kind, op.opts, op.span, fail)
-      val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-      if (missing.nonEmpty)
-        fail(s"dedup column ${missing.head} not found", op.span)
+      ExtOptions.columns("dedup", prev.df, Seq(text, id), op.span, fail)
       resolved match {
         case ExtOptions.Dedup.Unsized => op.kind match {
           // corpus-wide keep-first-id per normalized-text digest — one
@@ -298,10 +281,8 @@ private[graft] final class SqlGen(
     // — a single LATERAL VIEW query (the split expression is rendered
     // from the library's own Column)
     case ChunkOp(n, text, id, span) =>
-      val missing = Seq(text.name, id.name).filterNot(hasColumn(prev.df, _))
-      if (missing.nonEmpty)
-        fail(s"chunk column ${missing.head} not found", span)
-      val chunkTokens = rowCount(n)
+      ExtOptions.columns("chunk", prev.df, Seq(text.name, id.name), span, fail)
+      val chunkTokens = ExtOptions.chunk(rowCount(n), n.span, fail)
       val arr = sqlOf(graft.ops.TextOps.chunkArray(col(text.name), chunkTokens))
       val nTok = sqlOf(graft.ops.TextOps.chunkTokenCount(col("chunk_text")))
       val out = newStage(
@@ -624,13 +605,10 @@ private[graft] final class SqlGen(
     * two spellings).
     */
   private def applyPack(prev: Stage, op: PackOp): Stage = {
-    val nShards = ExtOptions.pack(op.opts, op.span, fail).shards
-    val budget = rowCount(op.budget)
-    if (budget <= 0) fail(s"pack budget must be positive, got $budget", op.budget.span)
+    val ExtOptions.Pack(budget, nShards) =
+      ExtOptions.pack(op.opts, rowCount(op.budget), op.budget.span, op.span, fail)
     val (tk, id, idx) = (op.tokensCol.name, op.idCol.name, op.idxCol.name)
-    val missing = Seq(tk, id, idx).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"pack column ${missing.head} not found", op.span)
+    ExtOptions.columns("pack", prev.df, Seq(tk, id, idx), op.span, fail)
     val shardSql = sqlOf(graft.ops.Packing.shardOf(col(id), nShards))
     val startSql = sqlOf(graft.ops.Packing.packStart(
       col(tk), col("__graft_pk_shard"), col(id), col(idx)))
@@ -659,12 +637,8 @@ private[graft] final class SqlGen(
     val ExtOptions.Decontam(minHits, n) = ExtOptions.decontam(op.opts, op.span, fail)
     val (text, id) = (op.textCol.name, op.idCol.name)
     val evalStage = foldOps(sourceStage(op.eval.source), op.eval.operators)
-    val missing = Seq(text, id).filterNot(hasColumn(prev.df, _))
-    if (missing.nonEmpty)
-      fail(s"decontam column ${missing.head} not found", op.span)
-    val missingEval = Seq(text, id).filterNot(hasColumn(evalStage.df, _))
-    if (missingEval.nonEmpty)
-      fail(s"decontam column ${missingEval.head} not found on the eval side", op.span)
+    ExtOptions.columns("decontam", prev.df, Seq(text, id), op.span, fail)
+    ExtOptions.columns("decontam", evalStage.df, Seq(text, id), op.span, fail, " on the eval side")
     val shingleArr = s"graft_shingle_hashes(${sqlOf(graft.ops.NearDup.tokens(col(text)))}, $n)"
     val ev = newStage(
       s"SELECT DISTINCT __graft_dc_h, __graft_dc_eid FROM (" +
@@ -1050,11 +1024,7 @@ private[graft] final class SqlGen(
     case other                 => sourceText(other.span)
   }
 
-  private def rowCount(e: Expr): Int = {
-    val n = exprs.evalRowCount(e, letAsts)
-    if (n < 0 || n > Int.MaxValue) fail(s"row count $n out of range", e.span)
-    n.toInt
-  }
+  private def rowCount(e: Expr): Int = exprs.rowCount(e, letAsts)
 
   private def orderText(terms: List[SortTerm]): String =
     terms.map(t => sqlOf(sortColumn(t))).mkString(", ")

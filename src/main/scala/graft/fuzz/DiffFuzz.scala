@@ -7,10 +7,10 @@ import java.nio.file.{Files, Paths}
   * pipeline whose constructs have an exact DuckDB translation
   * ([[GenQuery.duckSql]]), run the CATALYST PLAN path and dump the
   * result to parquet, plus the generator's independently-authored
-  * DuckDB SQL to `fuzz_duck_sql.json`. The driver-side comparator
-  * (tools/difffuzz_duckdb.py) then executes each DuckDB rendering over
-  * the same parquet tables and compares multisets — the third backend
-  * of the differential (DiffFuzzSpec covers plan ≡ SQL-text in sbt).
+  * DuckDB SQL to `fuzz_duck_sql.json`. `tools/oracle.py fuzz` then
+  * executes each DuckDB rendering over the same parquet tables and
+  * compares multisets — the third backend of the differential
+  * (DiffFuzzSpec covers plan ≡ SQL-text in sbt).
   *
   * Usage: graft.fuzz.DiffFuzz <sfDir> <outDir> [nSeeds] [takeAllRows]
   * [ext] — takeAllRows must exceed every reachable intermediate at
@@ -60,17 +60,7 @@ object DiffFuzz {
       }
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c    => c.toString
-      } + "\""
-    val json = sqls.map { case (k, v) => s"  ${jstr(k)}: ${jstr(v)}" }
+    val json = sqls.map { case (k, v) => s"  ${graft.Json.str(k)}: ${graft.Json.str(v)}" }
       .mkString("{\n", ",\n", "\n}\n")
     Files.write(Paths.get(s"$outDir/fuzz_duck_sql.json"), json.getBytes(StandardCharsets.UTF_8))
     println(s"""{"difffuzz":{"written":$written,"planFailed":$skipped,"seeds":$nSeeds}}""")

@@ -16,7 +16,7 @@ import graft.fuzz.{GenQuery, PipelineGen}
   *
   * The third leg — the DuckDB oracle over the generator's
   * independently-authored SQL rendering (`GenQuery.duckSql`) — runs
-  * outside sbt via `graft.fuzz.DiffFuzz` + tools/difffuzz_duckdb.py
+  * outside sbt via `graft.fuzz.DiffFuzz` + `tools/oracle.py fuzz`
   * (DuckDB is driver-side tooling, not a library dependency).
   *
   * Seed count: GRAFT_FUZZ_N (default 100 — a smoke sweep sized so the
@@ -138,7 +138,7 @@ class DiffFuzzSpec extends SparkTestBase {
   test("extension-forced seeds render a DuckDB leg exactly for the fixed-geometry forms") {
     // Round 19: compositions ENDING in §2.4 operators get the DuckDB
     // third leg (campaign: `graft.fuzz.DiffFuzz … ext` +
-    // tools/difffuzz_duckdb.py). Generation-level regression — the
+    // `tools/oracle.py fuzz`). Generation-level regression — the
     // rendered fraction must stay non-degenerate, and the rendering
     // contract is exact: fixed-geometry anchors (which the SQL-text
     // backend accepts) carry duckSql; the plan-time adaptive/crossover

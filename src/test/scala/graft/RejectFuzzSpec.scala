@@ -19,7 +19,9 @@ import graft.parser.{Parser, PqlParseException, TabularExpr}
   *    backends (unknown table, non-constant/negative `take`, invalid
   *    durations, scalar-fn arity, bad `let`, unknown dedup kind,
   *    unknown/duplicate/conflicting extension options, geometry range
-  *    violations, sample-rate range): `Pql.query` and
+  *    violations, sample-rate range, zero `chunk` size or `pack`
+  *    budget, a missing `dedup`/`chunk`/`pack`/`decontam` input
+  *    column): `Pql.query` and
   *    `Pql.compileToSql` must BOTH throw a spanned Pql exception with
   *    the SAME span — and never crash with anything unspanned.
   *  - **text-only**: adaptive-geometry forms the plan path accepts
@@ -28,8 +30,8 @@ import graft.parser.{Parser, PqlParseException, TabularExpr}
   *  - **plan-only (streaming)**: batch-only operators/kinds on a
   *    STREAMING input must be spanned compile errors from the plan
   *    path (the text backend has no streaming notion).
-  *  - **deferred (engine-owned)**: unknown COLUMNS follow the
-  *    reference's transpiler model — resolution is the engine's job,
+  *  - **deferred (engine-owned)**: unknown columns of the reference's
+  *    operators follow its transpiler model — resolution is the engine's job,
   *    so both paths must still reject with the engine's
   *    AnalysisException (both at COMPILE time: the plan path analyzes
   *    eagerly, and SqlGen tracks stage schemas through real
@@ -90,14 +92,15 @@ class RejectFuzzSpec extends SparkTestBase {
     * validation surface both backends share through ONE resolver
     * (`compiler.ExtOptions`) — this sweep pins that each backend calls
     * it at the same point, with seeded values so ranges are swept
-    * rather than spot-checked.
+    * rather than spot-checked. Successive `row`s cycle through the
+    * table's 16 forms, so the default 40 strict seeds reach each one.
     */
-  private def fixedInvalid(r: scala.util.Random): String = {
+  private def fixedInvalid(row: Int, r: scala.util.Random): String = {
     val bits = r.nextInt(30) + 63  // > 62
     val p = r.nextInt(40) + 2
     val b = p + r.nextInt(20) + 1  // planes < bits
     val rate = (r.nextInt(50) + 11).toDouble / 10.0 // > 1.0
-    r.nextInt(9) match {
+    row % 16 match {
       case 0 => s"embeddings | dedup kind=embed dim=64 planes=$p bits=$b embedding by vec_id"
       case 1 => s"embeddings | dedup kind=embed dim=64 planes=16 bits=$bits embedding by vec_id"
       case 2 => "embeddings | dedup kind=embed dim=64 planes=16 bits=8 occupancy=4 embedding by vec_id"
@@ -106,7 +109,15 @@ class RejectFuzzSpec extends SparkTestBase {
       case 5 => "embeddings | dedup kind=semantic cells=4 occupancy=4 embedding by vec_id"
       case 6 => s"documents | sample $rate by doc_id"
       case 7 => s"embeddings | ann kind=lsh dim=64 planes=$p bits=$b (embeddings) on embedding by vec_id"
-      case _ => s"documents | dedup kind=minhash nope$p=3 text by doc_id"
+      case 8 => s"documents | dedup kind=minhash nope$p=3 text by doc_id"
+      case 9 => "documents | chunk 0 text by doc_id"
+      case 10 => s"documents | chunk $p text by doc_id | pack 0 n_tokens by doc_id, chunk_idx"
+      // an input column the operator needs is missing
+      case 11 => s"documents | dedup kind=exact body$p by doc_id"
+      case 12 => s"documents | chunk 16 body$p by doc_id"
+      case 13 => s"documents | chunk 16 text by doc_id | pack 64 body$p by doc_id, chunk_idx"
+      case 14 => s"documents | decontam against (documents | take 5) body$p by doc_id"
+      case _ => "documents | decontam against (documents | project doc_id) text by doc_id" // eval side
     }
   }
 
@@ -184,7 +195,7 @@ class RejectFuzzSpec extends SparkTestBase {
       try {
         val r = new scala.util.Random(seed * 31L + 7L)
         val m = seed % 3 match {
-          case 0 => Some(Mutation("strict", fixedInvalid(r)))
+          case 0 => Some(Mutation("strict", fixedInvalid(seed / 3, r)))
           case 1 => Some(Mutation("textonly", adaptiveForm(r)))
           case _ => mutate(seed.toLong)
         }

@@ -16,40 +16,21 @@ import os
 import statistics
 import sys
 import time
-from pathlib import Path
 
-import duckdb
+from oracle import connect, load_oracles
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 HEADLINE = ["q1_agg", "q3_shipping", "q5_local", "events_windowed"]
 
 
 def main():
-    out_dir = Path(sys.argv[1])
-    sf_dir = Path(sys.argv[2])
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
     keys = sys.argv[3:] or HEADLINE
-
-    oracle = {
-        k.removesuffix(".parquet"): v
-        for k, v in json.loads((out_dir / "oracle_sql.json").read_text()).items()
-    }
-
-    con = duckdb.connect()
-    con.execute("SET threads TO 32")
-    # big-SF oracles (95M-row CTAS at sf30) exceed RAM without a spill
-    # path — the kernel OOM-kills the process (rc=137) otherwise
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    con.execute("SET max_temp_directory_size='60GB'")
-    # the default memory_limit (80% of RAM) lets the process outgrow
-    # the machine before operators choose to spill — the kernel
-    # OOM-kills it; an explicit cap forces out-of-core execution
-    if os.environ.get("DUCKDB_MEM"):
-        con.execute(f"SET memory_limit='{os.environ['DUCKDB_MEM']}'")
-    for t in TABLES:
-        p = sf_dir / f"{t}.parquet"
-        if p.exists():
-            pat = f"{p}/*.parquet" if p.is_dir() else str(p)
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    oracle = load_oracles(f"{out_dir}/oracle_sql.json")
+    # spill and memory limits from DUCKDB_SPILL / DUCKDB_SPILL_DIR /
+    # DUCKDB_MEM (tools/oracle.py): big-SF oracles (95M-row CTAS at
+    # sf30) exceed RAM without a spill path, and an explicit memory cap
+    # makes operators spill before the kernel kills the process
+    con = connect(sf_dir)
 
     # CTAS=1: time CREATE TEMP TABLE AS instead of fetchall. Row-by-row
     # python conversion dominates multi-million-row results 10:1+ (an

@@ -30,31 +30,22 @@ Usage: python3 tools/semantic_compare.py <verify_out> <sf_dir>
 """
 import sys
 import time
-from pathlib import Path
 
-import duckdb
+from oracle import connect, scan, verdict
 
 
 def main():
-    out_dir = Path(sys.argv[1])
-    sf_dir = Path(sys.argv[2])
-    dump = out_dir / "dedup_semantic_auto.parquet"
-    emb = sf_dir / "embeddings.parquet"
-    src = f"'{emb}/*.parquet'" if emb.is_dir() else f"'{emb}'"
-
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    con.execute("SET max_temp_directory_size='60GB'")
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+    con = connect(sf_dir)
 
     t0 = time.time()
-    con.execute(f"""
+    con.execute("""
       CREATE TEMP TABLE n AS
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
              sqrt(list_inner_product(
                list_transform(embedding, x -> CAST(x AS DOUBLE)),
                list_transform(embedding, x -> CAST(x AS DOUBLE)))) AS nrm
-      FROM parquet_scan({src})""")
+      FROM embeddings""")
     # NOTE: nrm via list_inner_product(v, v) == sqrt(sum v[i]*v[i]) in the
     # same element order as the recorded oracle's lambda form.
     con.execute("""
@@ -94,25 +85,10 @@ def main():
     orows = con.execute("SELECT count(*) FROM oracle_result").fetchone()[0]
     print(f"[semantic] oracle pairs: {orows} ({time.time()-t2:.0f}s)", flush=True)
 
-    con.execute(f"CREATE VIEW dump AS SELECT * FROM parquet_scan('{dump}/*.parquet')")
-    drows = con.execute("SELECT count(*) FROM dump").fetchone()[0]
-    dcols = [r[0] for r in con.execute(
-        "SELECT column_name FROM (DESCRIBE dump) ORDER BY 1").fetchall()]
-    ocols = [r[0] for r in con.execute(
-        "SELECT column_name FROM (DESCRIBE oracle_result) ORDER BY 1").fetchall()]
-    cols = ", ".join(f'"{c}"' for c in dcols)
-    diff = con.execute(f"""
-      SELECT
-        (SELECT count(*) FROM
-          (SELECT {cols} FROM dump EXCEPT ALL SELECT {cols} FROM oracle_result)),
-        (SELECT count(*) FROM
-          (SELECT {cols} FROM oracle_result EXCEPT ALL SELECT {cols} FROM dump))
-      """).fetchone() if dcols == ocols else (-1, -1)
-    ok = dcols == ocols and drows == orows and diff == (0, 0)
-    print(f"[{'ok' if ok else '!!'}] dedup_semantic_auto: "
-          f"{'PASS' if ok else 'FAIL'} (dump {drows} vs oracle {orows}, "
-          f"cols_match={dcols == ocols}, sym_diff={diff})", flush=True)
-    sys.exit(0 if ok else 1)
+    con.execute(f"CREATE VIEW dump AS SELECT * FROM {scan(f'{out_dir}/dedup_semantic_auto.parquet')}")
+    why = verdict(con, "dump", "oracle_result")
+    print(f"[!!] dedup_semantic_auto: FAIL {why}" if why else "[ok] dedup_semantic_auto: PASS", flush=True)
+    sys.exit(1 if why else 0)
 
 
 if __name__ == "__main__":
