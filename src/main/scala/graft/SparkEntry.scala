@@ -2744,8 +2744,9 @@ object SparkEntry {
     ),
     // Lloyd k-means, 16 cells × 2 iterations: hash-sampled seeds,
     // fixed-point (2^24-scaled long) component means so the grouped
-    // sums are order-free, argmin assignment via one-row broadcast —
-    // every assignment integer-exact across engines.
+    // sums are order-free, argmin assignment against the baked
+    // centroid matrix (graft.functions.ArgminScore) — every assignment
+    // integer-exact across engines.
     "kmeans_assign" -> Entry(
       (s, dir) => Kmeans.assignCells(
         Tables.parquetDir(s, dir)("embeddings"), "embedding", "vec_id", nCells = 16, iters = 2),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -130,12 +130,11 @@ object Ann {
     * driver side of the exchange).
     * Output: `query_id, <idCol>, cos_sim, rank` (≤ k rows per query).
     *
-    * PLAN-TIME BAKE CONTRACT (every seeded form, and every adaptive
-    * ivf/lsh default):
-    * construction eagerly runs the sizing count and/or the seed
-    * collect, and the centroid matrix / band geometry ride the plan as
-    * constants — a snapshot of the corpus at construction. Rebuild the
-    * frame to re-index after the source changes.
+    * The centroid matrix follows the [[PlanTimeModel]] bake contract.
+    * At `nCells = 0` the driver finish takes the corpus count and the
+    * `(h, id)`-ordered seeds from one collect: 1 construction job,
+    * against 3 for the distributed count and seed collect. A fixed
+    * `nCells` runs the one seed collect.
     */
   def ivfTopKSeeded(
       corpus: DataFrame,
@@ -150,7 +149,7 @@ object Ann {
       nCells: Int = 0,
       nProbe: Int = 2
   ): DataFrame = {
-    val (mat, mDim) = seededCentroidMatrix(corpus, vecCol, idCol, resolveCells(corpus, idCol, nCells))
+    val (mat, mDim) = seededCentroidMatrix(corpus, vecCol, idCol, nCells, autoCells)
     ivfWithCentroids(corpus, queries, vecCol, idCol, k, nProbe, mat, mDim)
   }
 
@@ -197,38 +196,55 @@ object Ann {
 
   /** The hash-seeded centroid set as a PLAN-TIME flat matrix
     * (row-major, cell-index order — the same `ORDER BY h, id` rank
-    * [[seededCentroids]] assigns): one TakeOrderedAndProject over the
-    * corpus collects `nCells` vectors (bounded: 65536 · dim doubles at
-    * the cap), for the baked-assignment path
+    * [[seededCentroids]] assigns), for the baked-assignment path
     * ([[graft.functions.ArgmaxDot]]) that replaces the
     * n·dim·nCells-row join shape wherever only the argmax cell is
-    * needed. Returns the matrix and the vector dimension.
+    * needed. `nCells = 0` sizes the index as `cellsFor(n)` from the
+    * corpus count (see [[ivfTopKSeeded]] for the jobs). Bounded:
+    * 65536 · dim doubles at the cap. Returns the matrix and the vector
+    * dimension.
     */
   private[ops] def seededCentroidMatrix(
-      corpus: DataFrame, vecCol: String, idCol: String, nCells: Int): (Array[Double], Int) = {
-    val base = prep(corpus, vecCol, idCol)
+      corpus: DataFrame, vecCol: String, idCol: String, nCells: Int,
+      cellsFor: Long => Int = autoCells): (Array[Double], Int) = {
+    require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
     val h = NearDup.hash32(col(idCol).cast("string"))
-    val rows = base.select(col(idCol), col("v"), h.as("h"))
-      .orderBy(col("h"), col(idCol)).limit(nCells)
-      .select(col("v")).collect()
-    if (rows.isEmpty) return (Array.empty[Double], 1)
-    val dim = rows.head.getSeq[Double](0).length
+    val hashed = prep(corpus, vecCol, idCol).select(col("v"), h.as("h"), col(idCol))
+    val driverSeeds =
+      if (nCells != 0) None
+      else PlanTimeModel.collect(hashed, key = 2)
+        .map { case (rows, idOrder) => PlanTimeModel.hashSeeds(rows, cellsFor(rows.length), idOrder) }
+    matrixOf(driverSeeds.getOrElse {
+      val cells = if (nCells != 0) nCells else cellsFor(corpus.select(col(idCol)).count())
+      // one TakeOrderedAndProject: O(nCells) heap per partition
+      hashed.orderBy(col("h"), col(idCol)).limit(cells).select(col("v")).collect()
+    })
+  }
+
+  /** Seed vectors (column 0 of each row) as a flat matrix. */
+  private def matrixOf(seeds: Array[Row]): (Array[Double], Int) = {
+    if (seeds.isEmpty) return (Array.empty[Double], 1)
+    def vector(c: Int): scala.collection.Seq[Any] = {
+      require(!seeds(c).isNullAt(0),
+        s"seed vector $c is null — clean the corpus vectors before indexing")
+      seeds(c).getSeq[Any](0)
+    }
+    val dim = vector(0).length
     require(dim >= 1, s"seed vectors must be non-empty, got dim=$dim")
-    val mat = new Array[Double](rows.length * dim)
+    val mat = new Array[Double](seeds.length * dim)
     var c = 0
-    while (c < rows.length) {
+    while (c < seeds.length) {
       // reject null components BEFORE the Double view silently unboxes
       // them to 0.0 — the query-side broadcast centroid frame keeps
       // them as NULL weights (x * NULL term skipped), so a silent 0.0
       // here could assign corpus and query rows to DIFFERENT cells for
       // the same vector (advice, round 12)
-      val raw = rows(c).getSeq[Any](0)
+      val raw = vector(c)
       require(!raw.contains(null),
         s"seed vector $c has null components — clean the corpus vectors before indexing")
-      val v = rows(c).getSeq[Double](0)
-      require(v.length == dim, s"ragged seed vectors: ${v.length} vs $dim")
+      require(raw.length == dim, s"ragged seed vectors: ${raw.length} vs $dim")
       var j = 0
-      while (j < dim) { mat(c * dim + j) = v(j); j += 1 }
+      while (j < dim) { mat(c * dim + j) = raw(j).asInstanceOf[Double]; j += 1 }
       c += 1
     }
     (mat, dim)

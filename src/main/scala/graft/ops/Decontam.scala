@@ -31,12 +31,12 @@ import graft.functions.{EvalOverlapCounts, EvalShingleModel, TextHash}
   *     arrays. For eval sets up to ~10M distinct shingles that is
   *     ≤ ~120 MB per executor, the same memory the join plan needed.
   *
-  * PLAN-TIME SNAPSHOT CONTRACT: calling [[overlap]]/[[decontaminate]]
-  * runs one eager Spark job (the eval side's distinct shingle pairs)
-  * and bakes the result into the returned plan. Re-executing the
-  * returned DataFrame after the underlying EVAL source changes keeps
-  * the bounds captured at construction — reconstruct the frame to
-  * refresh. (The corpus side stays fully lazy.)
+  * The eval model follows the [[PlanTimeModel]] bake contract (the
+  * corpus side stays fully lazy). The driver finish collects the eval
+  * side's `(h, eval_id)` shingle pairs and de-duplicates them on the
+  * driver: 1 construction job. Over the cap, or for an eval id type
+  * the collect declines, a `distinct()` runs in Spark before the
+  * collect: 2 jobs.
   *
   * The default shingle order is the shared 3-gram family (so the
   * DuckDB oracle reuses the same CTEs as the near-dup gates); pass
@@ -48,17 +48,16 @@ import graft.functions.{EvalOverlapCounts, EvalShingleModel, TextHash}
 object Decontam {
 
   /** Plan-time eval shingle model: distinct `(h, eval_id)` pairs of
-    * the benchmark set, collected (one Spark job) and frozen into
-    * primitive arrays. Bounded by the eval suite's size by contract.
+    * the benchmark set, collected and frozen into primitive arrays.
+    * Bounded by the eval suite's size by contract.
     */
   private def evalModel(evalDf: DataFrame, textCol: String, idCol: String, shingleN: Int): EvalShingleModel = {
     val pairs = NearDup
       .hashedShingles(evalDf, textCol, idCol, shingleN)
       .select(col("h"), col(idCol).as("eval_id"))
-      .distinct()
-      .collect()
-      .map(r => (r.getLong(0), r.get(1)))
-    EvalShingleModel.fromPairs(pairs)
+    val rows = PlanTimeModel.collect(pairs, key = 1).map(_._1.distinct)
+      .getOrElse(pairs.distinct().collect())
+    EvalShingleModel.fromPairs(rows.map(r => (r.getLong(0), r.get(1))))
   }
 
   /** Packed per-row overlap counts for the corpus frame, or NULL where
@@ -86,9 +85,9 @@ object Decontam {
     * independently, so `idCol` is assumed unique per row (a document
     * id), as in every pipeline use.
     *
-    * One eager Spark job runs at CALL time to freeze the eval shingle
-    * model (see the object doc's snapshot contract); the corpus pass
-    * itself is a single codegen projection — no shuffle at any scale.
+    * The eval shingle model is built at CALL time (see the object
+    * doc); the corpus pass itself is a single codegen projection — no
+    * shuffle at any scale.
     */
   def overlap(
       corpus: DataFrame,

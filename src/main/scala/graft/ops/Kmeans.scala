@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 
 /** Lloyd's k-means over an embedding column, engine-deterministic.
@@ -30,71 +31,90 @@ import org.apache.spark.sql.functions._
   * assignment — matches across engines.
   *
   * Scale shape (100 TB): centroids are a PLAN-TIME matrix (round 19,
-  * the [[graft.ops.Ann.ivfTopKSeeded]] baked pattern): each
-  * assignment pass is one fused argmin loop per row inside
-  * whole-stage codegen ([[graft.functions.ArgminScore]]) — NO
-  * broadcast pack, no per-row interpreted `zip_with` lambda, no
-  * shuffle. Each update pass is one map-side-combined `(cell,
-  * dim)`-keyed aggregate of long partials whose `nCells·dim` result
-  * rows come back to the driver, where the division back
-  * to double means runs with the exact IEEE ops the old in-plan
-  * `coalesce((s/n)/Scale, w)` performed. Total: `iters + 1` corpus
-  * scans, the textbook distributed-Lloyd lower bound — now with zero
-  * exchanges outside the update aggregates (was: a 1-row aggregate +
-  * broadcast + interpreted per-row lambdas per pass, and an eager
-  * lineage checkpoint per iteration).
+  * the [[graft.ops.Ann.ivfTopKSeeded]] baked pattern): the assignment
+  * is one fused argmin loop per row inside whole-stage codegen
+  * ([[graft.functions.ArgminScore]]) — NO broadcast pack, no per-row
+  * interpreted `zip_with` lambda, no shuffle.
   *
-  * DRIVER-MEMORY BOUND of the update collect (advice, r19): the
-  * `nCells·dim` result comes back as boxed `Row`s — roughly 150–200 B
-  * each with the four boxed fields, NOT the 16 B of the raw payload.
-  * At the 65536-cell cap with dim 128 that is ~8.4M rows ≈ 1.5–2 GB of
-  * transient driver heap per update pass (the raw payload is ~130 MB).
-  * Size the driver for `nCells·dim·~200 B`, or keep `nCells·dim`
-  * under ~10M; beyond that the pre-round-19 distributed join-based
-  * update is the right shape again. The default geometries (≤ 65536
-  * cells, dim ≤ a few hundred) stay comfortably inside one driver.
+  * The model follows the [[PlanTimeModel]] bake contract:
+  *   - DRIVER FINISH: one collect of `(v, hash32(id), id)` feeds the
+  *     seeds and all `iters` Lloyd updates, run on the driver. Scoring
+  *     calls the same [[graft.functions.ArgminScore.compute]] as the
+  *     generated code, the fixed-point sums are exact `Long`s (so they
+  *     equal the aggregate's in any order), and the division back to
+  *     double means is the same IEEE ops. 1 construction job, whatever
+  *     `iters` is. Besides the collect's own declines, it declines, and
+  *     the distributed form runs, when a component is non-finite, when some accumulation order of the
+  *     `floor(x · 2^24)` sums could leave `Long` (Spark would wrap, or
+  *     raise under ANSI), or when `n·nCells·dim·iters` exceeds
+  *     [[MaxDriverLloydWork]].
+  *   - DISTRIBUTED: the seed collect, then per update one
+  *     map-side-combined `(cell, dim)`-keyed aggregate of long partials
+  *     whose `nCells·dim` result rows come back to the driver for the
+  *     same division. `iters + 1` construction jobs (plus the declined
+  *     collect when it ran) and `iters + 1` corpus scans, the textbook
+  *     distributed-Lloyd lower bound, with zero exchanges outside the
+  *     update aggregates.
   *
-  * PLAN-TIME BAKE CONTRACT: constructing the [[assignCells]] frame
-  * eagerly runs `iters + 1` Spark jobs (seed collect + one update
-  * aggregate per iteration); the final centroids are baked into the
-  * returned plan as literals. They are a snapshot — re-executing the
-  * frame after the source data changes reuses the construction-time
-  * centroids; rebuild the frame to re-fit.
+  * DRIVER-MEMORY BOUND of the distributed update collect (advice,
+  * r19): the `nCells·dim` result comes back as boxed `Row`s — roughly
+  * 150–200 B each with the four boxed fields, NOT the 16 B of the raw
+  * payload. At the 65536-cell cap with dim 128 that is ~8.4M rows ≈
+  * 1.5–2 GB of transient driver heap per update pass (the raw payload
+  * is ~130 MB). Size the driver for `nCells·dim·~200 B`, or keep
+  * `nCells·dim` under ~10M; beyond that the pre-round-19 distributed
+  * join-based update is the right shape again. The default geometries
+  * (≤ 65536 cells, dim ≤ a few hundred) stay comfortably inside one
+  * driver. The driver finish is bounded by the contract's cap instead.
   */
 object Kmeans {
 
   private val Scale = 16777216.0 // 2^24
 
-  /** Position-indexed seed centroid values, collected at plan time:
-    * the `nCells` smallest-md5-id corpus vectors in (hash, id) order —
-    * the exact rows (and rank order) the pre-round-19 `seedArrays`
-    * window assigned. Bounded: `nCells` rows. Component values stay
-    * boxed so null components / null vectors keep the old per-cell
-    * NULL-score semantics.
+  /** Multiply-adds the driver finish may spend on Lloyd updates,
+    * `n·nCells·dim·iters`. About the cost of one eager Spark job: warm
+    * [[graft.functions.ArgminScore.compute]] ran 1.1–2.2 ns per
+    * multiply-add on a 4-core x86 host, so `2^27` is 0.15–0.3 s, beside
+    * ~0.16 s per eager Lloyd update job at sf0.1. The 65536-cell cap
+    * can therefore never start a single-threaded loop that runs for
+    * minutes.
     */
-  private def collectSeeds(
-      base: DataFrame, idCol: String, nCells: Int): IndexedSeq[IndexedSeq[java.lang.Double]] = {
+  private[graft] val MaxDriverLloydWork: Long = 1L << 27
+
+  /** Position-indexed centroid values. Components stay boxed so null
+    * components / null vectors keep the per-cell NULL-score semantics.
+    */
+  private type Cents = IndexedSeq[IndexedSeq[java.lang.Double]]
+
+  private def boxedVector(r: Row, i: Int): IndexedSeq[java.lang.Double] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).iterator.map(x => x.asInstanceOf[java.lang.Double]).toIndexedSeq
+
+  /** The seed centroids, collected at plan time: the `nCells`
+    * smallest-md5-id corpus vectors in (hash, id) order — the exact rows
+    * (and rank order) the pre-round-19 `seedArrays` window assigned.
+    * Bounded: `nCells` rows.
+    */
+  private def collectSeeds(base: DataFrame, idCol: String, nCells: Int): Cents = {
     val h = NearDup.hash32(col(idCol).cast("string"))
     base.select(col("v"), h.as("h"), col(idCol))
       .orderBy(col("h"), col(idCol)).limit(nCells)
       .select(col("v")).collect()
-      .iterator.map { r =>
-        if (r.isNullAt(0)) null
-        else r.getSeq[Any](0).iterator
-          .map(x => x.asInstanceOf[java.lang.Double]).toIndexedSeq
-      }.toIndexedSeq
+      .iterator.map(boxedVector(_, 0)).toIndexedSeq
   }
 
-  /** The Lloyd assignment Column for a position-indexed centroid set:
-    * argmin over `cc_c − 2·dot(v, c_c)`, ties to the smallest index —
-    * one fused codegen loop per row ([[graft.functions.ArgminScore]]),
-    * score/ordering semantics bit-identical to the former
-    * `zip_with`+`array_min`+`array_position` spelling (the squared
-    * norms are the same in-order left folds, computed here with the
-    * same JVM IEEE ops the in-plan `transform(cents, ca → dot(ca,
-    * ca))` performed).
+  /** The arrays [[graft.functions.ArgminScore]] bakes for a centroid
+    * set: row-major components, per-cell offsets (ragged cells
+    * allowed), squared norms `cc_c`, and which cells score NULL.
     */
-  private def argminOf(cents: IndexedSeq[IndexedSeq[java.lang.Double]]): Column = {
+  private final case class Model(
+      mat: Array[Double], offsets: Array[Int], ccs: Array[Double], nullCell: Array[Boolean])
+
+  /** The squared norms are the same in-order left folds the former
+    * in-plan `transform(cents, ca → dot(ca, ca))` performed, with the
+    * same JVM IEEE ops.
+    */
+  private def modelOf(cents: Cents): Model = {
     val offsets = new Array[Int](cents.length + 1)
     val nullCell = new Array[Boolean](cents.length)
     val ccs = new Array[Double](cents.length)
@@ -122,22 +142,44 @@ object Kmeans {
       }
       c += 1
     }
-    graft.functions.ArgminScore(col("v"), mat, offsets, ccs, nullCell)
+    Model(mat, offsets, ccs, nullCell)
   }
 
-  /** One Lloyd update: the `(cell, j)`-keyed fixed-point component
-    * sums — the SAME map-side-combined aggregate as before, its
-    * bounded (`nCells·dim`-row) result collected — then the division
-    * back to double means on the driver with the identical IEEE ops
-    * the in-plan `coalesce((s/n)/Scale, w)` performed. Cells that
-    * lose every member keep their previous centroid; cells whose
-    * stored vector is null/empty drop out and the survivors re-rank —
-    * exactly the old join shape's behavior (`posexplode` of their
-    * `carr` produced no rows).
+  /** The Lloyd assignment Column for a position-indexed centroid set:
+    * argmin over `cc_c − 2·dot(v, c_c)`, ties to the smallest index —
+    * one fused codegen loop per row ([[graft.functions.ArgminScore]]),
+    * score/ordering semantics bit-identical to the former
+    * `zip_with`+`array_min`+`array_position` spelling.
     */
-  private def updateCents(
-      base: DataFrame,
-      cents: IndexedSeq[IndexedSeq[java.lang.Double]]): IndexedSeq[IndexedSeq[java.lang.Double]] = {
+  private def argminOf(cents: Cents): Column = {
+    val m = modelOf(cents)
+    graft.functions.ArgminScore(col("v"), m.mat, m.offsets, m.ccs, m.nullCell)
+  }
+
+  /** The centroids after one update, given `mean(p, j)`: the new
+    * component `j` of cell `p`, or null where the cell kept no non-null
+    * `(p, j)` sum. Cells that lose every member keep their previous
+    * centroid; cells whose stored vector is null/empty drop out and the
+    * survivors re-rank — exactly the old join shape's behavior
+    * (`posexplode` of their `carr` produced no rows).
+    */
+  private def nextCents(cents: Cents, mean: (Int, Int) => java.lang.Double): Cents =
+    cents.iterator.zipWithIndex
+      .filter { case (ca, _) => ca != null && ca.nonEmpty }
+      .map { case (ca, p) =>
+        ca.iterator.zipWithIndex.map { case (w, j) =>
+          val m = mean(p, j)
+          if (m == null) w else m
+        }.toIndexedSeq
+      }.toIndexedSeq
+
+  /** One distributed Lloyd update: the `(cell, j)`-keyed fixed-point
+    * component sums — one map-side-combined aggregate whose bounded
+    * (`nCells·dim`-row) result is collected — then the division back to
+    * double means on the driver with the IEEE ops the in-plan
+    * `coalesce((s/n)/Scale, w)` performed.
+    */
+  private def updateCents(base: DataFrame, cents: Cents): Cents = {
     val rows = base
       .select(argminOf(cents).as("c"), posexplode(col("v")).as(Seq("j", "x")))
       .groupBy(col("c"), col("j"))
@@ -146,21 +188,79 @@ object Kmeans {
         count(lit(1)).as("n")
       )
       .collect()
-    val sums = rows.iterator.filter(!_.isNullAt(0)).map { r =>
-      (r.getInt(0), r.getInt(1)) ->
-        ((if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))), r.getLong(3))
-    }.toMap
-    cents.iterator.zipWithIndex
-      .filter { case (ca, _) => ca != null && ca.nonEmpty }
-      .map { case (ca, p) =>
-        ca.iterator.zipWithIndex.map { case (w, j) =>
-          sums.get((p, j)) match {
-            case Some((s, n)) if s != null =>
-              java.lang.Double.valueOf((s.doubleValue() / n.toDouble) / Scale)
-            case _ => w
-          }
-        }.toIndexedSeq
-      }.toIndexedSeq
+    val sums = rows.iterator.filter(r => !r.isNullAt(0) && !r.isNullAt(2))
+      .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    nextCents(cents, (p, j) => sums.get((p, j)) match {
+      case Some((s, n)) => java.lang.Double.valueOf((s.toDouble / n.toDouble) / Scale)
+      case None => null
+    })
+  }
+
+  /** [[updateCents]] over collected vectors: the same assignment
+    * ([[graft.functions.ArgminScore.compute]], the generated code's
+    * entry point), the same per-`(cell, j)` row counts and exact `Long`
+    * sums of `floor(x · 2^24)` (the caller guarantees no order of them
+    * leaves `Long`), the same division. A vector that gets a cell has
+    * no null element and the cell's length, so its sums index the
+    * model's own offsets.
+    */
+  private def driverUpdate(vs: Array[ArrayData], cents: Cents): Cents = {
+    val m = modelOf(cents)
+    val sums = new Array[Long](m.mat.length)
+    val counts = new Array[Long](m.mat.length)
+    for (v <- vs if v != null) {
+      val c = graft.functions.ArgminScore.compute(v, m.mat, m.offsets, m.ccs, m.nullCell)
+      if (c >= 0) {
+        var j = 0
+        while (j < v.numElements()) {
+          sums(m.offsets(c) + j) += math.floor(v.getDouble(j) * Scale).toLong
+          counts(m.offsets(c) + j) += 1
+          j += 1
+        }
+      }
+    }
+    nextCents(cents, (p, j) => {
+      val i = m.offsets(p) + j
+      if (counts(i) == 0) null
+      else java.lang.Double.valueOf((sums(i).toDouble / counts(i).toDouble) / Scale)
+    })
+  }
+
+  /** The driver finish (see the object doc): the seeds and all `iters`
+    * updates from one [[PlanTimeModel.collect]] of `(v, h, id)`, or
+    * `None` when it declines or the driver could not match Spark.
+    */
+  private def driverFit(base: DataFrame, idCol: String, nCells: Int, iters: Int): Option[Cents] = {
+    val h = NearDup.hash32(col(idCol).cast("string"))
+    val (rows, idOrder) = PlanTimeModel.collect(base.select(col("v"), h.as("h"), col(idCol)), key = 2) match {
+      case Some(collected) => collected
+      case None => return None
+    }
+    val vs = rows.map(r =>
+      if (r.isNullAt(0)) null else new GenericArrayData(r.getSeq[Any](0).toArray): ArrayData)
+    // every partial (cell, j) sum has at most n terms of magnitude
+    // ≤ max|x|·2^24 + 1, so below 2^62 no accumulation order overflows
+    var maxAbs = 0.0
+    var components = 0L
+    for (v <- vs if v != null) {
+      var j = 0
+      while (j < v.numElements()) {
+        if (!v.isNullAt(j)) {
+          val x = v.getDouble(j)
+          if (!java.lang.Double.isFinite(x)) return None
+          maxAbs = math.max(maxAbs, math.abs(x))
+        }
+        j += 1
+      }
+      components += v.numElements()
+    }
+    if (rows.length * (maxAbs * Scale + 1) >= (1L << 62).toDouble ||
+        components.toDouble * nCells * iters > MaxDriverLloydWork) return None
+    var cents: Cents =
+      PlanTimeModel.hashSeeds(rows, nCells, idOrder).iterator.map(boxedVector(_, 0)).toIndexedSeq
+    for (_ <- 0 until iters)
+      cents = driverUpdate(vs, cents)
+    Some(cents)
   }
 
   /** Final assignments `(idCol, cell)` after `iters` Lloyd rounds over
@@ -175,9 +275,12 @@ object Kmeans {
   ): DataFrame = {
     require(nCells >= 1 && iters >= 0, s"need nCells >= 1, iters >= 0, got $nCells/$iters")
     val base = df.select(col(idCol), transform(col(vecCol), x => x.cast("double")).as("v"))
-    var cents = collectSeeds(base, idCol, nCells)
-    for (_ <- 0 until iters)
-      cents = updateCents(base, cents)
+    val cents = driverFit(base, idCol, nCells, iters).getOrElse {
+      var cs = collectSeeds(base, idCol, nCells)
+      for (_ <- 0 until iters)
+        cs = updateCents(base, cs)
+      cs
+    }
     base.select(col(idCol), argminOf(cents).as("cell"))
   }
 }

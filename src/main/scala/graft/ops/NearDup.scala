@@ -1,11 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types._
 
 /** Near-duplicate detection: MinHash+LSH, SimHash, n-gram Jaccard, and
@@ -599,22 +596,18 @@ object NearDup {
     * rounds then run is decided from that materialized edge count —
     * the runtime-statistics choice of Shark's partial DAG execution:
     *
-    *   - DRIVER FINISH. One query collects the edges whose two endpoints
-    *     are both ids of `df` (two `left_semi` joins), with a
-    *     `limit(cap + 1)`. If at most `cap` come back, the same hop and
-    *     jump rounds (same cap, same early stop) run on the driver over
-    *     flat `Int` arrays, and the `(u, root)` label map returns as a
-    *     local relation. `cap` is the session's
-    *     `spark.sql.autoBroadcastJoinThreshold` divided by twice the id
-    *     type's default size — the edge list the session would already
-    *     agree to broadcast; a threshold ≤ 0 disables the driver finish.
-    *     Labels must order exactly as Spark's `least`/`min` do, so the
-    *     vertex ids are sorted once with Catalyst's interpreted ordering
-    *     for the id type (UTF-8 byte order for strings, NOT Java's
-    *     UTF-16 `String.compareTo`) and all label work is on their
-    *     ranks. Only integral ids and plain (UTF8_BINARY) strings take
-    *     this path: for those the ordering and value equality agree
-    *     with Spark's joins.
+    *   - DRIVER FINISH. One [[PlanTimeModel.collect]] (see its bake
+    *     contract for the cap) gathers the edges whose two endpoints
+    *     are both ids of `df` (two `left_semi` joins). When they fit,
+    *     the same hop and jump rounds (same cap, same early stop) run
+    *     on the driver over flat `Int` arrays, and the `(u, root)` label
+    *     map returns as a local relation. Labels must order exactly as
+    *     Spark's `least`/`min` do, so the vertex ids are sorted once in
+    *     the collect's key order and all label work is on their ranks;
+    *     only its eligible id types take this path.
+    *     Construction jobs: the edge checkpoint's (it runs the pairs
+    *     pipeline) and one collect, against two checkpoints and a
+    *     change test per distributed round.
     *   - DISTRIBUTED ROUNDS. Any other id type, and any edge set over
     *     the cap, runs the O(pairs) DataFrame loop
     *     ([[distributedLabels]]) — the form that scales to 100 TB.
@@ -671,31 +664,20 @@ object NearDup {
     */
   private def driverLabels(df: DataFrame, edges: DataFrame, idCol: String,
       iterations: Int): Option[DataFrame] = {
-    val spark = df.sparkSession
-    val dt = edges.schema("u").dataType
-    // collated strings compare and join by their collation's rules,
-    // so only the binary-collated StringType qualifies
-    val eligible = dt match {
-      case ByteType | ShortType | IntegerType | LongType | StringType => true
-      case _ => false
-    }
-    val threshold = Bridge.autoBroadcastJoinThreshold(spark)
-    if (!eligible || threshold <= 0) return None
-    val cap = math.min(threshold / (2L * dt.defaultSize), Int.MaxValue - 1L).toInt
     val ids = df.select(col(idCol))
-    val rows = edges
+    val inDf = edges
       .join(ids.toDF("u"), Seq("u"), "left_semi")
       .join(ids.toDF("v"), Seq("v"), "left_semi")
       .select("u", "v") // a USING semi join puts its key first
-      .limit(cap + 1)
-      .collect()
-    if (rows.length > cap) return None
+    val (rows, order) = PlanTimeModel.collect(inDf, key = 0) match {
+      case Some(collected) => collected
+      case None => return None
+    }
+    val ord = order.ordering
 
     // rank the endpoint values in Catalyst's order for `dt`; slot 2e is
     // edge e's u, slot 2e + 1 its v
-    val ord = TypeUtils.getInterpretedOrdering(dt)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    val keys = Array.tabulate(2 * rows.length)(s => toCatalyst(rows(s / 2).get(s % 2)))
+    val keys = Array.tabulate(2 * rows.length)(s => order.toCatalyst(rows(s / 2).get(s % 2)))
     val bySlot = Array.range(0, keys.length).sortBy(keys(_))(ord)
     val vertex = new Array[Int](keys.length) // slot → rank of its id
     val rankedIds = Array.newBuilder[Any] // the ids as collected, in rank order
@@ -730,9 +712,10 @@ object NearDup {
       changed = !java.util.Arrays.equals(jump, root)
       root = jump
     }
+    val dt = edges.schema("u").dataType
     val schema = StructType(Seq(StructField("u", dt), StructField("root", dt)))
     val labelRows = Array.tabulate(n)(u => Row(idAt(u), idAt(root(u))))
-    Some(spark.createDataFrame(java.util.Arrays.asList(labelRows: _*), schema))
+    Some(df.sparkSession.createDataFrame(java.util.Arrays.asList(labelRows: _*), schema))
   }
 
   /** The distributed rounds of [[clusters]], as plain DataFrame joins so

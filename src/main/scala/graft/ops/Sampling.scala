@@ -167,10 +167,15 @@ object Sampling {
     * enough that its sequential running-total task is cheap, the
     * [[tokenBudgetHistogram]] threshold selection once any stratum
     * crosses [[ExactMaxStratumRows]] — the same plan-time-count
-    * pattern as the adaptive LSH/IVF geometry (`autoGeometry`): one
-    * narrow strata-column count job at PLAN time decides the shape,
-    * and an oracle can recompute the decision in SQL, so the same
-    * query text verifies at every scale.
+    * pattern as the adaptive LSH/IVF geometry (`autoGeometry`): the
+    * largest stratum's row count, taken at PLAN time, decides the
+    * shape, and an oracle can recompute the decision in SQL, so the
+    * same query text verifies at every scale. The count follows the
+    * [[PlanTimeModel]] bake contract: the driver finish collects the
+    * strata column and counts it on the driver (1 construction job);
+    * over the cap, or for a strata type the collect declines, a narrow
+    * groupBy-count-max over the strata column runs instead (3 jobs under AQE; the text
+    * column, the expensive read, is untouched either way).
     *
     * Output is schema-stable across the crossover:
     * `(idCol, strataCol, n_tok)` — the exact branch drops its
@@ -188,11 +193,12 @@ object Sampling {
       salt: String = "budget",
       bucketBits: Int = 12
   ): DataFrame = {
-    // plan-time decision: a groupBy-count over the strata column only
-    // (narrow scan, map-side combined; the text column — the expensive
-    // read — is untouched by this job)
-    val r = df.groupBy(col(strataCol)).count().agg(max(col("count"))).collect()(0)
-    val maxRows = if (r.isNullAt(0)) 0L else r.getLong(0)
+    val driverCounts = PlanTimeModel.collect(df.select(col(strataCol)), key = 0)
+      .map { case (rows, _) => rows.groupMapReduce(r => Option(r.get(0)))(_ => 1L)(_ + _) }
+    val maxRows = driverCounts.fold {
+      val r = df.groupBy(col(strataCol)).count().agg(max(col("count"))).collect()(0)
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }(counts => if (counts.isEmpty) 0L else counts.values.max)
     if (maxRows <= ExactMaxStratumRows)
       tokenBudget(df, textCol, idCol, strataCol, budgetTokens, salt)
         .select(col(idCol), col(strataCol), col("n_tok"))

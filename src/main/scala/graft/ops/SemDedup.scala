@@ -56,11 +56,10 @@ object SemDedup {
     * (regression sentry path); `targetCellSize` only applies on the
     * adaptive path.
     *
-    * PLAN-TIME BAKE CONTRACT: construction eagerly runs the sizing
-    * count (adaptive path) plus the seed-collect job, and bakes the
-    * centroid matrix as plan constants. Centroids are a snapshot of
-    * the corpus at construction; rebuild the frame to re-seed after
-    * the source changes.
+    * The centroid matrix follows the [[PlanTimeModel]] bake contract,
+    * with [[Ann.ivfTopKSeeded]]'s job counts: at `nCells = 0` one
+    * collect gives the count and the seeds (1 construction job, against
+    * 3 distributed); a fixed `nCells` runs the one seed collect.
     */
   def pairs(
       df: DataFrame,
@@ -70,18 +69,16 @@ object SemDedup {
       minCos: Double = 0.9,
       targetCellSize: Int = 64
   ): DataFrame = {
-    require(nCells >= 0, s"nCells must be >= 0 (0 = adaptive), got $nCells")
-    if (nCells == 0)
-      return pairs(df, vecCol, idCol, autoCellCount(df.select(col(idCol)).count(), targetCellSize), minCos)
     // BAKED assignment (round 12): the seed matrix is collected at
-    // plan time (one TakeOrderedAndProject, ≤65536·dim doubles) and
-    // argmax evaluated as one codegen loop per row — the join shape
-    // (explode dims ⋈ broadcast centroids → groupBy → window) it
-    // replaces materializes n·dim·nCells rows before aggregating,
-    // measured ~16 min vs seconds at the sf10 auto sizing (200k × 64
-    // × 3125). Output-identical to cellRanks r=1 (OpsSpec asserts it,
-    // including the tie and NaN orderings).
-    val (mat, mDim) = Ann.seededCentroidMatrix(df, vecCol, idCol, nCells)
+    // plan time (≤65536·dim doubles) and argmax evaluated as one
+    // codegen loop per row — the join shape (explode dims ⋈ broadcast
+    // centroids → groupBy → window) it replaces materializes
+    // n·dim·nCells rows before aggregating, measured ~16 min vs seconds
+    // at the sf10 auto sizing (200k × 64 × 3125). Output-identical to
+    // cellRanks r=1 (OpsSpec asserts it, including the tie and NaN
+    // orderings).
+    val (mat, mDim) = Ann.seededCentroidMatrix(
+      df, vecCol, idCol, nCells, autoCellCount(_, targetCellSize))
     // cell, norm, and the double vector are ALL row-local projections
     // of the same frame, computed in ONE select (round 19) — the cell
     // column previously came back through a corpus-scale equi-join on

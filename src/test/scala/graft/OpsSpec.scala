@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.ops.{Ann, Decontam, Dedup, NearDup, Sampling, SemDedup, Shard, Sketch, TextOps}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bridge
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.ops.{Ann, Decontam, Dedup, Kmeans, NearDup, Sampling, SemDedup, Shard, Sketch, TextOps}
 
 /** Behavior + plan-shape tests for the graft.ops layer.
   *
@@ -1284,5 +1290,252 @@ class OpsSpec extends SparkTestBase {
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("WindowGroupLimit"), plan)
+  }
+
+  // ---- plan-time models: driver finish vs distributed bake ------------
+
+  /** Runs `body`, and reports the Spark jobs it submitted and whether
+    * every query it ran was a `PlanTimeModel.collect` — a limit at the
+    * root. The distributed bakes run counts, aggregates, `distinct`s
+    * and sorted limits, so any of those means the distributed path ran
+    * (also after a declined collect).
+    */
+  private val constructions = Iterator.from(0)
+
+  private def construction[T](group: String)(body: => T): (T, Int, Boolean) = {
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = roots.add(qe.logical)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = roots.add(qe.logical)
+    }
+    Bridge.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    var out: Option[T] = None
+    val jobs =
+      try jobsFor(s"$group-${constructions.next()}") { out = Some(body) }
+      finally {
+        Bridge.drainListenerBus(spark)
+        spark.listenerManager.unregister(listener)
+      }
+    val plans = roots.asScala.toSeq
+    (out.get, jobs, plans.nonEmpty && plans.forall {
+      case _: GlobalLimit | _: LocalLimit => true
+      case _ => false
+    })
+  }
+
+  /** The arrays baked into `df`'s plan (centroid matrices, offsets,
+    * norms), in plan order; doubles as their bits, so NaN equals NaN
+    * and -0.0 differs from 0.0.
+    */
+  private def bakedArrays(df: DataFrame): Seq[Seq[Any]] =
+    df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case e: Product => e.productIterator.collect {
+        case a: Array[Double] => a.toSeq.map(java.lang.Double.doubleToLongBits)
+        case a: Array[_] => a.toSeq
+      }.toSeq
+    }.flatten))
+
+  /** Plan-time parity: `build`'s rows and baked arrays, or its
+    * `require` message, with the session's threshold equal those with
+    * `autoBroadcastJoinThreshold=-1`, which turns every driver finish
+    * off. `driver` says which path the first run must take; on the
+    * driver path construction launches at most one job.
+    */
+  private def assertBakeParity(name: String, driver: Boolean = true)(build: => DataFrame): Unit = {
+    def run(): (Either[String, (Seq[String], Seq[Seq[Any]])], Int, Boolean) = {
+      val (built, jobs, onDriver) = construction(name)(
+        try Right(build) catch { case e: IllegalArgumentException => Left(e.getMessage) })
+      (built.map(df => (df.collect().map(_.toString).sorted.toSeq, bakedArrays(df))), jobs, onDriver)
+    }
+    val (fast, jobs, onDriver) = run()
+    val (slow, _, slowOnDriver) = withBroadcastThreshold(-1)(run())
+    assert(onDriver == driver && !slowOnDriver,
+      s"$name: driver finish ran = $onDriver, with broadcast off = $slowOnDriver")
+    if (driver) assert(jobs <= 1, s"$name: $jobs construction jobs on the driver path")
+    assert(fast == slow, s"$name:\n driver      $fast\n distributed $slow")
+  }
+
+  /** `df` written to one parquet file and read back: a real file scan,
+    * so neither the optimizer nor AQE can fold an empty or local input
+    * away, and construction jobs are real jobs. One file scans as one
+    * partition, as a single-file table does.
+    */
+  private def onDisk(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_time").resolve("t").toString
+    df.coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def hash32(s: String): Long = java.lang.Long.parseLong(
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
+
+  /** A 16-row `(vec_id, embedding)` corpus whose ids `a` < `b` tie on
+    * `hash32` (their md5 prefixes collide) with 3 ids hashing below
+    * them and 11 above, so a 4-cell seeding cuts between the tied pair.
+    * `b` is stored first, so only the id order picks `a`. `edit` may
+    * change a row's vector (`None` = null) by its id.
+    */
+  private def tieCorpus(idType: DataType, a: Any, b: Any, others: Iterator[Any],
+      extra: Seq[Row] = Nil)(edit: PartialFunction[Any, Option[Seq[java.lang.Float]]] = PartialFunction.empty): DataFrame = {
+    val tie = hash32(a.toString)
+    val rest = others.filter(i => i != a && i != b).map(i => i -> hash32(i.toString))
+      .filter(_._2 != tie).take(400).toSeq
+    val ids = rest.filter(_._2 < tie).take(3).map(_._1) ++ Seq(b, a) ++ rest.filter(_._2 > tie).take(11).map(_._1)
+    val rnd = new scala.util.Random(7)
+    val rows = ids.map { id =>
+      val v: Seq[java.lang.Float] = Seq.fill(4)(java.lang.Float.valueOf(rnd.nextGaussian().toFloat))
+      Row(id, edit.applyOrElse(id, (_: Any) => Some(v)).orNull)
+    } ++ extra
+    val schema = StructType(Seq(
+      StructField("vec_id", idType), StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  private def longTies(extra: Seq[Row] = Nil)(
+      edit: PartialFunction[Any, Option[Seq[java.lang.Float]]] = PartialFunction.empty) =
+    tieCorpus(LongType, 25302L, 82945L, Iterator.from(0).map(_.toLong), extra)(edit)
+
+  /** Every vector case of the parity tests: the seeding tie, nulls,
+    * ragged vectors, no rows, and string ids whose tie is broken in
+    * UTF-8 order ("ﬁ…" = EF AC 81 …) where Java's UTF-16 order would
+    * pick the other ("😀…" = D83D …).
+    */
+  private lazy val vectorCases: Seq[(String, DataFrame)] = {
+    def f(xs: Float*): Option[Seq[java.lang.Float]] = Some(xs.map(java.lang.Float.valueOf))
+    Seq(
+      "ties in hash32" -> longTies()(),
+      "a null vector" -> longTies() { case 14L => None },
+      "a null seed component" -> longTies() {
+        case 25302L => Some(Seq(java.lang.Float.valueOf(1f), null, java.lang.Float.valueOf(2f), java.lang.Float.valueOf(3f)))
+      },
+      "a null id" -> longTies(Seq(Row(null, Seq(0.5f, 0.5f, 0.5f, 0.5f).map(java.lang.Float.valueOf))))(),
+      "ragged vectors" -> longTies() { case 9L => f(1f, 2f, 3f); case 14L => f(1f, 2f) },
+      "empty input" -> longTies()().limit(0),
+      "UTF-8 vs UTF-16 string ids" ->
+        tieCorpus(StringType, "ﬁ90672", "😀27658", Iterator.from(0).map(i => s"doc-$i"))()
+    ).map { case (name, df) => name -> onDisk(df) }
+  }
+
+  test("kmeans driver finish matches the distributed Lloyd updates (table-driven parity)") {
+    for ((name, df) <- vectorCases)
+      assertBakeParity(s"kmeans: $name")(Kmeans.assignCells(df, "embedding", "vec_id", nCells = 4, iters = 2))
+    // seeds only: the same collect, no update
+    assertBakeParity("kmeans: iters = 0")(
+      Kmeans.assignCells(vectorCases.head._2, "embedding", "vec_id", nCells = 4, iters = 0))
+  }
+
+  test("kmeans takes the distributed path where the driver could not match Spark bit for bit") {
+    // NaN: floor(NaN · 2^24) is Spark's (long) cast, not a finite mean
+    assertBakeParity("kmeans: a NaN component", driver = false)(Kmeans.assignCells(
+      onDisk(longTies() { case 9L => Some(Seq(Float.NaN, 1f, 2f, 3f).map(java.lang.Float.valueOf)) }),
+      "embedding", "vec_id", nCells = 4, iters = 2))
+    // 3e11 · 2^24 ≈ 5e18 fits a Long, but 17 such terms would not:
+    // some accumulation order could overflow, so the driver declines
+    assertBakeParity("kmeans: a sum that could leave Long", driver = false)(Kmeans.assignCells(
+      onDisk(longTies() { case 9L => Some(Seq(3e11f, 1f, 2f, 3f).map(java.lang.Float.valueOf)) }),
+      "embedding", "vec_id", nCells = 4, iters = 2))
+  }
+
+  test("IVF and SemDeDup adaptive seeding: one collect gives the count and the seeds (table-driven parity)") {
+    for ((name, df) <- vectorCases) {
+      assertBakeParity(s"ivf: $name")(
+        Ann.ivfTopKSeeded(df, df, "embedding", "vec_id", dim = 4, k = 3))
+      assertBakeParity(s"semdedup: $name")(
+        SemDedup.pairs(df, "embedding", "vec_id", minCos = 0.0, targetCellSize = 4))
+    }
+  }
+
+  test("tokenBudgetAuto counts its largest stratum on the driver (table-driven parity)") {
+    val docRows = (0L until 30L).map(i => Row(i, "w " * (1 + (i % 5)).toInt, s"s${i % 3}"))
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType), StructField("source", StringType)))
+    def table(rows: Seq[Row]) = onDisk(spark.createDataFrame(rows.asJava, schema))
+    val cases = Seq[(String, Seq[Row])](
+      "strata" -> docRows,
+      "a null stratum and a null id" ->
+        (docRows ++ Seq(Row(null, "w w", "s0"), Row(31L, "w", null), Row(32L, "w w w", null))),
+      "empty input" -> Nil,
+      "UTF-8 vs UTF-16 strata" -> docRows.map(r =>
+        Row(r.get(0), r.get(1), Seq("ﬁ", "😀", "z")(r.getLong(0).toInt % 3))))
+    for ((name, rows) <- cases) {
+      val df = table(rows)
+      assertBakeParity(s"token budget: $name")(
+        Sampling.tokenBudgetAuto(df, "text", "doc_id", "source", budgetTokens = 20L))
+    }
+  }
+
+  test("decontam de-duplicates the eval shingle pairs on the driver (table-driven parity)") {
+    def table(rows: Seq[(Any, String)], idType: DataType = LongType) = onDisk(spark.createDataFrame(
+      rows.map { case (i, t) => Row(i, t) }.asJava,
+      StructType(Seq(StructField("doc_id", idType), StructField("text", StringType)))))
+    val texts = docs.as[(Long, String)].collect().toSeq
+    val corpus = table(texts)
+    // doc 7 repeats its shingles, so its (h, eval_id) pairs repeat
+    val evalRows = Seq[(Any, String)](2L -> texts(1)._2, 6L -> "the quick brown fox and the quick brown fox",
+      7L -> "lazy dog lazy dog lazy dog lazy dog")
+    val cases = Seq(
+      "eval set" -> (corpus, table(evalRows)),
+      "a null eval id and a null eval text" ->
+        (corpus, table(evalRows ++ Seq[(Any, String)]((null, "quick brown fox jumps"), (8L, null)))),
+      "empty eval set" -> (corpus, table(Nil)),
+      "UTF-8 vs UTF-16 string ids" ->
+        (table(texts.map { case (i, t) => (s"c$i", t) }, StringType),
+          table(Seq[(Any, String)]("ﬁ" -> texts(1)._2, "😀" -> texts(2)._2, "z" -> texts(1)._2),
+            StringType)))
+    for ((name, (c, e)) <- cases) {
+      assertBakeParity(s"decontam overlap: $name")(Decontam.overlap(c, e, "text", "doc_id", minHits = 1))
+      assertBakeParity(s"decontaminate: $name")(Decontam.decontaminate(c, e, "text", "doc_id", minHits = 1))
+    }
+  }
+
+  test("the five plan-time ops launch at most one construction job on the driver path") {
+    val emb = vectorCases.head._2
+    val docsOnDisk = onDisk(docs.withColumn("source", concat(lit("s"), col("doc_id") % 2)))
+    val runs = Iterator.from(0)
+    def jobs(build: => DataFrame): Int = jobsFor(s"bake-jobs-${runs.next()}")(build)
+    val driverJobs = Map(
+      "kmeans_assign" -> jobs(Kmeans.assignCells(emb, "embedding", "vec_id", nCells = 4, iters = 2)),
+      "ann_ivf_auto" -> jobs(Ann.ivfTopKSeeded(emb, emb, "embedding", "vec_id", dim = 4, k = 3)),
+      "dedup_semantic_auto" -> jobs(SemDedup.pairs(emb, "embedding", "vec_id", minCos = 0.4)),
+      "sample_token_budget_auto" ->
+        jobs(Sampling.tokenBudgetAuto(docsOnDisk, "text", "doc_id", "source", budgetTokens = 20L)),
+      "decontam_overlap" -> jobs(Decontam.overlap(
+        docsOnDisk.filter($"doc_id" =!= 2L), docsOnDisk.filter($"doc_id" === 2L), "text", "doc_id")))
+    assert(driverJobs.values.forall(_ <= 1), driverJobs)
+    // Lloyd runs on the driver: its job count does not depend on iters,
+    // while the distributed form adds an update job (or two) per round
+    val byIters = Seq(1, 3, 6).map(i => jobs(Kmeans.assignCells(emb, "embedding", "vec_id", nCells = 4, iters = i)))
+    assert(byIters.distinct.size == 1 && byIters.head <= 1, byIters)
+    val distributed = withBroadcastThreshold(-1)(
+      Seq(1, 6).map(i => jobs(Kmeans.assignCells(emb, "embedding", "vec_id", nCells = 4, iters = i))))
+    assert(distributed(1) > distributed(0) && distributed(0) > byIters.head, distributed)
+  }
+
+  test("plan-time models take the driver finish exactly up to the session cap, per model kind") {
+    // local inputs, so Catalyst's estimates are exact: a row costs 8
+    // bytes plus each column's default size, an array column one element
+    def onDriverAt(bytes: Long)(build: => DataFrame): Boolean =
+      withBroadcastThreshold(bytes)(construction("bake-cap")(build)._3)
+    def assertCap(kind: String, bytes: Long)(build: => DataFrame): Unit = {
+      assert(onDriverAt(bytes)(build), s"$kind: did not take the driver finish at a $bytes-byte cap")
+      assert(!onDriverAt(bytes - 1)(build), s"$kind: took the driver finish one byte under the cap")
+    }
+    val n = vecs.count()
+    // vectors: the (v, h, id) projection estimates 8 + 3 · 8 bytes a
+    // row; its size gate binds before the row cap of T / 24 rows
+    assertCap("kmeans vectors", 32 * n)(Kmeans.assignCells(vecs, "embedding", "vec_id", nCells = 3))
+    assertCap("ivf seed vectors", 32 * n)(Ann.ivfTopKSeeded(vecs, vecs, "embedding", "vec_id", dim = 8, k = 3))
+    // keys: one string stratum a row, 20 bytes — the row cap binds
+    val strata = docs.withColumn("source", concat(lit("s"), col("doc_id") % 2))
+    assertCap("strata keys", 20 * docs.count())(
+      Sampling.tokenBudgetAuto(strata, "text", "doc_id", "source", budgetTokens = 20L))
+    // pairs: (h, eval_id), 8 + 8 bytes a shingle — no size gate
+    val evalSet = docs.filter($"doc_id" <= 2L)
+    val nPairs = evalSet.select(explode(
+      graft.functions.TextHash.shingleHashes(NearDup.tokens(col("text")), 3))).count()
+    assertCap("eval shingle pairs", 16 * nPairs)(
+      Decontam.overlap(docs.filter($"doc_id" > 2L), evalSet, "text", "doc_id"))
   }
 }
