@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -133,7 +134,9 @@ object Ann {
     * The centroid matrix follows the [[PlanTimeModel]] bake contract.
     * At `nCells = 0` the driver finish takes the corpus count and the
     * `(h, id)`-ordered seeds from one collect: 1 construction job,
-    * against 3 for the distributed count and seed collect. A fixed
+    * against 3 for the distributed count and seed collect, which run
+    * after the declined collect's job when the vectors were over the
+    * cap and Catalyst's estimate had not already declined it. A fixed
     * `nCells` runs the one seed collect.
     */
   def ivfTopKSeeded(
@@ -212,22 +215,24 @@ object Ann {
     val hashed = prep(corpus, vecCol, idCol).select(col("v"), h.as("h"), col(idCol))
     val driverSeeds =
       if (nCells != 0) None
-      else PlanTimeModel.collect(hashed, key = 2)
-        .map { case (rows, idOrder) => PlanTimeModel.hashSeeds(rows, cellsFor(rows.length), idOrder) }
+      else PlanTimeModel.hashedVectors(corpus, vecCol, idCol).map { case (c, vs) =>
+        PlanTimeModel.hashSeeds(c, cellsFor(vs.length))
+          .map(i => if (vs(i) == null) null else vs(i).toSeq[Any](DoubleType): scala.collection.Seq[Any])
+      }
     matrixOf(driverSeeds.getOrElse {
       val cells = if (nCells != 0) nCells else cellsFor(corpus.select(col(idCol)).count())
       // one TakeOrderedAndProject: O(nCells) heap per partition
       hashed.orderBy(col("h"), col(idCol)).limit(cells).select(col("v")).collect()
+        .map(r => if (r.isNullAt(0)) null else r.getSeq[Any](0): scala.collection.Seq[Any])
     })
   }
 
-  /** Seed vectors (column 0 of each row) as a flat matrix. */
-  private def matrixOf(seeds: Array[Row]): (Array[Double], Int) = {
+  /** Seed vectors (null for a null vector) as a flat matrix. */
+  private def matrixOf(seeds: Array[scala.collection.Seq[Any]]): (Array[Double], Int) = {
     if (seeds.isEmpty) return (Array.empty[Double], 1)
     def vector(c: Int): scala.collection.Seq[Any] = {
-      require(!seeds(c).isNullAt(0),
-        s"seed vector $c is null — clean the corpus vectors before indexing")
-      seeds(c).getSeq[Any](0)
+      require(seeds(c) != null, s"seed vector $c is null — clean the corpus vectors before indexing")
+      seeds(c)
     }
     val dim = vector(0).length
     require(dim >= 1, s"seed vectors must be non-empty, got dim=$dim")

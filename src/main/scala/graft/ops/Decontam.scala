@@ -34,9 +34,10 @@ import graft.functions.{EvalOverlapCounts, EvalShingleModel, TextHash}
   * The eval model follows the [[PlanTimeModel]] bake contract (the
   * corpus side stays fully lazy). The driver finish collects the eval
   * side's `(h, eval_id)` shingle pairs and de-duplicates them on the
-  * driver: 1 construction job. Over the cap, or for an eval id type
-  * the collect declines, a `distinct()` runs in Spark before the
-  * collect: 2 jobs.
+  * driver: 1 construction job. Otherwise a `distinct()` runs in Spark
+  * before the collect: 2 jobs, after the declined collect's job when
+  * the pairs were over the cap (3 in all), with none for an eval id
+  * type the collect declines.
   *
   * The default shingle order is the shared 3-gram family (so the
   * DuckDB oracle reuses the same CTEs as the near-dup gates); pass
@@ -55,9 +56,9 @@ object Decontam {
     val pairs = NearDup
       .hashedShingles(evalDf, textCol, idCol, shingleN)
       .select(col("h"), col(idCol).as("eval_id"))
-    val rows = PlanTimeModel.collect(pairs, key = 1).map(_._1.distinct)
-      .getOrElse(pairs.distinct().collect())
-    EvalShingleModel.fromPairs(rows.map(r => (r.getLong(0), r.get(1))))
+    EvalShingleModel.fromPairs(PlanTimeModel.collect(pairs, key = 1)
+      .map(c => c.rows.map(r => (r.getLong(0), c.value(r, 1))).distinct)
+      .getOrElse(pairs.distinct().collect().map(r => (r.getLong(0), r.get(1)))))
   }
 
   /** Packed per-row overlap counts for the corpus frame, or NULL where

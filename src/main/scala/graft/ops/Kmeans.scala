@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Lloyd's k-means over an embedding column, engine-deterministic.
   *
@@ -44,10 +45,14 @@ import org.apache.spark.sql.functions._
   *     equal the aggregate's in any order), and the division back to
   *     double means is the same IEEE ops. 1 construction job, whatever
   *     `iters` is. Besides the collect's own declines, it declines, and
-  *     the distributed form runs, when a component is non-finite, when some accumulation order of the
-  *     `floor(x · 2^24)` sums could leave `Long` (Spark would wrap, or
-  *     raise under ANSI), or when `n·nCells·dim·iters` exceeds
-  *     [[MaxDriverLloydWork]].
+  *     the distributed form runs, when a component is non-finite, when
+  *     some accumulation order of the `floor(x · 2^24)` sums could leave
+  *     `Long` (Spark would wrap, or raise under ANSI), or when
+  *     `n·nCells·dim·iters` exceeds [[MaxDriverLloydWork]]. These
+  *     checks read the collected vectors, so such a decline comes after
+  *     the collect, which construction then pays on top of the
+  *     distributed form's jobs: at most `T` of vectors (see the
+  *     contract), in its one job or one per take round.
   *   - DISTRIBUTED: the seed collect, then per update one
   *     map-side-combined `(cell, dim)`-keyed aggregate of long partials
   *     whose `nCells·dim` result rows come back to the driver for the
@@ -89,6 +94,9 @@ object Kmeans {
   private def boxedVector(r: Row, i: Int): IndexedSeq[java.lang.Double] =
     if (r.isNullAt(i)) null
     else r.getSeq[Any](i).iterator.map(x => x.asInstanceOf[java.lang.Double]).toIndexedSeq
+
+  private def boxedVector(v: ArrayData): IndexedSeq[java.lang.Double] =
+    if (v == null) null else v.toSeq[java.lang.Double](DoubleType)
 
   /** The seed centroids, collected at plan time: the `nCells`
     * smallest-md5-id corpus vectors in (hash, id) order — the exact rows
@@ -227,17 +235,14 @@ object Kmeans {
   }
 
   /** The driver finish (see the object doc): the seeds and all `iters`
-    * updates from one [[PlanTimeModel.collect]] of `(v, h, id)`, or
+    * updates from one [[PlanTimeModel.hashedVectors]] collect, or
     * `None` when it declines or the driver could not match Spark.
     */
-  private def driverFit(base: DataFrame, idCol: String, nCells: Int, iters: Int): Option[Cents] = {
-    val h = NearDup.hash32(col(idCol).cast("string"))
-    val (rows, idOrder) = PlanTimeModel.collect(base.select(col("v"), h.as("h"), col(idCol)), key = 2) match {
-      case Some(collected) => collected
+  private def driverFit(df: DataFrame, vecCol: String, idCol: String, nCells: Int, iters: Int): Option[Cents] = {
+    val (collected, vs) = PlanTimeModel.hashedVectors(df, vecCol, idCol) match {
+      case Some(cv) => cv
       case None => return None
     }
-    val vs = rows.map(r =>
-      if (r.isNullAt(0)) null else new GenericArrayData(r.getSeq[Any](0).toArray): ArrayData)
     // every partial (cell, j) sum has at most n terms of magnitude
     // ≤ max|x|·2^24 + 1, so below 2^62 no accumulation order overflows
     var maxAbs = 0.0
@@ -254,10 +259,10 @@ object Kmeans {
       }
       components += v.numElements()
     }
-    if (rows.length * (maxAbs * Scale + 1) >= (1L << 62).toDouble ||
+    if (vs.length * (maxAbs * Scale + 1) >= (1L << 62).toDouble ||
         components.toDouble * nCells * iters > MaxDriverLloydWork) return None
     var cents: Cents =
-      PlanTimeModel.hashSeeds(rows, nCells, idOrder).iterator.map(boxedVector(_, 0)).toIndexedSeq
+      PlanTimeModel.hashSeeds(collected, nCells).iterator.map(i => boxedVector(vs(i))).toIndexedSeq
     for (_ <- 0 until iters)
       cents = driverUpdate(vs, cents)
     Some(cents)
@@ -275,7 +280,7 @@ object Kmeans {
   ): DataFrame = {
     require(nCells >= 1 && iters >= 0, s"need nCells >= 1, iters >= 0, got $nCells/$iters")
     val base = df.select(col(idCol), transform(col(vecCol), x => x.cast("double")).as("v"))
-    val cents = driverFit(base, idCol, nCells, iters).getOrElse {
+    val cents = driverFit(df, vecCol, idCol, nCells, iters).getOrElse {
       var cs = collectSeeds(base, idCol, nCells)
       for (_ <- 0 until iters)
         cs = updateCents(base, cs)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -669,23 +670,24 @@ object NearDup {
       .join(ids.toDF("u"), Seq("u"), "left_semi")
       .join(ids.toDF("v"), Seq("v"), "left_semi")
       .select("u", "v") // a USING semi join puts its key first
-    val (rows, order) = PlanTimeModel.collect(inDf, key = 0) match {
-      case Some(collected) => collected
+    val collected = PlanTimeModel.collect(inDf, key = 0) match {
+      case Some(c) => c
       case None => return None
     }
-    val ord = order.ordering
+    val rows = collected.rows
+    val ord = collected.keyOrder
 
     // rank the endpoint values in Catalyst's order for `dt`; slot 2e is
     // edge e's u, slot 2e + 1 its v
-    val keys = Array.tabulate(2 * rows.length)(s => order.toCatalyst(rows(s / 2).get(s % 2)))
+    val keys = Array.tabulate(2 * rows.length)(s => collected.value(rows(s / 2), s % 2))
     val bySlot = Array.range(0, keys.length).sortBy(keys(_))(ord)
     val vertex = new Array[Int](keys.length) // slot → rank of its id
-    val rankedIds = Array.newBuilder[Any] // the ids as collected, in rank order
+    val rankedIds = Array.newBuilder[Any] // the ids in rank order
     var n = 0
     for (k <- bySlot.indices) {
       val s = bySlot(k)
       if (k == 0 || !ord.equiv(keys(bySlot(k - 1)), keys(s))) {
-        rankedIds += rows(s / 2).get(s % 2)
+        rankedIds += keys(s)
         n += 1
       }
       vertex(s) = n - 1
@@ -714,7 +716,8 @@ object NearDup {
     }
     val dt = edges.schema("u").dataType
     val schema = StructType(Seq(StructField("u", dt), StructField("root", dt)))
-    val labelRows = Array.tabulate(n)(u => Row(idAt(u), idAt(root(u))))
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val labelRows = Array.tabulate(n)(u => Row(toScala(idAt(u)), toScala(idAt(root(u)))))
     Some(df.sparkSession.createDataFrame(java.util.Arrays.asList(labelRows: _*), schema))
   }
 

@@ -1,8 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{col, transform}
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types._
 
@@ -33,50 +38,63 @@ import org.apache.spark.sql.types._
   * The cap comes from the session, so no knob is added: `T` =
   * `spark.sql.autoBroadcastJoinThreshold`, the bytes the session
   * already agrees to ship to every executor; `T ≤ 0` disables the
-  * driver finish.
-  *   - Row cap: `T / w` rows, where `w` is the sum of the collected
-  *     columns' Catalyst default sizes. A fixed-width collect is a
-  *     `limit(cap + 1)`: at most `cap + 1` rows reach the driver, and
-  *     `cap + 1` of them means over the cap.
-  *   - Size gate: an array counts as ONE element in `w`, so for a
-  *     projection with an array column the row cap alone would let a
-  *     64-dim frame pull ~30·T. Such a collect runs only when Catalyst's
-  *     estimate of the projection (`optimizedPlan.stats.sizeInBytes`,
-  *     the statistic Spark's own broadcast choice reads; zero jobs) is
-  *     at most `T`. Such a collect then takes at most `cap + 1` rows
-  *     per partition in one parallel job: a global limit plans as
-  *     Spark's incremental take, whose sequential rounds made the seed
-  *     collect of a 4-partition 20,000-vector corpus cost 391 ms
-  *     against 182 ms for one job (4-core host). Fixed-width frames
-  *     (pair-graph edges, shingle pairs) skip the gate: their estimates
-  *     are join and explode products that say nothing about the real
-  *     row count, and their rows are exactly `w` wide.
+  * driver finish. The collect runs when the rows' total WEIGHT is at
+  * most `T`. A row weighs the Catalyst default sizes of its columns,
+  * as Spark's size estimates count them, except that a top-level array
+  * column weighs its element size once per element (`defaultSize`
+  * counts an array as one element, so a 64-dim vector would weigh 1/64
+  * of its payload). For fixed-width frames (pair-graph edges, shingle
+  * pairs, strata keys) that is a row cap of `T / w` rows, `w` the sum
+  * of the default sizes; for vector frames it is their real payload.
   *
-  * Worst case, at the 10 MB default: a fixed-width collect holds at
-  * most `T / w` rows (655,360 `(long, long)` pairs). They come back as
-  * boxed `Row`s of roughly 80–150 B each rather than `w`, so about
-  * 50–100 MB of transient driver heap; string keys add what they hold
-  * beyond their 20-byte default size. A vector collect whose estimate
-  * is honest holds about `T` of payload, about 3·T as boxed doubles. An
-  * estimate can be low (a highly compressed file); the row cap then
-  * still bounds each of the frame's `p` partitions, and a `d`-dim
-  * frame can reach `p·T·d / w` payload bytes. Driver-side compute is bounded too: sorts are
-  * `n log n` over at most `cap` rows, and Lloyd updates stop at
+  * The weight is measured on the executors, as the rows stream out of
+  * the plan, so it holds for vectors computed in the pipeline, whose
+  * size no estimate knows. The collect is Spark's incremental take with
+  * a weight budget in place of a row count: it scans one partition,
+  * then 4× as many as it scanned, and so on, and each partition stops
+  * at the first row that overdraws what is left of `T`. Frames with an
+  * array column are first also gated on Catalyst's estimate of the
+  * projection (`optimizedPlan.stats.sizeInBytes ≤ T`, the statistic
+  * Spark's own broadcast choice reads), which declines an input that is
+  * already known to be too large with zero jobs. Fixed-width frames
+  * skip that gate: their estimates are join and explode products that
+  * say nothing about the real row count.
+  *
+  * Worst case, at the 10 MB default: the kept rows weigh at most `T`,
+  * which is 655,360 `(long, long)` edges, or 10 MB of vector components
+  * as stored. Rows reach the driver as compact `UnsafeRow`s, a few words
+  * each beyond their weight; ops box only what they keep (the seeds,
+  * the labels), and [[hashedVectors]] widens float vectors to unboxed
+  * doubles, which doubles their driver footprint.
+  * String keys add what they hold beyond their 20-byte default size.
+  * A declined collect has shipped at most what is left of `T` plus one
+  * row from each partition of its last round, as Spark's own take does
+  * with its row count. Driver-side compute is bounded too: sorts are
+  * `n log n` over the kept rows, and Lloyd updates stop at
   * [[Kmeans.MaxDriverLloydWork]].
   *
-  * Jobs: a vector collect is one job. A fixed-width collect is Spark's
-  * incremental take: one job when the input scans as one partition,
-  * and one more per 4× scale-up round otherwise. Each op's scaladoc
-  * gives its driver and distributed job counts.
+  * Jobs: one when the input scans as one partition, and one more per
+  * 4× round otherwise, also when the collect declines. Each op's
+  * scaladoc gives its driver and distributed job counts.
   */
 object PlanTimeModel {
 
-  /** Catalyst's order for a key type: a converter from collected
-    * values to Catalyst's, and the interpreted ordering over those
-    * (UTF-8 byte order for strings, NOT Java's UTF-16
-    * `String.compareTo`).
+  /** The name under which the collect's SQL execution reports to the
+    * session's query-execution listeners.
     */
-  private[graft] final case class KeyOrder(toCatalyst: Any => Any, ordering: Ordering[Any])
+  private[graft] val ExecutionName = "planTimeModel"
+
+  /** The rows of a [[collect]] in Catalyst's form: strings as UTF-8
+    * bytes, arrays as `ArrayData`, nothing boxed. `keyOrder` is
+    * Catalyst's order for the key column's values (UTF-8 byte order for
+    * strings, NOT Java's UTF-16 `String.compareTo`); for the eligible
+    * key types, equal values are also `equals` and hash alike.
+    */
+  private[graft] final case class Collected(rows: Array[InternalRow], schema: StructType, keyOrder: Ordering[Any]) {
+
+    /** Column `i` of `r` in Catalyst's form, or null. */
+    def value(r: InternalRow, i: Int): Any = if (r.isNullAt(i)) null else r.get(i, schema(i).dataType)
+  }
 
   /** All rows of `frame` when they fit the session's cap (see the
     * object doc), with the order of its column `key`; else `None`.
@@ -84,24 +102,63 @@ object PlanTimeModel {
     * for them the driver's order and value equality agree with Spark's
     * sorts, joins, groupings and `distinct`. Collated strings compare by
     * their collation's rules, and floating keys normalize `-0.0` and
-    * NaN. Runs at most one collect, and none when it declines for the
-    * key type, a disabled threshold or the size gate.
+    * NaN. Runs no job when it declines for the key type, a disabled
+    * threshold or the size estimate.
     */
-  private[graft] def collect(frame: DataFrame, key: Int): Option[(Array[Row], KeyOrder)] = {
-    val fields = frame.schema.fields
-    val order = fields(key).dataType match {
-      case dt @ (ByteType | ShortType | IntegerType | LongType | StringType) =>
-        KeyOrder(CatalystTypeConverters.createToCatalystConverter(dt), TypeUtils.getInterpretedOrdering(dt))
+  private[graft] def collect(frame: DataFrame, key: Int): Option[Collected] = {
+    val schema = frame.schema
+    val keyOrder = schema(key).dataType match {
+      case dt @ (ByteType | ShortType | IntegerType | LongType | StringType) => TypeUtils.getInterpretedOrdering(dt)
       case _ => return None
     }
     val threshold = Bridge.autoBroadcastJoinThreshold(frame.sparkSession)
     if (threshold <= 0) return None
-    val sized = fields.exists(f => hasArray(f.dataType))
-    if (sized && frame.queryExecution.optimizedPlan.stats.sizeInBytes > threshold) return None
-    val rowBytes = math.max(1L, fields.map(_.dataType.defaultSize.toLong).sum)
-    val cap = math.min(threshold / rowBytes, Int.MaxValue - 1L).toInt
-    val rows = (if (sized) Bridge.localLimit(frame, cap + 1) else frame.limit(cap + 1)).collect()
-    if (rows.length > cap) None else Some((rows, order))
+    val qe = frame.queryExecution
+    if (schema.fields.exists(f => hasArray(f.dataType)) && qe.optimizedPlan.stats.sizeInBytes > threshold)
+      return None
+    SQLExecution.withNewExecutionId(qe, Some(ExecutionName)) {
+      val rdd = qe.toRdd
+      val parts = rdd.partitions.length
+      val rows = ArrayBuffer.empty[InternalRow]
+      var left = threshold
+      var scanned = 0
+      while (left >= 0 && scanned < parts) {
+        val round = scanned until math.min(parts.toLong, scanned + math.max(1L, 4L * scanned)).toInt
+        val budget = left
+        for ((taken, weight) <- frame.sparkSession.sparkContext.runJob(
+            rdd, (it: Iterator[InternalRow]) => takeWithin(it, schema, budget), round)) {
+          rows ++= taken
+          left -= weight
+        }
+        scanned = round.end
+      }
+      if (left < 0) None else Some(Collected(rows.toArray, schema, keyOrder))
+    }
+  }
+
+  /** One partition's share of [[collect]]: copies of its rows while
+    * their weight stays within `budget` (the row that overdraws it
+    * included, so the driver sees the overdraft), and their weight.
+    */
+  private def takeWithin(it: Iterator[InternalRow], schema: StructType, budget: Long): (Array[InternalRow], Long) = {
+    val toUnsafe = UnsafeProjection.create(schema)
+    val fixed = math.max(1L, schema.fields.map(_.dataType.defaultSize.toLong).sum)
+    val arrays = schema.fields.indices.filter(i => schema(i).dataType.isInstanceOf[ArrayType]).toArray
+    val elemSize = arrays.map(i => schema(i).dataType.defaultSize.toLong)
+    val out = ArrayBuffer.empty[InternalRow]
+    var weight = 0L
+    while (weight <= budget && it.hasNext) {
+      val r = it.next()
+      weight += fixed
+      var a = 0
+      while (a < arrays.length) {
+        if (!r.isNullAt(arrays(a)))
+          weight += elemSize(a) * math.max(0, r.getArray(arrays(a)).numElements() - 1)
+        a += 1
+      }
+      out += toUnsafe(r).copy()
+    }
+    (out.toArray, weight)
   }
 
   private def hasArray(dt: DataType): Boolean = dt match {
@@ -110,22 +167,52 @@ object PlanTimeModel {
     case _ => false
   }
 
-  /** The first `n` of `rows` in Spark's `ORDER BY h, id` (ascending,
-    * nulls first), where column 1 is a `long` hash `h` and column 2 the
-    * id that `idOrder` orders — the hash seeding of [[Ann]] and
-    * [[Kmeans]] on the driver. Rows that tie on both keys keep their
-    * collected order; Spark's order among such rows is unspecified too.
+  /** The collect of the hash-seeded vector models ([[Kmeans]], and the
+    * seeding of [[Ann]] and [[SemDedup]]): `(v, hash32(id), id)` over
+    * `df`, with each row's vector read as the `array<double>` that
+    * `transform(vecCol, x -> cast(x as double))` gives in Spark (null
+    * for a null vector). Float and double vectors are collected as
+    * stored, because widening a float is exact and is what Spark's cast
+    * does, so a float vector weighs half as much as its cast; other
+    * element types are cast in the plan.
     */
-  private[graft] def hashSeeds(rows: Array[Row], n: Int, idOrder: KeyOrder): Array[Row] = {
-    val ids = rows.map(r => if (r.isNullAt(2)) null else idOrder.toCatalyst(r.get(2)))
-    def cmpNullsFirst(a: Any, b: Any)(c: => Int): Int =
-      if (a == null) (if (b == null) 0 else -1) else if (b == null) 1 else c
+  private[graft] def hashedVectors(df: DataFrame, vecCol: String, idCol: String): Option[(Collected, Array[ArrayData])] = {
+    val stored = col(vecCol)
+    val (v, widen) = df.select(stored).schema.head.dataType match {
+      case ArrayType(FloatType, _) => (stored, true)
+      case ArrayType(DoubleType, _) => (stored, false)
+      case _ => (transform(stored, _.cast("double")), false)
+    }
+    collect(df.select(v.as("v"), NearDup.hash32(col(idCol).cast("string")).as("h"), col(idCol)), key = 2)
+      .map(c => (c, c.rows.map(r => if (r.isNullAt(0)) null else if (widen) doubles(r.getArray(0)) else r.getArray(0))))
+  }
+
+  /** A float vector widened to doubles, unboxed unless it has a null. */
+  private def doubles(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    if ((0 until n).exists(a.isNullAt))
+      new GenericArrayData(Array.tabulate[Any](n)(j => if (a.isNullAt(j)) null else a.getFloat(j).toDouble))
+    else UnsafeArrayData.fromPrimitiveArray(Array.tabulate(n)(j => a.getFloat(j).toDouble))
+  }
+
+  /** The indices of the first `n` collected rows in Spark's
+    * `ORDER BY h, id` (ascending, nulls first), where column 1 is a
+    * `long` hash `h` and column 2 the key id — the hash seeding of
+    * [[Ann]] and [[Kmeans]] on the driver. Rows that tie on both keys
+    * keep their collected order; Spark's order among such rows is
+    * unspecified too.
+    */
+  private[graft] def hashSeeds(c: Collected, n: Int): Array[Int] = {
+    val rows = c.rows
+    val ids = rows.map(c.value(_, 2))
+    def cmpNullsFirst(aNull: Boolean, bNull: Boolean)(cmp: => Int): Int =
+      if (aNull) (if (bNull) 0 else -1) else if (bNull) 1 else cmp
     val byKey = Array.range(0, rows.length).sortWith { (a, b) =>
       val ra = rows(a)
       val rb = rows(b)
-      val h = cmpNullsFirst(ra.get(1), rb.get(1))(java.lang.Long.compare(ra.getLong(1), rb.getLong(1)))
-      (if (h != 0) h else cmpNullsFirst(ids(a), ids(b))(idOrder.ordering.compare(ids(a), ids(b)))) < 0
+      val h = cmpNullsFirst(ra.isNullAt(1), rb.isNullAt(1))(java.lang.Long.compare(ra.getLong(1), rb.getLong(1)))
+      (if (h != 0) h else cmpNullsFirst(ids(a) == null, ids(b) == null)(c.keyOrder.compare(ids(a), ids(b)))) < 0
     }
-    byKey.iterator.take(n).map(rows(_)).toArray
+    byKey.take(n)
   }
 }

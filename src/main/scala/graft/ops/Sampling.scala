@@ -173,9 +173,11 @@ object Sampling {
     * same query text verifies at every scale. The count follows the
     * [[PlanTimeModel]] bake contract: the driver finish collects the
     * strata column and counts it on the driver (1 construction job);
-    * over the cap, or for a strata type the collect declines, a narrow
-    * groupBy-count-max over the strata column runs instead (3 jobs under AQE; the text
-    * column, the expensive read, is untouched either way).
+    * otherwise a narrow groupBy-count-max over the strata column runs
+    * (3 jobs under AQE), after the declined collect's job when the
+    * strata were over the cap (4 in all), with none for a strata type
+    * the collect declines. The text column, the expensive read, is
+    * untouched either way.
     *
     * Output is schema-stable across the crossover:
     * `(idCol, strataCol, n_tok)` — the exact branch drops its
@@ -194,7 +196,7 @@ object Sampling {
       bucketBits: Int = 12
   ): DataFrame = {
     val driverCounts = PlanTimeModel.collect(df.select(col(strataCol)), key = 0)
-      .map { case (rows, _) => rows.groupMapReduce(r => Option(r.get(0)))(_ => 1L)(_ + _) }
+      .map(c => c.rows.groupMapReduce(r => Option(c.value(r, 0)))(_ => 1L)(_ + _))
     val maxRows = driverCounts.fold {
       val r = df.groupBy(col(strataCol)).count().agg(max(col("count"))).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)

@@ -59,7 +59,8 @@ object SemDedup {
     * The centroid matrix follows the [[PlanTimeModel]] bake contract,
     * with [[Ann.ivfTopKSeeded]]'s job counts: at `nCells = 0` one
     * collect gives the count and the seeds (1 construction job, against
-    * 3 distributed); a fixed `nCells` runs the one seed collect.
+    * 3 distributed, plus a declined collect's); a fixed `nCells` runs
+    * the one seed collect.
     */
   def pairs(
       df: DataFrame,

@@ -38,18 +38,6 @@ object Bridge {
   def autoBroadcastJoinThreshold(spark: org.apache.spark.sql.SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** `df` under a per-partition `LIMIT n` only (`LocalLimit`, no global
-    * limit): collecting it is one job over every partition, each
-    * returning at most `n` rows, where a root `Dataset.limit` plans as
-    * Spark's incremental take (one partition, then 4× more, in
-    * sequential jobs).
-    */
-  def localLimit(df: org.apache.spark.sql.DataFrame, n: Int): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      org.apache.spark.sql.catalyst.plans.logical.LocalLimit(
-        org.apache.spark.sql.catalyst.expressions.Literal(n), df.queryExecution.analyzed))
-
   /** Block until every event already posted to the listener bus has
     * been delivered (`listenerBus` is `private[spark]`), so a listener
     * count read afterwards is exact.

@@ -3,14 +3,14 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.ops.{Ann, Decontam, Dedup, Kmeans, NearDup, Sampling, SemDedup, Shard, Sketch, TextOps}
+import graft.ops.{Ann, Decontam, Dedup, Kmeans, NearDup, PlanTimeModel, Sampling, SemDedup, Shard, Sketch, TextOps}
 
 /** Behavior + plan-shape tests for the graft.ops layer.
   *
@@ -1295,18 +1295,17 @@ class OpsSpec extends SparkTestBase {
   // ---- plan-time models: driver finish vs distributed bake ------------
 
   /** Runs `body`, and reports the Spark jobs it submitted and whether
-    * every query it ran was a `PlanTimeModel.collect` — a limit at the
-    * root. The distributed bakes run counts, aggregates, `distinct`s
-    * and sorted limits, so any of those means the distributed path ran
-    * (also after a declined collect).
+    * every query it ran was a `PlanTimeModel.collect`. The distributed
+    * bakes run counts, collects and sorted limits, so any of those means
+    * the distributed path ran (also after a declined collect).
     */
   private val constructions = Iterator.from(0)
 
   private def construction[T](group: String)(body: => T): (T, Int, Boolean) = {
-    val roots = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = roots.add(qe.logical)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = roots.add(qe.logical)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = names.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = names.add(f)
     }
     Bridge.drainListenerBus(spark)
     spark.listenerManager.register(listener)
@@ -1317,11 +1316,8 @@ class OpsSpec extends SparkTestBase {
         Bridge.drainListenerBus(spark)
         spark.listenerManager.unregister(listener)
       }
-    val plans = roots.asScala.toSeq
-    (out.get, jobs, plans.nonEmpty && plans.forall {
-      case _: GlobalLimit | _: LocalLimit => true
-      case _ => false
-    })
+    val ran = names.asScala.toSeq
+    (out.get, jobs, ran.nonEmpty && ran.forall(_ == PlanTimeModel.ExecutionName))
   }
 
   /** The arrays baked into `df`'s plan (centroid matrices, offsets,
@@ -1511,22 +1507,33 @@ class OpsSpec extends SparkTestBase {
     val distributed = withBroadcastThreshold(-1)(
       Seq(1, 6).map(i => jobs(Kmeans.assignCells(emb, "embedding", "vec_id", nCells = 4, iters = i))))
     assert(distributed(1) > distributed(0) && distributed(0) > byIters.head, distributed)
+    // over the cap, the declined collect costs one job on a
+    // one-partition input before the distributed form's jobs
+    val overCap: Seq[(String, () => DataFrame)] = Seq(
+      "sample_token_budget_auto" -> (() => Sampling.tokenBudgetAuto(docsOnDisk, "text", "doc_id", "source", 20L)),
+      "decontam_overlap" -> (() => Decontam.overlap(
+        docsOnDisk.filter($"doc_id" =!= 2L), docsOnDisk.filter($"doc_id" === 2L), "text", "doc_id")))
+    for ((name, build) <- overCap) {
+      val declined = withBroadcastThreshold(1)(jobs(build()))
+      val disabled = withBroadcastThreshold(-1)(jobs(build()))
+      assert(declined == disabled + 1, s"$name: $declined jobs over the cap, $disabled with the driver finish off")
+    }
   }
 
+  private def onDriverAt(bytes: Long)(build: => DataFrame): Boolean =
+    withBroadcastThreshold(bytes)(construction("bake-cap")(build)._3)
+
   test("plan-time models take the driver finish exactly up to the session cap, per model kind") {
-    // local inputs, so Catalyst's estimates are exact: a row costs 8
-    // bytes plus each column's default size, an array column one element
-    def onDriverAt(bytes: Long)(build: => DataFrame): Boolean =
-      withBroadcastThreshold(bytes)(construction("bake-cap")(build)._3)
     def assertCap(kind: String, bytes: Long)(build: => DataFrame): Unit = {
       assert(onDriverAt(bytes)(build), s"$kind: did not take the driver finish at a $bytes-byte cap")
       assert(!onDriverAt(bytes - 1)(build), s"$kind: took the driver finish one byte under the cap")
     }
     val n = vecs.count()
-    // vectors: the (v, h, id) projection estimates 8 + 3 · 8 bytes a
-    // row; its size gate binds before the row cap of T / 24 rows
-    assertCap("kmeans vectors", 32 * n)(Kmeans.assignCells(vecs, "embedding", "vec_id", nCells = 3))
-    assertCap("ivf seed vectors", 32 * n)(Ann.ivfTopKSeeded(vecs, vecs, "embedding", "vec_id", dim = 8, k = 3))
+    // vectors: a (v, h, id) row weighs its 8 floats as stored, 4 bytes
+    // each, plus two longs; Catalyst's estimate of the local input
+    // (8 + 4 + 2 · 8 bytes a row) passes below that
+    assertCap("kmeans vectors", 48 * n)(Kmeans.assignCells(vecs, "embedding", "vec_id", nCells = 3))
+    assertCap("ivf seed vectors", 48 * n)(Ann.ivfTopKSeeded(vecs, vecs, "embedding", "vec_id", dim = 8, k = 3))
     // keys: one string stratum a row, 20 bytes — the row cap binds
     val strata = docs.withColumn("source", concat(lit("s"), col("doc_id") % 2))
     assertCap("strata keys", 20 * docs.count())(
@@ -1537,5 +1544,30 @@ class OpsSpec extends SparkTestBase {
       graft.functions.TextHash.shingleHashes(NearDup.tokens(col("text")), 3))).count()
     assertCap("eval shingle pairs", 16 * nPairs)(
       Decontam.overlap(docs.filter($"doc_id" > 2L), evalSet, "text", "doc_id"))
+  }
+
+  test("vectors computed in the plan are weighed by their elements, not by Catalyst's estimate") {
+    // 2000 64-dim double vectors built by array_repeat: Catalyst counts
+    // each array as one element, so the projection estimates under
+    // 100 KB, while the vectors weigh about 1 MB
+    val corpus = spark.range(0, 2000, 1, 1).select(col("id").as("vec_id"),
+      array_repeat(sin(col("id").cast("float")), 64).as("embedding"))
+    val cap = 200L * 1024
+    val estimate = corpus.select(transform(col("embedding"), _.cast("double")).as("v"),
+      lit(0L).as("h"), col("vec_id")).queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate <= cap, s"estimate $estimate")
+    withBroadcastThreshold(cap) {
+      assertBakeParity("kmeans: vectors built in the plan", driver = false)(
+        Kmeans.assignCells(corpus, "embedding", "vec_id", nCells = 4, iters = 2))
+      assertBakeParity("ivf: vectors built in the plan", driver = false)(
+        Ann.ivfTopKSeeded(corpus, corpus.limit(3), "embedding", "vec_id", dim = 64, k = 2))
+    }
+    // with room for them, the same vectors finish on the driver
+    withBroadcastThreshold(4L * 1024 * 1024) {
+      assertBakeParity("kmeans: double vectors built in the plan")(
+        Kmeans.assignCells(corpus, "embedding", "vec_id", nCells = 4, iters = 2))
+      assertBakeParity("ivf: double vectors built in the plan")(
+        Ann.ivfTopKSeeded(corpus, corpus.limit(3), "embedding", "vec_id", dim = 64, k = 2))
+    }
   }
 }
