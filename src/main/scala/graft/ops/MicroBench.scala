@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Dev utility: targeted measurements of SparkEntry gate entries, for
   * finding which entry or stage dominates before optimizing. Bench
@@ -19,7 +20,8 @@ object MicroBench {
       |  entryn <reps> <name>...   <reps> timed runs per entry, median + every run
       |  jobs <name>...            Spark jobs one execution of each entry launches
       |  finalplan [full] <name>...  node counts of the post-execution AQE plan
-      |  streambench [nFiles]      streaming dedup wall time over nFiles triggers (default 8)""".stripMargin
+      |  streambench [nFiles]      streaming dedup wall time over nFiles triggers (default 8),
+      |                            with per-trigger medians of the streaming layers""".stripMargin
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -136,7 +138,10 @@ object MicroBench {
     * state accumulating across batches exactly like production — and
     * reports each run's wall time from query start to
     * processAllAvailable (a fresh query + sink per run: state never
-    * carries over between runs). 1 warm-up + 3 timed runs.
+    * carries over between runs). 1 warm-up + 3 timed runs. Beside the
+    * wall time it prints, from `recentProgress`, the per-trigger
+    * medians of `durationMs` (`addBatch`, `walCommit`, `commitOffsets`,
+    * `latestOffset`) and of the state commit time.
     */
   private def streambench(spark: SparkSession, sfDir: String, nFiles: Int): Unit =
     sentinelBracketed(spark, sfDir) {
@@ -153,7 +158,7 @@ object MicroBench {
           .option("maxFilesPerTrigger", "1").parquet(path)
 
       def timeStream(name: String)(mk: String => DataFrame): Unit = {
-        def runOnce(): (Double, Int) = {
+        def runOnce(): (Double, Seq[StreamingQueryProgress]) = {
           val sink = "sb_" + java.util.UUID.randomUUID().toString.replace("-", "")
           val t0 = System.nanoTime()
           val q = graft.streaming.Streaming.runToMemory(mk(sink), sink, "append")
@@ -161,12 +166,22 @@ object MicroBench {
           finally q.stop()
           val dt = (System.nanoTime() - t0) / 1e9
           spark.catalog.dropTempView(sink)
-          (dt, q.recentProgress.count(_.numInputRows > 0))
+          (dt, q.recentProgress.toSeq)
         }
         runOnce() // warm-up (codegen + file listing)
         val rs = Seq.fill(3)(runOnce())
         val ts = rs.map(_._1)
-        println(f"$name%-24s med=${ts.sorted.apply(1)}%.3f s  runs ${ts.map(t => f"$t%.3f").mkString(" ")}  batches=${rs.head._2}")
+        println(f"$name%-24s med=${ts.sorted.apply(1)}%.3f s  runs ${ts.map(t => f"$t%.3f").mkString(" ")}  " +
+          s"batches=${rs.head._2.count(_.numInputRows > 0)}")
+        // the streaming layers: per-trigger medians over the timed runs'
+        // triggers that ran a batch
+        val triggers = rs.flatMap(_._2).filter(_.durationMs.containsKey("addBatch"))
+        def median(xs: Seq[Long]): Long = if (xs.isEmpty) 0L else xs.sorted.apply(xs.size / 2)
+        val layers = Seq("addBatch", "walCommit", "commitOffsets", "latestOffset").map { k =>
+          k -> median(triggers.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)))
+        } :+ ("stateCommit" -> median(triggers.map(_.stateOperators.map(_.commitTimeMs).sum)))
+        println(f"${""}%-24s per-trigger median ms over ${triggers.size} triggers: " +
+          layers.map { case (k, v) => s"$k=$v" }.mkString(" "))
       }
 
       timeStream("stream_dedup_exact") { _ =>

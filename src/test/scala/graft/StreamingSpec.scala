@@ -1,11 +1,22 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumException, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.Streaming
+import graft.streaming.{LocalCheckpointFiles, Streaming}
 
 /** The "same plan over readStream" contract (SURVEY §2.3): a PQL query
   * compiled once runs over a streaming source and produces exactly the
@@ -406,6 +417,176 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+
+  // ---- checkpoint files: LocalCheckpointFiles under runToParquet ----
+
+  /** File `i` of a file-source input: five events in minutes
+    * [20i, 20i + 5), so each trigger's file moves the watermark past the
+    * window of the file before it.
+    */
+  private def writeEvents(in: String, i: Int): Unit = {
+    Files.createDirectories(Paths.get(in))
+    val lines = (0 until 5).map { j =>
+      val t = ts(0).toLocalDateTime.plusMinutes(20L * i + j)
+        .format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+      s"""{"ts":"$t","event_type":"${if (j % 2 == 0) "click" else "view"}","value":${i * 10 + j}.5}"""
+    }
+    Files.write(Paths.get(in, f"ev_$i%03d.json"), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+  }
+
+  private def windowedCounts(in: String): DataFrame =
+    Streaming.withEventTime(
+      spark.readStream.schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
+        .option("maxFilesPerTrigger", "1").json(in), "ts", "5 minutes")
+      .groupBy(Streaming.binWindow(col("ts"), "15 minutes").as("w"), col("event_type"))
+      .agg(count("*").as("n"), sum("value").as("total"))
+      .select(col("w.start").as("tb"), col("event_type"), col("n"), col("total"))
+
+  /** Drain `in` through `runToParquet` into `base/out` with checkpoint
+    * `base/ckpt`; the batch ids this run committed.
+    */
+  private def drain(in: String, base: String): Seq[Long] = {
+    val q = Streaming.runToParquet(windowedCounts(in), s"$base/out", s"$base/ckpt")
+    try q.processAllAvailable()
+    finally q.stop()
+    q.recentProgress.filter(_.durationMs.containsKey("addBatch")).map(_.batchId).toSeq
+  }
+
+  private def committed(base: String): Seq[(Timestamp, String, Long, Double)] =
+    spark.read.parquet(s"$base/out").select("tb", "event_type", "n", "total")
+      .as[(Timestamp, String, Long, Double)].collect().toSeq.sortBy(r => (r._1.getTime, r._2))
+
+  /** Run `body` with the session naming `manager` (None: naming none),
+    * then restore what the session named before.
+    */
+  private def withManager[T](manager: Option[String])(body: => T): T = {
+    val key = LocalCheckpointFiles.ConfKey
+    val before = spark.conf.getOption(key)
+    manager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private val fileContextManager = classOf[FileContextBasedCheckpointFileManager].getName
+
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root.toString)
+    finally {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+      finally walk.close()
+    }
+  }
+
+  test("checkpoint files start no OS process: no spawned command names the checkpoint directory") {
+    withTempDir("graft_spawns") { base =>
+      (0 until 4).foreach(writeEvents(s"$base/in", _))
+      val control = "graft-spawn-control"
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val batches =
+        try {
+          // a spawn of our own proves the recording sees process starts
+          new ProcessBuilder("echo", control).start().waitFor()
+          withManager(None)(drain(s"$base/in", base))
+        } finally rec.stop()
+      val jfr = Paths.get(base, "spawns.jfr")
+      rec.dump(jfr)
+      rec.close()
+      val commands = RecordingFile.readAllEvents(jfr).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      assert(batches.size >= 3, batches)
+      assert(commands.exists(_.contains(control)), commands.take(5))
+      val ckpt = Seq(s"$base/ckpt", new java.io.File(s"$base/ckpt").getCanonicalPath)
+      val underCkpt = commands.filter(c => ckpt.exists(c.contains))
+      assert(underCkpt.isEmpty, s"${underCkpt.size} spawns, e.g. ${underCkpt.take(3).mkString("; ")}")
+    }
+  }
+
+  test("a checkpoint started by Spark's FileContext manager resumes through runToParquet exactly once") {
+    withTempDir("graft_ckpt_compat") { base =>
+      val (in, resumed, whole) = (s"$base/in", s"$base/resumed", s"$base/whole")
+      (0 until 2).foreach(writeEvents(in, _))
+      val before = withManager(Some(fileContextManager))(drain(in, resumed))
+      (2 until 5).foreach(writeEvents(in, _))
+      val after = withManager(None)(drain(in, resumed))
+      assert(before.nonEmpty && after.nonEmpty && after.min > before.max, (before, after)) // resumed
+      withManager(None)(drain(in, whole))
+      val got = committed(resumed)
+      assert(got.nonEmpty && got == committed(whole))
+    }
+  }
+
+  test("a corrupt committed offsets file fails the restart with Hadoop's ChecksumException") {
+    withTempDir("graft_ckpt_crc") { base =>
+      val in = s"$base/in"
+      (0 until 3).foreach(writeEvents(in, _))
+      val last = withManager(None)(drain(in, base)).max
+      val offsets = Paths.get(base, "ckpt", "offsets", last.toString)
+      assert(Files.exists(Paths.get(base, "ckpt", "offsets", s".$last.crc")))
+      val bytes = Files.readAllBytes(offsets)
+      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 1).toByte
+      Files.write(offsets, bytes, StandardOpenOption.TRUNCATE_EXISTING)
+      writeEvents(in, 3)
+      for (_ <- 1 to 2) { // the corrupt file stays put: a second restart fails the same way
+        val e = intercept[Exception](withManager(None)(drain(in, base)))
+        val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(causes.exists(_.isInstanceOf[ChecksumException]), causes.map(_.toString).mkString("\n"))
+        assert(Files.exists(offsets))
+      }
+    }
+  }
+
+  test("a session that names its own checkpoint file manager keeps it") {
+    withTempDir("graft_ckpt_own") { base =>
+      (0 until 2).foreach(writeEvents(s"$base/in", _))
+      val own = classOf[CountingCheckpointFiles].getName
+      val before = CountingCheckpointFiles.made.get
+      withManager(Some(own)) {
+        drain(s"$base/in", base)
+        assert(spark.conf.get(LocalCheckpointFiles.ConfKey) == own)
+      }
+      assert(CountingCheckpointFiles.made.get > before)
+    }
+  }
+
+  test("checkpoint files and their .crc side files keep the names and permissions Spark's default writes") {
+    withTempDir("graft_ckpt_perms") { base =>
+      val in = s"$base/in"
+      (0 until 3).foreach(writeEvents(in, _))
+      withManager(Some(fileContextManager))(drain(in, s"$base/spark"))
+      withManager(None)(drain(in, s"$base/graft"))
+      def tree(ckpt: String): Map[String, String] = {
+        val root = Paths.get(ckpt)
+        val walk = Files.walk(root)
+        try walk.iterator.asScala.filter(_ != root).map { f =>
+          root.relativize(f).toString -> PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+        }.toMap
+        finally walk.close()
+      }
+      val graftTree = tree(s"$base/graft/ckpt")
+      assert(graftTree == tree(s"$base/spark/ckpt"))
+      val deltas = graftTree.filter { case (f, _) => f.startsWith("state/") && f.endsWith("1.delta") }
+      assert(deltas.nonEmpty && deltas.values.forall(_ == "rw-r--r--"), deltas)
+      assert(deltas.keys.forall { f =>
+        val delta = new Path(f)
+        graftTree.contains(s"${delta.getParent}/.${delta.getName}.crc")
+      })
+    }
+  }
+
   private implicit def mapAsCatalog(m: Map[String, org.apache.spark.sql.DataFrame]): String => org.apache.spark.sql.DataFrame =
     name => m.getOrElse(name, sys.error(s"unknown table $name"))
+}
+
+/** A checkpoint file manager a session may name: counts its instances. */
+class CountingCheckpointFiles(path: Path, conf: Configuration)
+    extends FileContextBasedCheckpointFileManager(path, conf) {
+  CountingCheckpointFiles.made.incrementAndGet()
+}
+
+object CountingCheckpointFiles {
+  val made = new AtomicInteger
 }
