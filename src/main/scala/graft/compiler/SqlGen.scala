@@ -327,10 +327,13 @@ private[graft] final class SqlGen(
     * [[graft.functions.ShingleHashes]] expression the plan path
     * explodes, so the host session must carry graft's function
     * registry like the ann emissions), 32 permutation-min aggregates
-    * and the match-fraction estimator rendered from the library's own
-    * Columns ([[graft.ops.NearDup.minhashAggColumns]] /
-    * `minhashEstSim` — one definition, two spellings), the banded
-    * self-join in `bandKeysOfSig`'s exact string-key form, and the
+    * rendered from the library's own Columns
+    * ([[graft.ops.NearDup.minhashAggColumns]]: one definition, two
+    * spellings), the match-fraction estimator rendered from
+    * `minhashEstSim` itself (`graft_minhash_matches`, the SAME native
+    * [[graft.functions.MinhashMatches]] the plan path evaluates), the
+    * banded self-join on string band keys (the same candidate set as
+    * `bandKeysOfSig`'s packed longs), and the
     * drop as a LEFT ANTI JOIN on the greater pair member. Internals
     * are `__graft_mh_*`-namespaced so user schemas with single-letter
     * or colliding names compile (the ann rule).
@@ -355,8 +358,9 @@ private[graft] final class SqlGen(
     // hand-authored band keys (a rendered Column lambda prints a
     // non-parseable `lambdafunction(...)` — same constraint as the
     // brute/lsh emissions' transform calls): element j = components
-    // [j·bandRows, (j+1)·bandRows) cast to string, pipe-joined —
-    // exactly NearDup.bandKeysOfSig's construction
+    // [j·bandRows, (j+1)·bandRows) cast to string, pipe-joined — a
+    // bijection of the components, like NearDup.bandKeysOfSig's packed
+    // longs, so the candidate set is the same
     val bandArr = (0 until k / bandRows)
       .map(j => s"array_join(transform(slice(__graft_mh_sig, ${j * bandRows + 1}, $bandRows), " +
         s"x -> CAST(x AS STRING)), '|')")

@@ -33,6 +33,9 @@ object GraftExtensions {
     e.eval(null)
   }
 
+  private def intLit(e: Expression, what: String): Int =
+    litOf(e, what).asInstanceOf[Number].intValue()
+
   val functions: Seq[FunctionDescription] = Seq(
     (
       FunctionIdentifier("graft_dot"),
@@ -64,10 +67,36 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 1 || args.length == 2,
           s"graft_shingle_hashes expects (tokens[, n]), got ${args.length} arguments")
-        val n = if (args.length == 2)
-          litOf(args(1), "shingle width n").asInstanceOf[Number].intValue()
-        else 3
+        val n = if (args.length == 2) intLit(args(1), "shingle width n") else 3
         ShingleHashes(args(0), n)
+      }
+    ),
+    (
+      FunctionIdentifier("graft_minhash_matches"),
+      new ExpressionInfo(classOf[MinhashMatches].getName, "graft_minhash_matches"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3, s"graft_minhash_matches expects (a, b, k), got ${args.length} arguments")
+        MinhashMatches(args(0), args(1), intLit(args(2), "graft_minhash_matches k"))
+      }
+    ),
+    (
+      FunctionIdentifier("graft_minhash_band_keys"),
+      new ExpressionInfo(classOf[MinhashBandKeys].getName, "graft_minhash_band_keys"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3,
+          s"graft_minhash_band_keys expects (sig, n_bands, band_rows), got ${args.length} arguments")
+        MinhashBandKeys(args(0), intLit(args(1), "graft_minhash_band_keys n_bands"),
+          intLit(args(2), "graft_minhash_band_keys band_rows"))
+      }
+    ),
+    (
+      FunctionIdentifier("graft_minhash_first_band"),
+      new ExpressionInfo(classOf[MinhashFirstBand].getName, "graft_minhash_first_band"),
+      (args: Seq[Expression]) => {
+        require(args.length == 4,
+          s"graft_minhash_first_band expects (a, b, n_bands, band_rows), got ${args.length} arguments")
+        MinhashFirstBand(args(0), args(1), intLit(args(2), "graft_minhash_first_band n_bands"),
+          intLit(args(3), "graft_minhash_first_band band_rows"))
       }
     ),
     (
@@ -88,8 +117,8 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 3,
           s"graft_sign_sig expects (vec, dim, planes), got ${args.length} arguments")
-        val dim = litOf(args(1), "graft_sign_sig dim").asInstanceOf[Number].intValue()
-        val planes = litOf(args(2), "graft_sign_sig planes").asInstanceOf[Number].intValue()
+        val dim = intLit(args(1), "graft_sign_sig dim")
+        val planes = intLit(args(2), "graft_sign_sig planes")
         require(dim >= 1, s"graft_sign_sig dim must be >= 1, got $dim")
         require(planes >= 1 && planes <= 62,
           s"graft_sign_sig planes must be in [1, 62], got $planes")

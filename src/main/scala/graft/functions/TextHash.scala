@@ -2,12 +2,16 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.QueryContext
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, SupportQueryContext, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MathUtils}
 import org.apache.spark.sql.graftglue.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 /** Native codegen hashed word-n-gram shingles over a token array.
   *
@@ -319,6 +323,267 @@ object MinhashSig {
   /** Column-side entry point. */
   def apply(hashes: Column, k: Int): Column =
     Bridge.column(MinhashSig(Bridge.expression(hashes), k))
+}
+
+/** `element_at(arr, i + 1)` over a signature array: absent (SQL NULL)
+  * for a null array, a null element, or — when `failOnError` is off —
+  * an index past the end; with `failOnError` on, an index past the end
+  * raises `element_at`'s own error. The compact MinHash expressions
+  * below read every component through it, in the order the equivalent
+  * `element_at` Column expressions evaluate them.
+  */
+private object SigComponent {
+
+  def absent(arr: ArrayData, i: Int, failOnError: Boolean, ctx: QueryContext): Boolean =
+    if (arr == null) true
+    else if (i >= arr.numElements()) {
+      if (failOnError) throw Bridge.invalidElementAtIndexError(i + 1, arr.numElements(), ctx)
+      true
+    } else arr.isNullAt(i)
+
+  /** `element_at(a, i + 1) === element_at(b, i + 1)`: 1 true, 0 false,
+    * −1 NULL. `b` is read only when `a`'s component is present, as
+    * `EqualTo` evaluates its right side.
+    */
+  def equal(a: ArrayData, b: ArrayData, i: Int, failOnError: Boolean, ctx: QueryContext): Int =
+    if (absent(a, i, failOnError, ctx) || absent(b, i, failOnError, ctx)) -1
+    else if (a.getLong(i) == b.getLong(i)) 1
+    else 0
+}
+
+/** Number of matching components `Σ_{i<k} [a[i] = b[i]]` of two MinHash
+  * signatures in one loop per row — the count behind
+  * `NearDup.minhashEstSim`. A component matches only when both sides
+  * hold it and the longs are equal: a null array, a null element, or
+  * (ANSI off) a component past the end never matches; with ANSI on, a
+  * component past the end raises `element_at`'s error. `failOnError`
+  * is captured when the expression is built, as `ElementAt` does.
+  */
+case class MinhashMatches(
+    left: Expression,
+    right: Expression,
+    k: Int,
+    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends BinaryExpression
+    with ExpectsInputTypes
+    with SupportQueryContext {
+
+  require(k >= 1, s"signature width must be positive, got $k")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_minhash_matches"
+  override def sql: String = s"$prettyName(${left.sql}, ${right.sql}, $k)"
+
+  override def initQueryContext(): Option[QueryContext] =
+    if (failOnError) Some(origin.context) else None
+
+  override def eval(input: InternalRow): Any =
+    MinhashMatches.count(
+      left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData],
+      k, failOnError, getContextOrNull())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = left.genCode(ctx)
+    val b = right.genCode(ctx)
+    ev.copy(code = code"""
+      |${a.code}
+      |${b.code}
+      |final int ${ev.value} = graft.functions.MinhashMatches.count(
+      |  ${a.isNull} ? null : ${a.value}, ${b.isNull} ? null : ${b.value},
+      |  $k, $failOnError, ${getContextOrNullCode(ctx, failOnError)});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object MinhashMatches {
+
+  /** Called from generated code — must stay public. */
+  def count(a: ArrayData, b: ArrayData, k: Int, failOnError: Boolean, ctx: QueryContext): Int = {
+    var m = 0
+    var i = 0
+    while (i < k) {
+      if (SigComponent.equal(a, b, i, failOnError, ctx) == 1) m += 1
+      i += 1
+    }
+    m
+  }
+
+  /** Column-side entry point; `failOnError` follows the session's ANSI mode. */
+  def apply(a: Column, b: Column, k: Int): Column =
+    Bridge.column(MinhashMatches(Bridge.expression(a), Bridge.expression(b), k))
+}
+
+/** LSH band keys of a MinHash signature in one loop per row: key j of
+  * `nBands` covers components `[j·bandRows, (j+1)·bandRows)`, for
+  * bandRows 1 (`sig[j]`) and 2 (the exact pack `sig[2j]·P + sig[2j+1]`,
+  * `P` = 2^31 − 1). A key is NULL when a component it reads is absent
+  * ([[SigComponent]]); a null signature gives `nBands` NULL keys, as
+  * an `array(...)` of `element_at`s does. With ANSI on, a component
+  * past the end raises `element_at`'s error and a pack that leaves the
+  * long range raises the ANSI `*`/`+` overflow error; with ANSI off it
+  * wraps. The array is unboxed when it holds no NULL.
+  */
+case class MinhashBandKeys(
+    child: Expression,
+    nBands: Int,
+    bandRows: Int,
+    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression
+    with ExpectsInputTypes
+    with SupportQueryContext {
+
+  require(nBands >= 1, s"band count must be positive, got $nBands")
+  require(bandRows == 1 || bandRows == 2, s"packed band keys cover 1 or 2 components, got $bandRows")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_minhash_band_keys"
+  override def sql: String = s"$prettyName(${child.sql}, $nBands, $bandRows)"
+
+  override def initQueryContext(): Option[QueryContext] =
+    if (failOnError) Some(origin.context) else None
+
+  override def eval(input: InternalRow): Any =
+    MinhashBandKeys.compute(
+      child.eval(input).asInstanceOf[ArrayData], nBands, bandRows, failOnError, getContextOrNull())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${s.code}
+      |final ArrayData ${ev.value} = graft.functions.MinhashBandKeys.compute(
+      |  ${s.isNull} ? null : ${s.value}, $nBands, $bandRows, $failOnError,
+      |  ${getContextOrNullCode(ctx, failOnError)});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinhashBandKeys {
+  private val P = 2147483647L
+
+  /** Called from generated code — must stay public. */
+  def compute(sig: ArrayData, nBands: Int, bandRows: Int, failOnError: Boolean,
+      ctx: QueryContext): ArrayData = {
+    val keys = new Array[Long](nBands)
+    var isNull: Array[Boolean] = null
+    var j = 0
+    while (j < nBands) {
+      val c = j * bandRows
+      // `element_at(sig, c + 1) * P + element_at(sig, c + 2)` order: the
+      // second component is read only when the first is present, after
+      // the multiply
+      val present =
+        if (SigComponent.absent(sig, c, failOnError, ctx)) false
+        else if (bandRows == 1) { keys(j) = sig.getLong(c); true }
+        else {
+          val hi = sig.getLong(c)
+          val scaled = if (failOnError) MathUtils.multiplyExact(hi, P, ctx) else hi * P
+          if (SigComponent.absent(sig, c + 1, failOnError, ctx)) false
+          else {
+            val lo = sig.getLong(c + 1)
+            keys(j) = if (failOnError) MathUtils.addExact(scaled, lo, ctx) else scaled + lo
+            true
+          }
+        }
+      if (!present) {
+        if (isNull == null) isNull = new Array[Boolean](nBands)
+        isNull(j) = true
+      }
+      j += 1
+    }
+    if (isNull == null) UnsafeArrayData.fromPrimitiveArray(keys)
+    else new GenericArrayData(Array.tabulate[Any](nBands)(j => if (isNull(j)) null else keys(j)))
+  }
+
+  /** Column-side entry point; `failOnError` follows the session's ANSI mode. */
+  def apply(sig: Column, nBands: Int, bandRows: Int): Column =
+    Bridge.column(MinhashBandKeys(Bridge.expression(sig), nBands, bandRows))
+}
+
+/** Index of the FIRST of `nBands` bands (of `bandRows` components each)
+  * whose components all match ([[SigComponent.equal]]) between two
+  * signatures, `nBands` when none does — in one loop per row. Within a
+  * band the components are read in order and the first mismatch ends
+  * the band, as a left-deep `&&` chain of component equalities does;
+  * reads past the end follow [[SigComponent]].
+  */
+case class MinhashFirstBand(
+    left: Expression,
+    right: Expression,
+    nBands: Int,
+    bandRows: Int,
+    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends BinaryExpression
+    with ExpectsInputTypes
+    with SupportQueryContext {
+
+  require(nBands >= 1 && bandRows >= 1, s"bands must be positive, got $nBands × $bandRows")
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_minhash_first_band"
+  override def sql: String = s"$prettyName(${left.sql}, ${right.sql}, $nBands, $bandRows)"
+
+  override def initQueryContext(): Option[QueryContext] =
+    if (failOnError) Some(origin.context) else None
+
+  override def eval(input: InternalRow): Any =
+    MinhashFirstBand.first(
+      left.eval(input).asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData],
+      nBands, bandRows, failOnError, getContextOrNull())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = left.genCode(ctx)
+    val b = right.genCode(ctx)
+    ev.copy(code = code"""
+      |${a.code}
+      |${b.code}
+      |final int ${ev.value} = graft.functions.MinhashFirstBand.first(
+      |  ${a.isNull} ? null : ${a.value}, ${b.isNull} ? null : ${b.value},
+      |  $nBands, $bandRows, $failOnError, ${getContextOrNullCode(ctx, failOnError)});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object MinhashFirstBand {
+
+  /** Called from generated code — must stay public. */
+  def first(a: ArrayData, b: ArrayData, nBands: Int, bandRows: Int, failOnError: Boolean,
+      ctx: QueryContext): Int = {
+    var i = 0
+    while (i < nBands) {
+      var matched = true
+      var o = 0
+      while (o < bandRows) {
+        val e = SigComponent.equal(a, b, i * bandRows + o, failOnError, ctx)
+        if (e == 0) { matched = false; o = bandRows }
+        else {
+          if (e < 0) matched = false
+          o += 1
+        }
+      }
+      if (matched) return i
+      i += 1
+    }
+    nBands
+  }
+
+  /** Column-side entry point; `failOnError` follows the session's ANSI mode. */
+  def apply(a: Column, b: Column, nBands: Int, bandRows: Int): Column =
+    Bridge.column(MinhashFirstBand(Bridge.expression(a), Bridge.expression(b), nBands, bandRows))
 }
 
 object TextHash {

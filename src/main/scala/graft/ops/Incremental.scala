@@ -138,13 +138,7 @@ object Incremental {
       .select(col(idCol), col("__old_id"))
       .distinct()
 
-    // matching-component estimate as a codegen'd indicator sum (the
-    // minhashPairs convention; interpreted array lambdas are ~50×
-    // slower — see minhashSigs)
-    val est = (0 until k)
-      .map(i => when(element_at(col("sig_n"), i + 1) === element_at(col("sig_o"), i + 1), 1).otherwise(0))
-      .reduce(_ + _)
-      .cast("double") / k
+    val est = NearDup.minhashEstSim(col("sig_n"), col("sig_o"), k)
     val nearIds = cand
       .join(newSig.select(col(idCol), col("sig").as("sig_n")), Seq(idCol))
       .join(snapshot.select(col(idCol).as("__old_id"), col("sig").as("sig_o")), Seq("__old_id"))

@@ -18,7 +18,8 @@ object MicroBench {
     """usage: graft.ops.MicroBench <mode> [args]
       |  entry <name>...           one timed run per entry (2 warm-ups), sentinel-bracketed
       |  entryn <reps> <name>...   <reps> timed runs per entry, median + every run
-      |  jobs <name>...            Spark jobs one execution of each entry launches
+      |  jobs <name>...            Spark jobs one execution of each entry launches, and the
+      |                            codegen compiles of its cold and warm runs
       |  finalplan [full] <name>...  node counts of the post-execution AQE plan
       |  streambench [nFiles]      streaming dedup wall time over nFiles triggers (default 8),
       |                            with per-trigger medians of the streaming layers""".stripMargin
@@ -84,6 +85,12 @@ object MicroBench {
     * property of the binary, so an optimization that deletes driver
     * jobs is verifiable in ONE run on any day. The listener bus is
     * drained around the counted run, so the count is exact.
+    *
+    * Beside it: the Janino compiles (and their summed milliseconds) of
+    * the first, cold run and of the counted, warm run — Spark's
+    * codegen cache misses, which a warm run pays when its classes were
+    * evicted. The counters are JVM-wide, and in local mode the tasks'
+    * compiles happen in this JVM too.
     */
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -94,15 +101,26 @@ object MicroBench {
           counter.incrementAndGet(); ()
         }
       })
+    // Spark's compile count and summed compile nanoseconds (both only grow)
+    def compiled(): (Long, Long) =
+      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    def compiles[T](body: => T): String = {
+      val (n0, ns0) = compiled()
+      body
+      val (n1, ns1) = compiled()
+      f"${n1 - n0} (${(ns1 - ns0) / 1e6}%.0f ms)"
+    }
     names.foreach { k =>
       def run(): Unit = graft.SparkEntry.queries(k)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      run() // warm-up (file-listing jobs happen here, not in the count)
+      // warm-up (file-listing jobs happen here, not in the count)
+      val cold = compiles(run())
       org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
       counter.set(0)
-      run()
+      val warm = compiles(run())
       org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
-      println(f"$k%-28s jobs ${counter.get()}")
+      println(f"$k%-28s jobs ${counter.get()}  compiles cold $cold warm $warm")
     }
   }
 

@@ -185,13 +185,13 @@ object NearDup {
     }
 
   /** Matching-component fraction of two k-element signature Columns —
-    * [[minhashPairs]]'s estimator, shared with the SQL-text backend.
+    * the estimator of [[minhashPairs]] and `Incremental`, shared with
+    * the SQL-text backend, which renders it as
+    * `graft_minhash_matches(a, b, k)` (see
+    * [[graft.functions.MinhashMatches]]).
     */
   private[graft] def minhashEstSim(a: Column, b: Column, k: Int): Column =
-    (0 until k)
-      .map(i => when(element_at(a, i + 1) === element_at(b, i + 1), 1).otherwise(0))
-      .reduce(_ + _)
-      .cast("double") / k
+    graft.functions.MinhashMatches(a, b, k).cast("double") / k
 
   /** Band keys of a k-component signature array: element j covers
     * components [j·bandRows, (j+1)·bandRows).
@@ -206,16 +206,13 @@ object NearDup {
     * per band — the engine's own no-higher-order-functions-on-hot-
     * paths rule, see minhashSigs) and (b) shuffled ~40-char text keys
     * where 8 bytes carry the same information (guide §2.3: narrower
-    * shuffle keys). Wider bands (> 2 components, nothing ships them)
+    * shuffle keys). The packed keys come from one loop per row
+    * ([[graft.functions.MinhashBandKeys]]), which keeps the generated
+    * class small. Wider bands (> 2 components, nothing ships them)
     * keep the string form — P³ would overflow a long.
     */
   private def bandKeysOfSig(sig: Column, nBands: Int, bandRows: Int): Column =
-    if (bandRows == 1)
-      array((0 until nBands).map(j => element_at(sig, j + 1)): _*)
-    else if (bandRows == 2)
-      array((0 until nBands).map { j =>
-        element_at(sig, j * 2 + 1) * P + element_at(sig, j * 2 + 2)
-      }: _*)
+    if (bandRows <= 2) graft.functions.MinhashBandKeys(sig, nBands, bandRows)
     else transform(
       sequence(lit(0), lit(nBands - 1)),
       j => array_join(transform(slice(sig, j * bandRows + 1, lit(bandRows)), _.cast("string")), "|")
@@ -227,28 +224,13 @@ object NearDup {
   private[ops] def bandRowsOf(sigs: DataFrame, idCol: String, k: Int, bandRows: Int): DataFrame =
     sigs.select(col(idCol), posexplode(bandKeysOfSig(col("sig"), k / bandRows, bandRows)).as(Seq("band_idx", "band_key")))
 
-  /** Components of band `i` all agree between the two signatures —
-    * codegen'd element_at equalities, no array allocation.
-    */
-  private def bandEq(aSig: Column, bSig: Column, i: Int, bandRows: Int): Column =
-    (0 until bandRows).map { o =>
-      element_at(aSig, i * bandRows + o + 1) === element_at(bSig, i * bandRows + o + 1)
-    }.reduce(_ && _)
-
-  /** Index of the FIRST band whose components all agree (`nBands` when
-    * none do — unreachable for rows already matched on a band key).
-    */
-  private def firstMatchingBand(aSig: Column, bSig: Column, nBands: Int, bandRows: Int): Column =
-    (0 until nBands).foldRight(lit(nBands)) { (i, rest) =>
-      when(bandEq(aSig, bSig, i, bandRows), lit(i)).otherwise(rest)
-    }
-
   /** Candidate pairs (`id_a < id_b`) sharing at least one band, each
     * emitted EXACTLY ONCE — in its first matching band — with both
     * signatures carried for downstream scoring.
     *
     * The "no earlier band also matches" test is a join conjunct
-    * (`firstMatchingBand == band_idx`), evaluated inside the generated
+    * (the first matching band, [[graft.functions.MinhashFirstBand]],
+    * equals `band_idx`), evaluated inside the generated
     * join loop, so duplicate candidates die before materializing — the
     * same first-collision trick [[embedCosinePairs]] uses on its
     * integer signatures. This deletes the `distinct()` that previously
@@ -274,7 +256,8 @@ object NearDup {
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_key") === col("b.band_key") &&
           col(s"a.$idCol") < col(s"b.$idCol") &&
-          firstMatchingBand(col("a.sig"), col("b.sig"), nBands, bandRows) === col("a.band_idx")
+          graft.functions.MinhashFirstBand(col("a.sig"), col("b.sig"), nBands, bandRows) ===
+            col("a.band_idx")
       )
       .select(
         col(s"a.$idCol").as("id_a"),
@@ -348,7 +331,7 @@ object NearDup {
     // than the narrow carry — 1.37 vs 1.56 s), so ngramJaccardPairs
     // keeps [[bandCandidates]]. Verdict + numbers in BASELINE.md.
     val cand = bandCandidatesJoinBack(sigs, idCol, k, bandRows)
-    // matching-component count as a codegen'd indicator sum (not a
+    // matching-component count in one loop per pair (not a
     // higher-order filter(sequence(...)), which evaluates interpreted
     // with one closure call per component per pair)
     val est = minhashEstSim(col("sig_a"), col("sig_b"), k)

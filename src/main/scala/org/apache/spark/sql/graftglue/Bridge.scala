@@ -45,6 +45,13 @@ object Bridge {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The error ANSI `element_at` raises for an index past the end of
+    * an array (`QueryExecutionErrors` is `private[sql]`).
+    */
+  def invalidElementAtIndexError(
+      index: Int, numElements: Int, ctx: org.apache.spark.QueryContext): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors.invalidElementAtIndexError(index, numElements, ctx)
+
   /** Register a temp SQL function on a LIVE session (the
     * `spark.sql.extensions` config path only applies at session build).
     */

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.functions.ArrayMath
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.functions.{ArrayMath, MinhashBandKeys, MinhashFirstBand, MinhashMatches}
 
 /** Native codegen expressions in graft.functions. */
 class FunctionsSpec extends SparkTestBase {
@@ -55,12 +59,18 @@ class FunctionsSpec extends SparkTestBase {
         |  graft_punct_count('a, b!') AS pc,
         |  graft_sorted_intersect_size(array(1L, 3L, 5L), array(3L, 5L, 7L)) AS si,
         |  size(graft_shingle_hashes(array('a','b','c','d'), 2)) AS sh,
-        |  graft_subword_counts(array('ingtion'), 'ing,tion')[0] AS sw
+        |  graft_subword_counts(array('ingtion'), 'ing,tion')[0] AS sw,
+        |  graft_minhash_matches(array(1L, 2L, 3L), array(1L, 5L, 3L), 3) AS mm,
+        |  graft_minhash_band_keys(array(1L, 2L, 3L, 4L), 2, 2)[1] AS bk,
+        |  graft_minhash_first_band(array(1L, 2L, 3L, 4L), array(0L, 2L, 3L, 4L), 2, 2) AS fb
         |""".stripMargin).head
     assert(r.getAs[Number]("pc").longValue() == 2L) // ',' and '!'
     assert(r.getAs[Number]("si").longValue() == 2L) // {3,5}
     assert(r.getAs[Number]("sh").longValue() == 3L) // 3 bigrams of 4 tokens
     assert(r.getAs[Number]("sw").longValue() == 2L) // ing + tion
+    assert(r.getAs[Number]("mm").longValue() == 2L) // components 1 and 3
+    assert(r.getAs[Number]("bk").longValue() == 3L * 2147483647L + 4L)
+    assert(r.getAs[Number]("fb").longValue() == 1L) // band 0 differs in its first component
   }
 
   test("PQL pass-through resolves registered native functions") {
@@ -90,5 +100,132 @@ class FunctionsSpec extends SparkTestBase {
     // no fallback to interpreted eval)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project [graft_dot"), s"expected codegen'd graft_dot in:\n$plan")
+  }
+
+  // -- compact MinHash comparisons against the unrolled Columns they replace --
+
+  private val P = 2147483647L
+  private val sigSchema = StructType.fromDDL("a array<bigint>, b array<bigint>")
+
+  private def unrolledMatches(a: Column, b: Column, k: Int): Column =
+    (0 until k).map(i => when(element_at(a, i + 1) === element_at(b, i + 1), 1).otherwise(0)).reduce(_ + _)
+
+  private def unrolledBandKeys(sig: Column, nBands: Int, bandRows: Int): Column =
+    if (bandRows == 1) array((0 until nBands).map(j => element_at(sig, j + 1)): _*)
+    else array((0 until nBands).map(j => element_at(sig, j * 2 + 1) * P + element_at(sig, j * 2 + 2)): _*)
+
+  private def unrolledFirstBand(a: Column, b: Column, nBands: Int, bandRows: Int): Column =
+    (0 until nBands).foldRight(lit(nBands)) { (i, rest) =>
+      val eq = (0 until bandRows).map { o =>
+        element_at(a, i * bandRows + o + 1) === element_at(b, i * bandRows + o + 1)
+      }.reduce(_ && _)
+      when(eq, lit(i)).otherwise(rest)
+    }
+
+  /** Signature pairs: equal, partly equal, unequal, null arrays, null
+    * elements, short and empty arrays, and components ≥ P (the pack
+    * overflows: `hi · P` for `huge`, the `+ lo` for `edge`).
+    */
+  private lazy val sigPairs: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])] = {
+    val rnd = new scala.util.Random(7)
+    def sig(n: Int): Seq[java.lang.Long] = Seq.fill(n)(Long.box(rnd.nextLong(P)))
+    val s = sig(32)
+    val partly = s.zipWithIndex.map { case (v, i) => if (i % 3 == 0) Long.box(v + 1) else v }
+    val withNulls = s.zipWithIndex.map { case (v, i) => if (i == 5 || i == 17) null else v }
+    val huge = s.updated(6, Long.box(Long.MaxValue / 3))
+    val edge = s.updated(2, Long.box(Long.MaxValue / P)).updated(3, Long.box(Long.MaxValue))
+    val negative = s.updated(0, Long.box(Long.MinValue / 3))
+    Seq(
+      (s, s), (s, partly), (s, sig(32)), (null, s), (s, null), (null, null),
+      (withNulls, s), (s, withNulls), (withNulls, withNulls),
+      (s.take(20), s), (s, s.take(20)), (partly.take(31), s), (Seq.empty, s), (s, Seq.empty),
+      (huge, huge), (edge, s), (negative, s), (s.take(7) ++ Seq(null) ++ s.drop(8).take(10), s))
+  }
+
+  /** The deepest Spark error condition and parameters behind a failure. */
+  private def condition(t: Throwable): (String, Map[String, String]) =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .collect { case st: SparkThrowable if st.getCondition != null => st }
+      .toSeq.lastOption
+      .map(st => (st.getCondition, st.getMessageParameters.asScala.toMap))
+      .getOrElse(fail(s"no Spark error condition in $t", t))
+
+  /** Every input pair's value or error, from a non-local source, so the
+    * projection runs in the configured mode and not in
+    * ConvertToLocalRelation. All pairs go in one job; when it fails,
+    * each pair runs alone, so one row's error hides no other row's
+    * value.
+    */
+  private def evalRows(f: (Column, Column) => Column): Seq[Either[(String, Map[String, String]), Any]] = {
+    def run(pairs: Seq[(Seq[java.lang.Long], Seq[java.lang.Long])]): Seq[Any] = {
+      val rows = spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }, 1)
+      spark.createDataFrame(rows, sigSchema).select(f(col("a"), col("b"))).collect().toSeq.map(_.get(0) match {
+        case s: scala.collection.Seq[_] => s.toSeq
+        case v => v
+      })
+    }
+    try run(sigPairs).map(Right(_))
+    catch {
+      case _: Exception =>
+        sigPairs.map { p =>
+          try Right(run(Seq(p)).head)
+          catch { case e: Exception => Left(condition(e)) }
+        }
+    }
+  }
+
+  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `native` against `unrolled` on every input pair, under generated
+    * and interpreted evaluation, each with ANSI on and off: equal
+    * values, equal error conditions, and the same result type. Returns
+    * the error conditions raised.
+    */
+  private def assertParity(what: String)(native: (Column, Column) => Column,
+      unrolled: (Column, Column) => Column): Set[String] =
+    (for {
+      (factory, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+      ansi <- Seq("true", "false")
+    } yield withConfs(
+      "spark.sql.codegen.factoryMode" -> factory,
+      "spark.sql.codegen.wholeStage" -> wholeStage,
+      "spark.sql.ansi.enabled" -> ansi) {
+      val mode = s"$what, $factory, ansi=$ansi"
+      val empty = spark.createDataFrame(java.util.List.of[Row](), sigSchema)
+      assert(empty.select(native(col("a"), col("b"))).schema.head.copy(name = "v") ===
+        empty.select(unrolled(col("a"), col("b"))).schema.head.copy(name = "v"), mode)
+      val (got, want) = (evalRows(native), evalRows(unrolled))
+      sigPairs.indices.foreach(i => assert(got(i) === want(i), s"$mode, input $i"))
+      if (ansi == "false") assert(want.forall(_.isRight), mode)
+      want.collect { case Left((cond, _)) => cond }
+    }).flatten.toSet
+
+  private val IndexError = "INVALID_ARRAY_INDEX_IN_ELEMENT_AT"
+
+  test("MinhashMatches equals the unrolled element_at indicator sum") {
+    val raised = Seq(32, 31).flatMap(k =>
+      assertParity(s"matches k=$k")(MinhashMatches(_, _, k), unrolledMatches(_, _, k)))
+    assert(raised.toSet == Set(IndexError))
+  }
+
+  test("MinhashBandKeys equals the unrolled band-key array, overflow included") {
+    val raised = Seq(32 -> 1, 16 -> 2, 31 -> 1, 15 -> 2).flatMap { case (nBands, bandRows) =>
+      assertParity(s"band keys $nBands×$bandRows")(
+        (a, _) => MinhashBandKeys(a, nBands, bandRows), (a, _) => unrolledBandKeys(a, nBands, bandRows))
+    }
+    assert(raised.toSet == Set(IndexError, "ARITHMETIC_OVERFLOW"))
+  }
+
+  test("MinhashFirstBand equals the unrolled first-matching-band fold") {
+    val raised = Seq(16 -> 2, 31 -> 1, 15 -> 2, 10 -> 3).flatMap { case (nBands, bandRows) =>
+      assertParity(s"first band $nBands×$bandRows")(
+        MinhashFirstBand(_, _, nBands, bandRows), unrolledFirstBand(_, _, nBands, bandRows))
+    }
+    assert(raised.toSet == Set(IndexError))
   }
 }

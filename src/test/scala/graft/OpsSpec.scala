@@ -89,6 +89,33 @@ class OpsSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
+  test("MinHash pairs and clusters generate no class over 64k chars") {
+    // every query the two ops execute, build-time checkpoints included
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    def classSizes(body: => DataFrame): Seq[Int] = {
+      Bridge.drainListenerBus(spark)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try body.collect()
+      finally {
+        Bridge.drainListenerBus(spark)
+        spark.listenerManager.unregister(listener)
+      }
+      plans.asScala.toSeq.flatMap(qe =>
+        org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan).map(_._2.length))
+    }
+    val pairs = classSizes(NearDup.minhashPairs(docs, "text", "doc_id"))
+    val clusters = classSizes(NearDup.clusters(docs, NearDup.minhashPairs(docs, "text", "doc_id"), "doc_id"))
+    for ((op, sizes) <- Seq("minhashPairs" -> pairs, "clusters" -> clusters)) {
+      assert(sizes.nonEmpty, op)
+      assert(sizes.max <= 64000, s"$op generated classes of ${sizes.sorted.reverse.mkString(", ")} chars")
+    }
+  }
+
   test("dropNearDuplicates keeps only non-dominated ids") {
     val pairs = NearDup.minhashPairs(docs, "text", "doc_id")
     val kept = NearDup.dropNearDuplicates(docs, pairs, "doc_id")
