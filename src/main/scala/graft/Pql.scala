@@ -59,20 +59,25 @@ object Pql {
     * the reference exposes as `pql.Compile` (reference pql.go:18-34):
     * hosts that ship SQL text to a cluster, log it for audit, or feed
     * a SQL-analysis pipeline get the query as text instead of a plan.
-    * One CTE per pipeline stage, reference-style; scalar expressions
-    * render through the SAME compiler as [[query]]
-    * (`Column.expr.sql`), so the two paths cannot drift —
+    * One CTE per pipeline stage, reference-style, rendered as text over
+    * the stage DataFrames that [[query]]'s compiler builds: scalar
+    * expressions are its Columns (`Column.expr.sql`) and every stage's
+    * schema is its frame's, so the two paths cannot drift —
     * `spark.sql(compileToSql(q, cat))` and `Pql.query(spark, q, cat)`
-    * return the same rows (golden-tested in SqlCompileSpec).
+    * return the same rows (golden-tested in SqlCompileSpec). Building
+    * those frames runs the same plan-time jobs as [[query]] does
+    * (a decontam eval model, a fixed-cells ivf or semantic seed set).
     *
-    * `catalog` supplies table schemas (column names drive `*`
+    * `catalog` supplies the tables' frames (column names drive `*`
     * expansion and join collision renaming); the emitted SQL refers to
     * tables BY NAME, so run it in a session where those names resolve
     * (temp views or catalog tables). The graft extension operators
-    * (`dedup`/`sample`/`decontam`/`chunk`/`pack`) are multi-stage
-    * library plans, not single SQL queries, and are rejected with a
-    * pointer to [[query]]. For AST-level tooling, see
-    * [[graft.parser.Walk]].
+    * emit as CTE chains that call the registered `graft_*` functions
+    * (`GraftExtensions`). Rejected with a pointer to [[query]] are only
+    * the forms whose plan is sized from data at compile time: adaptive
+    * dedup/ann geometry or cell counts, and `sample budget=`. A range
+    * join whose output would repeat a column name is rejected too. For
+    * AST-level tooling, see [[graft.parser.Walk]].
     */
   def compileToSql(
       source: String,

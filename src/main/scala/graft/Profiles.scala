@@ -27,10 +27,11 @@ import org.apache.spark.sql.SparkSession
   *     **Size `bloomCreationCap` BETWEEN the pruned join columns of
   *     your largest dimension and your smallest fact table.** The cap
   *     is the knob that decides WHICH side's bloom fires, and an
-  *     over-generous one is actively harmful: ProfileProbe at sf10
-  *     (BASELINE r19) measured that a cap admitting the fact side
-  *     (lineitem's pruned l_orderkey+l_shipdate estimate fits under
-  *     400 MB at that scale) makes Spark spend the one orders-side
+  *     over-generous one is actively harmful: the executed-plan
+  *     SQLMetrics at sf10 (BASELINE.md, "Round 19: the bloom
+  *     creation-cap sizing rule, measured") show that a cap admitting
+  *     the fact side (lineitem's pruned l_orderkey+l_shipdate estimate
+  *     fits under 400 MB at that scale) makes Spark spend the one orders-side
   *     slot on a fact-built `o_orderkey` bloom — 0.04% row cut, +27 s
   *     creation cost — while a 50 MB cap (dimension in, fact out at
   *     sf10) admits the customer-built `o_custkey` bloom instead:

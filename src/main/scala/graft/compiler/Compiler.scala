@@ -28,7 +28,10 @@ private[graft] final class Compiler(
     params: Map[String, Column]
 ) {
 
-  private val exprs = new Exprs(source)
+  /** The one expression compiler of this compile; the SQL-text backend
+    * renders its Columns.
+    */
+  private[compiler] val exprs = new Exprs(source)
   import exprs.{attr, compile, fail, sourceText}
 
   /** `let` bindings + params, visible to scalar expressions. */
@@ -40,7 +43,12 @@ private[graft] final class Compiler(
 
   private def env: ExprEnv = ExprEnv(scope)
 
-  def run(stmts: List[Statement]): DataFrame = {
+  def run(stmts: List[Statement]): DataFrame = compileTabular(bind(stmts))
+
+  /** Binds the `let` statements ahead of the query into scope and
+    * returns the program's one tabular query.
+    */
+  private[compiler] def bind(stmts: List[Statement]): TabularExpr = {
     var tabular: Option[TabularExpr] = None
     stmts.foreach {
       case let: LetStatement =>
@@ -54,13 +62,10 @@ private[graft] final class Compiler(
         if (tabular.isDefined) fail("batch queries not supported", t.span)
         tabular = Some(t)
     }
-    tabular match {
-      case Some(t) => compileTabular(t)
-      case None    => throw new PqlCompileException("missing tabular query", Span.none, source)
-    }
+    tabular.getOrElse(throw new PqlCompileException("missing tabular query", Span.none, source))
   }
 
-  private def resolveTable(name: Ident): DataFrame =
+  private[compiler] def resolveTable(name: Ident): DataFrame =
     namedResults.get(name.name) match {
       case Some(df) => df
       case None =>
@@ -71,7 +76,7 @@ private[graft] final class Compiler(
     }
 
   def compileTabular(t: TabularExpr): DataFrame =
-    t.operators.foldLeft(resolveTable(t.source.table))(applyOp)
+    t.operators.foldLeft(resolveTable(t.source.table))(applyOp(_, _, compileTabular))
 
   // ---- operators -----------------------------------------------------
 
@@ -114,21 +119,18 @@ private[graft] final class Compiler(
     }: _*)
   }
 
-  private def applyOp(df: DataFrame, op: TabularOperator): DataFrame = op match {
-    case WhereOp(pred, _) => df.filter(compile(pred, env))
+  /** One pipeline stage: `op` applied to its input frame `df`. `sub`
+    * supplies the frame of the operator's sub-pipeline (a join's right
+    * side, the decontam eval side, the ann queries); this compiler's
+    * own fold compiles it, and the SQL-text backend hands over the
+    * frame it has already folded, so no sub-pipeline is built twice.
+    */
+  private[compiler] def applyOp(
+      df: DataFrame, op: TabularOperator, sub: TabularExpr => DataFrame): DataFrame = op match {
+    case WhereOp(pred, _) => df.filter(column(pred))
 
     case ProjectOp(cols, _) =>
-      // A bare unquoted name resolves through the expression path so
-      // `let`/parameter bindings and builtins shadow table columns,
-      // matching the reference (/root/reference/pql.go:374-384,603-610);
-      // quoted names are always plain column references.
-      df.select(cols.map { c =>
-        c.x match {
-          case Some(x)                 => compile(x, env).as(c.name.name)
-          case None if c.name.quoted   => attr(c.name.name).as(c.name.name)
-          case None                    => compile(c.name.asQualified, env).as(c.name.name)
-        }
-      }: _*)
+      df.select(cols.map(c => projectColumn(c).as(c.name.name)): _*)
 
     case ExtendOp(cols, _) =>
       df.select(col("*") +: cols.map(computed): _*)
@@ -185,7 +187,7 @@ private[graft] final class Compiler(
 
     case CountOp(_) => df.agg(count(lit(1)).as("count()"))
 
-    case j: JoinOp => compileJoin(df, j)
+    case j: JoinOp => compileJoin(df, j, sub)
 
     case AsOp(name, _) =>
       namedResults(name.name) = df
@@ -237,11 +239,9 @@ private[graft] final class Compiler(
             "(streaming kinds: embed, exact, minhash)", span)
       }
 
-    case DedupOp(kind, opts, text, id, span) =>
+    case op @ DedupOp(kind, _, text, id, _) =>
       import ExtOptions.{Cells, Dedup, Geometry}
-      val resolved = ExtOptions.dedup(kind, opts, span, fail)
-      ExtOptions.columns("dedup", df, Seq(text.name, id.name), span, fail)
-      resolved match {
+      dedupOptions(df, op) match {
         case Dedup.Unsized => kind match {
           case "exact"      => graft.ops.Dedup.exact(df, text.name, id.name)
           case "lines"      => graft.ops.Dedup.dedupLines(df, text.name, id.name)
@@ -281,7 +281,7 @@ private[graft] final class Compiler(
 
     case DecontamOp(eval, opts, text, id, span) =>
       val o = ExtOptions.decontam(opts, span, fail)
-      val evalDf = compileTabular(eval)
+      val evalDf = sub(eval)
       ExtOptions.columns("decontam", df, Seq(text.name, id.name), span, fail)
       ExtOptions.columns("decontam", evalDf, Seq(text.name, id.name), span, fail, " on the eval side")
       graft.ops.Decontam.decontaminate(
@@ -322,7 +322,7 @@ private[graft] final class Compiler(
       // library operator's union+keyed-window plan (AsOf.joinAsOf) does
       // the rest: one shuffle on the key, no range condition, hot keys
       // split across time buckets.
-      val rightDf = compileTabular(right)
+      val rightDf = sub(right)
       // validation (duplicate on-columns, existence, value/reserved
       // collisions) is shared with the SQL-text backend — ExtJoins
       val p = ExtJoins.asofParts(df.columns.toSeq, rightDf.columns.toSeq, onCols, span, fail)
@@ -338,19 +338,14 @@ private[graft] final class Compiler(
       // (half-open); the rest = equi-key. Compiles to the bucketed
       // equi-join form (RangeJoin.pointInInterval) — never the
       // broadcast-nested-loop a raw BETWEEN join would plan to.
-      val rightDf = compileTabular(right)
+      val rightDf = sub(right)
       // shared validation — see ExtJoins (the SQL-text backend uses
       // the same splitter, so rejections cannot drift between paths)
       val rp = ExtJoins.rangeParts(df.columns.toSeq, rightDf.columns.toSeq, onCols, span, fail)
-      val (keys, tsC, startC, endC) = (rp.keys, rp.ts, rp.start, rp.end)
-      val micros = bucket match {
-        case Some(o) => exprs.parseDurationMillis(o.value, o.valueSpan) * 1000L
-        case None    => 3600000000L // 1h — right for hour-scale intervals
-      }
       graft.ops.RangeJoin.pointInInterval(
-        df, rightDf, keys, tsC.name, startC.name, endC.name, bucketMicros = micros)
+        df, rightDf, rp.keys, rp.ts.name, rp.start.name, rp.end.name, bucketMicros = bucketMicros(bucket))
 
-    case AnnOp(kind, opts, queries, vec, id, span) =>
+    case op @ AnnOp(_, _, queries, vec, id, span) =>
       // `| ann [kind=..] [opts] (Queries) on Vec by Id` → graft.ops.Ann
       // top-k of the piped corpus against the query sub-pipeline. The
       // indexed kinds size their geometry from a plan-time corpus
@@ -359,23 +354,22 @@ private[graft] final class Compiler(
       // rejected here with a span, not as an AnalysisException later.
       if (df.isStreaming)
         fail("ann indexes a bounded corpus and is not available on a streaming input", span)
-      val qDf = compileTabular(queries)
+      val qDf = sub(queries)
       if (qDf.isStreaming)
         fail("ann query side must be a bounded input, got a stream", span)
+      val resolved = annOptions(df, qDf, op)
       // Only the operator's OUTPUT columns (query_id, cos_sim, rank)
       // are reserved: the id column rides through to the output under
       // its own name. Internal projection names are NOT reserved —
       // Ann.prep drops every corpus column except vec/id on entry, and
       // both are aliased to `__graft_ann_*` below before any internal
       // name exists, so real single-letter schemas (`c`, `d`, `r`, …)
-      // compile (round-15; was a 15-name reserved wall). Checks shared
-      // with the SQL-text backend (ExtJoins.annCheck).
-      ExtJoins.annCheck(df.columns.toSeq, qDf.columns.toSeq, vec, id, fail)
+      // compile (round-15; was a 15-name reserved wall).
       val safeVec = "__graft_ann_vec"
       val safeId = "__graft_ann_id"
       val corpusSafe = df.select(col(vec.name).as(safeVec), col(id.name).as(safeId))
       val qSafe = qDf.select(col(vec.name).as(safeVec), col(id.name).as(safeId))
-      val out = ExtOptions.ann(kind, opts, span, fail) match {
+      val out = resolved match {
         case ExtOptions.Ann.Brute(k) =>
           graft.ops.Ann.bruteTopK(corpusSafe, qSafe, safeVec, safeId, k = k)
         case ExtOptions.Ann.Lsh(k, dim, ExtOptions.Geometry.Fixed(p, b)) =>
@@ -392,24 +386,66 @@ private[graft] final class Compiler(
       out.withColumnRenamed(safeId, id.name)
   }
 
+  // ---- stage pieces the SQL-text backend renders too ----------------
+
+  /** A scalar expression in the query's `let`/parameter scope. */
+  private[compiler] def column(x: Expr): Column = compile(x, env)
+
+  /** A `project` item, unaliased. A bare unquoted name resolves through
+    * the expression path so `let`/parameter bindings and builtins
+    * shadow table columns, matching the reference (pql.go:374-384,
+    * 603-610); quoted names are always plain column references.
+    */
+  private[compiler] def projectColumn(c: ProjectColumn): Column = c.x match {
+    case Some(x)               => column(x)
+    case None if c.name.quoted => attr(c.name.name)
+    case None                  => column(c.name.asQualified)
+  }
+
+  /** An `extend`/`summarize` column's output name: its own, or the
+    * expression's source text.
+    */
+  private[compiler] def columnName(c: ComputedColumn): String =
+    c.name.map(_.name).getOrElse(sourceText(c.x.span))
+
   /** Render property values are presentation instructions: literals
     * stringify to their text, identifiers to their name.
     */
-  private def renderValue(e: Expr): String = e match {
+  private[compiler] def renderValue(e: Expr): String = e match {
     case BasicLit(_, v, _)     => v
     case QualifiedIdent(parts) => parts.head.name
     case other                 => sourceText(other.span)
   }
 
-  private def rowCount(e: Expr): Int = exprs.rowCount(e, letAsts)
+  private[compiler] def rowCount(e: Expr): Int = exprs.rowCount(e, letAsts)
 
-  private def computed(c: ComputedColumn): Column = {
-    val name = c.name.map(_.name).getOrElse(sourceText(c.x.span))
-    compile(c.x, env).as(name)
+  /** `dedup`'s resolved options, once its input columns are checked. */
+  private[compiler] def dedupOptions(df: DataFrame, op: DedupOp): ExtOptions.Dedup = {
+    val resolved = ExtOptions.dedup(op.kind, op.opts, op.span, fail)
+    ExtOptions.columns("dedup", df, Seq(op.textCol.name, op.idCol.name), op.span, fail)
+    resolved
   }
 
-  private def sortColumn(t: SortTerm): Column = {
-    val c = compile(t.x, env)
+  /** `ann`'s resolved options, once the column checks shared with the
+    * asof/range joins ([[ExtJoins.annCheck]]) pass on both sides.
+    */
+  private[compiler] def annOptions(df: DataFrame, qDf: DataFrame, op: AnnOp): ExtOptions.Ann = {
+    ExtJoins.annCheck(df.columns.toSeq, qDf.columns.toSeq, op.vecCol, op.idCol, fail)
+    ExtOptions.ann(op.kind, op.opts, op.span, fail)
+  }
+
+  /** The range join's bucket width in microseconds; 1h by default —
+    * right for hour-scale intervals.
+    */
+  private[compiler] def bucketMicros(bucket: Option[OpOption]): Long = bucket match {
+    case Some(o) => exprs.parseDurationMillis(o.value, o.valueSpan) * 1000L
+    case None    => 3600000000L
+  }
+
+  private def computed(c: ComputedColumn): Column = column(c.x).as(columnName(c))
+
+  private[compiler] def sortColumn(t: SortTerm): Column = {
+    val c = column(t.x)
     (t.asc, t.nullsFirst) match {
       case (true, true)   => c.asc_nulls_first
       case (true, false)  => c.asc_nulls_last
@@ -438,7 +474,7 @@ private[graft] final class Compiler(
   /** Unique per-join alias counter (nested joins must not collide). */
   private var joinSeq = 0
 
-  private def compileJoin(df: DataFrame, j: JoinOp): DataFrame = {
+  private def compileJoin(df: DataFrame, j: JoinOp, sub: TabularExpr => DataFrame): DataFrame = {
     // Alias both sides and reference columns by qualified name
     // (`alias.col`): a self-join (`T | join (T) on k`) otherwise trips
     // Spark's AMBIGUOUS_SELF_JOIN detection because both legs share one
@@ -462,15 +498,8 @@ private[graft] final class Compiler(
     // nested inside j.right bumps joinSeq, and evaluating the
     // interpolations afterwards would reuse the inner join's aliases
     val (leftAlias, rightAlias) = (s"__graft_l$joinSeq", s"__graft_r$joinSeq")
-    val ctx = JoinCtx(leftRaw, compileTabular(j.right), leftAlias, rightAlias)
-
-    val joinEnv = env.copy(join = Some(ctx))
-    val cond = j.conditions
-      .map(c => compileJoinCondition(c, joinEnv))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-
-    val joined = ctx.left.as(ctx.leftAlias).join(ctx.right.as(ctx.rightAlias), cond, joinType)
+    val ctx = JoinCtx(leftRaw, sub(j.right), leftAlias, rightAlias)
+    val joined = ctx.left.as(ctx.leftAlias).join(ctx.right.as(ctx.rightAlias), joinCondition(j, ctx), joinType)
 
     val taken = ctx.left.columns.toSet
     val out = ctx.left.columns.map(n => ctx.leftCol(n).as(n)) ++
@@ -483,15 +512,18 @@ private[graft] final class Compiler(
     joined.select(out.toIndexedSeq: _*)
   }
 
-  /** A bare unqualified identifier as a join condition is shorthand for
+  /** The join's conditions as one Column over the two aliased sides.
+    * A bare unqualified identifier is shorthand for
     * `\$left.Col == \$right.Col`.
     */
-  private def compileJoinCondition(c: Expr, joinEnv: ExprEnv): Column = c match {
-    case QualifiedIdent(List(p))
-        if !p.quoted && !scope.contains(p.name) &&
-          p.name != "true" && p.name != "false" && p.name != "null" =>
-      val ctx = joinEnv.join.get
-      ctx.leftCol(p.name) === ctx.rightCol(p.name)
-    case other => compile(other, joinEnv)
+  private[compiler] def joinCondition(j: JoinOp, ctx: JoinCtx): Column = {
+    val joinEnv = env.copy(join = Some(ctx))
+    j.conditions.map {
+      case QualifiedIdent(List(p))
+          if !p.quoted && !scope.contains(p.name) &&
+            p.name != "true" && p.name != "false" && p.name != "null" =>
+        ctx.leftCol(p.name) === ctx.rightCol(p.name)
+      case other => compile(other, joinEnv)
+    }.reduceOption(_ && _).getOrElse(lit(true))
   }
 }

@@ -14,13 +14,19 @@ import graft.parser._
   * a cluster, logs it, or feeds a SQL-auditing pipeline needs the
   * text).
   *
-  * Architecture mirrors the reference's emission — one CTE per
-  * pipeline stage (`__s0`, `__s1`, …) — in the Spark SQL dialect.
-  * Semantics CANNOT drift from the DataFrame path because every scalar
-  * expression is compiled by the same [[Exprs]] into a Catalyst
-  * [[Column]] and rendered with `Column.expr.sql`; only the stage
-  * skeleton (SELECT/WHERE/GROUP BY/JOIN/ORDER BY/LIMIT) is authored
-  * here. `SqlCompileSpec` proves `spark.sql(compileToSql(q))` ≡
+  * Architecture follows the reference's emission — one CTE per
+  * pipeline stage (`__s0`, `__s1`, …) — in the Spark SQL dialect, as
+  * TEXT over the DataFrame compiler's own frames: this class holds one
+  * [[Compiler]], and each stage's frame is `Compiler.applyOp` on the
+  * previous stage's frame, so `let` scope, catalog lookup, option and
+  * column checks, and the schemas that drive `*`-expansion and join
+  * collision renaming are the plan path's. A sub-pipeline (a join's
+  * right side, the decontam eval side, the ann queries) is folded here
+  * once, into its own CTE chain, and its frame handed to `applyOp`.
+  * Scalar expressions are the Compiler's Columns rendered with
+  * `Column.expr.sql`; only the stage skeleton
+  * (SELECT/WHERE/GROUP BY/JOIN/ORDER BY/LIMIT) is authored here.
+  * `SqlCompileSpec` proves `spark.sql(compileToSql(q))` ≡
   * `Pql.query(q)` on the reference's own golden corpus.
   *
   * Ordering: `sort` adjacent to `take`/`top` merges into one
@@ -36,29 +42,27 @@ import graft.parser._
   * the asof/range joins, every dedup kind (embed/semantic with a fixed
   * geometry / cell count), and ann kinds brute/lsh/ivf with fixed
   * indexes (native expressions ride the registered `graft_*` function
-  * library). Option checks are the plan path's own ([[ExtOptions]]).
-  * Forms whose PLAN depends on data read at compile time (adaptive
-  * geometry/cells from a corpus count, `sample budget=`'s crossover)
-  * are rejected with a spanned pointer to `Pql.query`.
+  * library). The text-only rejections run before the stage's frame is
+  * built, so a rejected form starts no plan-time job: forms whose PLAN
+  * depends on data read at compile time (adaptive geometry/cells from
+  * a corpus count, `sample budget=`'s crossover) point to `Pql.query`,
+  * and a range join whose output would repeat a column name is refused.
   */
 private[graft] final class SqlGen(
-    sourceText0: String,
+    source: String,
     catalog: String => DataFrame,
     params: Map[String, Column]
 ) {
 
-  private val exprs = new Exprs(sourceText0)
-  import exprs.{compile, fail, sourceText}
+  private val compiler = new Compiler(source, catalog, params)
+  import compiler.{column, exprs, rowCount, sortColumn}
+  import exprs.fail
 
-  private val scope = mutable.LinkedHashMap[String, Column]() ++= params
-  private val letAsts = mutable.Map[String, Expr]()
-  /** `| as Name` stages: name → (cte name, schema frame). */
-  private val named = mutable.Map[String, (String, DataFrame)]()
+  /** `| as Name` stages: name → the CTE it lives in. */
+  private val named = mutable.Map[String, String]()
   private val ctes = mutable.ArrayBuffer[(String, String)]()
   private var stageSeq = 0
   private var joinSeq = 0
-
-  private def env: ExprEnv = ExprEnv(scope)
 
   private def q(name: String): String = "`" + name.replace("`", "``") + "`"
 
@@ -72,27 +76,13 @@ private[graft] final class SqlGen(
     n
   }
 
-  /** A pipeline stage: the CTE it lives in plus the schema-tracking
-    * frame (never executed — schemas drive `*`-expansion and join
-    * collision renaming, exactly like the DataFrame compiler).
+  /** A pipeline stage: the CTE it lives in plus the Compiler's frame for
+    * the same stage (never executed here).
     */
   private final case class Stage(cte: String, df: DataFrame)
 
   def run(stmts: List[Statement]): String = {
-    var tabular: Option[TabularExpr] = None
-    stmts.foreach {
-      case let: LetStatement =>
-        if (tabular.isEmpty) {
-          scope(let.name.name) = compile(let.x, env.copy(letMode = true))
-          letAsts(let.name.name) = let.x
-        }
-      case t: TabularExpr =>
-        if (tabular.isDefined) fail("batch queries not supported", t.span)
-        tabular = Some(t)
-    }
-    val t = tabular.getOrElse(
-      throw new PqlCompileException("missing tabular query", Span.none, sourceText0))
-
+    val t = compiler.bind(stmts)
     // trailing sort/top/sort+take binds to the final SELECT — an outer
     // `SELECT * FROM cte` would discard a CTE's ordering
     val (bodyOps, finalClause) = splitTrailingOrder(t.operators)
@@ -101,7 +91,7 @@ private[graft] final class SqlGen(
     if (ctes.nonEmpty)
       sql ++= ctes.map { case (n, s) => s"$n AS (\n  $s\n)" }.mkString("WITH ", ",\n", "\n")
     sql ++= s"SELECT * FROM ${last.cte}"
-    finalClause.foreach(f => sql ++= f(last))
+    finalClause.foreach(f => sql ++= f())
     sql.result()
   }
 
@@ -110,29 +100,24 @@ private[graft] final class SqlGen(
     * ORDER BY/LIMIT clause.
     */
   private def splitTrailingOrder(
-      ops: List[TabularOperator]): (List[TabularOperator], Option[Stage => String]) =
+      ops: List[TabularOperator]): (List[TabularOperator], Option[() => String]) =
     ops.reverse match {
       case (s: SortOp) :: rest =>
-        (rest.reverse, Some(_ => s"\nORDER BY ${orderText(s.terms)}"))
+        (rest.reverse, Some(() => s"\nORDER BY ${orderText(s.terms)}"))
       case (tk: TakeOp) :: (s: SortOp) :: rest =>
-        (rest.reverse, Some(_ => s"\nORDER BY ${orderText(s.terms)} LIMIT ${rowCount(tk.rowCount)}"))
+        (rest.reverse, Some(() => s"\nORDER BY ${orderText(s.terms)} LIMIT ${rowCount(tk.rowCount)}"))
       case (tp: TopOp) :: rest =>
-        (rest.reverse, Some(_ => s"\nORDER BY ${orderText(List(tp.col))} LIMIT ${rowCount(tp.rowCount)}"))
+        (rest.reverse, Some(() => s"\nORDER BY ${orderText(List(tp.col))} LIMIT ${rowCount(tp.rowCount)}"))
       case _ => (ops, None)
     }
 
-  private def sourceStage(src: TableRef): Stage =
-    named.get(src.table.name) match {
-      case Some((cte, df)) => Stage(cte, df)
-      case None =>
-        val df =
-          try catalog(src.table.name)
-          catch {
-            case e: Exception =>
-              fail(s"unknown table ${src.table.name}: ${e.getMessage}", src.span)
-          }
-        Stage(newStage(s"SELECT * FROM ${q(src.table.name)}"), df)
-    }
+  private def sourceStage(src: TableRef): Stage = {
+    val df = compiler.resolveTable(src.table)
+    Stage(named.getOrElse(src.table.name, newStage(s"SELECT * FROM ${q(src.table.name)}")), df)
+  }
+
+  /** A sub-pipeline, folded once into its own CTE chain. */
+  private def fold(t: TabularExpr): Stage = foldOps(sourceStage(t.source), t.operators)
 
   private def foldOps(start: Stage, ops: List[TabularOperator]): Stage = ops match {
     case Nil => start
@@ -141,89 +126,82 @@ private[graft] final class SqlGen(
     case (s: SortOp) :: (t: TakeOp) :: rest =>
       val cte = newStage(
         s"SELECT * FROM ${start.cte} ORDER BY ${orderText(s.terms)} LIMIT ${rowCount(t.rowCount)}")
-      foldOps(Stage(cte, start.df), rest)
+      foldOps(Stage(cte, frame(frame(start.df, s), t)), rest)
     case op :: rest => foldOps(applyOp(start, op), rest)
+  }
+
+  /** The Compiler's frame for `op` over `df`; `sub` is the operator's
+    * sub-pipeline, already folded here.
+    */
+  private def frame(df: DataFrame, op: TabularOperator, sub: Option[Stage] = None): DataFrame =
+    compiler.applyOp(df, op, _ => sub.get.df)
+
+  /** `op`'s stage: its frame over the previous stage's, then the CTEs
+    * `render` emits over that frame; `render` returns the last one.
+    */
+  private def emit(prev: Stage, op: TabularOperator, sub: Option[Stage] = None)(
+      render: DataFrame => String): Stage = {
+    val df = frame(prev.df, op, sub)
+    Stage(render(df), df)
   }
 
   private def applyOp(prev: Stage, op: TabularOperator): Stage = op match {
     case WhereOp(pred, _) =>
-      Stage(
-        newStage(s"SELECT * FROM ${prev.cte} WHERE ${sqlOf(compile(pred, env))}"),
-        prev.df.filter(compile(pred, env)))
+      emit(prev, op)(_ => newStage(s"SELECT * FROM ${prev.cte} WHERE ${sqlOf(column(pred))}"))
 
     case ProjectOp(cols, _) =>
-      val items = cols.map { c =>
-        val column = c.x match {
-          case Some(x)               => compile(x, env)
-          case None if c.name.quoted => exprs.attr(c.name.name)
-          case None                  => compile(c.name.asQualified, env)
-        }
-        s"${sqlOf(column)} AS ${q(c.name.name)}" -> column.as(c.name.name)
+      emit(prev, op) { _ =>
+        val items = cols.map(c => s"${sqlOf(compiler.projectColumn(c))} AS ${q(c.name.name)}")
+        newStage(s"SELECT ${items.mkString(", ")} FROM ${prev.cte}")
       }
-      Stage(
-        newStage(s"SELECT ${items.map(_._1).mkString(", ")} FROM ${prev.cte}"),
-        prev.df.select(items.map(_._2): _*))
 
     case ExtendOp(cols, _) =>
-      val items = cols.map(computedItem)
-      Stage(
-        newStage(s"SELECT *, ${items.map(_._1).mkString(", ")} FROM ${prev.cte}"),
-        prev.df.select(col("*") +: items.map(_._2): _*))
+      emit(prev, op)(_ => newStage(s"SELECT *, ${cols.map(computedItem).mkString(", ")} FROM ${prev.cte}"))
 
-    case SummarizeOp(aggs, by, span) =>
-      val aggItems = aggs.map(computedItem)
-      val keyItems = by.map(computedItem)
-      if (aggItems.isEmpty) {
-        Stage(
-          newStage(s"SELECT DISTINCT ${keyItems.map(_._1).mkString(", ")} FROM ${prev.cte}"),
-          prev.df.select(keyItems.map(_._2): _*).distinct())
-      } else if (keyItems.isEmpty) {
-        Stage(
-          newStage(s"SELECT ${aggItems.map(_._1).mkString(", ")} FROM ${prev.cte}"),
-          prev.df.agg(aggItems.head._2, aggItems.tail.map(_._2): _*))
-      } else {
-        val keyExprTexts = by.map(c => sqlOf(compile(c.x, env)))
-        Stage(
+    case SummarizeOp(aggs, by, _) =>
+      emit(prev, op) { _ =>
+        val aggItems = aggs.map(computedItem)
+        val keyItems = by.map(computedItem)
+        if (aggItems.isEmpty)
+          newStage(s"SELECT DISTINCT ${keyItems.mkString(", ")} FROM ${prev.cte}")
+        else if (keyItems.isEmpty)
+          newStage(s"SELECT ${aggItems.mkString(", ")} FROM ${prev.cte}")
+        else
           newStage(
-            s"SELECT ${(keyItems ++ aggItems).map(_._1).mkString(", ")} FROM ${prev.cte}" +
-              s" GROUP BY ${keyExprTexts.mkString(", ")}"),
-          prev.df.groupBy(keyItems.map(_._2): _*).agg(aggItems.head._2, aggItems.tail.map(_._2): _*))
+            s"SELECT ${(keyItems ++ aggItems).mkString(", ")} FROM ${prev.cte}" +
+              s" GROUP BY ${by.map(c => sqlOf(column(c.x))).mkString(", ")}")
       }
 
     case s: SortOp =>
       // mid-pipeline sort (not adjacent to take, not trailing): SQL
       // gives no cross-stage ordering guarantee — same caveat as any
       // SQL engine; emitted for the cases where it is observable
-      Stage(
-        newStage(s"SELECT * FROM ${prev.cte} ORDER BY ${orderText(s.terms)}"),
-        prev.df.orderBy(s.terms.map(sortColumn): _*))
+      emit(prev, op)(_ => newStage(s"SELECT * FROM ${prev.cte} ORDER BY ${orderText(s.terms)}"))
 
     case TakeOp(n, _) =>
-      Stage(newStage(s"SELECT * FROM ${prev.cte} LIMIT ${rowCount(n)}"), prev.df.limit(rowCount(n)))
+      emit(prev, op)(_ => newStage(s"SELECT * FROM ${prev.cte} LIMIT ${rowCount(n)}"))
 
     case TopOp(n, term, _) =>
-      Stage(
-        newStage(s"SELECT * FROM ${prev.cte} ORDER BY ${orderText(List(term))} LIMIT ${rowCount(n)}"),
-        prev.df.orderBy(sortColumn(term)).limit(rowCount(n)))
+      emit(prev, op) { _ =>
+        newStage(s"SELECT * FROM ${prev.cte} ORDER BY ${orderText(List(term))} LIMIT ${rowCount(n)}")
+      }
 
     case CountOp(_) =>
-      Stage(
-        newStage(s"SELECT count(1) AS ${q("count()")} FROM ${prev.cte}"),
-        prev.df.agg(count(lit(1)).as("count()")))
+      emit(prev, op)(_ => newStage(s"SELECT count(1) AS ${q("count()")} FROM ${prev.cte}"))
 
     case j: JoinOp => applyJoin(prev, j)
 
     case AsOp(name, _) =>
-      named(name.name) = (prev.cte, prev.df)
-      prev
+      named(name.name) = prev.cte
+      emit(prev, op)(_ => prev.cte)
 
     case RenderOp(chartType, props, _) =>
-      val lits = (s"'${chartType.name.replace("'", "''")}' AS ${q("render_type")}" ::
-        props.map(p => s"'${renderValue(p.value).replace("'", "''")}' AS ${q(s"render_prop_${p.name.name}")}"))
-      val df = props.foldLeft(prev.df.withColumn("render_type", lit(chartType.name))) { (acc, p) =>
-        acc.withColumn(s"render_prop_${p.name.name}", lit(renderValue(p.value)))
+      emit(prev, op) { _ =>
+        val lits = (s"'${chartType.name.replace("'", "''")}' AS ${q("render_type")}" ::
+          props.map(p =>
+            s"'${compiler.renderValue(p.value).replace("'", "''")}' AS ${q(s"render_prop_${p.name.name}")}"))
+        newStage(s"SELECT *, ${lits.mkString(", ")} FROM ${prev.cte}")
       }
-      Stage(newStage(s"SELECT *, ${lits.mkString(", ")} FROM ${prev.cte}"), df)
 
     case op: AsofJoinOp  => applyAsofJoin(prev, op)
     case op: RangeJoinOp => applyRangeJoin(prev, op)
@@ -234,41 +212,45 @@ private[graft] final class SqlGen(
     // so it IS a single SQL predicate — rendered from the library's
     // own Column (Sampling.keepPredicate), not a lookalike
     case SampleOp(rate, rateSpan, id, _) =>
-      val r = ExtOptions.sampleRate(rate, rateSpan, fail)
-      Stage(
+      emit(prev, op) { _ =>
+        val r = ExtOptions.sampleRate(rate, rateSpan, fail)
         newStage(s"SELECT * FROM ${prev.cte} " +
-          s"WHERE ${sqlOf(graft.ops.Sampling.keepPredicate(col(id.name), r))}"),
-        graft.ops.Sampling.bernoulli(prev.df, id.name, r))
-
-    // every dedup kind emits as CTE text; options resolve exactly as
-    // on the plan path (ExtOptions), and only the ADAPTIVE embed /
-    // semantic sizing is rejected (a plan-time corpus count)
-    case op: DedupOp =>
-      val (text, id) = (op.textCol.name, op.idCol.name)
-      val resolved = ExtOptions.dedup(op.kind, op.opts, op.span, fail)
-      ExtOptions.columns("dedup", prev.df, Seq(text, id), op.span, fail)
-      resolved match {
-        case ExtOptions.Dedup.Unsized => op.kind match {
-          // corpus-wide keep-first-id per normalized-text digest — one
-          // window, so it IS a single SQL query
-          case "exact"      => exactDedupStage(prev, text, id)
-          case "minhash"    => applyDedupMinhash(prev, text, id)
-          case "lines"      => applyDedupLines(prev, text, id)
-          case "simhash"    => applyDedupSimhash(prev, text, id)
-          case "substrings" => applyDedupSubstrings(prev, text, id)
-        }
-        case ExtOptions.Dedup.Embed(dim, cos, ExtOptions.Geometry.Fixed(planes, bits)) =>
-          applyDedupEmbed(prev, text, id, dim, cos, planes, bits)
-        case ExtOptions.Dedup.Semantic(cos, ExtOptions.Cells.Fixed(cells)) =>
-          applyDedupSemantic(prev, text, id, cos, cells)
-        case _: ExtOptions.Dedup.Embed =>
-          adaptiveRejected(s"dedup kind=${op.kind}", fixedGeometry, op.span)
-        case _: ExtOptions.Dedup.Semantic =>
-          adaptiveRejected(s"dedup kind=${op.kind}", fixedIndex, op.span)
+          s"WHERE ${sqlOf(graft.ops.Sampling.keepPredicate(col(id.name), r))}")
       }
 
-    case op: PackOp     => applyPack(prev, op)
-    case op: DecontamOp => applyDecontam(prev, op)
+    // every dedup kind emits as CTE text; options and columns resolve
+    // exactly as on the plan path, and only the ADAPTIVE embed /
+    // semantic sizing is rejected (a plan-time corpus count)
+    case op: DedupOp =>
+      import ExtOptions.{Cells, Dedup, Geometry}
+      val (text, id) = (op.textCol.name, op.idCol.name)
+      val render: () => String = compiler.dedupOptions(prev.df, op) match {
+        case Dedup.Unsized => op.kind match {
+          // corpus-wide keep-first-id per normalized-text digest — one
+          // window, so it IS a single SQL query
+          case "exact"      => () => dedupExact(prev, text, id)
+          case "minhash"    => () => dedupMinhash(prev, text, id)
+          case "lines"      => () => dedupLines(prev, text, id)
+          case "simhash"    => () => dedupSimhash(prev, text, id)
+          case "substrings" => () => dedupSubstrings(prev, text, id)
+        }
+        case Dedup.Embed(dim, cos, Geometry.Fixed(planes, bits)) =>
+          () => dedupEmbed(prev, text, id, dim, cos, planes, bits)
+        case Dedup.Semantic(cos, Cells.Fixed(cells)) =>
+          () => dedupSemantic(prev, text, id, cos, cells)
+        case _: Dedup.Embed =>
+          adaptiveRejected(s"dedup kind=${op.kind}", fixedGeometry, op.span)
+        case _: Dedup.Semantic =>
+          adaptiveRejected(s"dedup kind=${op.kind}", fixedIndex, op.span)
+      }
+      emit(prev, op)(_ => render())
+
+    case op: PackOp => emit(prev, op)(_ => pack(prev, op))
+
+    case op: DecontamOp =>
+      val o = ExtOptions.decontam(op.opts, op.span, fail)
+      val evalStage = fold(op.eval)
+      emit(prev, op, Some(evalStage))(_ => decontam(prev, op, o, evalStage))
 
     // options validated as on the plan path, then rejected: the
     // exact/histogram crossover is decided from a plan-time stratum count
@@ -280,15 +262,15 @@ private[graft] final class SqlGen(
     // `| chunk 64 text by id` (round 15): one projection + posexplode
     // — a single LATERAL VIEW query (the split expression is rendered
     // from the library's own Column)
-    case ChunkOp(n, text, id, span) =>
-      ExtOptions.columns("chunk", prev.df, Seq(text.name, id.name), span, fail)
-      val chunkTokens = ExtOptions.chunk(rowCount(n), n.span, fail)
-      val arr = sqlOf(graft.ops.TextOps.chunkArray(col(text.name), chunkTokens))
-      val nTok = sqlOf(graft.ops.TextOps.chunkTokenCount(col("chunk_text")))
-      val out = newStage(
-        s"SELECT ${q(id.name)}, chunk_idx, chunk_text, $nTok AS n_tokens FROM ${prev.cte} " +
-          s"LATERAL VIEW posexplode($arr) __c AS chunk_idx, chunk_text")
-      Stage(out, graft.ops.TextOps.chunk(prev.df, text.name, id.name, chunkTokens))
+    case ChunkOp(n, text, id, _) =>
+      emit(prev, op) { _ =>
+        val chunkTokens = ExtOptions.chunk(rowCount(n), n.span, fail)
+        val arr = sqlOf(graft.ops.TextOps.chunkArray(col(text.name), chunkTokens))
+        val nTok = sqlOf(graft.ops.TextOps.chunkTokenCount(col("chunk_text")))
+        newStage(
+          s"SELECT ${q(id.name)}, chunk_idx, chunk_text, $nTok AS n_tokens FROM ${prev.cte} " +
+            s"LATERAL VIEW posexplode($arr) __c AS chunk_idx, chunk_text")
+      }
   }
 
   /** The SQL-text backend's one rejection of ADAPTIVE sizing: its
@@ -305,18 +287,18 @@ private[graft] final class SqlGen(
   /** The `dedup kind=exact` emission (round 15): corpus-wide
     * keep-first-id per normalized-text digest — one window, the digest
     * expression rendered from the library's own Column. Shared by the
-    * `exact` case and [[applyDedupMinhash]]'s first stage (the library
+    * `exact` case and [[dedupMinhash]]'s first stage (the library
     * pipeline composes the same way: `NearDup.deduplicateCorpus` =
-    * `Dedup.exact` → near-dup drop).
+    * `Dedup.exact` → near-dup drop). Returns the CTE's name; every
+    * emitter below returns its last CTE's.
     */
-  private def exactDedupStage(prev: Stage, text: String, id: String): Stage = {
+  private def dedupExact(prev: Stage, text: String, id: String): String = {
     val digest = sqlOf(md5(graft.ops.TextOps.normalize(col(text)).cast("binary")))
     val cols = prev.df.columns.toSeq.map(q).mkString(", ")
-    val out = newStage(
+    newStage(
       s"SELECT $cols FROM (SELECT *, row_number() OVER (" +
         s"PARTITION BY $digest ORDER BY ${q(id)}) AS __graft_rn FROM ${prev.cte}" +
         s") WHERE __graft_rn = 1")
-    Stage(out, graft.ops.Dedup.exact(prev.df, text, id))
   }
 
   /** `| dedup kind=minhash` as SQL text (round 16): the production
@@ -338,12 +320,12 @@ private[graft] final class SqlGen(
     * are `__graft_mh_*`-namespaced so user schemas with single-letter
     * or colliding names compile (the ann rule).
     */
-  private def applyDedupMinhash(prev: Stage, text: String, id: String): Stage = {
-    val e = exactDedupStage(prev, text, id)
+  private def dedupMinhash(prev: Stage, text: String, id: String): String = {
+    val e = dedupExact(prev, text, id)
     val (k, bandRows, minEstSim) = (32, 2, 0.25) // deduplicateCorpus → minhashPairs defaults
     val shingleArr = s"graft_shingle_hashes(${sqlOf(graft.ops.NearDup.tokens(col(text)))}, 3)"
     val hs = newStage(
-      s"SELECT ${q(id)} AS __graft_mh_id, __graft_mh_h FROM ${e.cte} " +
+      s"SELECT ${q(id)} AS __graft_mh_id, __graft_mh_h FROM $e " +
         s"LATERAL VIEW explode($shingleArr) __g AS __graft_mh_h")
     // the aggregates run over a column literally named `h` in the
     // library ([[NearDup.minhashAggColumns]]); alias it back for the
@@ -383,9 +365,8 @@ private[graft] final class SqlGen(
         s"JOIN (SELECT __graft_mh_id, __graft_mh_sig AS __graft_mh_sigb FROM $sg) sb " +
         s"ON c.__graft_mh_idb = sb.__graft_mh_id" +
         s") WHERE __graft_mh_est >= $minEstSim")
-    val out = newStage(
-      s"SELECT e.* FROM ${e.cte} e LEFT ANTI JOIN $drops d ON e.${q(id)} = d.__graft_mh_idb")
-    Stage(out, graft.ops.NearDup.deduplicateCorpus(prev.df, text, id))
+    newStage(
+      s"SELECT e.* FROM $e e LEFT ANTI JOIN $drops d ON e.${q(id)} = d.__graft_mh_idb")
   }
 
   /** `| dedup kind=simhash` as SQL text (round 16):
@@ -398,7 +379,7 @@ private[graft] final class SqlGen(
     * builtin SQL, so unlike the other near-dup emissions this one
     * needs no registered graft functions.
     */
-  private def applyDedupSimhash(prev: Stage, text: String, id: String): Stage = {
+  private def dedupSimhash(prev: Stage, text: String, id: String): String = {
     val simBits = graft.ops.NearDup.SimBits
     val bandBits = graft.ops.NearDup.SimBandBits
     val tokensSql = sqlOf(graft.ops.NearDup.tokens(col(text)))
@@ -424,11 +405,8 @@ private[graft] final class SqlGen(
         s"ON a.__graft_sh_bi = b.__graft_sh_bi AND a.__graft_sh_bk = b.__graft_sh_bk " +
         s"AND a.__graft_sh_id < b.__graft_sh_id " +
         s"AND bit_count(a.__graft_sh_sim ^ b.__graft_sh_sim) <= 3")
-    val out = newStage(
+    newStage(
       s"SELECT e.* FROM ${prev.cte} e LEFT ANTI JOIN $drops d ON e.${q(id)} = d.__graft_sh_drop")
-    val mirror = graft.ops.NearDup.dropNearDuplicates(
-      prev.df, graft.ops.NearDup.simhashPairs(prev.df, text, id), id)
-    Stage(out, mirror)
   }
 
   /** `| dedup kind=substrings` as SQL text (round 16): ExactSubstr
@@ -440,7 +418,7 @@ private[graft] final class SqlGen(
     * position-ordered reassembly (the lines emission's struct-sort).
     * Output: `(id, text_clean, n_removed)`, row-preserving.
     */
-  private def applyDedupSubstrings(prev: Stage, text: String, id: String): Stage = {
+  private def dedupSubstrings(prev: Stage, text: String, id: String): String = {
     val k = 8 // the grammar route's width (Dedup.dedupSubstrings default)
     val tokensSql = sqlOf(graft.ops.NearDup.tokens(col(text)))
     val b0 = newStage(
@@ -472,13 +450,12 @@ private[graft] final class SqlGen(
         s"AS __graft_ss_tc, count(1) AS __graft_ss_nk FROM $kept GROUP BY __graft_ss_id")
     val tl = newStage(
       s"SELECT __graft_ss_id, CAST(size(__graft_ss_w) AS BIGINT) AS __graft_ss_nt FROM $ne")
-    val out = newStage(
+    newStage(
       s"SELECT d.${q(id)}, coalesce(r.__graft_ss_tc, '') AS text_clean, " +
         s"(coalesce(t.__graft_ss_nt, 0) - coalesce(r.__graft_ss_nk, 0)) AS n_removed " +
         s"FROM (SELECT ${q(id)} FROM ${prev.cte}) d " +
         s"LEFT JOIN $re r ON d.${q(id)} = r.__graft_ss_id " +
         s"LEFT JOIN $tl t ON d.${q(id)} = t.__graft_ss_id")
-    Stage(out, graft.ops.Dedup.dedupSubstrings(prev.df, text, id))
   }
 
   /** `| dedup kind=lines` as SQL text (round 16): RefinedWeb-style
@@ -492,7 +469,7 @@ private[graft] final class SqlGen(
     * Output: `(id, text)`, row-preserving (empty string for a fully
     * deduplicated document), exactly the plan path's.
     */
-  private def applyDedupLines(prev: Stage, text: String, id: String): Stage = {
+  private def dedupLines(prev: Stage, text: String, id: String): String = {
     val fragArr = sqlOf(split(graft.ops.TextOps.normalize(col(text)), "\\. "))
     val frags = newStage(
       s"SELECT __graft_ln_id, __graft_ln_pos, __graft_ln_frag FROM (" +
@@ -508,11 +485,10 @@ private[graft] final class SqlGen(
       s"SELECT __graft_ln_id, array_join(transform(array_sort(" +
         s"collect_list(struct(__graft_ln_pos, __graft_ln_frag))), s -> s.__graft_ln_frag), '. ') " +
         s"AS __graft_ln_text FROM $kept GROUP BY __graft_ln_id")
-    val out = newStage(
+    newStage(
       s"SELECT p.${q(id)}, coalesce(r.__graft_ln_text, '') AS text " +
         s"FROM (SELECT ${q(id)} FROM ${prev.cte}) p " +
         s"LEFT JOIN $re r ON p.${q(id)} = r.__graft_ln_id")
-    Stage(out, graft.ops.Dedup.dedupLines(prev.df, text, id))
   }
 
   /** `| dedup kind=embed` as SQL text (round 16): sign-LSH
@@ -528,8 +504,8 @@ private[graft] final class SqlGen(
     * puts it — so the emitted text is bit-identical on every input,
     * degenerate vectors included (signature 0, NULL norm → no pairs).
     */
-  private def applyDedupEmbed(
-      prev: Stage, text: String, id: String, dim: Int, minCos: Double, planes: Int, bits: Int): Stage = {
+  private def dedupEmbed(
+      prev: Stage, text: String, id: String, dim: Int, minCos: Double, planes: Int, bits: Int): String = {
     val nBands = planes / bits
     val sg = newStage(
       s"SELECT ${q(id)} AS __graft_eb_id, CAST(${q(text)} AS ARRAY<DOUBLE>) AS __v FROM ${prev.cte}")
@@ -553,14 +529,8 @@ private[graft] final class SqlGen(
       s"SELECT DISTINCT b.__graft_eb_id AS __graft_eb_drop FROM $br a JOIN $br b " +
         s"ON a.__bi = b.__bi AND a.__bk = b.__bk AND a.__graft_eb_id < b.__graft_eb_id " +
         s"AND ($fc) = a.__bi AND $cos >= $minCos")
-    val out = newStage(
+    newStage(
       s"SELECT e.* FROM ${prev.cte} e LEFT ANTI JOIN $drops d ON e.${q(id)} = d.__graft_eb_drop")
-    val mirror = graft.ops.NearDup.dropNearDuplicates(
-      prev.df,
-      graft.ops.NearDup.embedCosinePairs(prev.df, text, id, dim,
-        planes = planes, bandBits = bits, minCos = minCos),
-      id)
-    Stage(out, mirror)
   }
 
   /** `| dedup kind=semantic` as SQL text (round 16): SemDeDup's
@@ -573,8 +543,8 @@ private[graft] final class SqlGen(
     * within-cell exact-cosine self-join with the threshold beside the
     * cell equality, and the greater pair member dropped.
     */
-  private def applyDedupSemantic(
-      prev: Stage, text: String, id: String, minCos: Double, nCells: Int): Stage = {
+  private def dedupSemantic(
+      prev: Stage, text: String, id: String, minCos: Double, nCells: Int): String = {
     val c0 = newStage(
       s"SELECT ${q(id)} AS __graft_sd_id, transform(${q(text)}, x -> CAST(x AS DOUBLE)) AS __v " +
         s"FROM ${prev.cte}")
@@ -595,10 +565,8 @@ private[graft] final class SqlGen(
       s"SELECT DISTINCT b.__graft_sd_id AS __graft_sd_drop FROM $base a JOIN $base b " +
         s"ON a.__cell = b.__cell AND a.__graft_sd_id < b.__graft_sd_id " +
         s"AND graft_dot(a.__v, b.__v) / (a.__nrm * b.__nrm) >= $minCos")
-    val out = newStage(
+    newStage(
       s"SELECT e.* FROM ${prev.cte} e LEFT ANTI JOIN $drops d ON e.${q(id)} = d.__graft_sd_drop")
-    val mirror = graft.ops.SemDedup.deduplicate(prev.df, text, id, nCells = nCells, minCos = minCos)
-    Stage(out, mirror)
   }
 
   /** `| pack <budget> tokens by id, idx` as SQL text (round 16):
@@ -608,11 +576,10 @@ private[graft] final class SqlGen(
     * Columns (`Packing.shardOf/packStart/seqIdOf` — one definition,
     * two spellings).
     */
-  private def applyPack(prev: Stage, op: PackOp): Stage = {
+  private def pack(prev: Stage, op: PackOp): String = {
     val ExtOptions.Pack(budget, nShards) =
       ExtOptions.pack(op.opts, rowCount(op.budget), op.budget.span, op.span, fail)
     val (tk, id, idx) = (op.tokensCol.name, op.idCol.name, op.idxCol.name)
-    ExtOptions.columns("pack", prev.df, Seq(tk, id, idx), op.span, fail)
     val shardSql = sqlOf(graft.ops.Packing.shardOf(col(id), nShards))
     val startSql = sqlOf(graft.ops.Packing.packStart(
       col(tk), col("__graft_pk_shard"), col(id), col(idx)))
@@ -621,8 +588,7 @@ private[graft] final class SqlGen(
     val s1 = newStage(s"SELECT *, $shardSql AS __graft_pk_shard FROM ${prev.cte}")
     val s2 = newStage(s"SELECT *, $startSql AS __graft_pk_start FROM $s1")
     val cols = prev.df.columns.toSeq.map(q).mkString(", ")
-    val out = newStage(s"SELECT $cols, $seqSql AS seq_id FROM $s2")
-    Stage(out, graft.ops.Packing.packSequences(prev.df, id, idx, tk, budget, nShards))
+    newStage(s"SELECT $cols, $seqSql AS seq_id FROM $s2")
   }
 
   /** `| decontam against (Evals) text by id` as SQL text (round 16):
@@ -637,12 +603,9 @@ private[graft] final class SqlGen(
     * the emitted text is the exact form — the same stance as the asof
     * emission's skew-bucket split.
     */
-  private def applyDecontam(prev: Stage, op: DecontamOp): Stage = {
-    val ExtOptions.Decontam(minHits, n) = ExtOptions.decontam(op.opts, op.span, fail)
+  private def decontam(prev: Stage, op: DecontamOp, o: ExtOptions.Decontam, evalStage: Stage): String = {
+    val ExtOptions.Decontam(minHits, n) = o
     val (text, id) = (op.textCol.name, op.idCol.name)
-    val evalStage = foldOps(sourceStage(op.eval.source), op.eval.operators)
-    ExtOptions.columns("decontam", prev.df, Seq(text, id), op.span, fail)
-    ExtOptions.columns("decontam", evalStage.df, Seq(text, id), op.span, fail, " on the eval side")
     val shingleArr = s"graft_shingle_hashes(${sqlOf(graft.ops.NearDup.tokens(col(text)))}, $n)"
     val ev = newStage(
       s"SELECT DISTINCT __graft_dc_h, __graft_dc_eid FROM (" +
@@ -657,11 +620,8 @@ private[graft] final class SqlGen(
         s"count(DISTINCT c.__graft_dc_h) AS __graft_dc_nh " +
         s"FROM $cs c JOIN $ev e ON c.__graft_dc_h = e.__graft_dc_h " +
         s"GROUP BY c.__graft_dc_id) WHERE __graft_dc_nh >= $minHits")
-    val out = newStage(
+    newStage(
       s"SELECT c.* FROM ${prev.cte} c LEFT ANTI JOIN $bad b ON c.${q(id)} = b.__graft_dc_id")
-    val mirror = graft.ops.Decontam.decontaminate(
-      prev.df, evalStage.df, text, id, minHits = minHits, shingleN = n)
-    Stage(out, mirror)
   }
 
   /** `| join kind=asof` as SQL text (round 15): the UNION + KEYED
@@ -669,11 +629,16 @@ private[graft] final class SqlGen(
     * minus the hot-key time-bucket split (a PHYSICAL skew lever the
     * SQL dialect cannot carry; results are bit-identical by
     * construction — AsOf.scala's bucket passes reproduce the exact
-    * single-window order). Validation is shared with the DataFrame
-    * path via [[ExtJoins]].
+    * single-window order). The key/timestamp split is the DataFrame
+    * path's ([[ExtJoins]]), and the output column ORDER is its frame's
+    * (the bucketed join puts keys first).
     */
   private def applyAsofJoin(prev: Stage, op: AsofJoinOp): Stage = {
-    val right = foldOps(sourceStage(op.right.source), op.right.operators)
+    val right = fold(op.right)
+    emit(prev, op, Some(right))(df => asofJoin(prev, op, right, df.columns.toSeq))
+  }
+
+  private def asofJoin(prev: Stage, op: AsofJoinOp, right: Stage, outCols: Seq[String]): String = {
     val p = ExtJoins.asofParts(
       prev.df.columns.toSeq, right.df.columns.toSeq, op.onCols, op.span, fail)
     val tolMs = op.tolerance.map(o => exprs.parseDurationMillis(o.value, o.valueSpan))
@@ -700,14 +665,7 @@ private[graft] final class SqlGen(
       " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     val f = newStage(
       s"SELECT ${leftCols.map(q).mkString(", ")}, last(__vals, true) OVER ($win) AS __vals, __side FROM $u")
-    // schema mirror: the library op on the (never-executed) schema
-    // frames — its column ORDER is the plan path's output order (the
-    // bucketed join puts keys first), and the final select follows it
-    val mirror = tolMs match {
-      case None     => graft.ops.AsOf.joinAsOf(prev.df, right.df, p.keys, p.ts, p.valueCols)
-      case Some(ms) => graft.ops.AsOf.joinAsOfTolerant(prev.df, right.df, p.keys, p.ts, p.valueCols, s"$ms milliseconds")
-    }
-    val items = mirror.columns.toSeq.map { c =>
+    val items = outCols.map { c =>
       if (!p.valueCols.contains(c)) q(c)
       else {
         val v = s"__vals.${q(c)}"
@@ -719,39 +677,25 @@ private[graft] final class SqlGen(
         }
       }
     }
-    val out = newStage(s"SELECT ${items.mkString(", ")} FROM $f WHERE __side = 1")
-    Stage(out, mirror)
+    newStage(s"SELECT ${items.mkString(", ")} FROM $f WHERE __side = 1")
   }
 
   /** `| ann`: the query sub-pipeline folds into its own CTE chain, the
-    * column checks ([[ExtJoins.annCheck]]) and option resolution
-    * ([[ExtOptions.ann]]) are the plan path's, then each kind emits;
-    * the adaptive lsh/ivf sizing is rejected.
+    * column checks and option resolution are the plan path's
+    * (`Compiler.annOptions`), then each kind emits; the adaptive lsh/ivf
+    * sizing is rejected.
     */
   private def applyAnn(prev: Stage, op: AnnOp): Stage = {
     import ExtOptions.{Ann, Geometry}
-    val right = foldOps(sourceStage(op.queries.source), op.queries.operators)
-    ExtJoins.annCheck(prev.df.columns.toSeq, right.df.columns.toSeq, op.vecCol, op.idCol, fail)
-    ExtOptions.ann(op.kind, op.opts, op.span, fail) match {
-      case Ann.Brute(k)                          => applyAnnBrute(prev, op, right, k)
-      case Ann.Lsh(k, dim, Geometry.Fixed(p, b)) => applyAnnLsh(prev, op, right, k, dim, p, b)
-      case Ann.Ivf(k, dim, Some(cells), probes)  => applyAnnIvf(prev, op, right, k, dim, cells, probes)
+    val right = fold(op.queries)
+    val render: () => String = compiler.annOptions(prev.df, right.df, op) match {
+      case Ann.Brute(k)                          => () => annBrute(prev, op, right, k)
+      case Ann.Lsh(k, dim, Geometry.Fixed(p, b)) => () => annLsh(prev, op, right, k, dim, p, b)
+      case Ann.Ivf(k, dim, Some(cells), probes)  => () => annIvf(prev, op, right, k, dim, cells, probes)
       case _: Ann.Lsh => adaptiveRejected(s"ann kind=${op.kind}", fixedGeometry, op.span)
       case _: Ann.Ivf => adaptiveRejected(s"ann kind=${op.kind}", fixedIndex, op.span)
     }
-  }
-
-  private val AnnVec = "__graft_ann_vec"
-  private val AnnId = "__graft_ann_id"
-
-  /** Schema mirror of an ann emission: exactly the DataFrame
-    * compiler's construction (both sides aliased to the `__graft_ann_*`
-    * names, the id restored on the output).
-    */
-  private def annMirror(prev: Stage, op: AnnOp, right: Stage)(
-      lib: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    def safe(df: DataFrame) = df.select(col(op.vecCol.name).as(AnnVec), col(op.idCol.name).as(AnnId))
-    lib(safe(prev.df), safe(right.df)).withColumnRenamed(AnnId, op.idCol.name)
+    emit(prev, op, Some(right))(_ => render())
   }
 
   /** `| ann kind=brute` as SQL text (round 15): exact cosine top-k —
@@ -764,7 +708,7 @@ private[graft] final class SqlGen(
     * `GraftExtensions.register(spark)`), the same way the reference's
     * emitted SQL assumes its engine's function library.
     */
-  private def applyAnnBrute(prev: Stage, op: AnnOp, right: Stage, k: Int): Stage = {
+  private def annBrute(prev: Stage, op: AnnOp, right: Stage, k: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val c = newStage(
       s"SELECT $idQ AS __graft_ann_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __v FROM ${prev.cte}")
@@ -778,13 +722,7 @@ private[graft] final class SqlGen(
       s"SELECT /*+ BROADCAST(q) */ q.query_id, c.__graft_ann_id, " +
         s"graft_dot(c.__v, q.__qv) / (c.__nrm * q.__qn) AS cos_sim " +
         s"FROM $cn c JOIN $qn q ON c.__graft_ann_id != q.query_id")
-    val ranked = newStage(
-      s"SELECT query_id, __graft_ann_id AS $idQ, cos_sim, rank FROM (" +
-        s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
-        s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
-        s") WHERE rank <= $k")
-    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
-      graft.ops.Ann.bruteTopK(corpus, queries, AnnVec, AnnId, k = k)))
+    rankedTopK(idQ, scored, k)
   }
 
   /** `| ann kind=lsh` as SQL text (round 15): the banded sign-LSH
@@ -802,8 +740,8 @@ private[graft] final class SqlGen(
     * spelling. Like the brute emission, the host session must carry
     * graft's function registry (GraftExtensions).
     */
-  private def applyAnnLsh(
-      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, planes: Int, bits: Int): Stage = {
+  private def annLsh(
+      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, planes: Int, bits: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val nBands = planes / bits
     // same cast as NearDup.signSigs (array-level cast, not transform)
@@ -840,13 +778,7 @@ private[graft] final class SqlGen(
         s"graft_dot(c.__v, q.__qv) / (c.__nrm * q.__qn) AS cos_sim " +
         s"FROM $cand cand JOIN $cn c ON cand.__graft_ann_id = c.__graft_ann_id " +
         s"JOIN $qn q ON cand.query_id = q.query_id")
-    val ranked = newStage(
-      s"SELECT query_id, __graft_ann_id AS $idQ, cos_sim, rank FROM (" +
-        s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
-        s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
-        s") WHERE rank <= $k")
-    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
-      graft.ops.Ann.lshTopK(corpus, queries, AnnVec, AnnId, dim, k, planes = planes, bandBits = bits)))
+    rankedTopK(idQ, scored, k)
   }
 
   /** `| ann kind=ivf` as SQL text (round 16): the hash-seeded IVF
@@ -864,22 +796,22 @@ private[graft] final class SqlGen(
     *     [[graft.functions.ArgmaxDot]], with the cell-ordered seed set
     *     arriving as a scalar subquery instead of a plan-time constant
     *     (stride derived from the seed vectors, like the plan path);
-    *   - query probes mirror `Ann.cellRanks` stage for stage (explode
+    *   - query probes follow `Ann.cellRanks` stage for stage (explode
     *     ⋈ seed components → per-(query, cell) sum → rank ≤ probes);
     *     the grouped double sum is left-fold exact here for the same
     *     reason it is in the plan path — each query row's exploded
     *     components live in one partition, and query ids are unique;
     *   - rescore + top-k are the brute emission's tail (`graft_dot`).
     * Like the other ann emissions the host session must carry graft's
-    * function registry. NOTE: building the schema mirror calls the
-    * library op, which collects the (bounded, ≤cells·dim) seed matrix —
-    * compileToSql on an ivf pipeline therefore runs one small Spark
-    * job, exactly as Pql.query on the same text does.
+    * function registry. The stage's frame is the Compiler's, whose ivf
+    * collects the (bounded, ≤cells·dim) seed matrix — compileToSql on
+    * an ivf pipeline therefore runs the same small Spark job as
+    * Pql.query on the same text.
     */
-  private def applyAnnIvf(
-      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, nCells: Int, nProbe: Int): Stage = {
+  private def annIvf(
+      prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, nCells: Int, nProbe: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
-    // prep mirror: transform-cast vectors + fold norms (Ann.prep)
+    // Ann.prep's form: transform-cast vectors + fold norms
     val c = newStage(
       s"SELECT $idQ AS __graft_ann_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __v FROM ${prev.cte}")
     val cn = newStage(
@@ -903,7 +835,7 @@ private[graft] final class SqlGen(
       s"SELECT $idQ AS query_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __qv FROM ${right.cte}")
     val qn = newStage(
       s"SELECT query_id, __qv, sqrt(graft_dot(__qv, __qv)) AS __qn FROM $qv")
-    // cellRanks mirror: component explode ⋈ seed components → sum → rank
+    // Ann.cellRanks' form: component explode ⋈ seed components → sum → rank
     val qx = newStage(
       s"SELECT query_id, __j, __x FROM $qv LATERAL VIEW posexplode(__qv) __p AS __j, __x")
     val ctc = newStage(
@@ -922,14 +854,18 @@ private[graft] final class SqlGen(
         s"graft_dot(c.__v, q.__qv) / (c.__nrm * q.__qn) AS cos_sim " +
         s"FROM $cand cand JOIN $cn c ON cand.__graft_ann_id = c.__graft_ann_id " +
         s"JOIN $qn q ON cand.query_id = q.query_id")
-    val ranked = newStage(
+    rankedTopK(idQ, scored, k)
+  }
+
+  /** The ann emissions' shared tail: per query, the `k` best-scored
+    * corpus ids (ties broken by id), the id restored to its own name.
+    */
+  private def rankedTopK(idQ: String, scored: String, k: Int): String =
+    newStage(
       s"SELECT query_id, __graft_ann_id AS $idQ, cos_sim, rank FROM (" +
         s"SELECT query_id, __graft_ann_id, cos_sim, row_number() OVER (" +
         s"PARTITION BY query_id ORDER BY cos_sim DESC, __graft_ann_id ASC) AS rank FROM $scored" +
         s") WHERE rank <= $k")
-    Stage(ranked, annMirror(prev, op, right)((corpus, queries) =>
-      graft.ops.Ann.ivfTopKSeeded(corpus, queries, AnnVec, AnnId, dim, k, nCells = nCells, nProbe = nProbe)))
-  }
 
   /** `| join kind=range` as SQL text (round 15): the BUCKETED
     * EQUI-JOIN form — interval rows exploded to the buckets they
@@ -939,16 +875,13 @@ private[graft] final class SqlGen(
     * broadcast-nested-loop).
     */
   private def applyRangeJoin(prev: Stage, op: RangeJoinOp): Stage = {
-    val right = foldOps(sourceStage(op.right.source), op.right.operators)
+    val right = fold(op.right)
     val rp = ExtJoins.rangeParts(
       prev.df.columns.toSeq, right.df.columns.toSeq, op.onCols, op.span, fail)
-    val micros = op.bucket match {
-      case Some(o) => exprs.parseDurationMillis(o.value, o.valueSpan) * 1000L
-      case None    => 3600000000L
-    }
+    val micros = compiler.bucketMicros(op.bucket)
     // SQL text cannot express a duplicate output name — the DataFrame
     // path tolerates one (out-of-contract input), the text backend
-    // rejects it here
+    // rejects it here, before the stage's frame is built
     val dupOut = prev.df.columns.toSeq.filterNot(rp.keys.contains)
       .intersect(right.df.columns.toSeq.filterNot(rp.keys.contains))
     if (dupOut.nonEmpty)
@@ -963,83 +896,39 @@ private[graft] final class SqlGen(
       s"SELECT *, explode(sequence(${fdiv(s"unix_micros(${q(rp.start.name)})")}, " +
         s"${fdiv(s"unix_micros(${q(rp.end.name)}) - 1")})) AS __bucket" +
         s" FROM ${right.cte} WHERE ${q(rp.end.name)} > ${q(rp.start.name)}")
-    val mirror = graft.ops.RangeJoin.pointInInterval(
-      prev.df, right.df, rp.keys, rp.ts.name, rp.start.name, rp.end.name, micros)
-    val items = mirror.columns.map(q).mkString(", ")
     val usingCols = (rp.keys :+ "__bucket").map(q).mkString(", ")
-    val out = newStage(
-      s"SELECT $items FROM $lb JOIN $rb USING ($usingCols)" +
-        s" WHERE ${q(rp.ts.name)} >= ${q(rp.start.name)} AND ${q(rp.ts.name)} < ${q(rp.end.name)}")
-    Stage(out, mirror)
+    emit(prev, op, Some(right)) { df =>
+      newStage(
+        s"SELECT ${df.columns.map(q).mkString(", ")} FROM $lb JOIN $rb USING ($usingCols)" +
+          s" WHERE ${q(rp.ts.name)} >= ${q(rp.start.name)} AND ${q(rp.ts.name)} < ${q(rp.end.name)}")
+    }
   }
 
+  /** `| join`: both sides under this join's own aliases (`__l<n>`,
+    * `__r<n>`, numbered before the right side folds, so a join nested
+    * in it takes the next number); the condition is the Compiler's, and
+    * the output names are its frame's (right-side collisions renamed
+    * `$right.<name>`).
+    */
   private def applyJoin(prev: Stage, j: JoinOp): Stage = {
     joinSeq += 1
     val (la, ra) = (s"__l$joinSeq", s"__r$joinSeq")
-    val leftStage =
-      if (j.flavor == "innerunique")
-        Stage(newStage(s"SELECT DISTINCT * FROM ${prev.cte}"), prev.df.dropDuplicates())
-      else prev
-    val right = foldOps(sourceStage(j.right.source), j.right.operators)
-    val joinKw = j.flavor match {
-      case "inner" | "innerunique" => "JOIN"
-      case "leftouter"             => "LEFT JOIN"
-      case other                   => fail(s"unhandled join type \"$other\"", j.span)
+    val left = if (j.flavor == "innerunique") newStage(s"SELECT DISTINCT * FROM ${prev.cte}") else prev.cte
+    val right = fold(j.right)
+    emit(prev, j, Some(right)) { df =>
+      val ctx = JoinCtx(prev.df, right.df, la, ra)
+      val sides = prev.df.columns.map(ctx.leftCol) ++ right.df.columns.map(ctx.rightCol)
+      val items = sides.zip(df.columns).map { case (c, n) => s"${sqlOf(c)} AS ${q(n)}" }
+      val joinKw = if (j.flavor == "leftouter") "LEFT JOIN" else "JOIN"
+      newStage(
+        s"SELECT ${items.mkString(", ")} FROM $left AS $la $joinKw ${right.cte} AS $ra" +
+          s" ON ${sqlOf(compiler.joinCondition(j, ctx))}")
     }
-    val ctx = JoinCtx(leftStage.df, right.df, la, ra)
-    val joinEnv = env.copy(join = Some(ctx))
-    val condCols = j.conditions.map(c => joinCondition(c, joinEnv, ctx))
-    val cond = condCols.reduceOption(_ && _).getOrElse(lit(true))
-
-    val taken = leftStage.df.columns.toSet
-    val items = leftStage.df.columns.map(n => s"${sqlOf(ctx.leftCol(n))} AS ${q(n)}") ++
-      right.df.columns.map { n =>
-        val out = if (taken(n)) s"$$right.$n" else n
-        s"${sqlOf(ctx.rightCol(n))} AS ${q(out)}"
-      }
-    val sqlText =
-      s"SELECT ${items.mkString(", ")} FROM ${leftStage.cte} AS $la $joinKw ${right.cte} AS $ra" +
-        s" ON ${sqlOf(cond)}"
-
-    // schema frame: mirror the DataFrame compiler's output columns
-    val joined = leftStage.df.as(la).join(right.df.as(ra), cond, if (joinKw == "JOIN") "inner" else "left")
-    val outCols = leftStage.df.columns.map(n => ctx.leftCol(n).as(n)) ++
-      right.df.columns.map(n => ctx.rightCol(n).as(if (taken(n)) s"$$right.$n" else n))
-    Stage(newStage(sqlText), joined.select(outCols.toIndexedSeq: _*))
   }
 
-  private def joinCondition(c: Expr, joinEnv: ExprEnv, ctx: JoinCtx): Column = c match {
-    case QualifiedIdent(List(p))
-        if !p.quoted && !scope.contains(p.name) &&
-          p.name != "true" && p.name != "false" && p.name != "null" =>
-      ctx.leftCol(p.name) === ctx.rightCol(p.name)
-    case other => compile(other, joinEnv)
-  }
-
-  private def computedItem(c: ComputedColumn): (String, Column) = {
-    val name = c.name.map(_.name).getOrElse(sourceText(c.x.span))
-    val column = compile(c.x, env)
-    s"${sqlOf(column)} AS ${q(name)}" -> column.as(name)
-  }
-
-  private def renderValue(e: Expr): String = e match {
-    case BasicLit(_, v, _)     => v
-    case QualifiedIdent(parts) => parts.head.name
-    case other                 => sourceText(other.span)
-  }
-
-  private def rowCount(e: Expr): Int = exprs.rowCount(e, letAsts)
+  private def computedItem(c: ComputedColumn): String =
+    s"${sqlOf(column(c.x))} AS ${q(compiler.columnName(c))}"
 
   private def orderText(terms: List[SortTerm]): String =
     terms.map(t => sqlOf(sortColumn(t))).mkString(", ")
-
-  private def sortColumn(t: SortTerm): Column = {
-    val c = compile(t.x, env)
-    (t.asc, t.nullsFirst) match {
-      case (true, true)   => c.asc_nulls_first
-      case (true, false)  => c.asc_nulls_last
-      case (false, true)  => c.desc_nulls_first
-      case (false, false) => c.desc_nulls_last
-    }
-  }
 }

@@ -37,14 +37,6 @@ class OpsSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Spark jobs `body` submits, counted by job group. */
-  private def jobsFor(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try body finally sc.clearJobGroup()
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set to
     * `bytes`, then restores the session's previous setting.
     */

@@ -34,8 +34,8 @@ import graft.parser.{Parser, PqlParseException, TabularExpr}
   *    operators follow its transpiler model — resolution is the engine's job,
   *    so both paths must still reject with the engine's
   *    AnalysisException (both at COMPILE time: the plan path analyzes
-  *    eagerly, and SqlGen tracks stage schemas through real
-  *    DataFrames), never silently succeed.
+  *    eagerly, and SqlGen renders its text over the same compiler's
+  *    stage DataFrames), never silently succeed.
   *
   * Seed count: GRAFT_REJECTFUZZ_N (default 120 — smoke sweep so the
   * full `sbt test` fits the driver's verify window; set 600 for the
@@ -164,10 +164,11 @@ class RejectFuzzSpec extends SparkTestBase {
 
   private def checkDeferred(pql: String): Option[String] =
     rejectedByEngine("plan")(Pql.query(spark, pql, catalog)).orElse {
-      // the text backend tracks stage schemas through real DataFrames,
-      // so engine-owned resolution errors surface as AnalysisException
-      // at compile-to-text time too (same timing as the plan path); if
-      // a form ever compiles to text anyway, executing it must reject
+      // the text backend builds each stage's DataFrame with the plan
+      // path's compiler, so engine-owned resolution errors surface as
+      // AnalysisException at compile-to-text time too (same timing as
+      // the plan path); if a form ever compiles to text anyway,
+      // executing it must reject
       val sql =
         try Pql.compileToSql(pql, catalog)
         catch {

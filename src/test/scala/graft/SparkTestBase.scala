@@ -9,4 +9,15 @@ object SparkTestBase {
 
 trait SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
+
+  /** Spark jobs `body` submits, counted by job group, with the listener
+    * bus drained so every job is seen.
+    */
+  def jobsFor(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }

@@ -513,6 +513,65 @@ class SqlCompileSpec extends SparkTestBase {
       Seq("doc_id", "chunk_idx", "n_tokens", "seq_id"))
   }
 
+  test("compileToSql runs exactly the plan-time jobs of building Pql.query") {
+    // a sub-pipeline built twice would run its bake twice: the decontam
+    // eval model, the fixed-cells ivf and semantic seed matrices
+    graft.functions.GraftExtensions.register(spark)
+    val session = spark
+    import session.implicits._
+    val vecs = (0 until 40).map { i =>
+      val a = i * math.Pi / 20
+      (i.toLong, Array(math.cos(a), math.sin(a)))
+    }.toDF("vid", "emb")
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a completely different document about spark plans"),
+      (3L, "the quick brown fox jumps again today")
+    ).toDF("doc_id", "text")
+    val evals = Seq((10L, "the quick brown fox jumps over everything")).toDF("doc_id", "text")
+    val golden = PqlCorpus.goldenDirs.head
+    val goldenSrc = Files.readString(new File(golden, "input.pql").toPath)
+    assert(tables.nonEmpty) // the fixture reads run their own jobs: load them first
+    def cat(name: String): DataFrame = name match {
+      case "VX" => vecs
+      case "DX" => docs
+      case "EX" => evals
+      case other => catalog(other)
+    }
+    val none = Map.empty[String, org.apache.spark.sql.Column]
+    val cases = Seq(
+      (goldenSrc, PqlCorpus.params(golden), false),
+      ("VX | ann kind=ivf k=3 dim=2 cells=4 probes=2 (VX | where vid % 10 == 0) on emb by vid", none, true),
+      ("VX | dedup kind=semantic cells=4 cos=0.8 emb by vid", none, true),
+      ("DX | decontam against (EX) text by doc_id", none, true),
+      ("DX | join (DX | decontam against (EX) text by doc_id) on doc_id", none, true))
+    for (((q, params, bakes), i) <- cases.zipWithIndex) {
+      val planJobs = jobsFor(s"sql-jobs-plan-$i")(Pql.query(spark, q, cat, params))
+      val textJobs = jobsFor(s"sql-jobs-text-$i")(Pql.compileToSql(q, cat, params))
+      info(s"$planJobs jobs: $q")
+      assert(textJobs == planJobs, s"compileToSql ran $textJobs jobs, Pql.query $planJobs: $q")
+      assert((planJobs > 0) == bakes, s"$planJobs jobs: $q")
+    }
+  }
+
+  test("48 chained where or extend stages give the plan path's rows through SQL text") {
+    // the CTE-per-stage text stops resolving from about 56 stages (the
+    // analyzer's 100-iteration Resolution batch); 48 is the floor a
+    // stage-folding backend must keep
+    val session = spark
+    import session.implicits._
+    val one = Seq((1, 2)).toDF("a", "b")
+    one.createOrReplaceTempView("ONE")
+    def cat(name: String): DataFrame = if (name == "ONE") one else sys.error(s"no fixture table $name")
+    for (q <- Seq(
+        "ONE" + " | where a > 0" * 48,
+        "ONE" + (1 to 48).map(i => s" | extend e$i = a + $i").mkString)) {
+      val sql = Pql.compileToSql(q, cat)
+      assert(multiset(spark.sql(sql)) == multiset(Pql.query(spark, q, cat)), q)
+      assert(spark.sql(sql).columns.toSeq == Pql.query(spark, q, cat).columns.toSeq, q)
+    }
+  }
+
   test("Walk visits every node and supports pruning") {
     import graft.parser._
     val stmts = Pql.parse(

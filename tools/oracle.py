@@ -39,7 +39,9 @@ dumps and oracle_sql.json), `fuzz` what graft.fuzz.DiffFuzz writes
 lines graft.HashGate prints, and `dumps` compares two Verify outputs
 (the determinism sweep across core counts). Each prints one line per
 entry and `<n> pass / <m> fail`, and exits 1 on any failure; a missing
-dump is a failure.
+dump is a failure. `fuzz` adds to that tally how many pipelines
+compared zero rows on both sides: for those only the column sets were
+checked.
 
 DuckDB settings come from the environment: DUCKDB_MEM (memory_limit,
 DuckDB's own default when unset), DUCKDB_SPILL (max_temp_directory_size,
@@ -216,8 +218,14 @@ def _attempt(check):
         return f"{type(e).__name__}: {e}"
 
 
-def check_oracles(con, dump_dir, oracles, tolerance=0.0, hashsum=False):
-    """Each entry's dump in dump_dir against its evaluated oracle SQL."""
+def _rows(con, rel):
+    return con.execute(f"SELECT count(*) FROM {rel}").fetchone()[0]
+
+
+def check_oracles(con, dump_dir, oracles, tolerance=0.0, hashsum=False, empty=None):
+    """Each entry's dump in dump_dir against its evaluated oracle SQL. When
+    `empty` is a set, the names of entries whose dump and oracle both hold
+    zero rows are added to it."""
     for n, (name, sql) in enumerate(sorted(oracles.items())):
         dump = Path(dump_dir) / f"{name}.parquet"
 
@@ -227,7 +235,10 @@ def check_oracles(con, dump_dir, oracles, tolerance=0.0, hashsum=False):
             if not dump.exists():
                 return "no dump"
             with evaluated(con, sql, n, stored=not hashsum) as want:
-                return verdict(con, _dump_view(con, dump), want, tolerance, hashsum)
+                got = _dump_view(con, dump)
+                if empty is not None and _rows(con, got) == _rows(con, want) == 0:
+                    empty.add(name)
+                return verdict(con, got, want, tolerance, hashsum)
         yield name, _attempt(check)
 
 
@@ -283,8 +294,9 @@ def check_hashgate(con, oracles, lines, only):
         yield name, _attempt(check)
 
 
-def report(results):
-    """Print one line per entry and the tally; the exit status."""
+def report(results, empty=None):
+    """Print one line per entry and the tally; the exit status. `empty`, filled
+    while `results` is read, adds the count of zero-row comparisons."""
     n_pass = n_fail = 0
     for name, why in results:
         if why is None:
@@ -293,11 +305,12 @@ def report(results):
         else:
             n_fail += 1
             print(f"[!!] {name}: FAIL {why[:300]}", flush=True)
-    print(f"\n{n_pass} pass / {n_fail} fail")
+    zero = "" if empty is None else f" / {len(empty)} compared zero rows on both sides"
+    print(f"\n{n_pass} pass / {n_fail} fail{zero}")
     return 1 if n_fail else 0
 
 
-def run(mode, args):
+def run(mode, args, empty=None):
     if mode in ("verify", "hashsum"):
         out, sf, only = args[0], args[1], set(args[2:])
         oracles = load_oracles(Path(out) / "oracle_sql.json")
@@ -306,7 +319,8 @@ def run(mode, args):
         return check_oracles(connect(sf), out, oracles, hashsum=mode == "hashsum")
     if mode == "fuzz":
         out, sf = args
-        return check_oracles(connect(sf), out, load_oracles(Path(out) / "fuzz_duck_sql.json"), FUZZ_TOLERANCE)
+        return check_oracles(connect(sf), out, load_oracles(Path(out) / "fuzz_duck_sql.json"), FUZZ_TOLERANCE,
+                             empty=empty)
     if mode == "hashgate":
         oracle_json, sf, lines, only = args[0], args[1], args[2], args[3:]
         return check_hashgate(connect(sf), load_oracles(oracle_json), Path(lines).read_text().splitlines(), only)
@@ -321,4 +335,5 @@ def run(mode, args):
 if __name__ == "__main__":
     if len(sys.argv) < 3:
         raise SystemExit(__doc__)
-    sys.exit(report(run(sys.argv[1], sys.argv[2:])))
+    zero_rows = set() if sys.argv[1] == "fuzz" else None
+    sys.exit(report(run(sys.argv[1], sys.argv[2:], zero_rows), zero_rows))

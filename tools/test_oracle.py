@@ -137,6 +137,26 @@ def test_integral_columns_stay_exact(mode, tmp_path):
     assert run(mode, rows(10 ** 12), rows(10 ** 12 + 1), tmp_path) is not None
 
 
+def test_fuzz_tally_counts_zero_row_comparisons(tmp_path, capsys):
+    con = oracle.connect()
+    con.execute("CREATE TABLE t_full AS " + rows(1, 2))
+    con.execute("CREATE TABLE t_none AS SELECT * FROM t_full WHERE x < 0")
+    for name, table in [("empty", "t_none"), ("full", "t_full"), ("half", "t_none")]:
+        con.execute(f"COPY {table} TO '{tmp_path}/{name}.parquet' (FORMAT PARQUET)")
+    oracles = {"empty": "SELECT * FROM t_none", "full": "SELECT * FROM t_full", "half": "SELECT * FROM t_full"}
+    empty = set()
+    status = oracle.report(oracle.check_oracles(con, tmp_path, oracles, oracle.FUZZ_TOLERANCE, empty=empty), empty)
+    # the count is added to the tally; the verdicts are unchanged: zero
+    # rows on both sides still pass, zero against two still fails
+    assert empty == {"empty"} and status == 1
+    assert capsys.readouterr().out.splitlines()[-1] == "2 pass / 1 fail / 1 compared zero rows on both sides"
+
+
+def test_tally_without_zero_row_count(capsys):
+    oracle.report([("e", None)])
+    assert capsys.readouterr().out.splitlines()[-1] == "1 pass / 0 fail"
+
+
 @pytest.mark.parametrize("mode", MODES)
 def test_missing_dump_fails(mode, tmp_path):
     assert "no dump" in run(mode, rows(1), rows(1), tmp_path, write_got=False)
