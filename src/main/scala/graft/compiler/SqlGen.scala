@@ -546,7 +546,7 @@ private[graft] final class SqlGen(
   private def dedupSemantic(
       prev: Stage, text: String, id: String, minCos: Double, nCells: Int): String = {
     val c0 = newStage(
-      s"SELECT ${q(id)} AS __graft_sd_id, transform(${q(text)}, x -> CAST(x AS DOUBLE)) AS __v " +
+      s"SELECT ${q(id)} AS __graft_sd_id, CAST(${q(text)} AS ARRAY<DOUBLE>) AS __v " +
         s"FROM ${prev.cte}")
     val h32 = sqlOf(graft.ops.NearDup.hash32(col("__graft_sd_id").cast("string")))
     val sd = newStage(
@@ -711,11 +711,11 @@ private[graft] final class SqlGen(
   private def annBrute(prev: Stage, op: AnnOp, right: Stage, k: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val c = newStage(
-      s"SELECT $idQ AS __graft_ann_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __v FROM ${prev.cte}")
+      s"SELECT $idQ AS __graft_ann_id, CAST($vecQ AS ARRAY<DOUBLE>) AS __v FROM ${prev.cte}")
     val cn = newStage(
       s"SELECT __graft_ann_id, __v, sqrt(graft_dot(__v, __v)) AS __nrm FROM $c")
     val qv = newStage(
-      s"SELECT $idQ AS query_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __qv FROM ${right.cte}")
+      s"SELECT $idQ AS query_id, CAST($vecQ AS ARRAY<DOUBLE>) AS __qv FROM ${right.cte}")
     val qn = newStage(
       s"SELECT query_id, __qv, sqrt(graft_dot(__qv, __qv)) AS __qn FROM $qv")
     val scored = newStage(
@@ -744,7 +744,7 @@ private[graft] final class SqlGen(
       prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, planes: Int, bits: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
     val nBands = planes / bits
-    // same cast as NearDup.signSigs (array-level cast, not transform)
+    // same cast as NearDup.doubles
     val c = newStage(
       s"SELECT $idQ AS __graft_ann_id, CAST($vecQ AS ARRAY<DOUBLE>) AS __v FROM ${prev.cte}")
     val cn = newStage(
@@ -811,9 +811,9 @@ private[graft] final class SqlGen(
   private def annIvf(
       prev: Stage, op: AnnOp, right: Stage, k: Int, dim: Int, nCells: Int, nProbe: Int): String = {
     val (vecQ, idQ) = (q(op.vecCol.name), q(op.idCol.name))
-    // Ann.prep's form: transform-cast vectors + fold norms
+    // Ann.prep's form: cast vectors + fold norms
     val c = newStage(
-      s"SELECT $idQ AS __graft_ann_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __v FROM ${prev.cte}")
+      s"SELECT $idQ AS __graft_ann_id, CAST($vecQ AS ARRAY<DOUBLE>) AS __v FROM ${prev.cte}")
     val cn = newStage(
       s"SELECT __graft_ann_id, __v, sqrt(graft_dot(__v, __v)) AS __nrm FROM $c")
     val h32 = sqlOf(graft.ops.NearDup.hash32(col("__graft_ann_id").cast("string")))
@@ -832,7 +832,7 @@ private[graft] final class SqlGen(
         s"graft_argmax_cell(CAST($vecQ AS ARRAY<DOUBLE>), $mat) AS __cell FROM ${prev.cte}" +
         s") WHERE __cell IS NOT NULL")
     val qv = newStage(
-      s"SELECT $idQ AS query_id, transform($vecQ, x -> CAST(x AS DOUBLE)) AS __qv FROM ${right.cte}")
+      s"SELECT $idQ AS query_id, CAST($vecQ AS ARRAY<DOUBLE>) AS __qv FROM ${right.cte}")
     val qn = newStage(
       s"SELECT query_id, __qv, sqrt(graft_dot(__qv, __qv)) AS __qn FROM $qv")
     // Ann.cellRanks' form: component explode ⋈ seed components → sum → rank

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -112,7 +112,7 @@ object SubwordCounts {
       }
       w += 1
     }
-    new GenericArrayData(Array(nSub, nOov))
+    UnsafeArrayData.fromPrimitiveArray(Array(nSub, nOov))
   }
 
   def subwordCounts(tokens: Column, vocab: Seq[String] = DefaultVocab): Column =

@@ -108,7 +108,7 @@ object ShingleHashes {
         if (t != null) sb.append(t.toString)
         i += 1
       }
-      new GenericArrayData(Array(hash32(sb.toString.getBytes("UTF-8"))))
+      UnsafeArrayData.fromPrimitiveArray(Array(hash32(sb.toString.getBytes("UTF-8"))))
     } else {
       val hw = new Array[Long](len)
       var i = 0
@@ -139,7 +139,7 @@ object ShingleHashes {
           i += 1
         }
       }
-      new GenericArrayData(out)
+      UnsafeArrayData.fromPrimitiveArray(out)
     }
   }
 }
@@ -317,7 +317,7 @@ object MinhashSig {
       sig(j) = m
       j += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   /** Column-side entry point. */

@@ -3,9 +3,9 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -82,7 +82,7 @@ object ClassifierAcc {
       }
       i += 1
     }
-    new GenericArrayData(Array(acc, nTok))
+    UnsafeArrayData.fromPrimitiveArray(Array(acc, nTok))
   }
 
   /** Column-side entry point. */
@@ -147,7 +147,7 @@ object LmBigramStats {
   /** `[n_bigrams, n_hits, model_mass]`. Called from generated code. */
   def compute(tokens: ArrayData, mh: Array[Long], mc: Array[Long]): ArrayData = {
     if (tokens.numElements() < 2)
-      return new GenericArrayData(Array(0L, 0L, 0L))
+      return UnsafeArrayData.fromPrimitiveArray(Array(0L, 0L, 0L))
     val hs = ShingleHashes.compute(tokens, 2)
     val n = hs.numElements()
     var hits = 0L
@@ -158,7 +158,7 @@ object LmBigramStats {
       if (idx >= 0) { hits += 1L; mass += mc(idx) }
       i += 1
     }
-    new GenericArrayData(Array(n.toLong, hits, mass))
+    UnsafeArrayData.fromPrimitiveArray(Array(n.toLong, hits, mass))
   }
 
   /** Column-side entry point. */

@@ -26,11 +26,11 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Ann {
 
-  import NearDup.{dot, signSigs}
+  import NearDup.{dot, doubles, signSigs}
 
   /** Corpus rows as (id, v, nrm) with double vectors. */
   private def prep(df: DataFrame, vecCol: String, idCol: String): DataFrame =
-    df.select(col(idCol), transform(col(vecCol), x => x.cast("double")).as("v"))
+    df.select(col(idCol), doubles(col(vecCol)).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
   /** Exact brute-force cosine top-k: every corpus row is scored against
@@ -299,11 +299,11 @@ object Ann {
     // TopCellsDot mirrors the window form's ordering exactly,
     // including the all-null-SUM and NaN ranks).
     val corpusCells = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v0"))
+      .select(col(idCol), doubles(col(vecCol)).as("v0"))
       .select(col(idCol), graft.functions.ArgmaxDot(col("v0"), centroidMatrix, matDim).as("c"))
       .filter(col("c").isNotNull)
     val queryCells = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("v0"))
+      .select(col(idCol).as("query_id"), doubles(col(vecCol)).as("v0"))
       .select(col("query_id"),
         explode(graft.functions.TopCellsDot(col("v0"), centroidMatrix, matDim, nProbe)).as("c"))
     val cand = corpusCells

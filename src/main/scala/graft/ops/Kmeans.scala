@@ -279,7 +279,7 @@ object Kmeans {
       iters: Int = 2
   ): DataFrame = {
     require(nCells >= 1 && iters >= 0, s"need nCells >= 1, iters >= 0, got $nCells/$iters")
-    val base = df.select(col(idCol), transform(col(vecCol), x => x.cast("double")).as("v"))
+    val base = df.select(col(idCol), NearDup.doubles(col(vecCol)).as("v"))
     val cents = driverFit(df, vecCol, idCol, nCells, iters).getOrElse {
       var cs = collectSeeds(base, idCol, nCells)
       for (_ <- 0 until iters)

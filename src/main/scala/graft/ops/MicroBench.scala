@@ -18,8 +18,8 @@ object MicroBench {
     """usage: graft.ops.MicroBench <mode> [args]
       |  entry <name>...           one timed run per entry (2 warm-ups), sentinel-bracketed
       |  entryn <reps> <name>...   <reps> timed runs per entry, median + every run
-      |  jobs <name>...            Spark jobs one execution of each entry launches, and the
-      |                            codegen compiles of its cold and warm runs
+      |  jobs <name>...            the entries as one cycle, three passes: each entry's Spark
+      |                            jobs, and its codegen compiles in pass 1 (cold) and 3 (warm)
       |  finalplan [full] <name>...  node counts of the post-execution AQE plan
       |  streambench [nFiles]      streaming dedup wall time over nFiles triggers (default 8),
       |                            with per-trigger medians of the streaming layers""".stripMargin
@@ -84,13 +84,17 @@ object MicroBench {
     * memory-compaction stalls; the job count is a deterministic
     * property of the binary, so an optimization that deletes driver
     * jobs is verifiable in ONE run on any day. The listener bus is
-    * drained around the counted run, so the count is exact.
+    * drained around each counted run, so the count is exact.
     *
-    * Beside it: the Janino compiles (and their summed milliseconds) of
-    * the first, cold run and of the counted, warm run — Spark's
-    * codegen cache misses, which a warm run pays when its classes were
-    * evicted. The counters are JVM-wide, and in local mode the tasks'
-    * compiles happen in this JVM too.
+    * The listed entries run as one cycle, three passes in a row, the
+    * way a closed loop over them does. Each line reports the entry's
+    * jobs (pass 3, after file listing is cached) and its Janino
+    * compiles with their summed milliseconds: cold in pass 1, warm in
+    * pass 3. A warm compile is a codegen-cache miss: a class that the
+    * rest of the cycle evicted (Spark's cache holds 100 entries in four
+    * LRU segments of 25, so one segment can overflow while the cache is
+    * not full) or whose source differs per call. The counters are JVM-wide, and in local
+    * mode the tasks' compiles happen in this JVM too.
     */
   private def jobs(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -105,23 +109,24 @@ object MicroBench {
     def compiled(): (Long, Long) =
       (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
         org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
-    def compiles[T](body: => T): String = {
+    // one pass: per entry, its (jobs, compiles, compile ns)
+    def pass(): Seq[(Int, Long, Long)] = names.map { k =>
       val (n0, ns0) = compiled()
-      body
-      val (n1, ns1) = compiled()
-      f"${n1 - n0} (${(ns1 - ns0) / 1e6}%.0f ms)"
-    }
-    names.foreach { k =>
-      def run(): Unit = graft.SparkEntry.queries(k)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      // warm-up (file-listing jobs happen here, not in the count)
-      val cold = compiles(run())
       org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
       counter.set(0)
-      val warm = compiles(run())
+      graft.SparkEntry.queries(k)(spark, sfDir).write.format("noop").mode("overwrite").save()
       org.apache.spark.sql.graftglue.Bridge.drainListenerBus(spark)
-      println(f"$k%-28s jobs ${counter.get()}  compiles cold $cold warm $warm")
+      val (n1, ns1) = compiled()
+      (counter.get(), n1 - n0, ns1 - ns0)
     }
+    val cold = pass()
+    pass()
+    val warm = pass()
+    def fmt(n: Long, ns: Long) = f"$n (${ns / 1e6}%.0f ms)"
+    for ((k, ((_, cn, cns), (jobs, wn, wns))) <- names.zip(cold.zip(warm)))
+      println(f"$k%-28s jobs $jobs  compiles cold ${fmt(cn, cns)} warm ${fmt(wn, wns)}")
+    println(f"${"cycle"}%-28s compiles cold ${fmt(cold.map(_._2).sum, cold.map(_._3).sum)} " +
+      s"warm ${fmt(warm.map(_._2).sum, warm.map(_._3).sum)}")
   }
 
   /** `finalplan [full] <name>...` — the POST-execution final AQE plan's

@@ -576,8 +576,9 @@ object NearDup {
     * that settle in 1–2 rounds; the cap only bites on diameter->2^k
     * chains, where the unrolled-oracle contract needs it.
     *
-    * The edge set is materialized once (checkpointed). Where the
-    * rounds then run is decided from that materialized edge count —
+    * The pair list is materialized once (checkpointed) and read as the
+    * edge set, both directions of every pair. Where the rounds then run
+    * is decided from that materialized edge count —
     * the runtime-statistics choice of Shark's partial DAG execution:
     *
     *   - DRIVER FINISH. One [[PlanTimeModel.collect]] (see its bake
@@ -589,7 +590,7 @@ object NearDup {
     *     Spark's `least`/`min` do, so the vertex ids are sorted once in
     *     the collect's key order and all label work is on their ranks;
     *     only its eligible id types take this path.
-    *     Construction jobs: the edge checkpoint's (it runs the pairs
+    *     Construction jobs: the pair checkpoint's (it runs the pairs
     *     pipeline) and one collect, against two checkpoints and a
     *     change test per distributed round.
     *   - DISTRIBUTED ROUNDS. Any other id type, and any edge set over
@@ -604,7 +605,7 @@ object NearDup {
     * executors — fast, but a lost executor on a real cluster kills the
     * job instead of recomputing (lineage is gone). Pass `checkpointDir`
     * (HDFS/S3/cluster FS) to use RELIABLE `checkpoint` instead: the
-    * edge set and each distributed round's tiny (id, label) frame are
+    * pair list and each distributed round's tiny (id, label) frame are
     * persisted to the shared FS and survive executor loss. Locally the
     * default is unchanged.
     * Output: `idCol, cluster_id`.
@@ -618,15 +619,19 @@ object NearDup {
         d => d.checkpoint(eager = true)
       case None => d => d.localCheckpoint(eager = true)
     }
-    // materialize the edge set ONCE and truncate its lineage: the edge
-    // frame is read by every distributed round (and by the driver
+    // materialize the pair list ONCE and truncate its lineage: the
+    // edge set is read by every distributed round (and by the driver
     // finish's collect), and an expensive pairs pipeline (LSH banding)
     // would otherwise re-execute per read (measured 33 s -> 2.9 s at
     // sf0.1). The checkpoint stores only the tiny pair list, not the
-    // corpus.
-    val edges = ckpt(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-        .union(pairs.select(col("id_b").as("u"), col("id_a").as("v"))))
+    // corpus, and runs the pairs plan exactly as given, so every class
+    // it generates is the one a query of `pairs` alone compiles. Both
+    // edge directions come from ONE branch over it: each pair row emits
+    // (a, b) and (b, a) through `inline`, the multiset the union of two
+    // swapped selects gave (null endpoints and duplicates kept).
+    val edges = ckpt(pairs).select(inline(array(
+      struct(col("id_a").as("u"), col("id_b").as("v")),
+      struct(col("id_b").as("u"), col("id_a").as("v")))))
     val labels = driverLabels(df, edges, idCol, iterations)
       .getOrElse(distributedLabels(df, edges, idCol, iterations, ckpt))
     // internal names must not collide with an arbitrary idCol
@@ -891,7 +896,7 @@ object NearDup {
     val nBands = planes / bandBits
     val mat = Array.tabulate(planes * dim)(i => Project.planeValue(i.toLong))
     df.withColumn("__sig",
-        graft.functions.PackedSignSig(col(vecCol).cast("array<double>"), mat, dim))
+        graft.functions.PackedSignSig(doubles(col(vecCol)), mat, dim))
       .withColumn("__bands", signBandKeys(col("__sig"), nBands, bandBits))
       .select(
         df.columns.map(col) :+
@@ -923,6 +928,13 @@ object NearDup {
     */
   private[ops] def dot(a: Column, b: Column): Column =
     graft.functions.ArrayMath.dotProduct(a, b)
+
+  /** A vector column widened to `array<double>`: Spark's array `Cast`,
+    * the per-element cast of `transform(v, x -> cast(x as double))`
+    * (same nulls, same ANSI errors) as one generated loop, where the
+    * lambda form is a `CodegenFallback` that splits whole-stage codegen.
+    */
+  private[graft] def doubles(v: Column): Column = v.cast("array<double>")
 
   /** Band keys of a sign-LSH signature: element j is bits
     * [j·bandBits, (j+1)·bandBits) of `sig`. MUST be integer
@@ -992,7 +1004,7 @@ object NearDup {
     // (id, plane) group stays in ONE aggregation partial — the same
     // spill-order hazard the baked cell assignment removed
     // (BASELINE.md round 12: 99/12.19M rows drifted at sf10).
-    val base = df.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
+    val base = df.select(col(idCol), doubles(col(vecCol)).as("v"))
     val mat = Array.tabulate(planes * dim)(i => Project.planeValue(i.toLong))
     base.select(
       col(idCol),

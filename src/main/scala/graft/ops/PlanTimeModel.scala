@@ -4,10 +4,10 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.functions.{col, transform}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types._
 
@@ -141,7 +141,9 @@ object PlanTimeModel {
     * included, so the driver sees the overdraft), and their weight.
     */
   private def takeWithin(it: Iterator[InternalRow], schema: StructType, budget: Long): (Array[InternalRow], Long) = {
-    val toUnsafe = UnsafeProjection.create(schema)
+    // a plan's rows are UnsafeRows as a rule; projecting them anyway
+    // would generate one more class per collected schema
+    lazy val toUnsafe = UnsafeProjection.create(schema)
     val fixed = math.max(1L, schema.fields.map(_.dataType.defaultSize.toLong).sum)
     val arrays = schema.fields.indices.filter(i => schema(i).dataType.isInstanceOf[ArrayType]).toArray
     val elemSize = arrays.map(i => schema(i).dataType.defaultSize.toLong)
@@ -156,7 +158,10 @@ object PlanTimeModel {
           weight += elemSize(a) * math.max(0, r.getArray(arrays(a)).numElements() - 1)
         a += 1
       }
-      out += toUnsafe(r).copy()
+      out += (r match {
+        case u: UnsafeRow => u.copy()
+        case _ => toUnsafe(r).copy()
+      })
     }
     (out.toArray, weight)
   }
@@ -170,7 +175,7 @@ object PlanTimeModel {
   /** The collect of the hash-seeded vector models ([[Kmeans]], and the
     * seeding of [[Ann]] and [[SemDedup]]): `(v, hash32(id), id)` over
     * `df`, with each row's vector read as the `array<double>` that
-    * `transform(vecCol, x -> cast(x as double))` gives in Spark (null
+    * `cast(vecCol as array<double>)` gives in Spark (null
     * for a null vector). Float and double vectors are collected as
     * stored, because widening a float is exact and is what Spark's cast
     * does, so a float vector weighs half as much as its cast; other
@@ -181,7 +186,7 @@ object PlanTimeModel {
     val (v, widen) = df.select(stored).schema.head.dataType match {
       case ArrayType(FloatType, _) => (stored, true)
       case ArrayType(DoubleType, _) => (stored, false)
-      case _ => (transform(stored, _.cast("double")), false)
+      case _ => (NearDup.doubles(stored), false)
     }
     collect(df.select(v.as("v"), NearDup.hash32(col(idCol).cast("string")).as("h"), col(idCol)), key = 2)
       .map(c => (c, c.rows.map(r => if (r.isNullAt(0)) null else if (widen) doubles(r.getArray(0)) else r.getArray(0))))

@@ -57,7 +57,7 @@ object Project {
     // DIVIDE by sqrt, never multiply by a reciprocal: x / s and
     // x * (1/s) round differently, and the oracle spells `/ sqrt(n)`.
     val scale = sqrt(lit(outDim.toDouble))
-    val v = transform(col(vecCol), x => x.cast("double"))
+    val v = NearDup.doubles(col(vecCol))
     df.select(
       col(idCol),
       array((0 until outDim).map(p =>
@@ -77,6 +77,10 @@ object Project {
       outDim: Int
   ): DataFrame =
     randomProjectVectors(df, vecCol, idCol, dim, outDim)
-      .select(col(idCol), posexplode(col("proj")).as(Seq("p", "y")))
+      // `proj` always holds outDim >= 1 elements, so the outer form
+      // emits the same rows; it spares the `size(proj) > 0` filter that
+      // Spark infers below a plain explode, which would recompute every
+      // dot product (and the vector cast) a second time per row
+      .select(col(idCol), posexplode_outer(col("proj")).as(Seq("p", "y")))
       .select(col(idCol), col("p").cast("int").as("p"), col("y"))
 }

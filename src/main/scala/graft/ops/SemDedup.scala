@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   */
 object SemDedup {
 
-  import NearDup.dot
+  import NearDup.{dot, doubles}
 
   /** Within-cell near-duplicate pairs: `(id_a, id_b, cell, cos_sim)`
     * with `id_a < id_b` and `cos_sim >= minCos`, where both ids are
@@ -84,11 +84,9 @@ object SemDedup {
     // of the same frame, computed in ONE select (round 19) — the cell
     // column previously came back through a corpus-scale equi-join on
     // the id, a full exchange of the vectors that attached a value the
-    // row could compute itself. ArgmaxDot sees the identical
-    // array<double> values either way (native Cast vs per-element
-    // transform are the same cast).
+    // row could compute itself.
     val base = df
-      .select(col(idCol), transform(col(vecCol), x => x.cast("double")).as("v"))
+      .select(col(idCol), doubles(col(vecCol)).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("c", graft.functions.ArgmaxDot(col("v"), mat, mDim))
       .filter(col("c").isNotNull)

@@ -1,13 +1,14 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{ArrayMath, MinhashBandKeys, MinhashFirstBand, MinhashMatches}
+import graft.functions.{ArrayMath, ClassifierAcc, LmBigramStats, MinhashBandKeys, MinhashFirstBand, MinhashMatches,
+  MinhashSig, ShingleHashes, SubwordCounts, TextHash}
 
 /** Native codegen expressions in graft.functions. */
 class FunctionsSpec extends SparkTestBase {
@@ -142,14 +143,6 @@ class FunctionsSpec extends SparkTestBase {
       (huge, huge), (edge, s), (negative, s), (s.take(7) ++ Seq(null) ++ s.drop(8).take(10), s))
   }
 
-  /** The deepest Spark error condition and parameters behind a failure. */
-  private def condition(t: Throwable): (String, Map[String, String]) =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-      .collect { case st: SparkThrowable if st.getCondition != null => st }
-      .toSeq.lastOption
-      .map(st => (st.getCondition, st.getMessageParameters.asScala.toMap))
-      .getOrElse(fail(s"no Spark error condition in $t", t))
-
   /** Every input pair's value or error, from a non-local source, so the
     * projection runs in the configured mode and not in
     * ConvertToLocalRelation. All pairs go in one job; when it fails,
@@ -172,13 +165,6 @@ class FunctionsSpec extends SparkTestBase {
           catch { case e: Exception => Left(condition(e)) }
         }
     }
-  }
-
-  private def withConfs[T](kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** `native` against `unrolled` on every input pair, under generated
@@ -227,5 +213,79 @@ class FunctionsSpec extends SparkTestBase {
         MinhashFirstBand(_, _, nBands, bandRows), unrolledFirstBand(_, _, nBands, bandRows))
     }
     assert(raised.toSet == Set(IndexError))
+  }
+
+  // -- array-valued text expressions: unboxed results --
+
+  private val P31 = 2147483647L
+
+  /** First 4 md5 bytes of the UTF-8 string as an unsigned long. */
+  private def md5Prefix(s: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+  }
+
+  private def md5Hash(s: String): Long = md5Prefix(s) % P31
+
+  /** The shingle-hash contract: the n = 3 two-multiplier combine, Horner's
+    * rule for other n, and the whole text hashed for short arrays.
+    */
+  private def shingles(ts: Seq[String], n: Int): Seq[Long] =
+    if (ts.length < n) Seq(md5Hash(ts.mkString(" ")))
+    else ts.map(md5Hash).sliding(n).map { w =>
+      if (n == 3) (w(0) * 1000003L + w(1) * 10007L + w(2)) % P31
+      else w.reduceLeft((acc, h) => (acc * 1000003L + h) % P31)
+    }.toSeq
+
+  private def minhash(hs: Seq[Long], k: Int): Seq[Long] =
+    if (hs.isEmpty) null
+    else (1 to k).map { j =>
+      val (a, b) = ((1103515245L * j + 12345L) % P31, (987654321L * j + 67890L) % P31)
+      hs.map(h => (a * h + b) % P31).min
+    }
+
+  test("array-valued text expressions return unboxed arrays, equal generated and interpreted") {
+    val texts = Seq(Seq("the", "quick", "brown", "fox", "jumps"), Seq("tion", "xyz"), Seq("a"), Seq(), null)
+    val weights = Array(3L, -1L, 7L)
+    val lmModel = texts.head.sliding(2).map(w => shingles(w, 2).head).toSeq.sorted.take(2)
+    val exprs: Seq[(String, Column => Column, Seq[String] => Seq[Long])] = Seq(
+      ("shingles n=3", TextHash.shingleHashes(_), ts => shingles(ts, 3)),
+      ("shingles n=2", TextHash.shingleHashes(_, 2), ts => shingles(ts, 2)),
+      ("minhash k=4", t => MinhashSig(TextHash.shingleHashes(t), 4), ts => minhash(shingles(ts, 3), 4)),
+      ("classifier", ClassifierAcc(_, weights), { ts =>
+        val hs = ts.filter(_.nonEmpty).map(md5Prefix)
+        Seq(hs.map(h => weights((h % weights.length).toInt)).sum, hs.length.toLong)
+      }),
+      ("lm bigrams", LmBigramStats(_, lmModel.toArray, lmModel.indices.map(_ + 10L).toArray), { ts =>
+        if (ts.length < 2) Seq(0L, 0L, 0L)
+        else {
+          val hits = shingles(ts, 2).flatMap(h => Some(lmModel.indexOf(h)).filter(_ >= 0))
+          Seq(ts.length - 1L, hits.length.toLong, hits.map(_ + 10L).sum)
+        }
+      }),
+      ("subwords", SubwordCounts.subwordCounts(_, Seq("tion", "th", "e")), {
+        case Seq("the", _*) => Seq(20L, 18L) // th·e, then one code point per letter
+        case Seq("tion", "xyz") => Seq(4L, 3L)
+        case Seq("a") => Seq(1L, 1L)
+        case _ => Seq(0L, 0L)
+      }))
+    val schema = StructType.fromDDL("t array<string>")
+    for {
+      (factory, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+      (name, expr, want) <- exprs
+    } withConfs("spark.sql.codegen.factoryMode" -> factory, "spark.sql.codegen.wholeStage" -> wholeStage) {
+      val rows = spark.sparkContext.parallelize(texts.map(Row(_)), 1)
+      val got = spark.createDataFrame(rows, schema).select(expr(col("t"))).collect().toSeq
+        .map(r => Option(r.getSeq[Long](0)).map(_.toSeq).orNull)
+      assert(got == texts.map(ts => if (ts == null) null else want(ts)), s"$name, $factory")
+    }
+    def utf8(ts: String*) = new GenericArrayData(ts.map(UTF8String.fromString).toArray[Any])
+    for (out <- Seq(
+        ShingleHashes.compute(utf8("a", "b", "c"), 3), ShingleHashes.compute(utf8("a"), 3),
+        MinhashSig.compute(ShingleHashes.compute(utf8("a", "b", "c"), 3), 4),
+        ClassifierAcc.compute(utf8("a"), weights), LmBigramStats.compute(utf8("a"), Array(1L), Array(1L)),
+        LmBigramStats.compute(utf8("a", "b"), Array(1L), Array(1L)),
+        SubwordCounts.compute(utf8("ab"), "a")))
+      assert(out.isInstanceOf[UnsafeArrayData], out.getClass.getName)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.ops.{Ann, Decontam, Dedup, Kmeans, NearDup, PlanTimeModel, Sampling, SemDedup, Shard, Sketch, TextOps}
+import graft.ops.{Ann, Decontam, Dedup, Kmeans, NearDup, PlanTimeModel, Project, Sampling, SemDedup, Shard, Sketch, TextOps}
 
 /** Behavior + plan-shape tests for the graft.ops layer.
   *
@@ -81,31 +81,69 @@ class OpsSpec extends SparkTestBase {
     assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
-  test("MinHash pairs and clusters generate no class over 64k chars") {
-    // every query the two ops execute, build-time checkpoints included
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+  /** Every query `body` executes, build-time checkpoints included, with
+    * the name of the action that ran it.
+    */
+  private def executions(body: => Unit): Seq[(String, QueryExecution)] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(f -> qe)
     }
-    def classSizes(body: => DataFrame): Seq[Int] = {
+    Bridge.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try body
+    finally {
       Bridge.drainListenerBus(spark)
-      plans.clear()
-      spark.listenerManager.register(listener)
-      try body.collect()
-      finally {
-        Bridge.drainListenerBus(spark)
-        spark.listenerManager.unregister(listener)
-      }
-      plans.asScala.toSeq.flatMap(qe =>
-        org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan).map(_._2.length))
+      spark.listenerManager.unregister(listener)
     }
+    plans.asScala.toSeq
+  }
+
+  test("MinHash pairs and clusters generate no class over 64k chars") {
+    def classSizes(body: => DataFrame): Seq[Int] =
+      executions(body.collect()).flatMap { case (_, qe) =>
+        org.apache.spark.sql.execution.debug.codegenStringSeq(qe.executedPlan).map(_._2.length)
+      }
     val pairs = classSizes(NearDup.minhashPairs(docs, "text", "doc_id"))
     val clusters = classSizes(NearDup.clusters(docs, NearDup.minhashPairs(docs, "text", "doc_id"), "doc_id"))
     for ((op, sizes) <- Seq("minhashPairs" -> pairs, "clusters" -> clusters)) {
       assert(sizes.nonEmpty, op)
       assert(sizes.max <= 64000, s"$op generated classes of ${sizes.sorted.reverse.mkString(", ")} chars")
     }
+  }
+
+  test("clusters checkpoints the pairs plan once and reads both edge directions from it") {
+    // the checkpoint runs the pairs plan as given (no Union of two
+    // swapped copies); the driver finish's collect sees both directions
+    // of every in-frame pair, duplicates included, and rows with a null
+    // endpoint label nothing, on either path
+    def leaves(df: DataFrame): Int = df.queryExecution.analyzed.collectLeaves().size
+    def opt(r: org.apache.spark.sql.catalyst.InternalRow, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val minhash = NearDup.minhashPairs(docs, "text", "doc_id")
+    val given = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (1L, 2L), (2L, 3L), (null, 4L), (5L, null), (null, null), (7L, 1L)).toDF("id_a", "id_b")
+    for (pairs <- Seq(minhash, given)) {
+      val ran = executions(NearDup.clusters(docs, pairs, "doc_id"))
+      val ckpt = ran.collect { case ("localCheckpoint", qe) => qe }
+      assert(ckpt.size == 1)
+      assert(ckpt.head.optimizedPlan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.isEmpty,
+        ckpt.head.optimizedPlan.treeString)
+      assert(ckpt.head.analyzed.collectLeaves().size == leaves(pairs), ckpt.head.analyzed.treeString)
+      val edges = ran.collect { case (PlanTimeModel.ExecutionName, qe) => qe }
+      assert(edges.size == 1)
+      val got = edges.head.executedPlan.executeCollect().map(r => (opt(r, 0), opt(r, 1))).toSeq
+      val ids = Set(1L, 2L, 3L, 4L, 5L)
+      val want = pairs.collect().toSeq.flatMap { r =>
+        val (a, b) = (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long]))
+        Seq((a, b), (b, a))
+      }.filter { case (u, v) => u.exists(ids) && v.exists(ids) }
+      assert(got.sortBy(_.toString) == want.sortBy(_.toString))
+    }
+    val labels = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L)
+    assert(NearDup.clusters(docs, given, "doc_id").as[(Long, Long)].collect().toMap == labels)
+    assert(withBroadcastThreshold(-1)(NearDup.clusters(docs, given, "doc_id").as[(Long, Long)].collect().toMap) == labels)
   }
 
   test("dropNearDuplicates keeps only non-dominated ids") {
@@ -1321,23 +1359,12 @@ class OpsSpec extends SparkTestBase {
   private val constructions = Iterator.from(0)
 
   private def construction[T](group: String)(body: => T): (T, Int, Boolean) = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = names.add(f)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = names.add(f)
-    }
-    Bridge.drainListenerBus(spark)
-    spark.listenerManager.register(listener)
     var out: Option[T] = None
-    val jobs =
-      try jobsFor(s"$group-${constructions.next()}") { out = Some(body) }
-      finally {
-        Bridge.drainListenerBus(spark)
-        spark.listenerManager.unregister(listener)
-      }
-    val ran = names.asScala.toSeq
+    var jobs = 0
+    val ran = executions { jobs = jobsFor(s"$group-${constructions.next()}") { out = Some(body) } }.map(_._1)
     (out.get, jobs, ran.nonEmpty && ran.forall(_ == PlanTimeModel.ExecutionName))
   }
+
 
   /** The arrays baked into `df`'s plan (centroid matrices, offsets,
     * norms), in plan order; doubles as their bits, so NaN equals NaN
@@ -1502,6 +1529,60 @@ class OpsSpec extends SparkTestBase {
     for ((name, (c, e)) <- cases) {
       assertBakeParity(s"decontam overlap: $name")(Decontam.overlap(c, e, "text", "doc_id", minHits = 1))
       assertBakeParity(s"decontaminate: $name")(Decontam.decontaminate(c, e, "text", "doc_id", minHits = 1))
+    }
+  }
+
+  test("the vector ops widen vectors without a lambda") {
+    // the array Cast runs inside whole-stage codegen; the lambda form
+    // `transform(v, x -> cast(x as double))` is a CodegenFallback
+    val emb = vectorCases.head._2
+    val ops = Seq(
+      "ivfTopKSeeded" -> Ann.ivfTopKSeeded(emb, emb, "embedding", "vec_id", dim = 4, k = 3),
+      "bruteTopK" -> Ann.bruteTopK(emb, emb, "embedding", "vec_id", k = 3),
+      "assignCells" -> Kmeans.assignCells(emb, "embedding", "vec_id", nCells = 4, iters = 2),
+      "SemDedup.pairs" -> SemDedup.pairs(emb, "embedding", "vec_id", minCos = 0.4),
+      "randomProjectVectors" -> Project.randomProjectVectors(emb, "embedding", "vec_id", dim = 4, outDim = 2))
+    for ((name, df) <- ops) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayTransform]))), s"$name:\n$plan")
+    }
+  }
+
+  test("the vector widening equals the per-element cast lambda") {
+    // float, double, int, decimal and string vectors with a null vector
+    // and null elements; under ANSI a bad string fails both forms with
+    // the same error condition, without ANSI both give null
+    val cases = Seq(
+      "float" -> Seq(Seq(1.5f, -0.1f, Float.NaN), Seq(null, 2f), null),
+      "double" -> Seq(Seq(1e300, -0.0, Double.NegativeInfinity), Seq(3.0, null), null),
+      "int" -> Seq(Seq(Int.MaxValue, -7), Seq(null, 0), null),
+      "decimal(20,9)" -> Seq(Seq(BigDecimal("12345678901.123456789").bigDecimal, BigDecimal("-0.1").bigDecimal),
+        Seq(null, BigDecimal("1E-9").bigDecimal), null),
+      "string" -> Seq(Seq(" 2.5 ", "1e3", "NaN", "-Infinity"), Seq("+4", null), null))
+    val bad = "string" -> Seq(Seq("1", "x"))
+    def eval(ddl: String, vecs: Seq[Seq[Any]], widen: Column => Column): Either[String, Seq[Any]] = {
+      val rows = spark.sparkContext.parallelize(vecs.map(v => Row(v)), 1)
+      val df = spark.createDataFrame(rows, StructType.fromDDL(s"v array<$ddl>"))
+      try Right(df.select(widen(col("v"))).collect().toSeq.map(r => Option(r.getSeq[Any](0)).map(_.toSeq).orNull))
+      catch { case e: Exception => Left(condition(e)._1) }
+    }
+    val lambda: Column => Column = transform(_, x => x.cast("double"))
+    for {
+      (factory, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+      ansi <- Seq("true", "false")
+      (ddl, vecs) <- cases :+ bad
+    } withConfs("spark.sql.codegen.factoryMode" -> factory, "spark.sql.codegen.wholeStage" -> wholeStage,
+        "spark.sql.ansi.enabled" -> ansi) {
+      val mode = s"$ddl, $factory, ansi=$ansi"
+      val (got, want) = (eval(ddl, vecs, NearDup.doubles), eval(ddl, vecs, lambda))
+      // doubles as bits: NaN equals NaN, -0.0 differs from 0.0
+      def bits(r: Either[String, Seq[Any]]) = r.map(_.map(v => Option(v).map(_.asInstanceOf[Seq[Any]].map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case x => x
+      }).orNull))
+      assert(bits(got) == bits(want), mode)
+      assert(want.isLeft == (ansi == "true" && (ddl, vecs) == bad), s"$mode: $want")
     }
   }
 
