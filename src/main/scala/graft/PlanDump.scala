@@ -2,24 +2,28 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Optimization-round tooling: dump `.explain("formatted")` for bench
-  * queries to files, so plan-shape claims (Exchange count, join
+/** Optimization-round tooling: dump `.explain("formatted")` for gate
+  * entries to files, so plan-shape claims (Exchange count, join
   * strategy, PushedFilters/ReadSchema, codegen spans) are checkable
   * without running Spark.
   *
   * Usage: graft.PlanDump <sfDir> <outDir> <suffix> [entryName ...]
-  * Writes `<outDir>/<name>_<suffix>.txt` for each selected entry
-  * (default: every benchKeys + opsBenchKeys entry). Both build their
-  * session through [[Sessions]], so the dumped plan is the benched plan.
+  * Writes `<outDir>/<name>_<suffix>.txt` for each named
+  * [[SparkEntry.queries]] entry (default: every benchKeys + opsBenchKeys
+  * entry); an unknown name fails before any session starts. Both build
+  * their session through [[Sessions]], so the dumped plan is the
+  * benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val only = args.drop(3).toSet
+    val named = args.drop(3).toSeq
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown entr${if (unknown.sizeIs > 1) "ies" else "y"} " +
+      unknown.mkString(", "))
+    val keys = if (named.isEmpty) SparkEntry.benchKeys ++ SparkEntry.opsBenchKeys else named
     val spark = Sessions.local()
     Files.createDirectories(Paths.get(outDir))
-    val keys = (SparkEntry.benchKeys ++ SparkEntry.opsBenchKeys)
-      .filter(k => only.isEmpty || only.contains(k))
     keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(

@@ -59,9 +59,12 @@ object Pql {
     * the reference exposes as `pql.Compile` (reference pql.go:18-34):
     * hosts that ship SQL text to a cluster, log it for audit, or feed
     * a SQL-analysis pipeline get the query as text instead of a plan.
-    * One CTE per pipeline stage, reference-style, rendered as text over
-    * the stage DataFrames that [[query]]'s compiler builds: scalar
-    * expressions are its Columns (`Column.expr.sql`) and every stage's
+    * One SELECT per pipeline stage: a stage read once is written in
+    * place as a subquery, a stage read more than once (an `| as` name
+    * read again) is one `WITH` entry, and the last stage's SELECT is
+    * the query, so the text runs at every pipeline length the parser
+    * admits. It is rendered as text over the stage DataFrames that
+    * [[query]]'s compiler builds: scalar expressions are its Columns (`Column.expr.sql`) and every stage's
     * schema is its frame's, so the two paths cannot drift —
     * `spark.sql(compileToSql(q, cat))` and `Pql.query(spark, q, cat)`
     * return the same rows (golden-tested in SqlCompileSpec). Building
@@ -72,7 +75,7 @@ object Pql {
     * expansion and join collision renaming); the emitted SQL refers to
     * tables BY NAME, so run it in a session where those names resolve
     * (temp views or catalog tables). The graft extension operators
-    * emit as CTE chains that call the registered `graft_*` functions
+    * emit as stage chains that call the registered `graft_*` functions
     * (`GraftExtensions`). Rejected with a pointer to [[query]] are only
     * the forms whose plan is sized from data at compile time: adaptive
     * dedup/ann geometry or cell counts, and `sample budget=`. A range

@@ -3099,7 +3099,7 @@ object SparkEntry {
     ),
     // THE workhorse dedup through the text backend (round 16): the
     // full exact→minhash pipeline (NearDup.deduplicateCorpus) as one
-    // emitted CTE chain — graft_shingle_hashes resolves from the
+    // emitted query — graft_shingle_hashes resolves from the
     // registered function library, signatures/estimator rendered from
     // the library's own Columns, ≡-plan-path proof in SqlCompileSpec —
     // executed via spark.sql and hash-matched against the SAME oracle

@@ -370,27 +370,6 @@ object Multimodal {
     }
   }
 
-  /** STUB resize — stands in for an image rescale. Deterministic: the
-    * output payload is the byte sequence cycled/truncated to the area
-    * ratio, metadata updated to the target dimensions. Same narrow
-    * per-partition shape as [[extractFeatures]].
-    */
-  def resizeStub(mm: DataFrame, targetW: Int, targetH: Int): Dataset[MMRecord] = {
-    val spark = mm.sparkSession
-    import spark.implicits._
-    mm.as[MMRecord].mapPartitions { rows =>
-      rows.map { r =>
-        if (r.payload.isEmpty) r.copy(width = targetW, height = targetH)
-        else {
-          val outLen = math.max(1, (r.payload.length.toLong * (targetW.toLong * targetH) /
-            math.max(1L, r.width.toLong * r.height)).toInt)
-          val out = Array.tabulate(outLen)(i => r.payload(i % r.payload.length))
-          r.copy(width = targetW, height = targetH, payload = out)
-        }
-      }
-    }
-  }
-
   // ---- REAL video: AVI/RIFF container, uncompressed DIB frames ------
   //
   // "No codecs in this environment" blocks compressed video only. An
@@ -617,24 +596,6 @@ object Multimodal {
           }
           MMFrame(r.doc_id, f, gray)
         }
-      }
-    }
-  }
-
-  /** STUB frame sampling — stands in for video keyframe extraction:
-    * `nFrames` deterministic slices of the payload per record, one
-    * output row per frame (the explode shape a real sampler produces).
-    */
-  def frameSample(mm: DataFrame, nFrames: Int): Dataset[MMFrame] = {
-    require(nFrames > 0, "nFrames must be positive")
-    val spark = mm.sparkSession
-    import spark.implicits._
-    mm.as[MMRecord].flatMap { r =>
-      // ceil-sized spans so the frames PARTITION the payload (no
-      // dropped tail bytes); trailing frames may be shorter/empty
-      val span = math.max(1, (r.payload.length + nFrames - 1) / nFrames)
-      (0 until nFrames).map { f =>
-        MMFrame(r.doc_id, f, r.payload.slice(f * span, math.min(f * span + span, r.payload.length)))
       }
     }
   }

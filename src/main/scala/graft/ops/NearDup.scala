@@ -35,21 +35,6 @@ object NearDup {
   /** Whitespace tokens of the normalized text. */
   def tokens(text: Column): Column = split(TextOps.normalize(text), " ")
 
-  /** Word n-gram shingles (default 3). Texts shorter than n words get a
-    * single whole-text shingle.
-    *
-    * NOTE: building shingle STRINGS is the expensive formulation —
-    * `transform`+`concat_ws`+`slice` run interpreted and allocate one
-    * string per position (measured 3.7 s of dedup_minhash's 4.6 s at
-    * sf0.1). The pipelines use [[hashedShingles]] instead; this Column
-    * form remains for callers that need the shingle text itself.
-    */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val w = tokens(text)
-    when(size(w) < n, array(concat_ws(" ", w)))
-      .otherwise(transform(sequence(lit(1), size(w) - (n - 1)), i => concat_ws(" ", slice(w, i, lit(n)))))
-  }
-
   /** Shingle-combine multipliers: `h_shingle = (h1·C1 + h2·C2 + h3) mod
     * P` over per-token hashes (all < P, so the sum stays < 2^62 — no
     * overflow). md5-derived inputs are uniform already; the linear mix
@@ -127,28 +112,17 @@ object NearDup {
     (987654321L * (j + 1) + 67890L) % P
   )
 
-  /** K-element MinHash signatures, one row per id: `(id, sig)`.
+  /** K-element MinHash signatures, one row per id: `(id, sig)`, over an
+    * already-exploded `(id, h)` hashed-shingle frame.
     *
-    * Plan shape: explode the shingles, hash each ONCE in a codegen'd
-    * projection, then ONE groupBy with k primitive `min` aggregates
-    * (map-side partial combine → the shuffle carries k longs per doc
-    * per partition). This deliberately avoids nested array lambdas:
-    * Spark evaluates higher-order functions interpreted AND
-    * CollapseProject re-inlines a hashed-array alias into every
+    * Plan shape: ONE groupBy with k primitive `min` aggregates over the
+    * hashed shingles (map-side partial combine → the shuffle carries k
+    * longs per doc per partition). This deliberately avoids nested
+    * array lambdas: Spark evaluates higher-order functions interpreted
+    * AND CollapseProject re-inlines a hashed-array alias into every
     * component's lambda (static ref-count is 1), which made an
     * array-based formulation recompute the digest k times per shingle
     * — ~50× slower, measured.
-    */
-  def minhashSigs(df: DataFrame, shingleCol: Column, idCol: String, k: Int): DataFrame =
-    minhashSigsFromHashed(
-      df.select(col(idCol), explode(shingleCol).as("s"))
-        .select(col(idCol), (hash32(col("s")) % P).as("h")),
-      idCol,
-      k
-    )
-
-  /** [[minhashSigs]] over an already-exploded `(id, h)` hashed-shingle
-    * frame.
     */
   private[ops] def minhashSigsFromHashed(hashed: DataFrame, idCol: String, k: Int): DataFrame = {
     val comps = minhashAggColumns(k).zipWithIndex.map { case (c, j) => c.as(s"g$j") }
@@ -204,9 +178,9 @@ object NearDup {
     * set unchanged). Round 19: this replaced pipe-joined decimal
     * strings, which (a) ran INTERPRETED (transform+slice+array_join
     * per band — the engine's own no-higher-order-functions-on-hot-
-    * paths rule, see minhashSigs) and (b) shuffled ~40-char text keys
-    * where 8 bytes carry the same information (guide §2.3: narrower
-    * shuffle keys). The packed keys come from one loop per row
+    * paths rule, see minhashSigsFromHashed) and (b) shuffled ~40-char
+    * text keys where 8 bytes carry the same information (guide §2.3:
+    * narrower shuffle keys). The packed keys come from one loop per row
     * ([[graft.functions.MinhashBandKeys]]), which keeps the generated
     * class small. Wider bands (> 2 components, nothing ships them)
     * keep the string form — P³ would overflow a long.
@@ -449,8 +423,8 @@ object NearDup {
   /** [[SimBits]]-bit SimHash values, one row per id: `(id, sim)`. Bit
     * i of the result is the sign of `Σ_tokens (2·bit_i(hash(token)) −
     * 1)` (term-frequency weighted). Same explode → codegen hash →
-    * primitive-aggregate shape as [[minhashSigs]], for the same
-    * reason: everything stays in whole-stage codegen with map-side
+    * primitive-aggregate shape as [[minhashSigsFromHashed]], for the
+    * same reason: everything stays in whole-stage codegen with map-side
     * partial sums.
     */
   def simhashSigs(df: DataFrame, textCol: String, idCol: String): DataFrame =

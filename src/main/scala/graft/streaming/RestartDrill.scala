@@ -48,17 +48,17 @@ object RestartDrill {
     val t = graft.sources.Tables.parquetDir(spark, sfDir)
     t("events").repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$scratch/events")
-    forceMtimeOrder(s"$scratch/events")
+    Soak.forceMtimeOrder(s"$scratch/events")
     val docs = t("documents")
       .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
     docs.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$scratch/docs")
-    forceMtimeOrder(s"$scratch/docs")
+    Soak.forceMtimeOrder(s"$scratch/docs")
     val emb = t("embeddings")
       .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)"))
     emb.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$scratch/emb")
-    forceMtimeOrder(s"$scratch/emb")
+    Soak.forceMtimeOrder(s"$scratch/emb")
     // disordered replays (the DisorderFuzz layouts) for the
     // restart × disorder intersection workloads
     graft.fuzz.DisorderFuzz.prepare(spark, sfDir, s"$scratch/dis", seed = 7)
@@ -182,12 +182,5 @@ object RestartDrill {
     case other =>
       System.err.println(s"usage: prep|drain|crash …, got: ${other.mkString(" ")}")
       sys.exit(2)
-  }
-
-  private def forceMtimeOrder(dir: String): Unit = {
-    val parts = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val base = System.currentTimeMillis() - parts.length * 2000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
   }
 }

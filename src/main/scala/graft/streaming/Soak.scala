@@ -202,7 +202,7 @@ object Soak {
     * mtimes in part-name order (= range order) so the replay is the
     * time-ordered stream the harness promises.
     */
-  private def forceMtimeOrder(dir: String): Unit = {
+  private[streaming] def forceMtimeOrder(dir: String): Unit = {
     val parts = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
     val base = System.currentTimeMillis() - parts.length * 2000L

@@ -11,7 +11,9 @@ import graft.parser.PqlParseException
 /** Replays the in-repo fuzz seed corpus
   * (src/test/resources/pql/fuzz/FuzzParse, FuzzScan — see [[PqlCorpus]])
   * through graft's parser and SQL backend: every input must either
-  * parse or raise PqlParseException — never crash with anything else.
+  * parse or raise PqlParseException — never crash with anything else —
+  * and every input the plan path runs must give its rows through SQL
+  * text.
   * The seeds are written in the reference's Go fuzz-corpus format
   * (`go test fuzz v1` then `string("…")` with Go escapes) and cover the
   * malformed and edge forms of the lexer/parser grammar: unterminated
@@ -96,23 +98,47 @@ class FuzzSpec extends AnyFunSuite {
     // deferred class; graft has no type checker of its own): the text
     // backend raises the engine's AnalysisException at compile time,
     // and the plan path must then reject the same input with the same
-    // error condition (e.g. UNRESOLVED_COLUMN.WITH_SUGGESTION).
+    // error condition (e.g. UNRESOLVED_COLUMN.WITH_SUGGESTION). Every
+    // input the plan path runs, the emitted text runs too, over the
+    // same dummy table registered under each name the input reads,
+    // and returns the same columns and rows.
     val spark = SparkTestBase.spark
     import spark.implicits._
     val dummy = Seq((1L, "x")).toDF("a", "b")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.collect().map(_.toString).groupBy(identity).view.mapValues(_.length).toMap
+    var executed = 0
     for ((name, src) <- corpusInputs) {
-      try Pql.compileToSql(src, _ => dummy)
+      val sql = try Some(Pql.compileToSql(src, _ => dummy))
       catch {
-        case _: PqlParseException                   => ()
-        case _: graft.compiler.PqlCompileException  => ()
+        case _: PqlParseException                   => None
+        case _: graft.compiler.PqlCompileException  => None
         case e: AnalysisException if condition(e).isDefined =>
           val plan = scala.util.Try(Pql.query(spark, src, _ => dummy)).failed.toOption
           assert(plan.flatMap(condition) == condition(e),
             s"fuzz input $name: compileToSql raised ${e.getMessage}, but the plan path gave $plan")
+          None
         case e: Throwable =>
           fail(s"fuzz input $name crashed compileToSql with ${e.getClass.getName}: ${e.getMessage}")
       }
+      for (text <- sql; plan <- scala.util.Try(Pql.query(spark, src, _ => dummy)).toOption
+           if scala.util.Try(plan.collect()).isSuccess) {
+        val views = scala.collection.mutable.Set[String]()
+        Pql.parse(src).foreach(graft.parser.Walk.all(_) {
+          case t: graft.parser.TabularExpr => views += t.source.table.name
+          case _                           =>
+        })
+        views.foreach(v => dummy.createOrReplaceTempView("`" + v.replace("`", "``") + "`"))
+        try {
+          val viaSql = spark.sql(text)
+          assert(viaSql.columns.toSeq == plan.columns.toSeq, s"fuzz input $name:\n$text")
+          assert(rows(viaSql) == rows(plan), s"fuzz input $name:\n$text")
+        } finally views.foreach(spark.catalog.dropTempView)
+        executed += 1
+      }
     }
+    assert(executed > 0)
+    info(s"$executed corpus inputs ran through SQL text")
   }
 
   test("random byte soup never crashes the parser") {

@@ -48,23 +48,29 @@ class MultimodalSpec extends SparkTestBase {
     assert(f1(0).features.sameElements(f1(3).features))
   }
 
+  /** The byte-cycling fallback `resize` applies to a payload ImageIO
+    * cannot decode: the bytes cycled/truncated to the area ratio.
+    */
+  private def cycledPayload(r: Multimodal.MMRecord, targetW: Int, targetH: Int): Array[Byte] =
+    if (r.payload.isEmpty) r.payload
+    else {
+      val outLen = math.max(1, (r.payload.length.toLong * (targetW.toLong * targetH) /
+        math.max(1L, r.width.toLong * r.height)).toInt)
+      Array.tabulate(outLen)(i => r.payload(i % r.payload.length))
+    }
+
   test("resize stub: metadata updated, payload scaled by area ratio, deterministic") {
-    val mm = Multimodal.attachBinary(docs, "text", "doc_id")
-    val a = Multimodal.resizeStub(mm, 16, 16).collect().sortBy(_.doc_id)
-    val b = Multimodal.resizeStub(mm, 16, 16).collect().sortBy(_.doc_id)
-    for ((r1, r2) <- a.zip(b)) {
+    val mm = Multimodal.attachBinary(docs, "text", "doc_id") // md5 bytes, not images
+    val in = mm.as[Multimodal.MMRecord].collect().sortBy(_.doc_id)
+    val a = Multimodal.resize(mm, 16, 16).collect().sortBy(_.doc_id)
+    val b = Multimodal.resize(mm, 16, 16).collect().sortBy(_.doc_id)
+    assert(a.length == in.length)
+    for (((r1, r2), src) <- a.zip(b).zip(in)) {
       assert(r1.width == 16 && r1.height == 16)
       assert(r1.payload.sameElements(r2.payload))
       assert(r1.payload.nonEmpty)
+      assert(r1.payload.sameElements(cycledPayload(src, 16, 16)))
     }
-  }
-
-  test("frame sampling explodes each record into n deterministic frames") {
-    val mm = Multimodal.attachBinary(docs, "text", "doc_id")
-    val frames = Multimodal.frameSample(mm, 4).collect()
-    assert(frames.length == 4 * 4) // 4 docs x 4 frames
-    assert(frames.map(f => (f.doc_id, f.frame_idx)).distinct.length == 16)
-    assert(frames.forall(_.payload.length == 8)) // 32 bytes / 4 frames
   }
 
   test("real PNG round trip: ImageIO decode recovers the exact pixel histogram") {
@@ -239,11 +245,12 @@ class MultimodalSpec extends SparkTestBase {
 
   test("resize falls back to the byte-cycling stub for non-image payloads") {
     val mm = Multimodal.attachBinary(docs, "text", "doc_id") // md5 bytes, not images
-    val real = Multimodal.resize(mm, 16, 16).collect().sortBy(_.doc_id)
-    val stub = Multimodal.resizeStub(mm, 16, 16).collect().sortBy(_.doc_id)
-    for ((a, b) <- real.zip(stub)) {
-      assert(a.width == 16 && a.height == 16)
-      assert(a.payload.sameElements(b.payload)) // identical fallback behavior
+    val in = mm.as[Multimodal.MMRecord].collect().sortBy(_.doc_id)
+    val real = Multimodal.resize(mm, 8, 4).collect().sortBy(_.doc_id)
+    assert(real.length == in.length)
+    for ((a, src) <- real.zip(in)) {
+      assert(a.width == 8 && a.height == 4)
+      assert(a.payload.sameElements(cycledPayload(src, 8, 4))) // the stub's bytes
     }
   }
 

@@ -201,7 +201,7 @@ class SqlCompileSpec extends SparkTestBase {
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
     for (q <- Seq(
         "MD | dedup kind=minhash text by doc_id",
-        // composes with down-pipeline stages like any other CTE
+        // composes with down-pipeline stages like any other stage
         "MD | dedup kind=minhash text by doc_id | summarize n = count()")) {
       val sql = Pql.compileToSql(q, cat)
       assert(rows(spark.sql(sql)) == rows(Pql.query(spark, q, cat)), s"query: $q\nsql:\n$sql")
@@ -555,9 +555,8 @@ class SqlCompileSpec extends SparkTestBase {
   }
 
   test("48 chained where or extend stages give the plan path's rows through SQL text") {
-    // the CTE-per-stage text stops resolving from about 56 stages (the
-    // analyzer's 100-iteration Resolution batch); 48 is the floor a
-    // stage-folding backend must keep
+    // the old CTE-per-stage text stopped resolving from about 56 stages (the
+    // analyzer's 100-iteration Resolution batch); 48 is the floor kept since
     val session = spark
     import session.implicits._
     val one = Seq((1, 2)).toDF("a", "b")
@@ -570,6 +569,54 @@ class SqlCompileSpec extends SparkTestBase {
       assert(multiset(spark.sql(sql)) == multiset(Pql.query(spark, q, cat)), q)
       assert(spark.sql(sql).columns.toSeq == Pql.query(spark, q, cat).columns.toSeq, q)
     }
+  }
+
+  test("pipelines as long as the parser admits give the plan path's rows through SQL text") {
+    // the text must resolve within the analyzer's 100-pass Resolution
+    // batch at every pipeline length the parser admits
+    val session = spark
+    import session.implicits._
+    val t = Seq((1, 2), (2, 2), (3, 5), (4, 5)).toDF("a", "b")
+    t.createOrReplaceTempView("LONG")
+    def cat(name: String): DataFrame = if (name == "LONG") t else sys.error(s"no fixture table $name")
+    def pipeline(n: Int, stage: Int => String): String = "LONG" + (1 to n).map(i => " | " + stage(i)).mkString
+    val mixed = Vector("where a > 0", "extend c = a + b", "project a = c, b", "summarize a = max(a) by b")
+    val shapes = Seq[(String, Int => String)](
+      "where" -> (_ => "where a > 0"),
+      "extend" -> (i => s"extend e$i = a + $i"),
+      "chained extend" -> (i => if (i == 1) "extend e1 = a + 1" else s"extend e$i = e${i - 1} + 1"),
+      "summarize" -> (_ => "summarize a = sum(a) by b"),
+      "mixed" -> (i => mixed(i % mixed.size)))
+    for ((shape, stage) <- shapes) {
+      // the longest pipeline of this shape that Parser.MaxNesting admits
+      val n = Iterator.from(1).find { n =>
+        scala.util.Try(Pql.parse(pipeline(n + 1, stage))).failed.toOption.exists { e =>
+          assert(e.getMessage.contains("nesting deeper"), e.getMessage)
+          true
+        }
+      }.get
+      assert(n >= graft.parser.Parser.MaxNesting - 4, s"$shape: $n stages")
+      val q = pipeline(n, stage)
+      val viaSql = spark.sql(Pql.compileToSql(q, cat))
+      val viaPlan = Pql.query(spark, q, cat)
+      assert(viaSql.columns.toSeq == viaPlan.columns.toSeq, s"$shape, $n stages")
+      assert(multiset(viaSql) == multiset(viaPlan), s"$shape, $n stages")
+      info(s"$shape: $n stages")
+    }
+  }
+
+  test("user identifiers spelled like stage names are never rewritten") {
+    val session = spark
+    import session.implicits._
+    val t = Seq((1, 10), (2, 20), (3, 30)).toDF("__s0", "__s1")
+    t.createOrReplaceTempView("S")
+    def cat(name: String): DataFrame = if (name == "S") t else sys.error(s"no fixture table $name")
+    // `as X` is read twice, so it is a WITH entry; the rest nest in place
+    val q = "S | where __s0 > 1 | extend __s2 = __s1 + 1 | as X | join (X | extend __s3 = __s0) on __s0"
+    val sql = Pql.compileToSql(q, cat)
+    assert(sql.startsWith("WITH "), sql)
+    assert(multiset(spark.sql(sql)) == multiset(Pql.query(spark, q, cat)), sql)
+    assert(spark.sql(sql).columns.toSeq == Pql.query(spark, q, cat).columns.toSeq, sql)
   }
 
   test("Walk visits every node and supports pruning") {
