@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, count, expr, length, lit, posexplode, unix_micros, when}
 
 import graft.ops.{Ann, AsOf, Decontam, Dedup, Incremental, Kmeans, Multimodal, NearDup, Project, Quantize, Sampling, SemDedup, Shard, Sketch, Skew, TextOps}
-import graft.streaming.Sessionize
+import graft.streaming.{Replay, Sessionize}
 import graft.sources.Tables
 
 /** Driver contract: one entry per implemented operator from SURVEY.md §2,
@@ -82,16 +82,13 @@ object SparkEntry {
   private def scratchComplete(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
 
-  /** Recursively delete and recreate a scratch dir. */
-  private def wipeScratch(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    java.nio.file.Files.createDirectories(p)
-  }
+  /** Table `name` of `dir` as a real streaming source. The table is a
+    * single FILE and the file stream source wants a directory, so it is
+    * streamed through a glob (`name.parque[t]`), which anchors basePath
+    * at the parent directory itself.
+    */
+  private def tableStream(s: SparkSession, dir: String, name: String): DataFrame =
+    s.readStream.schema(s.read.parquet(s"$dir/$name.parquet").schema).parquet(s"$dir/$name.parque[t]")
 
   // ---- §2.1 tabular operators + §2.2 expressions ----------------------
 
@@ -400,14 +397,9 @@ object SparkEntry {
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val path = s"$dir/events.parquet"
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(path).schema
-    // the file stream source wants a directory (or glob) path; the
-    // table is a single FILE, so address it through a glob — the
-    // source then anchors basePath at the parent directory itself
-    val stream = s.readStream.schema(raw).parquet(s"$dir/events.parque[t]")
-    if (raw("ts").dataType == LongType)
+    val stream = tableStream(s, dir, "events")
+    if (stream.schema("ts").dataType == LongType)
       stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else stream
   }
@@ -953,18 +945,13 @@ object SparkEntry {
     // construction.
     "stream_mixture" -> Entry(
       (s, dir) => {
-        val sink = "mix_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
+        val stream = tableStream(s, dir, "documents")
         val mixed = Sampling.mixture(
           stream, "doc_id", "source",
           permille = Map("src0" -> 2500, "src1" -> 1000, "src2" -> 300),
           defaultPermille = 700
         ).select(col("doc_id"), col("source"), col("epoch"))
-        val q = graft.streaming.Streaming.runToMemory(mixed, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(mixed, "append").table
       },
       // identical oracle to mixture_sample: parity is the point
       Some(
@@ -984,14 +971,9 @@ object SparkEntry {
     // accounting runs at ingest.
     "stream_subwords" -> Entry(
       (s, dir) => {
-        val sink = "sw_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
+        val stream = tableStream(s, dir, "documents")
         val counted = TextOps.subwordStats(stream, "text", "doc_id")
-        val q = graft.streaming.Streaming.runToMemory(counted, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(counted, "append").table
       },
       Some(entries_textSubwordsOracle)
     ),
@@ -1173,16 +1155,12 @@ object SparkEntry {
     // gated guarantee, not just a spec claim.
     "events_windowed_stream" -> Entry(
       (s, dir) => {
-        val sink = "ew_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
         val compiled = Pql.query(
           s,
           ewPql,
           name => if (name == "events") eventsStream(s, dir) else Tables.parquetDir(s, dir)(name)
         )
-        val q = graft.streaming.Streaming.runToMemory(compiled, sink, "complete")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(compiled, "complete").table
       },
       Some(ewOracle)
     ),
@@ -1199,7 +1177,7 @@ object SparkEntry {
         // would silently replay old commits against new source files,
         // and UUID temp dirs accumulate across verify/test runs
         val base = gateScratch("fsink", dir)
-        wipeScratch(base)
+        Replay.wipe(base)
         val ev = Tables.parquetDir(s, dir)("events")
         val maxTs = ev.agg(org.apache.spark.sql.functions.max("ts")).head().getTimestamp(0)
         // source file 1: all events; file 2: a single sentinel far past
@@ -1210,7 +1188,7 @@ object SparkEntry {
           .withColumn("ts", lit(maxTs) + expr("INTERVAL 48 HOURS"))
           .withColumn("event_id", lit(-1L))
           .write.mode("append").parquet(s"$base/in")
-        val stream = s.readStream.schema(s.read.parquet(s"$base/in").schema).parquet(s"$base/in")
+        val stream = Replay.stream(s, s"$base/in")
         // NOTE: no sentinel filter inside the stream — Catalyst pushes
         // it below the EventTimeWatermark node, the sentinel then never
         // advances the watermark, and the last real window never
@@ -1224,9 +1202,7 @@ object SparkEntry {
           )
           .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
           .select(col("w.start").as("hb"), col("event_type"), col("n"))
-        val q = graft.streaming.Streaming.runToParquet(agg, s"$base/out", s"$base/ckpt")
-        try q.processAllAvailable()
-        finally q.stop()
+        Replay.drain(graft.streaming.Streaming.runToParquet(agg, s"$base/out", s"$base/ckpt"))
         s.read.parquet(s"$base/out")
           .filter(col("hb") <= lit(maxTs))
           .select(expr("unix_micros(hb) div 1000000").as("hb_s"), col("event_type"), col("n"))
@@ -1401,19 +1377,13 @@ object SparkEntry {
     // and is dropped as late before the dedup even sees it.
     "stream_dedup_exact" -> Entry(
       (s, dir) => {
-        val sink = "sd_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
+        val stream = Replay.timed("documents", tableStream(s, dir, "documents"))
         val deduped = graft.streaming.Streaming.dedupExact(stream, "text", "ts", "1 hour")
           .select(
             org.apache.spark.sql.functions
               .md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest")
           )
-        val q = graft.streaming.Streaming.runToMemory(deduped, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(deduped, "append").table
       },
       Some(s"SELECT DISTINCT md5($sqlNorm) AS digest FROM documents")
     ),
@@ -1424,14 +1394,9 @@ object SparkEntry {
     // family is streaming-safe by construction.
     "stream_text_quality" -> Entry(
       (s, dir) => {
-        val sink = "stq_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
+        val stream = tableStream(s, dir, "documents")
         val scored = TextOps.qualityScore(stream, "text", "doc_id")
-        val q = graft.streaming.Streaming.runToMemory(scored, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(scored, "append").table
       },
       Some(sqlTextQualityOracle) // identical oracle: parity is the point
     ),
@@ -1441,14 +1406,9 @@ object SparkEntry {
     // so trainer-grade token budgets are computable at ingest.
     "stream_bpe" -> Entry(
       (s, dir) => {
-        val sink = "bpe_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
+        val stream = tableStream(s, dir, "documents")
         val counted = TextOps.bpeStats(stream, "text", "doc_id")
-        val q = graft.streaming.Streaming.runToMemory(counted, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(counted, "append").table
       },
       Some(sqlTextBpeOracle) // identical oracle: parity is the point
     ),
@@ -1460,17 +1420,11 @@ object SparkEntry {
     // recomputes from scratch with the batch signature SQL.
     "stream_dedup_minhash" -> Entry(
       (s, dir) => {
-        val sink = "sdm_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
+        val stream = Replay.timed("documents", tableStream(s, dir, "documents"))
         val bands = graft.streaming.Streaming
           .dedupMinhashBands(stream, "text", "ts", "1 hour")
           .select(col("band_idx"), col("band_key"))
-        val q = graft.streaming.Streaming.runToMemory(bands, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(bands, "append").table
       },
       Some(
         s"""WITH ${sqlHashedShingleCtes("documents")},
@@ -1488,17 +1442,11 @@ object SparkEntry {
     // signature SQL (fixed 32/8 geometry pinned in both engines).
     "stream_dedup_embed" -> Entry(
       (s, dir) => {
-        val sink = "sde_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/embeddings.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)"))
+        val stream = Replay.timed("embeddings", tableStream(s, dir, "embeddings"))
         val bands = graft.streaming.Streaming
           .dedupEmbedBands(stream, "embedding", "ts", "1 hour", dim = 64)
           .select(col("band_idx"), col("band_key"))
-        val q = graft.streaming.Streaming.runToMemory(bands, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(bands, "append").table
       },
       Some(
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -2986,20 +2934,11 @@ object SparkEntry {
     // oracle recomputes it from scratch with the batch signature SQL.
     "pql_stream_dedup" -> Entry(
       (s, dir) => {
-        val sink = "pqlsd_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
-        val cat: String => DataFrame = {
-          case "documents" => graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour")
-          case other       => sys.error(s"no streaming table $other")
-        }
+        val stream = Replay.timed("documents", tableStream(s, dir, "documents"))
+        val cat = Replay.catalog("documents", graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour"))
         val bands = Pql.query(s,
           "documents | dedup kind=minhash text by doc_id | project band_idx, band_key", cat)
-        val q = graft.streaming.Streaming.runToMemory(bands, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(bands, "append").table
       },
       Some(
         s"""WITH ${sqlHashedShingleCtes("documents")},
@@ -3017,20 +2956,11 @@ object SparkEntry {
     // sign-LSH signature SQL recomputed from scratch.
     "pql_stream_dedup_embed" -> Entry(
       (s, dir) => {
-        val sink = "pqlsde_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/embeddings.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)"))
-        val cat: String => DataFrame = {
-          case "embeddings" => graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour")
-          case other       => sys.error(s"no streaming table $other")
-        }
+        val stream = Replay.timed("embeddings", tableStream(s, dir, "embeddings"))
+        val cat = Replay.catalog("embeddings", graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour"))
         val bands = Pql.query(s,
           "embeddings | dedup kind=embed dim=64 embedding by vec_id | project band_idx, band_key", cat)
-        val q = graft.streaming.Streaming.runToMemory(bands, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(bands, "append").table
       },
       Some(
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -3145,22 +3075,13 @@ object SparkEntry {
     // stream_dedup_exact, same oracle.
     "pql_stream_dedup_exact" -> Entry(
       (s, dir) => {
-        val sink = "pqlsdx_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
-        val cat: String => DataFrame = {
-          case "documents" => graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour")
-          case other       => sys.error(s"no streaming table $other")
-        }
+        val stream = Replay.timed("documents", tableStream(s, dir, "documents"))
+        val cat = Replay.catalog("documents", graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour"))
         val deduped = Pql.query(s, "documents | dedup kind=exact text by doc_id", cat)
           .select(
             org.apache.spark.sql.functions
               .md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest"))
-        val q = graft.streaming.Streaming.runToMemory(deduped, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(deduped, "append").table
       },
       Some(s"SELECT DISTINCT md5($sqlNorm) AS digest FROM documents")
     ),
@@ -3175,23 +3096,14 @@ object SparkEntry {
     // data; the projection gates determinism the same way).
     "pql_stream_dedup_evcopy" -> Entry(
       (s, dir) => {
-        val sink = "pqlsdc_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val raw = s.read.parquet(s"$dir/documents.parquet").schema
-        val stream = s.readStream.schema(raw).parquet(s"$dir/documents.parque[t]")
-          .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
-        val cat: String => DataFrame = {
-          case "documents" => graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour")
-          case other       => sys.error(s"no streaming table $other")
-        }
+        val stream = Replay.timed("documents", tableStream(s, dir, "documents"))
+        val cat = Replay.catalog("documents", graft.streaming.Streaming.withEventTime(stream, "ts", "1 hour"))
         val deduped = Pql.query(
             s, "documents | extend t2 = ts | dedup kind=exact text by doc_id", cat)
           .select(
             org.apache.spark.sql.functions
               .md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest"))
-        val q = graft.streaming.Streaming.runToMemory(deduped, sink, "append")
-        try q.processAllAvailable()
-        finally q.stop()
-        s.table(sink)
+        Replay.drain(deduped, "append").table
       },
       Some(s"SELECT DISTINCT md5($sqlNorm) AS digest FROM documents")
     ),

@@ -28,11 +28,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // never leave a previous run's dump behind: a stale result
         // would score as a false PASS in the oracle compare
-        if (java.nio.file.Files.exists(target)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(target).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        graft.streaming.Replay.wipe(target.toString)
       }
     }
     // Key each oracle BOTH ways: the driver's round-2 CORRECTNESS report

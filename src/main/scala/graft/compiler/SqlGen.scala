@@ -31,7 +31,9 @@ import graft.parser._
   * Where a stage is written is decided in one place, [[run]]: a stage
   * read exactly once is written in place, as a subquery; a stage read
   * more than once (an `| as` name read again, or the input of an
-  * emitter that reads it twice) is one `WITH` entry (`__s<n>`); the
+  * emitter that reads it twice) is one `WITH` entry (`__s<n>`, with
+  * more leading underscores when a table the query reads starts with
+  * `__s`, since an entry hides a table of its name); the
   * last stage's own SELECT is the query. Stages read each other through
   * [[Read]]s in their text, never through names spliced into finished
   * SQL, so no user identifier is ever rewritten.
@@ -69,6 +71,8 @@ private[graft] final class SqlGen(
 
   /** `| as Name` stages: name → the stage it names. */
   private val named = mutable.Map[String, Node]()
+  /** The catalog tables the query reads. */
+  private val tables = mutable.Set[String]()
   private var stageSeq = 0
   private var joinSeq = 0
 
@@ -91,19 +95,27 @@ private[graft] final class SqlGen(
       if (reads(m) == 1) count(m)
     }
     count(last)
+    // a WITH entry resolves before the catalog, so stage names take a
+    // prefix that no table the query reads starts with
+    val prefix = Iterator.iterate("__s")("_" + _)
+      .find(p => !tables.exists(_.toLowerCase(java.util.Locale.ROOT).startsWith(p))).get
+    def name(n: Node): String = prefix + n.id
     def render(t: Text): String = t.parts.map {
-      case Read(n, alias) if reads(n) > 1 => if (alias == n.name) alias else s"${n.name} AS $alias"
-      case Read(n, alias)                 => s"(${render(n.text)}) AS $alias"
+      case Read(n, alias) if reads(n) > 1 => name(n) + alias.fold("")(a => s" AS $a")
+      case Read(n, alias)                 => s"(${render(n.text)}) AS ${alias.getOrElse(name(n))}"
       case s                              => s
     }.mkString
     val shared = reads.keys.filter(reads(_) > 1).toSeq.sortBy(_.id)
-    val ctes = shared.map(n => s"${n.name} AS (\n  ${render(n.text)}\n)")
+    val ctes = shared.map(n => s"${name(n)} AS (\n  ${render(n.text)}\n)")
     (if (ctes.isEmpty) "" else ctes.mkString("WITH ", ",\n", "\n")) + render(last.text)
   }
 
   private def sourceStage(src: TableRef): Stage = {
     val df = compiler.resolveTable(src.table)
-    Stage(named.getOrElse(src.table.name, newStage(sql"SELECT * FROM ${q(src.table.name)}")), df)
+    Stage(named.getOrElse(src.table.name, {
+      tables += src.table.name
+      newStage(sql"SELECT * FROM ${q(src.table.name)}")
+    }), df)
   }
 
   /** A pipeline (the query, or a sub-pipeline), folded once. */
@@ -942,13 +954,14 @@ private object SqlGen {
     */
   final case class Stage(node: Node, df: DataFrame)
 
-  /** Where a stage's text reads `node`, under `alias`. */
-  final case class Read(node: Node, alias: String)
+  /** Where a stage's text reads `node`, under `alias` or else under
+    * the stage's own name, which [[SqlGen.run]] picks.
+    */
+  final case class Read(node: Node, alias: Option[String])
 
   /** One SELECT; it reads only stages made before it. */
   final class Node(val id: Int, val text: Text) {
-    def name: String = s"__s$id"
-    def as(alias: String): Read = Read(this, alias)
+    def as(alias: String): Read = Read(this, Some(alias))
     def reads: Seq[Node] = text.parts.collect { case Read(n, _) => n }
   }
 
@@ -960,7 +973,7 @@ private object SqlGen {
     def sql(args: Any*): Text = {
       val parts = sc.parts.map(StringContext.processEscapes)
       Text(parts.head +: args.zip(parts.tail).flatMap {
-        case (n: Node, s) => Seq(n.as(n.name), s)
+        case (n: Node, s) => Seq(Read(n, None), s)
         case (r: Read, s) => Seq(r, s)
         case (t: Text, s) => t.parts :+ s
         case (a, s)       => Seq(a.toString, s)

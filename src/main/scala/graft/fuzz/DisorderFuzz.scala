@@ -1,7 +1,9 @@
 package graft.fuzz
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.{Replay, Streaming}
 
 /** Out-of-order / late-data streaming fuzz (round 19). StreamFuzz
   * replays TIME-ORDERED files, so its 960 green compares never touched
@@ -37,10 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object DisorderFuzz {
 
-  private val tsSynth = Map(
-    "documents" -> "timestamp_micros(doc_id * 1000000 + 1700000000000000)",
-    "embeddings" -> "timestamp_micros(vec_id * 1000000 + 1700000000000000)"
-  )
   private val idCol =
     Map("documents" -> "doc_id", "embeddings" -> "vec_id", "events" -> "event_id")
 
@@ -68,8 +66,7 @@ object DisorderFuzz {
     */
   def prepare(spark: SparkSession, sfDir: String, workDir: String, seed: Long): Unit =
     tableNames.foreach { t =>
-      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
-      val df = tsSynth.get(t).map(e => raw.withColumn("ts", expr(e))).getOrElse(raw)
+      val df = Replay.timed(t, spark.read.parquet(s"$sfDir/$t.parquet"))
 
       val budget = geometry(t)._2
       val Array(minTs, maxTs) =
@@ -82,15 +79,19 @@ object DisorderFuzz {
       require(threshold < maxTs - delayMicros(t) - budget,
         s"$t: event-time span too small for a guaranteed-late holdout")
 
-      writeOrdered(df, s"$workDir/$t/ordered")
+      // parts unsorted within: the layouts the recorded campaigns ran on
+      // (see Replay.writeTimeOrdered)
+      def layout(rows: DataFrame, name: String, key: Column = col("ts")): Unit =
+        Replay.writeTimeOrdered(rows, s"$workDir/$t/$name", nFiles, key, sorted = false)
+      layout(df, "ordered")
 
       val arrival = timestamp_micros(
         unix_micros(col("ts")) + pmod(xxhash64(col(idCol(t)), lit(seed)), lit(budget)))
-      writeRanged(df, arrival, s"$workDir/$t/jitter")
+      layout(df, "jitter", arrival)
 
       val isLate = unix_micros(col("ts")) < lit(threshold) &&
         pmod(xxhash64(col(idCol(t)), lit(seed + 1)), lit(4)) === lit(0)
-      writeOrdered(df.filter(!isLate), s"$workDir/$t/ontime")
+      layout(df.filter(!isLate), "ontime")
 
       // late = ontime's committed files + one holdout file, mtime last
       val lateDir = s"$workDir/$t/late"
@@ -100,58 +101,20 @@ object DisorderFuzz {
       holdout.coalesce(1).write.mode("overwrite").parquet(holdScratch)
       val dst = new java.io.File(lateDir)
       dst.mkdirs()
-      val ontimeParts = parts(s"$workDir/$t/ontime")
+      val ontimeParts = Replay.parts(s"$workDir/$t/ontime")
       ontimeParts.foreach { f =>
         java.nio.file.Files.copy(f.toPath, new java.io.File(dst, f.getName).toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-      val hold = parts(holdScratch).head
+      val hold = Replay.parts(holdScratch).head
       java.nio.file.Files.copy(hold.toPath,
         new java.io.File(dst, "part-99999-holdout.parquet").toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      stampMtimes(lateDir)
+      Replay.stampMtimes(lateDir)
     }
-
-  private def writeOrdered(df: DataFrame, dir: String): Unit =
-    writeRanged(df, col("ts"), dir)
-
-  private def writeRanged(df: DataFrame, key: org.apache.spark.sql.Column, dir: String): Unit = {
-    df.repartitionByRange(nFiles, key).write.mode("overwrite").parquet(dir)
-    stampMtimes(dir)
-  }
-
-  private def parts(dir: String): Seq[java.io.File] =
-    new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
-
-  private def stampMtimes(dir: String): Unit = {
-    val ps = parts(dir)
-    val base = System.currentTimeMillis() - ps.length * 2000L
-    ps.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-  }
 
   private def layoutCatalog(spark: SparkSession, workDir: String, layout: String): String => DataFrame =
-    name => {
-      val dir = s"$workDir/$name/$layout"
-      val sch = spark.read.parquet(dir).schema
-      graft.streaming.Streaming.withEventTime(
-        spark.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-          .parquet(s"$dir/part-*"),
-        "ts", geometry(name)._1)
-    }
-
-  private def runStream(
-      spark: SparkSession,
-      pql: String,
-      cat: String => DataFrame,
-      sink: String
-  ): DataFrame = {
-    val df = graft.Pql.query(spark, pql, cat)
-    val q = graft.streaming.Streaming.runToMemory(df, sink, "append")
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sink)
-  }
+    name => Streaming.withEventTime(Replay.fileStream(spark, s"$workDir/$name/$layout"), "ts", geometry(name)._1)
 
   /** The watermark only sees rows that REACH the watermark node:
     * Catalyst pushes a pre-filter that does not touch the event-time
@@ -191,24 +154,26 @@ object DisorderFuzz {
       case "minhash" | "embed"    => StreamFuzz.bandsOf
       case _                      => identity
     }
-    def run(layout: String, sink: String): (Seq[String], Seq[Seq[Any]]) =
-      StreamFuzz.canon(gate(runStream(spark, gq.pql, layoutCatalog(spark, workDir, layout), sink)))
-    val sinks = (1 to 4).map(i => s"dfz_${seed}_$i")
+    val drained = scala.collection.mutable.ArrayBuffer[Replay.Drained]()
+    def run(layout: String): (Seq[String], Seq[Seq[Any]]) = {
+      drained += Replay.drain(graft.Pql.query(spark, gq.pql, layoutCatalog(spark, workDir, layout)), "append")
+      StreamFuzz.canon(gate(drained.last.table))
+    }
     try {
-      val ordered = run("ordered", sinks(0))
-      StreamFuzz.compare("jitter≡ordered", run("jitter", sinks(1)), ordered)
+      val ordered = run("ordered")
+      StreamFuzz.compare("jitter≡ordered", run("jitter"), ordered)
         .orElse {
           // stateless chains must KEEP beyond-budget rows (a watermark
           // alone filters nothing); stateful ops must DROP all of them
           // — when the watermark model says the drop is guaranteed
           if (gq.terminal == "stateless")
-            StreamFuzz.compare("late≡full(kept)", run("late", sinks(3)), ordered)
+            StreamFuzz.compare("late≡full(kept)", run("late"), ordered)
           else if (lateDropGuaranteed(spark, workDir, gq))
             StreamFuzz.compare("late≡ontime(dropped)",
-              run("late", sinks(3)), run("ontime", sinks(2)))
+              run("late"), run("ontime"))
           else None // counted by the campaign as late-leg skipped
         }
-    } finally sinks.foreach(spark.catalog.dropTempView(_))
+    } finally drained.foreach(_.release())
   }
 
   /** True when [[check]] would run the guaranteed-drop leg (campaign

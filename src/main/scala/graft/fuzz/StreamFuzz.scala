@@ -3,6 +3,8 @@ package graft.fuzz
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.{Replay, Streaming}
+
 /** Streaming differential fuzz (round 18): the batch-side
   * DiffFuzzSpec exhausted the batch composition space; what no fixed
   * gate entry varies is random PRE-ops composed with the STREAMING
@@ -24,57 +26,42 @@ import org.apache.spark.sql.functions._
   *     one file per trigger ≡ all files in one trigger.
   *
   * Event time is monotone across micro-batches by construction:
-  * [[prepare]] range-partitions each table by `ts` into four files and
-  * stamps mtimes in range order (FileStreamSource replays by mtime —
-  * same trick as graft.streaming.Soak), so the 1-hour watermark never
-  * drops a row and batch parity is exact, not merely modal.
+  * [[prepare]] range-partitions each table by `ts` into four files with
+  * mtimes in range order ([[graft.streaming.Replay.writeTimeOrdered]]),
+  * so the 1-hour watermark never drops a row and batch parity is exact,
+  * not merely modal.
   *
   * Usage (standalone campaign): graft.fuzz.StreamFuzz <sfDir> [nSeeds]
   */
 object StreamFuzz {
 
-  /** Event-time synthesis for the tables that carry none — the same
-    * id-offset formula as the stream_dedup_* gate entries.
-    */
-  private val tsSynth = Map(
-    "documents" -> "timestamp_micros(doc_id * 1000000 + 1700000000000000)",
-    "embeddings" -> "timestamp_micros(vec_id * 1000000 + 1700000000000000)"
-  )
-
   private val tableNames = Seq("documents", "events", "embeddings")
 
   /** Split each fuzz table into four ts-range files under
-    * `workDir/<table>/`, mtime-stamped in range order.
+    * `workDir/<table>/` ([[Replay.writeTimeOrdered]]), unsorted within
+    * as the recorded campaigns ran on them.
     */
   def prepare(spark: SparkSession, sfDir: String, workDir: String): Unit =
     tableNames.foreach { t =>
-      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
-      val df = tsSynth.get(t).map(e => raw.withColumn("ts", expr(e))).getOrElse(raw)
-      val dir = s"$workDir/$t"
-      df.repartitionByRange(4, col("ts")).write.mode("overwrite").parquet(dir)
-      val parts = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 2000L
-      parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
+      Replay.writeTimeOrdered(
+        Replay.timed(t, spark.read.parquet(s"$sfDir/$t.parquet")), s"$workDir/$t", 4, sorted = false)
     }
 
   def batchCatalog(spark: SparkSession, workDir: String): String => DataFrame =
     name => spark.read.parquet(s"$workDir/$name")
 
-  /** File-stream catalog over the prepared splits; `filesPerTrigger`
-    * None = all files in the first micro-batch.
+  /** File-stream catalog over the prepared splits: one file per
+    * trigger, or all files in the first micro-batch.
     */
   def streamCatalog(
       spark: SparkSession,
       workDir: String,
-      filesPerTrigger: Option[Int]
+      oneFilePerTrigger: Boolean
   ): String => DataFrame =
     name => {
-      val sch = spark.read.parquet(s"$workDir/$name").schema
-      var r = spark.readStream.schema(sch)
-      filesPerTrigger.foreach(n => r = r.option("maxFilesPerTrigger", n.toString))
-      graft.streaming.Streaming.withEventTime(
-        r.parquet(s"$workDir/$name/part-*"), "ts", "1 hour")
+      val dir = s"$workDir/$name"
+      Streaming.withEventTime(
+        if (oneFilePerTrigger) Replay.fileStream(spark, dir) else Replay.stream(spark, dir), "ts", "1 hour")
     }
 
   // ---- gated projections --------------------------------------------------
@@ -143,28 +130,17 @@ object StreamFuzz {
 
   // ---- per-seed check --------------------------------------------------------
 
-  private def runStream(
-      spark: SparkSession,
-      pql: String,
-      cat: String => DataFrame,
-      mode: String,
-      sink: String
-  ): DataFrame = {
-    val df = graft.Pql.query(spark, pql, cat)
-    val q = graft.streaming.Streaming.runToMemory(df, sink, mode)
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(sink)
-  }
-
   /** Run one seed's differential; None = pass, Some(msg) = diff. */
   def check(spark: SparkSession, workDir: String, seed: Long): Option[String] = {
     val gq = PipelineGen.stream(seed)
     val mode = if (gq.terminal == "window") "complete" else "append"
-    val sinkA = s"sfz_${seed}_a"
-    val sinkB = s"sfz_${seed}_b"
+    val drained = scala.collection.mutable.ArrayBuffer[Replay.Drained]()
+    def run(oneFilePerTrigger: Boolean): DataFrame = {
+      drained += Replay.drain(graft.Pql.query(spark, gq.pql, streamCatalog(spark, workDir, oneFilePerTrigger)), mode)
+      drained.last.table
+    }
     try {
-      val streamed = runStream(spark, gq.pql, streamCatalog(spark, workDir, Some(1)), mode, sinkA)
+      val streamed = run(oneFilePerTrigger = true)
       val batchCat = batchCatalog(spark, workDir)
       val parity: Option[String] = gq.terminal match {
         case "stateless" | "window" =>
@@ -187,7 +163,7 @@ object StreamFuzz {
 
       // micro-batch-partitioning invariance for the stateful terminals
       if (gq.terminal != "stateless") {
-        val oneShot = runStream(spark, gq.pql, streamCatalog(spark, workDir, None), mode, sinkB)
+        val oneShot = run(oneFilePerTrigger = false)
         val gate: DataFrame => DataFrame = gq.terminal match {
           case "window" => df => df
           case "exact"  => digestOf
@@ -195,10 +171,7 @@ object StreamFuzz {
         }
         compare("1-file-trigger≡single-batch", canon(gate(streamed)), canon(gate(oneShot)))
       } else None
-    } finally {
-      spark.catalog.dropTempView(sinkA)
-      spark.catalog.dropTempView(sinkB)
-    }
+    } finally drained.foreach(_.release())
   }
 
   // ---- standalone campaign ---------------------------------------------------

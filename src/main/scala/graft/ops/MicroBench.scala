@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
+import graft.streaming.Replay
+
 /** Dev utility: targeted measurements of SparkEntry gate entries, for
   * finding which entry or stage dominates before optimizing. Bench
   * reports the end-to-end numbers; an A/B is the same `entry` run at
@@ -156,12 +158,11 @@ object MicroBench {
   /** `streambench [nFiles]` — timing for the streaming dedup paths.
     * Splits the current SF's documents / embeddings into `nFiles`
     * parquet files, streams them through the REAL stateful pipelines
-    * (watermark + dropDuplicatesWithinWatermark) with
-    * maxFilesPerTrigger=1 — N micro-batches through the memory sink,
-    * state accumulating across batches exactly like production — and
-    * reports each run's wall time from query start to
-    * processAllAvailable (a fresh query + sink per run: state never
-    * carries over between runs). 1 warm-up + 3 timed runs. Beside the
+    * (watermark + dropDuplicatesWithinWatermark) one file per trigger
+    * — N micro-batches through the memory sink, state accumulating
+    * across batches exactly like production — and reports each run's
+    * wall time from query start until [[Replay.drain]] returns (a fresh
+    * query + sink per run: state never carries over between runs). 1 warm-up + 3 timed runs. Beside the
     * wall time it prints, from `recentProgress`, the per-trigger
     * medians of `durationMs` (`addBatch`, `walCommit`, `commitOffsets`,
     * `latestOffset`) and of the state commit time.
@@ -173,23 +174,16 @@ object MicroBench {
         .repartition(nFiles).write.mode("overwrite").parquet(s"$base/docs")
       spark.read.parquet(s"$sfDir/embeddings.parquet")
         .repartition(nFiles).write.mode("overwrite").parquet(s"$base/emb")
-      val docsSchema = spark.read.parquet(s"$base/docs").schema
-      val embSchema = spark.read.parquet(s"$base/emb").schema
+      def docs(): DataFrame = Replay.timed("documents", Replay.fileStream(spark, s"$base/docs"))
 
-      def stream(path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(path)
-
-      def timeStream(name: String)(mk: String => DataFrame): Unit = {
+      def timeStream(name: String)(mk: () => DataFrame): Unit = {
         def runOnce(): (Double, Seq[StreamingQueryProgress]) = {
-          val sink = "sb_" + java.util.UUID.randomUUID().toString.replace("-", "")
+          val df = mk()
           val t0 = System.nanoTime()
-          val q = graft.streaming.Streaming.runToMemory(mk(sink), sink, "append")
-          try q.processAllAvailable()
-          finally q.stop()
+          val drained = Replay.drain(df, "append")
           val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.dropTempView(sink)
-          (dt, q.recentProgress.toSeq)
+          drained.release()
+          (dt, drained.progress)
         }
         runOnce() // warm-up (codegen + file listing)
         val rs = Seq.fill(3)(runOnce())
@@ -207,25 +201,17 @@ object MicroBench {
           layers.map { case (k, v) => s"$k=$v" }.mkString(" "))
       }
 
-      timeStream("stream_dedup_exact") { _ =>
-        graft.streaming.Streaming.dedupExact(
-          stream(s"$base/docs", docsSchema)
-            .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)")),
-          "text", "ts", "1 hour"
-        ).select(md5(TextOps.normalize(col("text")).cast("binary")).as("digest"))
+      timeStream("stream_dedup_exact") { () =>
+        graft.streaming.Streaming.dedupExact(docs(), "text", "ts", "1 hour")
+          .select(md5(TextOps.normalize(col("text")).cast("binary")).as("digest"))
       }
-      timeStream("stream_dedup_minhash") { _ =>
-        graft.streaming.Streaming.dedupMinhashBands(
-          stream(s"$base/docs", docsSchema)
-            .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)")),
-          "text", "ts", "1 hour"
-        ).select(col("band_idx"), col("band_key"))
+      timeStream("stream_dedup_minhash") { () =>
+        graft.streaming.Streaming.dedupMinhashBands(docs(), "text", "ts", "1 hour")
+          .select(col("band_idx"), col("band_key"))
       }
-      timeStream("stream_dedup_embed") { _ =>
+      timeStream("stream_dedup_embed") { () =>
         graft.streaming.Streaming.dedupEmbedBands(
-          stream(s"$base/emb", embSchema)
-            .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)")),
-          "embedding", "ts", "1 hour", dim = 64
+          Replay.timed("embeddings", Replay.fileStream(spark, s"$base/emb")), "embedding", "ts", "1 hour", dim = 64
         ).select(col("band_idx"), col("band_key"))
       }
     }

@@ -95,16 +95,14 @@ object SemDedup {
     val b = base.select(
       col("c").as("cb"), col(idCol).as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     // equi-join on the cell key; the ordering and threshold predicates
-    // evaluate inside the join so sub-threshold pairs die in the
-    // generated loop (same evaluation-order shape as embedCosinePairs)
-    a.join(b, col("c") === col("cb") && col("id_a") < col("id_b"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        col("c").cast("int").as("cell"),
-        (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos_sim")
-      )
-      .filter(col("cos_sim") >= minCos)
+    // evaluate inside the join, the threshold LAST (not a filter():
+    // predicate pushdown would prepend it to the condition and run the
+    // dot product on (a,b), (b,a) and (a,a) before `id_a < id_b`).
+    // Conjunct order is evaluation order in the generated join loop, as
+    // in embedCosinePairs; the select recomputes cos_sim for output rows.
+    val cos = dot(col("va"), col("vb")) / (col("na") * col("nb"))
+    a.join(b, col("c") === col("cb") && col("id_a") < col("id_b") && cos >= minCos)
+      .select(col("id_a"), col("id_b"), col("c").cast("int").as("cell"), cos.as("cos_sim"))
   }
 
   /** The SemDeDup cell-sizing rule as code: within-cell work is

@@ -40,101 +40,60 @@ object RestartDrill {
     */
   private def session(): SparkSession = graft.Sessions.local(cpus = 4)
 
-  /** Time-ordered multi-file replay inputs (same shape as Soak: range
-    * slices by event time, mtimes stamped in range order so
-    * FileStreamSource replays them in event-time order).
+  /** Time-ordered multi-file replay inputs (same shape as Soak:
+    * [[Replay.writeTimeOrdered]] slices).
     */
   def prep(spark: SparkSession, sfDir: String, scratch: String, nFiles: Int): Unit = {
     val t = graft.sources.Tables.parquetDir(spark, sfDir)
-    t("events").repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(s"$scratch/events")
-    Soak.forceMtimeOrder(s"$scratch/events")
-    val docs = t("documents")
-      .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
-    docs.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(s"$scratch/docs")
-    Soak.forceMtimeOrder(s"$scratch/docs")
-    val emb = t("embeddings")
-      .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)"))
-    emb.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(s"$scratch/emb")
-    Soak.forceMtimeOrder(s"$scratch/emb")
+    Replay.writeTimeOrdered(t("events"), s"$scratch/events", nFiles)
+    Replay.writeTimeOrdered(Replay.timed("documents", t("documents")), s"$scratch/docs", nFiles)
+    Replay.writeTimeOrdered(Replay.timed("embeddings", t("embeddings")), s"$scratch/emb", nFiles)
     // disordered replays (the DisorderFuzz layouts) for the
     // restart × disorder intersection workloads
     graft.fuzz.DisorderFuzz.prepare(spark, sfDir, s"$scratch/dis", seed = 7)
   }
 
-  private def fileStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema(spark.read.parquet(path).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(path)
-
   /** The streaming plan per workload — built identically on first
     * start and on restart (Structured Streaming checkpoints offsets
     * and state, not the plan; the caller re-creates it).
     */
-  def build(spark: SparkSession, scratch: String, workload: String): DataFrame = workload match {
-    case "window" =>
-      val cat: String => DataFrame = {
-        case "events" => Streaming.withEventTime(fileStream(spark, s"$scratch/events"), "ts", "10 minutes")
-        case other    => sys.error(s"no streaming table $other")
-      }
-      graft.Pql.query(spark,
-        """events | summarize n = count() by hb = bin(ts, "1h"), event_type""", cat)
-    case "dedup_exact" =>
-      val cat: String => DataFrame = {
-        case "documents" => Streaming.withEventTime(fileStream(spark, s"$scratch/docs"), "ts", "1 hour")
-        case other       => sys.error(s"no streaming table $other")
-      }
-      graft.Pql.query(spark, "documents | dedup kind=exact text by doc_id", cat)
-        .select(md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest"))
-    case "dedup_minhash" =>
-      // sound gate for the band-claim kinds (the StreamFuzz rule):
-      // WHICH row owns a band is arrival-ordered within a micro-batch
-      // (shuffle fetch order), but the claimed band multiset is
-      // deterministic — so the sink carries the band projection, and
-      // the drill's row compare IS the band-set compare
-      val cat: String => DataFrame = {
-        case "documents" => Streaming.withEventTime(fileStream(spark, s"$scratch/docs"), "ts", "1 hour")
-        case other       => sys.error(s"no streaming table $other")
-      }
-      graft.Pql.query(spark, "documents | dedup kind=minhash text by doc_id", cat)
-        .select(col("band_idx").cast("int").as("band_idx"),
-          col("band_key").cast("string").as("band_key"))
-    case "dedup_embed" =>
-      val cat: String => DataFrame = {
-        case "embeddings" => Streaming.withEventTime(fileStream(spark, s"$scratch/emb"), "ts", "1 hour")
-        case other        => sys.error(s"no streaming table $other")
-      }
-      graft.Pql.query(spark,
-        "embeddings | dedup kind=embed dim=64 planes=32 bits=8 embedding by vec_id", cat)
-        .select(col("band_idx").cast("int").as("band_idx"),
-          col("band_key").cast("string").as("band_key"))
-    case "window_jitter" | "window_late" =>
-      // restart × disorder intersection: the same windowed agg over a
-      // DISORDERED events replay (DisorderFuzz layouts — jitter =
-      // bounded cross-file disorder inside the 1-day watermark delay;
-      // late = on-time files plus one final beyond-budget holdout
-      // file). The crash lands BEFORE the holdout file arrives, so on
-      // the late layout it is the watermark RECOVERED from the offset
-      // log that must drop the holdout exactly as the uninterrupted
-      // run's in-memory watermark does.
-      val layout = if (workload == "window_jitter") "jitter" else "late"
-      val dir = s"$scratch/dis/events/$layout"
-      val sch = spark.read.parquet(dir).schema
-      val cat: String => DataFrame = {
-        case "events" =>
-          Streaming.withEventTime(
-            spark.readStream.schema(sch).option("maxFilesPerTrigger", "1")
-              .parquet(s"$dir/part-*"),
-            "ts", "1 day")
-        case other => sys.error(s"no streaming table $other")
-      }
-      graft.Pql.query(spark,
-        """events | summarize n = count() by hb = bin(ts, "1h"), event_type""", cat)
-    case other =>
-      sys.error(s"unknown workload $other (window | dedup_exact | dedup_minhash | dedup_embed | window_jitter | window_late)")
+  def build(spark: SparkSession, scratch: String, workload: String): DataFrame = {
+    def stream(table: String, dir: String, delay: String): String => DataFrame =
+      Replay.catalog(table, Streaming.withEventTime(Replay.fileStream(spark, s"$scratch/$dir"), "ts", delay))
+    val window = """events | summarize n = count() by hb = bin(ts, "1h"), event_type"""
+    // sound gate for the band-claim kinds (the StreamFuzz rule): WHICH
+    // row owns a band is arrival-ordered within a micro-batch (shuffle
+    // fetch order), but the claimed band multiset is deterministic — so
+    // the sink carries the band projection, and the drill's row compare
+    // IS the band-set compare
+    def bands(df: DataFrame): DataFrame =
+      df.select(col("band_idx").cast("int").as("band_idx"), col("band_key").cast("string").as("band_key"))
+    workload match {
+      case "window" =>
+        graft.Pql.query(spark, window, stream("events", "events", "10 minutes"))
+      case "dedup_exact" =>
+        graft.Pql.query(spark, "documents | dedup kind=exact text by doc_id", stream("documents", "docs", "1 hour"))
+          .select(md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest"))
+      case "dedup_minhash" =>
+        bands(graft.Pql.query(spark, "documents | dedup kind=minhash text by doc_id",
+          stream("documents", "docs", "1 hour")))
+      case "dedup_embed" =>
+        bands(graft.Pql.query(spark, "embeddings | dedup kind=embed dim=64 planes=32 bits=8 embedding by vec_id",
+          stream("embeddings", "emb", "1 hour")))
+      case "window_jitter" | "window_late" =>
+        // restart × disorder intersection: the same windowed agg over a
+        // DISORDERED events replay (DisorderFuzz layouts — jitter =
+        // bounded cross-file disorder inside the 1-day watermark delay;
+        // late = on-time files plus one final beyond-budget holdout
+        // file). The crash lands BEFORE the holdout file arrives, so on
+        // the late layout it is the watermark RECOVERED from the offset
+        // log that must drop the holdout exactly as the uninterrupted
+        // run's in-memory watermark does.
+        val layout = if (workload == "window_jitter") "jitter" else "late"
+        graft.Pql.query(spark, window, stream("events", s"dis/events/$layout", "1 day"))
+      case other =>
+        sys.error(s"unknown workload $other (window | dedup_exact | dedup_minhash | dedup_embed | window_jitter | window_late)")
+    }
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -148,8 +107,7 @@ object RestartDrill {
       val q = Streaming.runToParquet(
         build(spark, scratch, workload),
         s"$scratch/${workload}_$tag/out", s"$scratch/${workload}_$tag/ckpt")
-      q.processAllAvailable()
-      q.stop()
+      Replay.drain(q)
       val n = spark.read.parquet(s"$scratch/${workload}_$tag/out").count()
       println(s"""{"drill":"drain","workload":"$workload","tag":"$tag","output_rows":$n}""")
       spark.stop()

@@ -35,52 +35,32 @@ object Soak {
     def wants(name: String): Boolean = selected.isEmpty || selected(name)
     val spark = graft.Sessions.local()
     val scratch = "/tmp/graft_soak_" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    wipe(scratch)
+    Replay.wipe(scratch)
 
     // ---- time-ordered multi-file sources ---------------------------
-    // repartitionByRange on the event-time column: file k holds the
-    // k-th time slice, so the per-file triggers replay the stream in
-    // (approximate) event-time order — the shape a real ingest has.
-    // read via Tables: driver testdata carries TIMESTAMP(NANOS) columns
-    // that a raw parquet read refuses; the scratch copies below are
-    // Spark-written (micros), so the streams read them raw.
+    // file k holds the k-th event-time slice, so the per-file triggers
+    // replay the stream in (approximate) event-time order — the shape a
+    // real ingest has. Read via Tables: the source parquet carries
+    // TIMESTAMP(NANOS) columns that a raw parquet read refuses; the
+    // scratch copies below are Spark-written (micros), so the streams
+    // read them raw.
     val t = graft.sources.Tables.parquetDir(spark, sfDir)
     val needsEvents = wants("events_windowed_fsink") || wants("sessions_capped")
     val needsDocs = wants("stream_dedup_exact") || wants("stream_dedup_minhash") ||
       wants("pql_stream_dedup") || wants("pql_stream_dedup_exact")
-    if (needsEvents) {
-      t("events").repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(s"$scratch/events")
-      forceMtimeOrder(s"$scratch/events")
-    }
-    if (needsDocs) {
-      val docs = t("documents")
-        .withColumn("ts", expr("timestamp_micros(doc_id * 1000000 + 1700000000000000)"))
-      docs.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(s"$scratch/docs")
-      forceMtimeOrder(s"$scratch/docs")
-    }
-    if (wants("stream_dedup_embed") || wants("pql_stream_dedup_embed")) {
-      val embs = t("embeddings")
-        .withColumn("ts", expr("timestamp_micros(vec_id * 1000000 + 1700000000000000)"))
-      embs.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(s"$scratch/embs")
-      forceMtimeOrder(s"$scratch/embs")
-    }
+    if (needsEvents)
+      Replay.writeTimeOrdered(t("events"), s"$scratch/events", nFiles)
+    if (needsDocs)
+      Replay.writeTimeOrdered(Replay.timed("documents", t("documents")), s"$scratch/docs", nFiles)
+    if (wants("stream_dedup_embed") || wants("pql_stream_dedup_embed"))
+      Replay.writeTimeOrdered(Replay.timed("embeddings", t("embeddings")), s"$scratch/embs", nFiles)
 
-    def fileStream(path: String): DataFrame =
-      spark.readStream
-        .schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(path)
+    def fileStream(path: String): DataFrame = Replay.fileStream(spark, path)
 
     // ---- soak runner: drain the stream, track state highwater ------
     def soak(name: String, outPath: String)(start: () => StreamingQuery): Unit = {
-      val q = start()
-      try q.processAllAvailable()
-      finally q.stop()
       // recentProgress is capped at 100 entries; nFiles stays far below
-      val progress = q.recentProgress.toSeq
+      val progress = Replay.drain(start())
       val states = progress.flatMap(_.stateOperators.toSeq)
       val maxRows = if (states.isEmpty) 0L else states.map(_.numRowsTotal).max
       val maxMem = if (states.isEmpty) 0L else states.map(_.memoryUsedBytes).max
@@ -118,10 +98,7 @@ object Soak {
     // (the op drops its internal digest column), same as the gate.
     if (wants("pql_stream_dedup_exact"))
     soak("pql_stream_dedup_exact", s"$scratch/pqlsdx_out") { () =>
-      val cat: String => DataFrame = {
-        case "documents" => Streaming.withEventTime(fileStream(s"$scratch/docs"), "ts", "1 hour")
-        case other       => sys.error(s"no streaming table $other")
-      }
+      val cat = Replay.catalog("documents", Streaming.withEventTime(fileStream(s"$scratch/docs"), "ts", "1 hour"))
       val deduped = graft.Pql.query(spark, "documents | dedup kind=exact text by doc_id", cat)
         .select(md5(graft.ops.TextOps.normalize(col("text")).cast("binary")).as("digest"))
       Streaming.runToParquet(deduped, s"$scratch/pqlsdx_out", s"$scratch/pqlsdx_ckpt")
@@ -155,10 +132,7 @@ object Soak {
     // to (workload 3), not just match it in a single batch.
     if (wants("pql_stream_dedup"))
     soak("pql_stream_dedup", s"$scratch/pqlsd_out") { () =>
-      val cat: String => DataFrame = {
-        case "documents" => Streaming.withEventTime(fileStream(s"$scratch/docs"), "ts", "1 hour")
-        case other       => sys.error(s"no streaming table $other")
-      }
+      val cat = Replay.catalog("documents", Streaming.withEventTime(fileStream(s"$scratch/docs"), "ts", "1 hour"))
       val bands = graft.Pql.query(spark,
         "documents | dedup kind=minhash text by doc_id | project band_idx, band_key", cat)
       Streaming.runToParquet(bands, s"$scratch/pqlsd_out", s"$scratch/pqlsd_ckpt")
@@ -167,10 +141,7 @@ object Soak {
     // 3d. the grammar-compiled EMBED band dedup (round 15 twin of 3b).
     if (wants("pql_stream_dedup_embed"))
     soak("pql_stream_dedup_embed", s"$scratch/pqlsde_out") { () =>
-      val cat: String => DataFrame = {
-        case "embeddings" => Streaming.withEventTime(fileStream(s"$scratch/embs"), "ts", "1 hour")
-        case other        => sys.error(s"no streaming table $other")
-      }
+      val cat = Replay.catalog("embeddings", Streaming.withEventTime(fileStream(s"$scratch/embs"), "ts", "1 hour"))
       val bands = graft.Pql.query(spark,
         "embeddings | dedup kind=embed dim=64 embedding by vec_id | project band_idx, band_key", cat)
       Streaming.runToParquet(bands, s"$scratch/pqlsde_out", s"$scratch/pqlsde_ckpt")
@@ -193,28 +164,5 @@ object Soak {
     }
 
     spark.stop()
-  }
-
-  /** FileStreamSource picks files by MODIFICATION TIME, not name — the
-    * 32 range files above are written in parallel, so mtime order is
-    * write-completion order (≈ random), and `maxFilesPerTrigger=1`
-    * would replay slices up to days out of event-time order. Stamp
-    * mtimes in part-name order (= range order) so the replay is the
-    * time-ordered stream the harness promises.
-    */
-  private[streaming] def forceMtimeOrder(dir: String): Unit = {
-    val parts = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val base = System.currentTimeMillis() - parts.length * 2000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-  }
-
-  private def wipe(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
   }
 }

@@ -19,6 +19,11 @@ import graft.Pql
   * closed windows; [[binWindow]] maps PQL's `bin(ts, d)` bucketing to
   * a native `window()` so append-mode sinks (kafka/parquet) work with
   * finalized-only results.
+  *
+  * Turning a table into a time-ordered file stream and draining a
+  * running query back is [[Replay]]'s job: the gate entries, the soak,
+  * the restart drill, the stream fuzzers and `MicroBench streambench`
+  * replay and drain through it.
   */
 object Streaming {
 

@@ -1064,6 +1064,22 @@ class OpsSpec extends SparkTestBase {
     assert(SemDedup.autoCellCount(Long.MaxValue, 64) == 65536)
   }
 
+  test("SemDedup.pairs tests id_a < id_b before any graft_dot in the join condition") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, PredicateHelper}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val plan = SemDedup.pairs(vecs, "embedding", "vec_id", nCells = 2).queryExecution.optimizedPlan
+    val conds = plan.collect { case j: Join => j.condition }.flatten
+    assert(conds.size == 1, plan.treeString)
+    val conjuncts = new PredicateHelper {
+      def split(e: Expression): Seq[Expression] = splitConjunctivePredicates(e)
+    }.split(conds.head)
+    def dots(e: Expression): Boolean = e.exists(_.isInstanceOf[graft.functions.DotProduct])
+    val order = conjuncts.indexWhere(_.sql == "(id_a < id_b)")
+    assert(order >= 0, conds.head.sql)
+    assert(!conjuncts.take(order + 1).exists(dots), conds.head.sql)
+    assert(conjuncts.exists(dots), conds.head.sql)
+  }
+
   // The sf10 ladder measured fixed sizing saturating at 100× (semantic
   // 22.0 s fixed-32 vs 4.94 s sized; embed pairs quadratic under 32/8),
   // so each sized op's DEFAULT resolves its geometry or cell count from

@@ -57,17 +57,8 @@ class RestartSpec extends SparkTestBase {
       .sorted
   }
 
-  private def wipe(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-
   private lazy val prepared: Unit = {
-    wipe(scratch)
+    graft.streaming.Replay.wipe(scratch)
     RestartDrill.prep(spark, sf, scratch, nFiles = 10)
   }
 

@@ -619,6 +619,27 @@ class SqlCompileSpec extends SparkTestBase {
     assert(spark.sql(sql).columns.toSeq == Pql.query(spark, q, cat).columns.toSeq, sql)
   }
 
+  test("a table named like a WITH entry is read from the catalog, not shadowed by the entry") {
+    val session = spark
+    import session.implicits._
+    val t = Seq((1, 10), (2, 20), (3, 30)).toDF("a", "b")
+    val s0 = Seq((1, 100), (3, 300), (4, 400)).toDF("a", "c")
+    t.createOrReplaceTempView("T")
+    s0.createOrReplaceTempView("__s0")
+    def cat(name: String): DataFrame = name match {
+      case "T"    => t
+      case "__s0" => s0
+      case other  => sys.error(s"no fixture table $other")
+    }
+    // `as X` is read twice, so it is a WITH entry
+    val q = "T | as X | join (X) on a | join (__s0) on a"
+    val sql = Pql.compileToSql(q, cat)
+    assert(sql.startsWith("WITH "), sql)
+    val plan = Pql.query(spark, q, cat)
+    assert(spark.sql(sql).columns.toSeq == plan.columns.toSeq, sql)
+    assert(multiset(spark.sql(sql)) == multiset(plan), sql)
+  }
+
   test("Walk visits every node and supports pruning") {
     import graft.parser._
     val stmts = Pql.parse(
